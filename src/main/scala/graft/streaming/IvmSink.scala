@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,19 +29,8 @@ import graft.operators.Ivm
   */
 object IvmSink {
 
-  private def fileSystem(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def commitPath(storeDir: String, batchId: Long) =
-    new Path(s"$storeDir/_commits/$batchId")
-
   /** Batch ids with a commit marker, ascending. */
-  def committedBatches(spark: SparkSession, storeDir: String): Seq[Long] = {
-    val fs = fileSystem(spark, storeDir)
-    val dir = new Path(s"$storeDir/_commits")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath.getName.toLong).sorted.toSeq
-  }
+  def committedBatches(spark: SparkSession, storeDir: String): Seq[Long] = UpsertSink.committedBatches(spark, storeDir)
 
   /** Latest committed compacted entity state (tombstones retained). */
   def readState(spark: SparkSession, storeDir: String): Option[DataFrame] =
@@ -60,8 +48,8 @@ object IvmSink {
     * IvmSink.applyBatch(spark, storeDir) _)`.
     */
   def applyBatch(spark: SparkSession, storeDir: String)(batch: DataFrame, batchId: Long): Unit = {
-    val fs = fileSystem(spark, storeDir)
-    val marker = commitPath(storeDir, batchId)
+    val fs = UpsertSink.fileSystem(spark, storeDir)
+    val marker = UpsertSink.commitPath(storeDir, batchId)
     if (fs.exists(marker)) return // replayed batch: already applied
     // defensive in-batch compaction (compactState emits one row per
     // key per batch; a raw multi-row feed must not corrupt the view),

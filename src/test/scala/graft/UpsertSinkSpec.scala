@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -27,6 +30,36 @@ class UpsertSinkSpec extends AnyFunSuite {
       r.getAs[Long]("user_id") ->
         ((r.getAs[Long]("last_event_id"), r.getAs[String]("last_type"))))
       .toMap).getOrElse(Map.empty)
+
+  private def snapshotDirs(store: String): Seq[String] =
+    new java.io.File(store).list().filter(_.matches("v\\d+")).sorted.toSeq
+
+  /** Jobs `body` starts, counted by a SparkListener. Only jobs carrying
+    * this call's local-property tag count; the listener bus is
+    * asynchronous, so an untagged fence job marks the end of delivery.
+    */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val started = new AtomicInteger
+    val fenced = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("upsert.sink.spec")) match {
+          case Some(`tag`) => started.incrementAndGet()
+          case Some("fence") => fenced.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("upsert.sink.spec", tag)
+      try body finally sc.setLocalProperty("upsert.sink.spec", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("upsert.sink.spec", null)
+      assert(fenced.await(60, TimeUnit.SECONDS), "listener bus never delivered the fence job")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
 
   // realistic epoch-ns event times — compactState's watermark machinery
   // treats near-zero event times as already-late rows and drops them
@@ -146,5 +179,59 @@ class UpsertSinkSpec extends AnyFunSuite {
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$store/v0")))
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$store/v3")))
+  }
+
+  test("a watermark-tick no-data batch commits a pointer marker in one job, not a second snapshot") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val store = newStore()
+    val jobs = scala.collection.mutable.Map.empty[Long, Int]
+    val served = scala.collection.mutable.Map.empty[Long, Map[Long, (Long, String)]]
+    val input = MemoryStream[Change]
+    val q = CdcStream.compactState(spark, input.toDS())
+      .toDF()
+      .writeStream.outputMode(OutputMode.Update)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+        jobs(id) = jobsStartedBy(UpsertSink.applyBatch(spark, store)(batch, id))
+        served(id) = storeMap(store)
+      }
+      .start()
+    // the first batch advances the watermark, so EventTimeTimeout runs a
+    // second, no-data micro-batch right after it
+    input.addData(
+      Change(1L, tMin(0), 1L, "c", "signup", 1.0),
+      Change(2L, tMin(1), 2L, "c", "view", 2.0))
+    q.processAllAvailable()
+    q.stop()
+    assert(UpsertSink.committedBatches(spark, store) === Seq(0L, 1L))
+    assert(snapshotDirs(store) === Seq("v0"))
+    assert(served(0L) === Map(1L -> ((1L, "signup")), 2L -> ((2L, "view"))))
+    assert(served(1L) === served(0L))
+    assert(jobs(1L) === 1, "the tick's apply must run only the pin's job")
+  }
+
+  test("read starts no job while its DataFrame is built and serves the inferred schema") {
+    val store = newStore()
+    UpsertSink.applyBatch(spark, store)(compactedDf(Seq(
+      (1L, false, 1L, "c", "signup", 1.0, 100L, 1L),
+      (2L, false, 2L, "c", "view", 2.0, 110L, 1L))), 0L)
+    var read: Option[org.apache.spark.sql.DataFrame] = None
+    assert(jobsStartedBy { read = UpsertSink.read(spark, store) } === 0)
+    assert(read.get.schema === spark.read.parquet(s"$store/v0").schema)
+  }
+
+  test("vacuum never deletes a snapshot that a kept pointer marker references") {
+    val store = newStore()
+    UpsertSink.applyBatch(spark, store)(
+      compactedDf(Seq((1L, false, 1L, "c", "signup", 1.0, 100L, 1L))), 0L)
+    UpsertSink.applyBatch(spark, store)(
+      compactedDf(Seq((2L, false, 2L, "c", "view", 2.0, 110L, 1L))), 1L)
+    val live = storeMap(store)
+    (2L to 3L).foreach(id => UpsertSink.applyBatch(spark, store)(compactedDf(Seq.empty), id))
+    assert(snapshotDirs(store) === Seq("v0", "v1"))
+    UpsertSink.vacuum(spark, store, keep = 2) // keeps markers 2 and 3, both pointing at v1
+    assert(UpsertSink.committedBatches(spark, store) === Seq(2L, 3L))
+    assert(snapshotDirs(store) === Seq("v1"))
+    assert(storeMap(store) === live)
   }
 }
