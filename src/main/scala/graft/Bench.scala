@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query at the given scale
   * factor and prints ONE JSON line with total + per-query seconds.
   * Progress goes to stderr so stdout stays machine-parseable.
@@ -44,17 +42,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val limit = sys.env.getOrElse("SPARK_GRAFT_LOAD_LIMIT", "1.0").toDouble
     val (loadStart, loadAtRun, loadWaited) = awaitQuietWindow()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // hold every registry query's generated classes (default cache
-      // is 100 entries; 108 queries × several classes each thrash it,
-      // re-paying janino compiles on every pass)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen/shuffle/parquet/broadcast-machinery warmup so the
     // alphabetically-first query doesn't absorb one-time JIT,

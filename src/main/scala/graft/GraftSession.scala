@@ -25,6 +25,10 @@ object GraftSession {
       // full sweep, re-paying multi-second compiles per pass. Static
       // conf — must be set before the first session is built.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // a reliable operators.materialize pin is deleted when its frame
+      // is collected, the lifetime a local pin has; without it the
+      // files stay in the checkpoint dir for the whole session
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
 
   def local(cpus: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession = {
     val spark = builder(cpus).getOrCreate()

@@ -11,16 +11,9 @@ package graft
 object PlanTime {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = args.drop(1).headOption.getOrElse("32")
+    val cpus = args.drop(1).headOption.getOrElse("32").toInt
     val wanted = args.drop(2).toSet
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // same warmup as Bench
     spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()

@@ -837,14 +837,14 @@ object AnnOps {
     * join over the n·M subvector rows plus a (m, code, dim)-keyed
     * mean onto M·K·dim cells — no corpus-sized shuffle, the
     * [[Kmeans.anchorsTrace]] shape in subvector space. The M·K = 128
-    * codeword table is localCheckpointed per round so corpus lineage
-    * never re-executes.
+    * codeword table is pinned per round so corpus lineage never
+    * re-executes.
     */
   private def pqCodebook(subd: DataFrame, iters: Int): DataFrame = {
     val cached = subd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var cur = cached.filter(col("vec_id") < PqK)
       .select(col("m"), col("vec_id").as("code"), col("sub").as("c_sub"))
-      .localCheckpoint(true)
+      .transform(materialize)
     for (_ <- 0 until iters) {
       val d2 = round(aggregate(zip_with(col("sub"), col("c_sub"), (a, b) =>
           (a - b) * (a - b)), lit(0.0), (acc, v) => acc + v), 6)
@@ -863,7 +863,7 @@ object AnnOps {
         .select(col("m"), col("code"), transform(col("dm"), s => s.getField("mv")).as("mc"))
       cur = cur.as("p").join(means, Seq("m", "code"), "left")
         .select(col("m"), col("code"), coalesce(col("mc"), col("p.c_sub")).as("c_sub"))
-        .localCheckpoint(true)
+        .transform(materialize)
     }
     cached.unpersist() // codebooks are checkpointed; the cache is training-local
     cur

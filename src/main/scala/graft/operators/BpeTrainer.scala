@@ -29,9 +29,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *   3. one codegen'd projection applying the merge to every word's
   *      symbol array ([[MergePairExpr]] — a sequential in-array scan,
   *      never an explode/re-group of the corpus).
-  * State between rounds is the word-type frame, localCheckpointed
-  * (reliable-checkpoint when a dir is configured — the
-  * connectedComponents discipline) so no round re-reads lineage.
+  * State between rounds is the word-type frame, pinned per round
+  * (`materialize`) so no round re-reads lineage.
   *
   * Training is DETERMINISTIC: greedy argmax with a total order, so
   * BpeSpec pins the distributed loop against an independent
@@ -117,9 +116,6 @@ object BpeTrainer {
     * pair has support ≥ 2 (merging a count-1 pair encodes nothing).
     */
   def train(spark: SparkSession, wordCounts: DataFrame, nMerges: Int): Seq[Merge] = {
-    def materialize(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint(true)
     var state = materialize(
       wordCounts.select(split(col("word"), "").as("syms"), col("n")))
     val merges = Seq.newBuilder[Merge]

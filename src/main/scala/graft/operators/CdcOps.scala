@@ -459,7 +459,7 @@ object CdcOps {
     // pin it once
     val s = sessionize(spark, dir)
       .select(col("user_id"), col("session_id"), col("start_s"), col("end_s"))
-      .localCheckpoint(true)
+      .transform(materialize)
     val a = s.select(col("user_id").as("a_user"), col("session_id").as("a_session"),
       col("start_s").as("a_start"), col("end_s").as("a_end"))
     val b = s.select(col("user_id").as("b_user"), col("session_id").as("b_session"),

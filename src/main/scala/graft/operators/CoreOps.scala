@@ -431,11 +431,10 @@ object CoreOps {
     val h = hash60(col("user_id").cast("string"))
     // the register table is SKETCH-sized (≤ m·|types| rows) and has
     // TWO consumers (per-type estimates + the pairwise union merge) —
-    // eager localCheckpoint pins it so the corpus md5/register scan
-    // runs ONCE, not once per consumer (the qualityPercentile
-    // discipline; also keeps the evaluation-site audit at one md5)
+    // pinned so the corpus md5/register scan runs ONCE, not once per
+    // consumer (also keeps the evaluation-site audit at one md5)
     val regs = hllRegisters(e.select(col("event_type"), h.as("h")), Seq("event_type"))
-      .localCheckpoint(true)
+      .transform(materialize)
     val perType = hllFromRegs(regs, Seq("event_type"))
     val pairs = perType.select(col("event_type").as("type_a"), col("est").as("est_a"))
       .crossJoin(perType.select(col("event_type").as("type_b"), col("est").as("est_b")))

@@ -285,7 +285,7 @@ object CorpusOps {
     // once per side — pin the slim flagged band rows once (the
     // dedupMinhashFrame materialization rationale)
     val flagged = DedupOps.minhashBandRows(docs).join(flags, "doc_id")
-      .localCheckpoint(true)
+      .transform(materialize)
     val train = flagged.filter(!col("is_bench"))
       .select(col("band"), col("key"), col("doc_id").as("d1"))
     val bench = flagged.filter(col("is_bench"))
@@ -558,7 +558,7 @@ object CorpusOps {
           explode(concat(toks, Hashing.shingles(toks, 2))).as("f"))
         .select(col("doc_id"), col("source"),
           bucket(col("f"), DsirBuckets).as("b"))
-        .localCheckpoint(true)
+        .transform(materialize)
     }
     val cnt = feats.groupBy("b").agg(
       count(lit(1)).as("cr"),
@@ -664,7 +664,7 @@ object CorpusOps {
     *    trained artifact ([[TextOps.lrWeights]] — 4 micro-unit longs, the
     *    bounded driver state the training family already owns);
     *  - the contaminated-id set is a BOUNDED side artifact
-    *    (materialized once via localCheckpoint, like the trainer's
+    *    (materialized once, like the trainer's
     *    feature frame) and joins back broadcast-anti — the e2e plan
     *    itself reads the parquet exactly once (spec-asserted);
     *  - the per-source cap uses the hierarchical two-window layout of
@@ -690,7 +690,7 @@ object CorpusOps {
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def contamIdsMemoized(spark: SparkSession, dir: String): DataFrame =
     contamMemo.computeIfAbsent(s"${spark.hashCode()}|$dir", { _ =>
-      Ivm.materializeState(contamination(spark, dir).select("doc_id"))
+      materialize(contamination(spark, dir).select("doc_id"))
     })
 
   /** Drop the memoized derived-artifact frames and release their
@@ -798,17 +798,15 @@ object CorpusOps {
         .filter(col("doc_id").isNotNull && col("text").isNotNull), col("doc_id"))
     val (baseSlice, deltaSlice) = Ivm.midpointSplit(docs, "doc_id")
     def postings(d: DataFrame): DataFrame = contamPostingsOf(d)
-    // MATERIALIZE the two posting indexes once (Ivm.materializeState's
-    // eager-localCheckpoint discipline, blocks freed with the plan):
-    // the batch query deliberately re-runs the cheap generator per
+    // MATERIALIZE the two posting indexes once: the batch query deliberately re-runs the cheap generator per
     // consumer (3 consumers), but the incremental split has ~7 —
     // measured 15.6 s at the sf1.0 slice unmaterialized vs 6.7 s
     // materialized (batch: 2.3 s; the gap is the in-plan recomputation
     // of the stored state, priced here but free in deployment where
     // the base index is READ, not re-shingled). The delta index is
     // built once and appended.
-    val basePost = Ivm.materializeState(postings(baseSlice))
-    val deltaPost = Ivm.materializeState(postings(deltaSlice))
+    val basePost = materialize(postings(baseSlice))
+    val deltaPost = materialize(postings(deltaSlice))
 
     // stored df state + the delta's df update, merged on touched grams only
     val baseDf = basePost.groupBy("g").agg(count(lit(1)).as("df_b"))

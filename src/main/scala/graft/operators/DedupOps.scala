@@ -200,17 +200,17 @@ object DedupOps {
     // pair self-join. isnotnull(doc_id) EXPLICITLY below both
     // exchanges so no consumer's inferred predicate breaks canonical
     // equality (PlanGuardsSpec pins one evaluation site).
-    // r20: the posting index is localCheckpointed — ONE evaluation of
-    // the shingle generator. Its consumers (the df aggregate, the
+    // r20: the posting index is pinned — ONE evaluation of the
+    // shingle generator. Its consumers (the df aggregate, the
     // anti-joined kept stream feeding BOTH self-join sides, the
     // tainted lookup, the per-doc meta counts) prune and filter
-    // differently, so their exchanges never canonicalize equal and
-    // each re-ran the scan + shingle explode (r20 stage profile:
+    // differently, so each re-ran the scan + shingle explode without
+    // the pin (r20 stage profile:
     // 4-5 full-width re-executions at ~1-1.8 s each inside one
     // query). Materializing the inverted index is the established
-    // state shape here — contamIncremental already pins its posting
-    // indexes via Ivm.materializeState, and a deployment keeps
-    // exactly this index between runs.
+    // state shape here — contamIncremental pins its posting indexes
+    // the same way, and a deployment keeps exactly this index between
+    // runs.
     val ex = docs
       .filter(col("doc_id").isNotNull && col("text").isNotNull)
       .transform(repartByKey(_, col("doc_id")))
@@ -218,7 +218,7 @@ object DedupOps {
         graft.plans.TextExpressions
           .shinglePostingsNative(toks(col("text")), ShingleK).as("s"))
       .transform(repartByKey(_, col("s")))
-      .localCheckpoint(true)
+      .transform(materialize)
     // hot keys via aggregation + broadcast anti-join — the hot set is
     // tiny, so no per-key window sort of the exploded shingle stream
     val hot = ex.groupBy("s").agg(count(lit(1)).as("df"))
@@ -369,7 +369,7 @@ object DedupOps {
     // aggregation — the self-join's two sides rename doc_id, so their
     // exchanges never canonicalize equal and the signature stage ran
     // once per side; the band rows are slim (doc_id, band, key)
-    val bandRows = minhashBandRows(docs).localCheckpoint(true)
+    val bandRows = minhashBandRows(docs).transform(materialize)
     val cand = bandRows.as("a").join(bandRows.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -442,7 +442,7 @@ object DedupOps {
       // r20: the dedupMinhashFrame materialization rationale — one
       // evaluation of the signature aggregation for the self-join's
       // two differently-renamed sides
-      .localCheckpoint(true)
+      .transform(materialize)
     val nMatch = (0 until Bands * Rows).map(j =>
       when(col(s"a.mh$j") === col(s"b.mh$j"), 1L).otherwise(0L)).reduce(_ + _)
     val cand = br.as("a").join(br.as("b"),
@@ -453,7 +453,7 @@ object DedupOps {
       .agg(max(col("n_match")).as("n_match"))
       // r20: pinned — the survivor-shingle checkpoint below is a
       // separate execution (the verifyPairs rationale)
-      .localCheckpoint(true)
+      .transform(materialize)
     val ids = cand.select(explode(array(col("d1"), col("d2"))).as("doc_id")).distinct()
     // the verifyPairs parallelism barrier (see there): the broadcast
     // semi join folds into the single-row-group scan task, which
@@ -465,7 +465,7 @@ object DedupOps {
       .select(col("doc_id"), shingleSet(col("text")).as("sh"))
       // r20: the verifyPairs materialization rationale — one shingle
       // evaluation for the two differently-renamed join sides
-      .localCheckpoint(true)
+      .transform(materialize)
     cand
       .join(d.select(col("doc_id").as("d1"), col("sh").as("sh1")), "d1")
       .join(d.select(col("doc_id").as("d2"), col("sh").as("sh2")), "d2")
@@ -525,7 +525,7 @@ object DedupOps {
     // pairs the candidate pipeline ran once inside that job and again
     // in the main query (measured 1.7x WORSE on q_contam_fuzzy with
     // only `d` pinned)
-    val pairs = cands.select(col("d1"), col("d2")).distinct().localCheckpoint(true)
+    val pairs = cands.select(col("d1"), col("d2")).distinct().transform(materialize)
     // shingle ONLY the docs that appear in some candidate pair: the
     // verification set is near-dup-density-bounded, so the shingle
     // arrays of the full corpus are never materialized (the previous
@@ -556,7 +556,7 @@ object DedupOps {
       // so the two join inputs never canonicalize equal and the shingle
       // stage ran twice; the survivor set is near-dup-density-bounded,
       // so pinning it is cheap at any scale
-      .localCheckpoint(true)
+      .transform(materialize)
     pairs
       .join(d.select(col("doc_id").as("d1"), col("sh").as("sh1")), "d1")
       .join(d.select(col("doc_id").as("d2"), col("sh").as("sh2")), "d2")
@@ -715,7 +715,7 @@ object DedupOps {
       // r20: the self-join sides rename vec_id, so their exchanges
       // never canonicalize equal and the bands × bits signature dots
       // ran once per side — pin the slim (vec_id, band, sig) rows once
-      .localCheckpoint(true)
+      .transform(materialize)
     // candidate ids only through the keyed bucket join; embeddings
     // re-attach after distinct so vectors never ride the shuffle
     val cand = banded.as("a").join(banded.as("b"),
@@ -741,7 +741,7 @@ object DedupOps {
     // r20: pinned for the same reason as verifyPairs' distinct — the
     // survivor-embedding checkpoint below is a separate execution, so
     // an unpinned candidate subtree would run twice
-    val pairs = cands.select(col("v1"), col("v2")).localCheckpoint(true)
+    val pairs = cands.select(col("v1"), col("v2")).transform(materialize)
     // attach vectors ONLY for ids that appear in some candidate pair
     // (the verifyPairs discipline): the id set is near-dup-bounded and
     // broadcasts, so the corpus-wide vector table (and its norms) is
@@ -755,7 +755,7 @@ object DedupOps {
         // r20: one evaluation of the semi join + norms for the two
         // differently-renamed attach sides; the survivor set is
         // near-dup-density-bounded (the verifyPairs rationale)
-        .localCheckpoint(true)
+        .transform(materialize)
     pairs
       .join(e.select(col("vec_id").as("v1"), col("embedding").as("e1"), col("nrm").as("n1")), "v1")
       .join(e.select(col("vec_id").as("v2"), col("embedding").as("e2"), col("nrm").as("n2")), "v2")
@@ -802,7 +802,7 @@ object DedupOps {
       // production banding — four differently-renamed consumers that
       // each re-ran the scan + norm; the sample is Θ(target) rows by
       // the modulus rule, cheap to pin at any corpus size
-      .localCheckpoint(true)
+      .transform(materialize)
     val truth = e.select(col("vec_id").as("v1"), col("embedding").as("e1"), col("nrm").as("n1"))
       .join(e.select(col("vec_id").as("v2"), col("embedding").as("e2"), col("nrm").as("n2")),
         col("v1") < col("v2"))
@@ -873,19 +873,16 @@ object DedupOps {
       .select(col("vec_id").as("cell"), col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
     // materialized ONCE: every caller fans the slim triple out 2-3
     // ways (pair sides, stats, both rank directions), and without the
-    // checkpoint each consumer re-runs the n x |cells| assignment
-    // cosine pass — the expensive stage of the whole family. Reliable
-    // checkpoint when a dir is configured (cluster), local otherwise
-    // (the connectedComponents discipline); ~24 bytes/vector.
-    val asg = e.crossJoin(broadcast(cents))
+    // pin each consumer re-runs the n x |cells| assignment cosine
+    // pass — the expensive stage of the whole family; ~24 bytes/vector.
+    e.crossJoin(broadcast(cents))
       .withColumn("ccos", round(VectorExpressions.cosineNative(
         col("c_emb"), col("c_nrm"), col("embedding"), col("nrm")), 6))
       .groupBy(col("vec_id"))
       .agg(min(struct(negate(col("ccos")).as("nc"), col("cell").as("cell"))).as("best"))
       .select(col("vec_id"), col("best.cell").as("cell"),
         negate(col("best.nc")).as("ccos"))
-    if (spark.sparkContext.getCheckpointDir.isDefined) asg.checkpoint()
-    else asg.localCheckpoint(true)
+      .transform(materialize)
   }
 
   /** SemDeDup — cluster-then-pair SEMANTIC dedup (Abbas et al. 2023,
@@ -937,11 +934,7 @@ object DedupOps {
       .select(col("vec_id").as("cell"), col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
     // route = groups: exact by construction (see HierAssign doc)
     val g = HierAssign.defaultGroups(cells.toInt)
-    val asgRaw = HierAssign.assignFloat(e, cents, g, g)
-    val asg =
-      if (spark.sparkContext.getCheckpointDir.isDefined) asgRaw.checkpoint()
-      else asgRaw.localCheckpoint(true)
-    semPairs(asg, e)
+    semPairs(materialize(HierAssign.assignFloat(e, cents, g, g)), e)
   }
 
   /** Shared pair/verify/keeper stage of the SemDeDup family: `asg` is
@@ -992,16 +985,14 @@ object DedupOps {
     // overhead vs the deterministic-anchor twin; accumulation order
     // and widening are bit-identical, so scores (and the oracle) are
     // unchanged
-    val asgRaw = e.crossJoin(broadcast(anchors))
+    val asg = e.crossJoin(broadcast(anchors))
       .withColumn("ccos", round(
         VectorExpressions.widenedDotNative(col("embedding"), col("c")) / col("nrm"), 6))
       .groupBy(col("vec_id"))
       .agg(min(struct(negate(col("ccos")).as("nc"), col("cell").as("cell"))).as("best"))
       .select(col("vec_id"), col("best.cell").as("cell"),
         negate(col("best.nc")).as("ccos"))
-    val asg =
-      if (spark.sparkContext.getCheckpointDir.isDefined) asgRaw.checkpoint()
-      else asgRaw.localCheckpoint(true)
+      .transform(materialize)
     semPairs(asg, e)
   }
 
@@ -1088,16 +1079,16 @@ object DedupOps {
     * label with its label's label — halving the distance to the
     * component minimum, so convergence is O(log diameter) rounds, not
     * O(diameter) (a web-crawl dup chain of diameter 10⁶ converges in
-    * ~20 rounds). Lineage is truncated per round by checkpointing:
-    * RELIABLE `checkpoint` (HDFS/object-store) when the session has a
-    * checkpoint dir configured — a localCheckpoint lineage lives in
-    * executor memory/disk, so one lost executor kills a cluster-scale
-    * run mid-iteration — falling back to `localCheckpoint` when none
-    * is set (local iteration, tests). Cluster deployments should
-    * `sc.setCheckpointDir(...)`; CheckpointModeSpec proves both modes
-    * converge to identical labels. THROWS if the round cap is hit
-    * before convergence — silently emitting unconverged labels would
-    * mislabel deep chains.
+    * ~20 rounds). The pair input is pinned once through `materialize`
+    * (reliable when the session has a checkpoint dir, like every pin in
+    * `graft.operators`). Per-round lineage truncation is the ONE
+    * exception to that helper: it is LAZY (`checkpoint(false)` /
+    * `localCheckpoint(false)`, see `truncate`) so each round pays one
+    * job, and reliable mode adds a persist queue. Cluster deployments
+    * should `sc.setCheckpointDir(...)`; CheckpointModeSpec proves both
+    * modes converge to identical labels. THROWS if the round cap is
+    * hit before convergence — silently emitting unconverged labels
+    * would mislabel deep chains.
     */
   private[operators] def connectedComponents(pairs: DataFrame, maxRounds: Int = 25): DataFrame = {
     // r19 optimization: LAZY checkpoints — the marked plan still
@@ -1122,20 +1113,17 @@ object DedupOps {
     // unpersisting is a caller concern because checkpoint(false)
     // returns a wrapper Dataset that no longer owns the cache entry
     val persistedQ = scala.collection.mutable.Queue.empty[DataFrame]
-    def materialize(df: DataFrame): DataFrame =
+    def truncate(df: DataFrame): DataFrame =
       if (reliable) { df.persist(); persistedQ += df; df.checkpoint(false) }
       else df.localCheckpoint(false)
     // materialize the (expensive) upstream pair query exactly once —
-    // every loop round reads this checkpointed RDD, never the lineage.
+    // every loop round reads this pinned RDD, never the lineage.
     // The pair input stays EAGER: both loop arms (edges, labels) read
     // it, and the first lazy consumer would otherwise race the other
     // into recomputing the whole pair pipeline.
-    val p =
-      if (pairs.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        pairs.toDF("pa", "pb").checkpoint()
-      else pairs.toDF("pa", "pb").localCheckpoint(true)
+    val p = materialize(pairs.toDF("pa", "pb"))
     val edges = p.union(p.select(col("pb"), col("pa"))).toDF("ea", "eb")
-    var labels = materialize(edges.select(col("ea").as("id")).distinct()
+    var labels = truncate(edges.select(col("ea").as("id")).distinct()
       .select(col("id"), col("id").as("lab")))
     var changed = 1L
     var rounds = 0
@@ -1154,7 +1142,7 @@ object DedupOps {
       // ONE job per round: the count both materializes the lazily
       // checkpointed (new lab, old lab) table and reads the
       // convergence delta from it
-      val stepped = materialize(
+      val stepped = truncate(
         next.join(labels.select(col("id"), col("lab").as("old")), "id"))
       changed = stepped.filter(col("lab") =!= col("old")).count()
       // the count materialized this round's checkpoint files — every
@@ -1225,7 +1213,7 @@ object DedupOps {
       // materialization rationale — this query's 5 differently-pruned
       // consumers re-ran the explode at ~1-1.8 s each), and exactly
       // the index a deployment keeps materialized between ingests
-      .localCheckpoint(true)
+      .transform(materialize)
     val hot = ex.groupBy("s").agg(count(lit(1)).as("df"))
       .filter(col("df") > DfCap).select("s")
     val kept = ex.join(broadcast(hot), Seq("s"), "left_anti")

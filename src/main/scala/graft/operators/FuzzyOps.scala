@@ -293,11 +293,10 @@ object FuzzyOps {
     // bounded by the same quantity that bounds the OUTPUT (an m-row
     // identical-content group emits C(m,2) pairs by contract), so the
     // collect_list cannot be the thing that breaks first at scale.
-    // r20: the set layer is localCheckpointed — ONE evaluation. Its
-    // consumers (both strata's gram explodes, each stratum's meta and
+    // r20: the set layer is pinned — ONE evaluation. Its consumers
+    // (both strata's gram explodes, each stratum's meta and
     // dirty-verify joins, the two membership fan-outs, the intra-set
-    // pairs) prune different columns, and differently-pruned exchanges
-    // never canonicalize equal, so without the materialization each
+    // pairs) prune different columns, so without the pin each
     // consumer re-ran the scan + tokenize + set aggregation (r20 stage
     // profile: 21 single-task root stages and ~6 re-executions of the
     // groupBy at 2-2.7 s each inside one query). The table is the
@@ -308,7 +307,7 @@ object FuzzyOps {
     val sets = base.groupBy(col("toks")).agg(
       min(col("k")).as("sid"), count(lit(1)).as("cnt"),
       sort_array(collect_list(col("k"))).as("ks"))
-      .localCheckpoint(true)
+      .transform(materialize)
     val setrep = sets.select(col("sid").as("k"), col("toks"), col("cnt"))
     val members = sets.select(col("sid"), explode(col("ks")).as("k"))
     // set-level strata: exactly the old row-level logic, one altitude up

@@ -152,7 +152,7 @@ object HybridOps {
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .join(broadcast(probeVocab), Seq("term"), "left_semi")
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .transform(materialize)
     val dfCand = tfCand.groupBy("term").agg(count(lit(1)).as("df"))
     // 3. slim per-doc length stats — no token explode, no term shuffle
     val dl = docs.select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("dl"))
@@ -226,7 +226,7 @@ object HybridOps {
     val fused = hybridWith(spark, dir, AnnOps.exactCosineTopK(spark, dir, VecArmK))
       .select(col("probe_id"), col("doc_id"),
         round(col("rrf") * lit(1e6)).cast("long").as("relm"))
-      .localCheckpoint(true)
+      .transform(materialize)
     val e = graft.sources.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
         VectorExpressions.normNative(col("embedding")).as("nrm"))

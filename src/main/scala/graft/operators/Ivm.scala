@@ -55,15 +55,6 @@ object Ivm {
       tagged.filter(col(key) > col(cutName)).drop(cutName))
   }
 
-  /** The stored-state materialization discipline: EAGER localCheckpoint
-    * — not `persist` (whose lazy first-use double-executes generator
-    * lineage under a multi-consumer plan) — so in-plan recomputation of
-    * the state a deployment would READ is paid exactly once and its
-    * blocks are freed with the plan. Every IVM pipeline that feeds its
-    * stored state to 2+ consumers must route through here.
-    */
-  def materializeState(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
   /** State/envelope column set (after [[compactSlice]]). */
   private val stateCols = Seq(
     "user_id", "last_event_id", "last_op", "last_type",

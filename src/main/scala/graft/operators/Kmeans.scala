@@ -25,7 +25,7 @@ import org.apache.spark.sql.expressions.Window
   * no corpus-sized shuffle. The argmax ships only the slim
   * (vec_id, cell, dot) triple through its window; the mean
   * aggregates exploded scalars; the k-row anchor table is
-  * localCheckpointed per round so corpus lineage never re-executes.
+  * pinned per round so corpus lineage never re-executes.
   */
 object Kmeans {
 
@@ -75,7 +75,7 @@ object Kmeans {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var cur = nd.filter(col("vec_id") < k)
       .select(col("vec_id").cast("long").as("cell"), col("nv").as("c"))
-      .localCheckpoint(true)
+      .transform(materialize)
     val trace = Seq.newBuilder[DataFrame]
     trace += cur
     for (_ <- 0 until iters) {
@@ -94,7 +94,7 @@ object Kmeans {
       cur = cur.as("p").join(means, Seq("cell"), "left")
         .select(col("cell"),
           when(col("mc").isNull, col("p.c")).otherwise(unitOf(col("mc"))).as("c"))
-        .localCheckpoint(true)
+        .transform(materialize)
       trace += cur
     }
     nd.unpersist() // anchors are checkpointed; the cache is round-local

@@ -445,8 +445,8 @@ object TextOps {
     *
     * 100 TB shape: ONE stream aggregation (trigram counts, map-side
     * combined) then all four backoff tables derive from the
-    * VOCABULARY-sized gram table (localCheckpoint'd once — without it
-    * every derived table re-runs the corpus explode); the model join
+    * VOCABULARY-sized gram table (pinned once — without it every
+    * derived table re-runs the corpus explode); the model join
     * back is token-keyed and corpus-derived on both sides, so nothing
     * is broadcast-hinted (the [[lmScore]] discipline); no windows.
     */
@@ -465,14 +465,14 @@ object TextOps {
       // task beats exchanging the text payload first
       .select(col("doc_id"), explode(Hashing.shingles(toks, 3)).as("g"))
     // the gram table: counts + the backoff keys derived from the gram
-    // STRING (vocabulary-sized; eager localCheckpoint because FIVE
-    // consumers below would each re-run the corpus explode+aggregate)
+    // STRING (vocabulary-sized; pinned because FIVE consumers below
+    // would each re-run the corpus explode+aggregate)
     val grams = stream.groupBy("g").agg(count(lit(1)).as("ct"))
       .withColumn("p12", substring_index(col("g"), " ", 2))
       .withColumn("t3", substring_index(col("g"), " ", -1))
       .withColumn("t2", substring_index(col("p12"), " ", -1))
       .withColumn("b23", concat_ws(" ", col("t2"), col("t3")))
-      .localCheckpoint(true)
+      .transform(materialize)
     val cp = grams.groupBy("p12").agg(sum("ct").as("cp"))
     val cb = grams.groupBy("b23").agg(sum("ct").as("cb"))
     val c2 = grams.groupBy("t2").agg(sum("ct").as("c2"))
@@ -528,8 +528,8 @@ object TextOps {
     *
     * 100 TB shape: ONE stream aggregation (bigram counts, map-side
     * combined), then all three model tables derive from the
-    * VOCABULARY-sized gram table (localCheckpoint'd once — its four
-    * consumers would each re-run the corpus explode); the model join
+    * VOCABULARY-sized gram table (pinned once — its four consumers
+    * would each re-run the corpus explode); the model join
     * back is token-keyed and corpus-derived on both sides, so nothing
     * is broadcast-hinted (the [[lmScore]] discipline); no windows.
     */
@@ -548,7 +548,7 @@ object TextOps {
     val grams = stream.groupBy("b").agg(count(lit(1)).as("ct"))
       .withColumn("t1", substring_index(col("b"), " ", 1))
       .withColumn("t2", substring_index(col("b"), " ", -1))
-      .localCheckpoint(true)
+      .transform(materialize)
     // c1 = context token count; n1f = N1+(t1 ·) distinct continuations
     val c1 = grams.groupBy("t1").agg(sum("ct").as("c1"), count(lit(1)).as("n1f"))
     // n1b = N1+(· t2) distinct left contexts; nt = N1+(· ·) total types
@@ -581,19 +581,15 @@ object TextOps {
     // materialize the scored projection ONCE: three consumers (range,
     // histogram, final cut) each re-ran the full corpus scan + regex
     // scoring behind it — the dominant cost (3 scans → 1, measured
-    // 15.2 → 2.9 s at the sf1.0 slice). localCheckpoint, NOT persist: a
-    // persist here leaked a cached plan per invocation for the
-    // session's lifetime (no safe point to unpersist inside a
-    // lazily-consumed query), while localCheckpoint blocks are dropped
-    // by the ContextCleaner when the RDD is collected — and being
-    // EAGER per invocation, the bench still pays the scan every pass
-    // (nothing survives into pass 2). The checkpointed row is
-    // (doc_id, lang, quality) — bytes per doc, never the text.
+    // 15.2 → 2.9 s at the sf1.0 slice). Being EAGER per invocation,
+    // the bench still pays the scan every pass (nothing survives into
+    // pass 2). The pinned row is (doc_id, lang, quality) — bytes per
+    // doc, never the text.
     val scored = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), qualityCol.as("quality"))
-      .localCheckpoint(true)
+      .transform(materialize)
     val rng = QuantileSketch.keyRange(scored, "lang", "quality")
-      .localCheckpoint(true)
+      .transform(materialize)
     val hist = QuantileSketch.histogram(scored, "lang", "quality", rng)
     val thr = QuantileSketch.estimates(hist, rng, Seq(0.5))
       .select(col("lang"), round(col("est"), 6).as("thr"))
@@ -618,7 +614,7 @@ object TextOps {
     * query term's tf come from array expressions over one tokenize —
     * no explode, no token-row shuffle, and the slim
     * (doc_id, dl, |terms| tf columns) projection is materialized once
-    * (eager localCheckpoint, the qualityPercentile discipline) so the
+    * (pinned, the qualityPercentile discipline) so the
     * stats pass and the scoring pass both read ~20 bytes/doc instead
     * of re-scanning text. The corpus stats (N, avgdl, per-term df)
     * collapse to a ONE-ROW broadcast; the final global top-k runs
@@ -636,7 +632,7 @@ object TextOps {
       .select((col("doc_id") +: size(toks).cast("long").as("dl") +:
         Bm25Query.map(t =>
           size(filter(toks, x => x === lit(t))).cast("long").as(tfCol(t)))): _*)
-      .localCheckpoint(true)
+      .transform(materialize)
     val statAggs = count(lit(1)).as("n_docs") +: avg(col("dl")).as("avgdl") +:
       Bm25Query.map(t => sum((col(tfCol(t)) > 0).cast("long")).as(s"df_${t}"))
     val stats = broadcast(perDoc.agg(statAggs.head, statAggs.tail: _*))
@@ -700,7 +696,7 @@ object TextOps {
     // (df, the corpus count, both self-join sides) — materialized once
     // so the corpus is scanned and the distinct exchange paid exactly
     // once (the qualityPercentile discipline)
-    val dt = toks.distinct().localCheckpoint(true)
+    val dt = toks.distinct().transform(materialize)
     val df = dt.groupBy("term").agg(count(lit(1)).as("df"))
     val vocab = df
       .groupBy()
@@ -846,9 +842,6 @@ object TextOps {
     * globally sorted.
     */
   def textrank(spark: SparkSession, dir: String): DataFrame = {
-    def materialize(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint(true)
     val toks = Tables.documents(spark, dir)
       .filter(length(col("text")) > 0)
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "t")))

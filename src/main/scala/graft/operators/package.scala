@@ -16,6 +16,31 @@ package object operators {
   private[operators] def repartByKey(df: DataFrame, c: Column, more: Column*): DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, (c +: more): _*)
 
+  /** Materialize-once: the ONE way an operator pins a frame that
+    * several consumers read (use `.transform(materialize)` in chains).
+    *
+    *  - Why pin at all: consumers that prune the frame differently
+    *    never canonicalize equal, so they never share an exchange —
+    *    without the pin each one re-runs the whole lineage.
+    *  - Why eager, not `persist`: a `persist` + `count` pin measured
+    *    237 ms slower per cycle on the upsert sink (paired
+    *    cdc_upsert benchmark runs); `persist` in
+    *    [[TextOps.qualityPercentile]] leaked a cached plan per call
+    *    (no safe point to unpersist inside a lazily-consumed query);
+    *    and a lazy first use double-executes generator lineage under a
+    *    multi-consumer plan. Checkpoint blocks are freed by the
+    *    ContextCleaner with the frame.
+    *  - Local vs reliable: with a session checkpoint dir (a cluster
+    *    deployment, `sc.setCheckpointDir(..)`) the pin is a reliable
+    *    `checkpoint`, which survives executor loss; otherwise an eager
+    *    `localCheckpoint`, whose blocks die with their executor.
+    *  - Cost: a pinned frame loses its size statistics, so a consumer
+    *    join can no longer be planned as a broadcast from it.
+    */
+  private[operators] def materialize(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+    else df.localCheckpoint(true)
+
   /** CONDITIONAL parallelism barrier for payload-carrying scans:
     * hash-repartition to the session shuffle width ONLY when the
     * underlying file scan cannot reach half of it on its own. The

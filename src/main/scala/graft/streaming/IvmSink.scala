@@ -55,7 +55,9 @@ object IvmSink {
     // key per batch; a raw multi-row feed must not corrupt the view),
     // then project to the Ivm state column set. localCheckpoint pins
     // the delta: the two store rewrites below must not re-pull the
-    // stream batch.
+    // stream batch. Local on purpose: replay from checkpointLocation
+    // recovers a lost batch, and a reliable pin (operators.materialize)
+    // would write every micro-batch to disk.
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
       .orderBy(col("last_ts_ns").desc, col("last_event_id").desc)

@@ -108,7 +108,9 @@ object UpsertSink {
       batch: DataFrame, batchId: Long): Unit = {
     val fs = fileSystem(spark, storeDir)
     if (fs.exists(commitPath(storeDir, batchId))) return // replayed batch: already applied
-    // pin: the rewrite must not re-pull the stream batch; its job counts the rows
+    // pin: the rewrite must not re-pull the stream batch; its job counts the rows.
+    // Local on purpose: replay from checkpointLocation recovers a lost batch, and
+    // a reliable pin (operators.materialize) would write every micro-batch to disk.
     val rows = new Observation()
     val b = batch.observe(rows, count(lit(1)).as("n")).localCheckpoint()
     val prev = lastCommit(spark, storeDir, before = batchId)

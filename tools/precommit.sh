@@ -16,6 +16,16 @@ sbt -batch Test/compile >/tmp/precommit.log 2>&1 || {
 }
 echo "PRECOMMIT OK: Test/compile green."
 
+# Materialize-once gate: every eager pin in graft.operators goes through
+# the one helper in operators/package.scala (`materialize`), so no other
+# operator file may call .localCheckpoint(true) or .checkpoint().
+if grep -rnF --include='*.scala' -e '.localCheckpoint(true)' -e '.checkpoint()' \
+    src/main/scala/graft/operators/ | grep -v '^src/main/scala/graft/operators/package\.scala:' >&2; then
+  echo "PRECOMMIT FAIL: pin above bypasses operators.materialize — route it through the helper." >&2
+  exit 1
+fi
+echo "PRECOMMIT OK: every operator pin goes through operators.materialize."
+
 # Bench gate (round-12 lesson: q_winnow_dedup reached the registry
 # without ever being benched and shipped a 615 s plan): every
 # registered query must have a per-query entry in bench_queries.json —
