@@ -28,10 +28,7 @@ object AuditEval {
 
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(16).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     sweep(spark, sf).foreach {
       case (name, Left(err)) => println(s"ERR $name: $err")

@@ -198,7 +198,6 @@ object CorpusOps {
   }
 
   private[graft] val ContamK = 8
-  private[graft] val ContamDfCap = 1000
 
   /** The ONE contamination posting projection — bench flag (the
     * content-hash 5% slice) + the K-gram generator — shared by the
@@ -233,9 +232,7 @@ object CorpusOps {
     val grams = contamPostingsOf(
       repartByKey(Tables.documents(spark, dir).select("doc_id", "text")
         .filter(col("doc_id").isNotNull && col("text").isNotNull), col("doc_id")))
-    val hot = grams.groupBy("g").agg(count(lit(1)).as("df"))
-      .filter(col("df") > ContamDfCap).select("g")
-    val kept = grams.join(broadcast(hot), Seq("g"), "left_anti")
+    val (_, kept) = dfCapped(grams, "g", DfCap)
     val bench = kept.filter(col("is_bench")).select(col("g"), col("doc_id").as("bench_id"))
     val train = kept.filter(!col("is_bench")).select(col("doc_id"), col("g"))
     train.join(bench, "g")
@@ -797,7 +794,6 @@ object CorpusOps {
     val docs = repartByKey(documents.select("doc_id", "text")
         .filter(col("doc_id").isNotNull && col("text").isNotNull), col("doc_id"))
     val (baseSlice, deltaSlice) = Ivm.midpointSplit(docs, "doc_id")
-    def postings(d: DataFrame): DataFrame = contamPostingsOf(d)
     // MATERIALIZE the two posting indexes once: the batch query deliberately re-runs the cheap generator per
     // consumer (3 consumers), but the incremental split has ~7 —
     // measured 15.6 s at the sf1.0 slice unmaterialized vs 6.7 s
@@ -805,15 +801,15 @@ object CorpusOps {
     // of the stored state, priced here but free in deployment where
     // the base index is READ, not re-shingled). The delta index is
     // built once and appended.
-    val basePost = materialize(postings(baseSlice))
-    val deltaPost = materialize(postings(deltaSlice))
+    val basePost = materialize(contamPostingsOf(baseSlice))
+    val deltaPost = materialize(contamPostingsOf(deltaSlice))
 
     // stored df state + the delta's df update, merged on touched grams only
     val baseDf = basePost.groupBy("g").agg(count(lit(1)).as("df_b"))
     val deltaDf = deltaPost.groupBy("g").agg(count(lit(1)).as("df_d"))
-    val baseHot = baseDf.filter(col("df_b") > ContamDfCap).select("g")
+    val baseHot = baseDf.filter(col("df_b") > DfCap).select("g")
     val newlyHot = deltaDf.join(baseDf, Seq("g"), "left")
-      .filter(col("df_d") + coalesce(col("df_b"), lit(0L)) > ContamDfCap)
+      .filter(col("df_d") + coalesce(col("df_b"), lit(0L)) > DfCap)
       .select("g")
     val hotAll = baseHot.union(newlyHot).distinct()
 
@@ -1053,7 +1049,7 @@ object CorpusOps {
        |           i -> array_to_string(toks[i:i+${ContamK - 1}], ' ')))) gram
        |  FROM ct
        |), chot AS (
-       |  SELECT gram FROM cg GROUP BY gram HAVING count(*) > $ContamDfCap
+       |  SELECT gram FROM cg GROUP BY gram HAVING count(*) > $DfCap
        |), ckept AS MATERIALIZED (
        |  SELECT * FROM cg WHERE gram NOT IN (SELECT gram FROM chot)
        |), contam AS MATERIALIZED (
@@ -1109,7 +1105,7 @@ object CorpusOps {
        |           i -> array_to_string(toks[i:i+${ContamK - 1}], ' ')))) gram
        |  FROM t
        |), hot AS (
-       |  SELECT gram FROM g GROUP BY gram HAVING count(*) > $ContamDfCap
+       |  SELECT gram FROM g GROUP BY gram HAVING count(*) > $DfCap
        |), kept AS (
        |  SELECT * FROM g WHERE gram NOT IN (SELECT gram FROM hot)
        |), bench AS (SELECT gram, doc_id bench_id FROM kept WHERE is_bench),

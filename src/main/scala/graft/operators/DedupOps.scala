@@ -36,20 +36,32 @@ object DedupOps {
   private[graft] val ShingleK = 3
   private[operators] val JaccardThreshold = 0.6
 
-  /** Blocking keys with document frequency above this are dropped from
-    * candidate generation (NOT from verification sets): a shingle
-    * shared by d docs contributes d²/2 candidate pairs, so one
-    * boilerplate phrase in a web-scale corpus would otherwise go
-    * quadratic. 1000 never binds on testdata (max df 25 at sf0.1);
-    * pairs whose every shared shingle is hotter than the cap are the
-    * documented recall cost.
-    */
-  private[operators] val DfCap = 1000
-
   private def toks(c: Column): Column = split(c, " ")
 
   private[graft] def shingleSet(c: Column): Column =
     array_distinct(Hashing.shingles(toks(c), ShingleK))
+
+  /** The one doc-keyed shingle posting generator: rows
+    * (doc_id, `extra`..., s), one per distinct [[ShingleK]]-token
+    * shingle of each doc, so a per-doc posting count ≡
+    * `size(shingleSet(text))`. A doc-keyed parallelism barrier sits
+    * BELOW the generator (gram work is never hostage to the input's
+    * file layout — the bench corpus is one row group = one scan task),
+    * and `extra` columns (a per-doc flag, one md5 per doc) are computed
+    * there and ride the postings. The generator is streamed: no per-doc
+    * array, and no InferFiltersFromGenerate guards for predicate
+    * pushdown to substitute into the scan (the array+filter shape
+    * re-ran the shingle transform 3× per row there, 4× slower
+    * end-to-end at the sf1.0 slice). isnotnull(doc_id) is EXPLICIT so
+    * no consumer's inferred predicate breaks canonical equality of the
+    * exchange (PlanGuardsSpec pins one evaluation site).
+    */
+  private def shinglePostings(docs: DataFrame, extra: Column*): DataFrame =
+    docs
+      .filter(col("doc_id").isNotNull && col("text").isNotNull)
+      .transform(repartByKey(_, col("doc_id")))
+      .select((col("doc_id") +: extra) :+ graft.plans.TextExpressions
+        .shinglePostingsNative(toks(col("text")), ShingleK).as("s"): _*)
 
   /** Exact dedup: md5 content key, keep the lowest doc_id per group. */
   def dedupExact(spark: SparkSession, dir: String): DataFrame = {
@@ -89,10 +101,7 @@ object DedupOps {
     * no window functions, no pair-side text.
     */
   def winnowDedup(spark: SparkSession, dir: String): DataFrame = {
-    val fp = winnowPostings(Tables.documents(spark, dir))
-    val hot = fp.groupBy("s").agg(count(lit(1)).as("df"))
-      .filter(col("df") > WinnowDfCap).select("s")
-    val kept = fp.join(broadcast(hot), Seq("s"), "left_anti")
+    val (_, kept) = dfCapped(winnowPostings(Tables.documents(spark, dir)), "s", WinnowDfCap)
     kept.as("a").join(kept.as("b"),
         col("a.s") === col("b.s") && col("a.k") < col("b.k"))
       .groupBy(col("a.k").as("d1"), col("b.k").as("d2"))
@@ -177,65 +186,47 @@ object DedupOps {
     dedupNgramFrame(Tables.documents(spark, dir).select(col("doc_id"), col("text")), DfCap)
       .select(col("d1"), col("d2"), round(col("jac"), 6).as("jac"))
 
-  /** Shared pair-intersection engine behind [[dedupNgramFrame]] and
-    * [[dedupContainmentFrame]]: df-capped inverted-index candidates
-    * with EXACT `inter = |sh1 ∩ sh2|` per (d1 < d2) pair — arithmetic
-    * co-count for pairs where at most one side touched a dropped hot
-    * shingle (a dropped SHARED shingle is hot on both sides by
-    * definition, so the kept co-count is the full intersection), exact
-    * array verification only where both sides are tainted. Returns
-    * (d1, d2, inter, n1, n2): every set-overlap measure — Jaccard,
-    * containment, overlap coefficient — is arithmetic over these, so
-    * shingle arrays never ride the pair shuffle.
+  /** The one pair-intersection engine over the df-capped shingle
+    * index, behind [[dedupNgramFrame]], [[dedupContainmentFrame]] and
+    * [[dedupIncrementalFrame]]: the caller supplies only the pair
+    * generator — `pair`, a predicate over the two posting sides `a`
+    * and `b` (columns doc_id, `extra`..., s) that share a kept shingle —
+    * and gets back (d1 = a.doc_id, d2 = b.doc_id, inter, n1, n2) with
+    * EXACT `inter = |sh1 ∩ sh2|` and `n = |sh|`. Inter is the
+    * arithmetic co-count for pairs where at most one side touched a
+    * dropped hot shingle (a dropped SHARED shingle is hot on both sides
+    * by definition, so the kept co-count is the full intersection);
+    * exact array verification runs only where both sides are tainted.
+    * Every set-overlap measure — Jaccard, containment, overlap
+    * coefficient — is arithmetic over these, so shingle arrays never
+    * ride the pair shuffle.
     */
-  private def pairCoCounts(docs: DataFrame, dfCap: Int): DataFrame = {
-    // the winnowPostings discipline: a doc-keyed parallelism barrier
-    // BELOW the shingle generator (gram work never hostage to file
-    // layout), the streamed generator itself (no per-doc array, and no
-    // InferFiltersFromGenerate guards for predicate pushdown to
-    // substitute into the scan — the array+filter shape re-ran the
-    // shingle transform 3× per row there, 4× slower end-to-end at the
-    // sf1.0 slice), and a SHARED s-keyed barrier above it that every
-    // consumer reuses, already aligned for the df aggregation and the
-    // pair self-join. isnotnull(doc_id) EXPLICITLY below both
-    // exchanges so no consumer's inferred predicate breaks canonical
-    // equality (PlanGuardsSpec pins one evaluation site).
-    // r20: the posting index is pinned — ONE evaluation of the
-    // shingle generator. Its consumers (the df aggregate, the
-    // anti-joined kept stream feeding BOTH self-join sides, the
-    // tainted lookup, the per-doc meta counts) prune and filter
-    // differently, so each re-ran the scan + shingle explode without
-    // the pin (r20 stage profile:
-    // 4-5 full-width re-executions at ~1-1.8 s each inside one
-    // query). Materializing the inverted index is the established
-    // state shape here — contamIncremental pins its posting indexes
-    // the same way, and a deployment keeps exactly this index between
-    // runs.
-    val ex = docs
-      .filter(col("doc_id").isNotNull && col("text").isNotNull)
-      .transform(repartByKey(_, col("doc_id")))
-      .select(col("doc_id").as("k"),
-        graft.plans.TextExpressions
-          .shinglePostingsNative(toks(col("text")), ShingleK).as("s"))
+  private def pairCoCounts(docs: DataFrame, dfCap: Int, extra: Column*)(
+      pair: Column): DataFrame = {
+    // a SHARED s-keyed barrier above the generator that every consumer
+    // reuses, already aligned for the df aggregation and the pair
+    // self-join. The index is pinned — ONE evaluation of the shingle
+    // generator: its consumers (the df aggregate, the anti-joined kept
+    // stream feeding BOTH self-join sides, the tainted lookup, the
+    // per-doc meta counts) prune and filter differently, so each re-ran
+    // the scan + shingle explode without the pin (r20 stage profile:
+    // 4-5 full-width re-executions at ~1-1.8 s each inside one query).
+    // It is exactly the index a deployment keeps materialized between
+    // incremental runs, and contamIncremental pins its posting indexes
+    // the same way.
+    val ex = shinglePostings(docs, extra: _*)
       .transform(repartByKey(_, col("s")))
       .transform(materialize)
-    // hot keys via aggregation + broadcast anti-join — the hot set is
-    // tiny, so no per-key window sort of the exploded shingle stream
-    val hot = ex.groupBy("s").agg(count(lit(1)).as("df"))
-      .filter(col("df") > dfCap).select("s")
-    val kept = ex.join(broadcast(hot), Seq("s"), "left_anti")
-    val pairs = kept.as("a").join(kept.as("b"),
-        col("a.s") === col("b.s") && col("a.k") < col("b.k"))
-      .groupBy(col("a.k").as("d1"), col("b.k").as("d2"))
+    val (hot, kept) = dfCapped(ex, "s", dfCap)
+    val pairs = kept.as("a").join(kept.as("b"), col("a.s") === col("b.s") && pair)
+      .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .agg(count(lit(1)).as("inter"))
-    val tainted = ex.join(broadcast(hot), Seq("s")).select(col("k")).distinct()
+    val tainted = ex.join(broadcast(hot), Seq("s")).select(col("doc_id")).distinct()
     // per-doc distinct-shingle count ≡ size(shingleSet): the postings
     // are distinct per doc by construction, so n is a count aggregate
     // over the SAME shared exchange — no second shingle evaluation
-    val meta = ex.groupBy(col("k")).agg(count(lit(1)).as("n"))
-      .withColumnRenamed("k", "doc_id")
-      .join(tainted.withColumnRenamed("k", "doc_id").withColumn("tf", lit(1)),
-        Seq("doc_id"), "left")
+    val meta = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+      .join(tainted.withColumn("tf", lit(1)), Seq("doc_id"), "left")
     val m = pairs
       .join(meta.select(col("doc_id").as("d1"), col("n").as("n1"), col("tf").as("tf1")), "d1")
       .join(meta.select(col("doc_id").as("d2"), col("n").as("n2"), col("tf").as("tf2")), "d2")
@@ -259,16 +250,23 @@ object DedupOps {
       .union(dirty.select(col("d1"), col("d2"), col("inter"), col("n1"), col("n2")))
   }
 
+  /** Co-count rows with Jaccard `inter / (n1 + n2 − inter)` ≥
+    * [[JaccardThreshold]], as (d1, d2, jac). Exact: n is the
+    * distinct-shingle count, so the denominator is |sh1 ∪ sh2|.
+    */
+  private def jaccardPairs(coCounts: DataFrame): DataFrame =
+    coCounts
+      .withColumn("jac",
+        col("inter") / (col("n1") + col("n2") - col("inter")).cast("double"))
+      .filter(col("jac") >= JaccardThreshold)
+      .select(col("d1"), col("d2"), col("jac"))
+
   /** Frame-based core of [[dedupNgram]]: `docs` must carry
     * (doc_id, text). Exposed within the package so specs can feed
     * synthetic hot-key corpora.
     */
   private[operators] def dedupNgramFrame(docs: DataFrame, dfCap: Int): DataFrame =
-    pairCoCounts(docs, dfCap)
-      .withColumn("jac",
-        col("inter") / (col("n1") + col("n2") - col("inter")).cast("double"))
-      .filter(col("jac") >= JaccardThreshold)
-      .select(col("d1"), col("d2"), col("jac"))
+    jaccardPairs(pairCoCounts(docs, dfCap)(col("a.doc_id") < col("b.doc_id")))
 
   private[operators] val ContainmentThreshold = 0.8
 
@@ -295,7 +293,7 @@ object DedupOps {
     // both directions from ONE evaluation of the pair engine: a
     // two-element explode, not a union of two selects over the same
     // subtree (which would run the co-count pipeline twice)
-    pairCoCounts(docs, dfCap)
+    pairCoCounts(docs, dfCap)(col("a.doc_id") < col("b.doc_id"))
       .select(explode(array(
         struct(col("d1").as("src"), col("d2").as("dst"),
           (col("inter") / col("n1").cast("double")).as("cont")),
@@ -341,15 +339,9 @@ object DedupOps {
     * `len(sh) > 0`.
     */
   private[operators] def minhashSigs(docs: DataFrame): DataFrame = {
-    val exploded = docs
-      .filter(col("doc_id").isNotNull && col("text").isNotNull)
-      .transform(repartByKey(_, col("doc_id")))
-      .select(col("doc_id"),
-        graft.plans.TextExpressions
-          .shinglePostingsNative(toks(col("text")), ShingleK).as("s"))
     val mhCols = (0 until Bands * Rows).map(j =>
       min(md5(concat(lit(s"$j:"), col("s")).cast("binary"))).as(s"mh$j"))
-    exploded.groupBy("doc_id").agg(mhCols.head, mhCols.tail: _*)
+    shinglePostings(docs).groupBy("doc_id").agg(mhCols.head, mhCols.tail: _*)
   }
 
   /** The [[Bands]] band keys of a signature row, in band order. */
@@ -598,17 +590,9 @@ object DedupOps {
   private[operators] def simhashBands(docs: DataFrame): DataFrame = {
     // Votes via the streamed shingle generator → keyed sums:
     // per-shingle md5 runs codegen'd exactly once (the fold-over-array
-    // form re-evaluates the hash array per bit, interpreted; the
-    // explode-of-array form re-evaluates the shingle transform in the
-    // scan filter through InferFiltersFromGenerate substitution), and
-    // the doc-keyed barrier parallelizes the corpus regardless of file
-    // layout. Integer sums are order-free, so results are identical.
-    val exploded = docs
-      .filter(col("doc_id").isNotNull && col("text").isNotNull)
-      .transform(repartByKey(_, col("doc_id")))
-      .select(col("doc_id"),
-        graft.plans.TextExpressions
-          .shinglePostingsNative(toks(col("text")), ShingleK).as("s"))
+    // form re-evaluates the hash array per bit, interpreted). Integer
+    // sums are order-free, so results are identical.
+    val exploded = shinglePostings(docs)
       .withColumn("h1", conv(substring(md5(col("s").cast("binary")), 1, 8), 16, 10).cast("long"))
       .withColumn("h2", conv(substring(md5(col("s").cast("binary")), 9, 8), 16, 10).cast("long"))
     val voteCols = (0 until SimBands * SimBandBits).map { g =>
@@ -1194,66 +1178,21 @@ object DedupOps {
     * the inverted index over the old corpus is exactly what a
     * deployment would keep materialized between ingests.
     */
-  def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    // the pairCoCounts discipline: doc-keyed parallelism barrier below
-    // the streamed shingle generator, shared s-keyed barrier above it;
-    // the is_new flag (1 md5/doc) is computed below the barriers and
-    // rides the postings
-    val ex = docs
-      .filter(col("doc_id").isNotNull && col("text").isNotNull)
-      .transform(repartByKey(_, col("doc_id")))
-      .select(col("doc_id").as("k"),
-        (conv(substring(md5(col("text").cast("binary")), 1, 8), 16, 10)
-          .cast("long") % 10 >= 8).as("is_new"),
-        graft.plans.TextExpressions
-          .shinglePostingsNative(toks(col("text")), ShingleK).as("s"))
-      .transform(repartByKey(_, col("s")))
-      // r20: ONE evaluation of the shingle generator (the pairCoCounts
-      // materialization rationale — this query's 5 differently-pruned
-      // consumers re-ran the explode at ~1-1.8 s each), and exactly
-      // the index a deployment keeps materialized between ingests
-      .transform(materialize)
-    val hot = ex.groupBy("s").agg(count(lit(1)).as("df"))
-      .filter(col("df") > DfCap).select("s")
-    val kept = ex.join(broadcast(hot), Seq("s"), "left_anti")
-    // each new doc vs old docs (any) and earlier new docs (lower id)
-    val pairs = kept.filter(col("is_new")).as("a")
-      .join(kept.as("b"),
-        col("a.s") === col("b.s") && (!col("b.is_new") || col("b.k") < col("a.k")))
-      .groupBy(col("a.k").as("new_id"), col("b.k").as("other_id"))
-      .agg(count(lit(1)).as("inter"))
-    val tainted = ex.join(broadcast(hot), Seq("s")).select(col("k")).distinct()
-    // distinct-posting count per doc ≡ size(shingleSet) — aggregated
-    // over the shared exchange, no second shingle evaluation
-    val meta = ex.groupBy(col("k")).agg(count(lit(1)).as("n"))
-      .withColumnRenamed("k", "doc_id")
-      .join(tainted.withColumnRenamed("k", "doc_id").withColumn("tf", lit(1)),
-        Seq("doc_id"), "left")
-    val m = pairs
-      .join(meta.select(col("doc_id").as("new_id"), col("n").as("n1"), col("tf").as("tf1")), "new_id")
-      .join(meta.select(col("doc_id").as("other_id"), col("n").as("n2"), col("tf").as("tf2")), "other_id")
-    val clean = m.filter(col("tf1").isNull || col("tf2").isNull)
-      .withColumn("jac",
-        col("inter") / (col("n1") + col("n2") - col("inter")).cast("double"))
-    // both-tainted verification arrays: semi-filtered recompute over
-    // the survivor ids only, never a corpus-wide array table
-    val dirtyPairs = m.filter(col("tf1").isNotNull && col("tf2").isNotNull)
-    val dirtyIds = dirtyPairs
-      .select(explode(array(col("new_id"), col("other_id"))).as("doc_id")).distinct()
-    val dArr = docs.join(dirtyIds, Seq("doc_id"), "left_semi")
-      .filter(col("doc_id").isNotNull)
-      .select(col("doc_id"), shingleSet(col("text")).as("sh"))
-    val dirty = dirtyPairs
-      .join(dArr.select(col("doc_id").as("new_id"), col("sh").as("sh1")), "new_id")
-      .join(dArr.select(col("doc_id").as("other_id"), col("sh").as("sh2")), "other_id")
-      .withColumn("jac",
-        size(array_intersect(col("sh1"), col("sh2"))) /
-          size(array_union(col("sh1"), col("sh2"))).cast("double"))
-    clean.select(col("new_id"), col("other_id"), col("jac"))
-      .union(dirty.select(col("new_id"), col("other_id"), col("jac")))
-      .filter(col("jac") >= JaccardThreshold)
+  def dedupIncremental(spark: SparkSession, dir: String): DataFrame =
+    dedupIncrementalFrame(Tables.documents(spark, dir).select(col("doc_id"), col("text")), DfCap)
       .select(col("new_id"), col("other_id"), round(col("jac"), 6).as("jac"))
+
+  /** Frame-based core of [[dedupIncremental]]: the [[pairCoCounts]]
+    * engine with the new-anchored pair generator — each new doc (a.is_new)
+    * against old docs (any) and earlier new docs (lower id). The
+    * is_new flag (1 md5/doc) rides the postings.
+    */
+  private[operators] def dedupIncrementalFrame(docs: DataFrame, dfCap: Int): DataFrame = {
+    val isNew = conv(substring(md5(col("text").cast("binary")), 1, 8), 16, 10)
+      .cast("long") % 10 >= 8
+    jaccardPairs(pairCoCounts(docs, dfCap, isNew.as("is_new"))(
+        col("a.is_new") && (!col("b.is_new") || col("b.doc_id") < col("a.doc_id"))))
+      .select(col("d1").as("new_id"), col("d2").as("other_id"), col("jac"))
   }
 
   /** Window length for the content-defined chunk boundary hash. */

@@ -46,7 +46,7 @@ object FuzzyJoin {
   def resolve(
       left: DataFrame, leftKey: String, leftName: Column, leftAux: Column,
       right: DataFrame, rightKey: String, rightName: Column, rightAux: Column,
-      threshold: Double = 0.5, dfCap: Int = 1000): DataFrame = {
+      threshold: Double = 0.5, dfCap: Int = DfCap): DataFrame = {
     require(threshold >= 0.5, "bigram blocking only covers tier 3 for threshold >= 0.5")
 
     // one exchange per side, keyed on the cleaned name: the groupBy
@@ -72,25 +72,10 @@ object FuzzyJoin {
       .withColumn("ltoks", array_distinct(split(col("lcn"), " ")))
     val rnames = r.groupBy(col("rcn")).agg(count(lit(1)).as("rgrp"))
       .withColumn("rtoks", array_distinct(split(col("rcn"), " ")))
-    val lnb = lnames.select(col("lcn"), col("lgrp"),
-      explode(FuzzyOps.bigramsOf(col("ltoks"))).as("c"))
-    val rnb = rnames.select(col("rcn"), col("rgrp"),
-      explode(FuzzyOps.bigramsOf(col("rtoks"))).as("c"))
-    // row-weighted df: identical to exploding every row's bigrams
-    val hot = lnb.select(col("c"), col("lgrp").as("g"))
-      .union(rnb.select(col("c"), col("rgrp").as("g")))
-      .groupBy("c").agg(sum(col("g")).as("df"))
-      .filter(col("df") > dfCap).select("c")
-    val nameCand = lnb.join(broadcast(hot), Seq("c"), "left_anti")
-      .join(rnb.join(broadcast(hot), Seq("c"), "left_anti"), "c")
-      .select(col("lcn"), col("rcn"))
-      .union(lnames.select(col("lcn")).join(rnames.select(col("rcn")),
-        col("lcn") === col("rcn")).select(col("lcn"), col("rcn")))
-      .distinct()
 
     // exact Jaccard over the tiny distinct-name-pair set; name pairs
     // that can reach no tier are pruned before rows fan out
-    val namePairs = nameCand
+    val namePairs = nameCandidates(lnames, rnames, dfCap)
       .join(lnames.select(col("lcn"), col("ltoks")), "lcn")
       .join(rnames.select(col("rcn"), col("rtoks")), "rcn")
       .withColumn("inter", size(array_intersect(col("ltoks"), col("rtoks"))))
@@ -137,5 +122,33 @@ object FuzzyJoin {
         col("b.aux_match").as("aux_match"), col("b.jac").as("jac"), col("b.rk").as("rk"))
     l.join(best, Seq("lcn", "laux"))
       .select(col("lk"), col("rk"), col("tier"), col("aux_match"), round(col("jac"), 6).as("jac"))
+  }
+
+  /** The one NAME-LEVEL blocker: distinct (lcn, rcn) name pairs that
+    * share a df-kept token bigram, plus every equal-name pair (so
+    * single-token names, which have no bigram, still reach the exact
+    * tiers). `lnames` carries (lcn, lgrp, ltoks) and `rnames`
+    * (rcn, rgrp, rtoks): one row per distinct cleaned name with its
+    * row count and token set. The cap is ROW-weighted over both sides
+    * — a bigram's df sums the group sizes of the names holding it,
+    * identical to exploding every row's bigrams — with the strict `>`
+    * and broadcast anti-join of [[dfCapped]].
+    */
+  private[operators] def nameCandidates(lnames: DataFrame, rnames: DataFrame,
+      dfCap: Int): DataFrame = {
+    val lnb = lnames.select(col("lcn"), col("lgrp"),
+      explode(FuzzyOps.bigramsOf(col("ltoks"))).as("c"))
+    val rnb = rnames.select(col("rcn"), col("rgrp"),
+      explode(FuzzyOps.bigramsOf(col("rtoks"))).as("c"))
+    val hot = lnb.select(col("c"), col("lgrp").as("g"))
+      .union(rnb.select(col("c"), col("rgrp").as("g")))
+      .groupBy("c").agg(sum(col("g")).as("df"))
+      .filter(col("df") > dfCap).select("c")
+    lnb.join(broadcast(hot), Seq("c"), "left_anti")
+      .join(rnb.join(broadcast(hot), Seq("c"), "left_anti"), "c")
+      .select(col("lcn"), col("rcn"))
+      .union(lnames.select(col("lcn")).join(rnames.select(col("rcn")),
+        col("lcn") === col("rcn")).select(col("lcn"), col("rcn")))
+      .distinct()
   }
 }

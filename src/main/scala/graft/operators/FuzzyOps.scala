@@ -21,7 +21,7 @@ import graft.sources.Tables
   *     token-bigram inverted index for similarity tiers, cleaned-name
   *     equality for exact tiers, deletion-neighborhood signatures for
   *     edit-distance vocab joins. Never a cross join.
-  *   - Hot blocking keys are df-capped ([[BigramDfCap]]): a key shared
+  *   - Hot blocking keys are df-capped ([[DfCap]]): a key shared
   *     by d rows yields d²/2 candidates, so one stop-phrase bigram in
   *     a web-scale corpus would otherwise go quadratic. The cap is
   *     mirrored in the oracle SQL and only prunes candidate
@@ -48,12 +48,6 @@ import graft.sources.Tables
   *     ≥ 2 distinct tokens (the reference's ≥ 2-matching-words rule).
   */
 object FuzzyOps {
-
-  /** Blocking keys (bigrams / deletion signatures) with more total
-    * occurrences than this are dropped from candidate generation.
-    * Never binds on testdata; bounds the worst key at ~cap²/2 pairs.
-    */
-  private[operators] val BigramDfCap = 1000
 
   /** Distinct tokens in CANONICAL (sorted) order: every downstream
     * consumer is a pure function of the token SET (the gram generators
@@ -235,7 +229,7 @@ object FuzzyOps {
         concat(lower(col("p_name")), lit(" "), lower(col("p_type"))).as("nm"))
       .transform(repartByKey(_, col("k")))
       .select(col("k"), tokensOf(col("nm")).as("toks"))
-    tokenJaccardFrame(base, BigramDfCap)
+    tokenJaccardFrame(base, DfCap)
   }
 
   /** Frame-based core of [[tokenJaccardJoin]]: `base` must carry
@@ -420,12 +414,8 @@ object FuzzyOps {
     * keys are df-capped like every other blocking key.
     */
   private[operators] def editCands(vocab: DataFrame): DataFrame = {
-    val sigs = vocab.select(col("t"), explode(Text.delNbh2(col("t"))).as("sig"))
-    // hot keys via aggregation + broadcast anti-join: the hot set is
-    // tiny, so no per-key window sort of the full signature stream
-    val hot = sigs.groupBy("sig").agg(count(lit(1)).as("df"))
-      .filter(col("df") > BigramDfCap).select("sig")
-    val kept = sigs.join(broadcast(hot), Seq("sig"), "left_anti")
+    val (_, kept) = dfCapped(
+      vocab.select(col("t"), explode(Text.delNbh2(col("t"))).as("sig")), "sig", DfCap)
     kept.as("a").join(kept.as("b"),
         col("a.sig") === col("b.sig") && col("a.t") < col("b.t"))
       .select(col("a.t").as("t1"), col("b.t").as("t2"))
@@ -477,7 +467,7 @@ object FuzzyOps {
     FuzzyJoin.resolve(
       p, "p_partkey", concat(col("p_name"), lit(" Pte Ltd")), col("p_size"),
       p, "p_partkey", concat(col("p_name"), lit(" "), lower(col("p_type"))), col("p_size"),
-      threshold = 0.5, dfCap = BigramDfCap)
+      threshold = 0.5)
       .withColumnRenamed("aux_match", "size_match")
   }
 
@@ -541,27 +531,15 @@ object FuzzyOps {
     // and the reference's word-match lambda all run over DISTINCT
     // names (64 at sf0.1, vs 6.3M row pairs), and rows only fan back
     // out for the per-row size_match and the final best-match pick.
-    // The cap stays row-level: a bigram's df counts ROWS, aggregated
-    // from the name stream weighted by group size.
+    // The cap stays row-level (see [[FuzzyJoin.nameCandidates]]).
     val lnames = left.groupBy(col("lcn")).agg(count(lit(1)).as("lgrp"))
       .withColumn("ltoks", sigToks(col("lcn")))
     val rnames = right.groupBy(col("rcn")).agg(count(lit(1)).as("rgrp"))
       .withColumn("rtoks", sigToks(col("rcn")))
-    val lnb = lnames.select(col("lcn"), col("lgrp"), explode(bigramsOf(col("ltoks"))).as("c"))
-    val rnb = rnames.select(col("rcn"), col("rgrp"), explode(bigramsOf(col("rtoks"))).as("c"))
-    val hot = lnb.select(col("c"), col("lgrp").as("g")).union(rnb.select(col("c"), col("rgrp").as("g")))
-      .groupBy("c").agg(sum(col("g")).as("df"))
-      .filter(col("df") > BigramDfCap).select("c")
-    val nameCand = lnb.join(broadcast(hot), Seq("c"), "left_anti")
-      .join(rnb.join(broadcast(hot), Seq("c"), "left_anti"), "c")
-      .select(col("lcn"), col("rcn"))
-      .union(lnames.select(col("lcn")).join(rnames.select(col("rcn")),
-        col("lcn") === col("rcn")).select(col("lcn"), col("rcn")))
-      .distinct()
 
     // the reference's fuzzy word-match scoring (halalService.ts:119-147)
     // over the tiny distinct-name-pair set
-    val verdicts = nameCand
+    val verdicts = FuzzyJoin.nameCandidates(lnames, rnames, DfCap)
       .join(lnames.select(col("lcn"), col("ltoks")), "lcn")
       .join(rnames.select(col("rcn"), col("rtoks")), "rcn")
       .withColumn("matched", filter(col("ltoks"), w =>
@@ -694,7 +672,7 @@ object FuzzyOps {
          |  SELECT p_partkey k,
          |         list_sort(list_distinct(string_split(lower(p_name) || ' ' || lower(p_type), ' '))) toks
          |  FROM part
-         |), ${sqlSelfCands(BigramDfCap)},
+         |), ${sqlSelfCands(DfCap)},
          |v AS (
          |  SELECT k1, k2, min_inter,
          |         len(list_intersect(b1.toks, b2.toks)) inter,
@@ -709,7 +687,7 @@ object FuzzyOps {
          |ORDER BY k1, k2""".stripMargin,
     "q_levenshtein_pairs" ->
       s"""WITH vocab AS (SELECT DISTINCT unnest(string_split(lower(p_name), ' ')) t FROM part),
-         |${sqlEditCands(BigramDfCap)}
+         |${sqlEditCands(DfCap)}
          |SELECT t1, t2,
          |       round((greatest(length(t1), length(t2)) - levenshtein(t1, t2))
          |             / greatest(length(t1), length(t2))::DOUBLE, 6) sim
@@ -720,7 +698,7 @@ object FuzzyOps {
          |ORDER BY t1, t2""".stripMargin,
     "q_word_similar" ->
       s"""WITH vocab AS (SELECT DISTINCT unnest(string_split(lower(p_name), ' ')) t FROM part),
-         |${sqlEditCands(BigramDfCap)},
+         |${sqlEditCands(DfCap)},
          |dict(yfull, yabbrev) AS (VALUES
          |  ('restaurant','rest'), ('restaurant','resto'), ('kitchen','kitch'),
          |  ('house','hse'), ('corner','cnr'), ('centre','ctr'),
@@ -752,7 +730,7 @@ object FuzzyOps {
          |r AS (
          |  SELECT p_partkey rk, p_size rsize, ${cn("p_name || ' ' || lower(p_type)")} rcn FROM part
          |), rt AS (SELECT rk, rsize, rcn, list_distinct(string_split(rcn, ' ')) rtoks FROM r),
-         |${sqlTwoSideCands(BigramDfCap)},
+         |${sqlTwoSideCands(DfCap)},
          |scored AS (
          |  SELECT lk, rk,
          |         len(list_intersect(ltoks, rtoks)) inter,
@@ -781,7 +759,7 @@ object FuzzyOps {
          |), rt AS (SELECT rk, rsize, rcn,
          |            list_filter(list_distinct(string_split(rcn, ' ')), t -> length(t) > 2) rtoks
          |          FROM r),
-         |${sqlTwoSideCands(BigramDfCap)},
+         |${sqlTwoSideCands(DfCap)},
          |scored AS (
          |  SELECT lk, rk,
          |         list_filter(ltoks, w -> len(list_filter(rtoks, h ->

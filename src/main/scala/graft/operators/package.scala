@@ -1,8 +1,41 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{broadcast, col, count, lit}
 
 package object operators {
+
+  /** The one document-frequency cap on blocking keys (dedup shingles,
+    * contamination grams, fuzzy bigrams and deletion signatures, the
+    * streaming contamination gate): a key shared by d rows yields
+    * d²/2 candidate pairs, so one boilerplate phrase or stop-phrase in
+    * a web-scale corpus would otherwise go quadratic. Keys above the
+    * cap are dropped from candidate generation only, never from the
+    * measure of a found pair. 1000 never binds on testdata (max df 25
+    * at sf0.1); the oracle SQL mirrors it. Winnow fingerprints carry
+    * their own, lower cap (`DedupOps.WinnowDfCap`).
+    */
+  private[graft] val DfCap = 1000
+
+  /** The one hot-key cap policy over a single posting stream: `hot` =
+    * the `key`s with df STRICTLY above `cap` (df = posting rows per
+    * key), `kept` = the postings whose key is not hot.
+    *
+    *  - Shape: a count aggregate plus a broadcast anti-join — the hot
+    *    set is tiny, so no per-key window sort of the full stream.
+    *  - Recall cost: a pair whose every shared key is hot is never a
+    *    candidate; callers that need exact measures on pairs that
+    *    touched a hot key verify those from `hot` (the dedup co-count
+    *    engine's tainted docs).
+    *  - The oracle SQL mirrors it (`HAVING count(*) > cap`, or
+    *    `QUALIFY count(*) OVER (PARTITION BY key) <= cap`).
+    */
+  private[operators] def dfCapped(postings: DataFrame, key: String, cap: Int)
+      : (DataFrame, DataFrame) = {
+    val hot = postings.groupBy(key).agg(count(lit(1)).as("df"))
+      .filter(col("df") > cap).select(key)
+    (hot, postings.join(broadcast(hot), Seq(key), "left_anti"))
+  }
 
   /** Hash-repartition with the session's configured shuffle width
     * PINNED (explicit numPartitions). A plain `repartition(col)` is an

@@ -69,7 +69,7 @@ object ContamStream {
     if (st.hot) {
       state.update(st.copy(df = newDf))
       Iterator.empty
-    } else if (newDf > CorpusOps.ContamDfCap) {
+    } else if (newDf > graft.operators.DfCap) {
       // the cap crossing: boilerplate discovered mid-stream — void
       // everything this gram ever said and stop paying for its lists
       state.update(GramState(newDf, hot = true, Nil, Nil))

@@ -41,7 +41,7 @@ class ContamStreamSpec extends AnyFunSuite {
     import spark.implicits._
     val grams = operators.CorpusOps.contamPostingsOf(docs.toDF())
     val hot = grams.groupBy("g").agg(count(lit(1)).as("df"))
-      .filter($"df" > operators.CorpusOps.ContamDfCap).select("g")
+      .filter($"df" > operators.DfCap).select("g")
     val kept = grams.join(broadcast(hot), Seq("g"), "left_anti")
     kept.filter(!$"is_bench").select($"doc_id", $"g")
       .join(kept.filter($"is_bench").select($"g", $"doc_id".as("bench_id")), "g")

@@ -71,13 +71,13 @@ class CheckpointModeSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty, "expected no checkpoint dir at test start")
-    val local = DedupOps.dedupNgramFrame(docs, DedupOps.DfCap).collect().toSet
+    val local = DedupOps.dedupNgramFrame(docs, DfCap).collect().toSet
     assert(local.map(r => (r.getLong(0), r.getLong(1))) === Set((0L, 1L), (2L, 3L)))
     val dir = Files.createTempDirectory("graft-pin-ckpt").toFile
     try {
       sc.setCheckpointDir(dir.getAbsolutePath)
       // the pin is eager: building the frame already wrote the index
-      val pairs = DedupOps.dedupNgramFrame(docs, DedupOps.DfCap)
+      val pairs = DedupOps.dedupNgramFrame(docs, DfCap)
       assert(filesUnder(dir) > 0, "no files under the checkpoint dir — the pin stayed local")
       assert(pairs.collect().toSet === local)
       Reference.reachabilityFence(pairs)

@@ -24,7 +24,7 @@ class ContamFuzzIvmSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val K = 8        // gram width (ContamK)
-  private val Cap = 1000   // df cap (ContamDfCap)
+  private val Cap = 1000   // df cap (DfCap)
 
   private def samples[A](gen: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => gen.apply(Gen.Parameters.default, Seed(577L + i)))

@@ -112,7 +112,7 @@ class CrossOperatorConsistencySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val docs = graft.sources.Tables.documents(spark, sf).select(col("doc_id"), col("text"))
       .filter(graft.functions.Hashing.hex32(col("text")) % DedupOps.RecallSampleMod === 0)
-    val truth = DedupOps.dedupNgramFrame(docs, DedupOps.DfCap).select("d1", "d2").collect()
+    val truth = DedupOps.dedupNgramFrame(docs, DfCap).select("d1", "d2").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val found = DedupOps.dedupMinhashFrame(docs).select("d1", "d2").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

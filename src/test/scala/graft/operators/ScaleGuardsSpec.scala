@@ -27,22 +27,32 @@ class ScaleGuardsSpec extends AnyFunSuite {
 
   // --- df-capped blocking --------------------------------------------------
 
+  private val Planted = "unique alpha beta gamma delta epsilon zeta eta theta"
+
   /** 40 docs that all share one boilerplate sentence (a hot shingle
-    * with df 40) plus two genuine near-dup pairs that share distinctive
-    * content. With the cap the hot shingle is dropped from blocking:
-    * the boilerplate-only pairs disappear while true dups survive via
-    * their cold shingles.
+    * with df 40) plus two genuine near-dup pairs, (0, 1) and (2, 3),
+    * that share distinctive content; `doc1` is doc 1's content ahead
+    * of the boilerplate (by default doc 0's).
     */
-  test("df-cap drops hot blocking keys but keeps true dups reachable via cold shingles") {
+  private def boilerCorpus(doc1: String = Planted) = {
     import spark.implicits._
     val boiler = "all rights reserved worldwide"
-    val docs = (0 until 40).map { i =>
+    (0 until 40).map { i =>
       val body =
-        if (i == 0 || i == 1) s"unique alpha beta gamma delta epsilon zeta eta theta $boiler"
+        if (i == 0) s"$Planted $boiler"
+        else if (i == 1) s"$doc1 $boiler"
         else if (i == 2 || i == 3) s"other kappa lambda mu nu xi omicron pi rho $boiler"
         else s"filler${i}a filler${i}b filler${i}c filler${i}d $boiler"
       (i.toLong, body)
     }.toDF("doc_id", "text")
+  }
+
+  /** With the cap the hot shingle is dropped from blocking: the
+    * boilerplate-only pairs disappear while true dups survive via
+    * their cold shingles.
+    */
+  test("df-cap drops hot blocking keys but keeps true dups reachable via cold shingles") {
+    val docs = boilerCorpus()
 
     val capped = DedupOps.dedupNgramFrame(docs, dfCap = 10)
       .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -55,6 +65,28 @@ class ScaleGuardsSpec extends AnyFunSuite {
     val uncapped = DedupOps.dedupNgramFrame(docs, dfCap = Int.MaxValue)
       .select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(capped.subsetOf(uncapped))
+  }
+
+  /** The incremental pass reads the same capped index: every doc
+    * holds the hot boilerplate shingle, so every candidate pair is
+    * both-tainted and its measure comes from the exact-verify branch.
+    * "psi" makes doc 1 a near-dup (Jaccard 9/14) that is_new flags, so
+    * the planted pair (0, 1) is new-anchored; (2, 3) stays old×old.
+    */
+  test("incremental dedup under the df-cap equals the capped ngram pairs restricted to new-anchored pairs") {
+    import spark.implicits._
+    val docs = boilerCorpus(doc1 = s"$Planted psi")
+    def unordered(a: Long, b: Long): (Long, Long) = if (a < b) (a, b) else (b, a)
+    val isNew = docs
+      .selectExpr("doc_id", "conv(substring(md5(cast(text AS BINARY)), 1, 8), 16, 10) % 10 >= 8")
+      .as[(Long, Boolean)].collect().toMap
+    val restricted = DedupOps.dedupNgramFrame(docs, dfCap = 10).collect()
+      .map(r => (unordered(r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+      .filter { case ((a, b), _) => isNew(a) || isNew(b) }
+    assert(restricted.get((0L, 1L)).contains(9.0 / 14), s"planted pair not new-anchored: $restricted")
+    val incr = DedupOps.dedupIncrementalFrame(docs, dfCap = 10).collect()
+      .map(r => (unordered(r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    assert(incr === restricted)
   }
 
   // --- connected components ------------------------------------------------

@@ -5,8 +5,11 @@
 #
 # PRECOMMIT_SMOKE=1 additionally runs every registered query at
 # sf0.001 (QueriesSpec, ~90 s) — catches runtime breaks (bad column
-# refs, unresolvable plans) that compile alone cannot. Use before
-# END-OF-ROUND snapshots and after touching query plumbing.
+# refs, unresolvable plans) that compile alone cannot — plus the specs
+# that pin the shared df-capped co-count engine's invariants across
+# queries (CrossOperatorConsistencySpec, ScaleGuardsSpec,
+# ContainmentSpec). Use before END-OF-ROUND snapshots and after
+# touching query plumbing.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch Test/compile >/tmp/precommit.log 2>&1 || {
@@ -59,10 +62,11 @@ echo "PRECOMMIT OK: every registered query has a bench entry."
 #      that only min-of-2 absorbed). If any per-query p2/p1 ratio
 #      exceeds 3x, run a third pass for the record.
 if [[ "${PRECOMMIT_SMOKE:-0}" == "1" ]]; then
-  sbt -batch "testOnly graft.QueriesSpec" >/tmp/precommit_smoke.log 2>&1 || {
-    echo "PRECOMMIT FAIL: QueriesSpec smoke broken — do not commit." >&2
+  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec" \
+      >/tmp/precommit_smoke.log 2>&1 || {
+    echo "PRECOMMIT FAIL: smoke specs broken — do not commit." >&2
     tail -n 40 /tmp/precommit_smoke.log >&2
     exit 1
   }
-  echo "PRECOMMIT OK: all registered queries run at sf0.001."
+  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine specs green."
 fi
