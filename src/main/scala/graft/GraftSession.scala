@@ -7,6 +7,22 @@ import org.apache.spark.sql.SparkSession
   * Local mode is a stand-in for a multi-executor cluster: shuffle
   * partitioning, AQE, and broadcast thresholds are configured as they
   * would be on a real deployment, so plans exercised here carry over.
+  *
+  * Local file system: `file:` paths go through [[NioLocalFileSystem]]
+  * (FileSystem API: parquet writes, sink markers, reliable pins) and
+  * [[NioLocalFs]] (FileContext API: the state store, the offset and
+  * commit logs). Spark's jars ship no libhadoop, so Hadoop's own local
+  * file system forks `chmod` on every create and mkdirs and `readlink`
+  * twice per FileContext rename. JFR counted 2,301 such processes
+  * (1,624 `readlink`, 677 `chmod`) in one 8 s `cdc_upsert` benchmark
+  * run of 10 cycles, each a 500-change micro-batch, its watermark tick
+  * and a read: state store 1,628, offset/commit logs 402, snapshot
+  * writes 219, sink markers 41, other checkpoint files 11. With these
+  * classes it counted none. Checksums, `.crc` files and permission
+  * bits are unchanged.
+  * The master is always `local[n]`, so executors load the classes from
+  * the driver's classpath; a `local-cluster` master would also need
+  * them on `spark.executor.extraClassPath`.
   */
 object GraftSession {
   def builder(cpus: Int): SparkSession.Builder =
@@ -29,6 +45,9 @@ object GraftSession {
       // is collected, the lifetime a local pin has; without it the
       // files stay in the checkpoint dir for the whole session
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+      // in-process `file:` file systems; see "Local file system" above
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 
   def local(cpus: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession = {
     val spark = builder(cpus).getOrCreate()

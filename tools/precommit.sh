@@ -8,8 +8,9 @@
 # refs, unresolvable plans) that compile alone cannot — plus the specs
 # that pin the shared df-capped co-count engine's invariants across
 # queries (CrossOperatorConsistencySpec, ScaleGuardsSpec,
-# ContainmentSpec). Use before END-OF-ROUND snapshots and after
-# touching query plumbing.
+# ContainmentSpec), and the local file system and upsert sink specs
+# (LocalFsSpec, UpsertSinkSpec). Use before END-OF-ROUND snapshots and
+# after touching query plumbing.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch Test/compile >/tmp/precommit.log 2>&1 || {
@@ -62,11 +63,11 @@ echo "PRECOMMIT OK: every registered query has a bench entry."
 #      that only min-of-2 absorbed). If any per-query p2/p1 ratio
 #      exceeds 3x, run a third pass for the record.
 if [[ "${PRECOMMIT_SMOKE:-0}" == "1" ]]; then
-  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec" \
+  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec graft.LocalFsSpec graft.UpsertSinkSpec" \
       >/tmp/precommit_smoke.log 2>&1 || {
     echo "PRECOMMIT FAIL: smoke specs broken — do not commit." >&2
     tail -n 40 /tmp/precommit_smoke.log >&2
     exit 1
   }
-  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine specs green."
+  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine, local file system and upsert sink specs green."
 fi
