@@ -69,6 +69,10 @@ package object operators {
     *    `localCheckpoint`, whose blocks die with their executor.
     *  - Cost: a pinned frame loses its size statistics, so a consumer
     *    join can no longer be planned as a broadcast from it.
+    *  - Plan checks: the pinned lineage runs as its own
+    *    `localCheckpoint`/`checkpoint` execution and is absent from the
+    *    consumer's `executedPlan`, which only scans the pinned rows, so
+    *    a plan check must read that execution's plan too.
     */
   private[operators] def materialize(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()

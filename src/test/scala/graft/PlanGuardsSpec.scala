@@ -1,10 +1,15 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression guards: the properties `.explain` reviews
@@ -25,6 +30,39 @@ class PlanGuardsSpec extends AnyFunSuite {
 
   private def nodes(df: DataFrame): Seq[SparkPlan] =
     walk(df.queryExecution.executedPlan)
+
+  /** Builds `build` and returns it with the executed plans of every
+    * `localCheckpoint`/`checkpoint` execution that building it ran.
+    * `operators.materialize` pins eagerly: the pinned lineage runs as
+    * its own execution while the query is built, and the query's
+    * `executedPlan` only scans the pinned rows. Listener delivery is
+    * asynchronous, so a fence action, recognised by its
+    * QueryExecution, closes the capture.
+    */
+  private def withPinnedPlans(build: => DataFrame): (DataFrame, Seq[SparkPlan]) = {
+    val pins = new ConcurrentLinkedQueue[SparkPlan]
+    val fence = spark.range(1).toDF()
+    val fenced = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe eq fence.queryExecution) fenced.countDown()
+        else if (funcName == "localCheckpoint" || funcName == "checkpoint") pins.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val df = build
+      fence.collect()
+      assert(fenced.await(60, TimeUnit.SECONDS), "listener bus never delivered the fence action")
+      (df, pins.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** `nodes` of the built query plus the nodes of every pin it ran. */
+  private def queryNodes(build: => DataFrame): Seq[SparkPlan] = {
+    val (df, pins) = withPinnedPlans(build)
+    nodes(df) ++ pins.flatMap(walk)
+  }
 
   test("q1_agg scan is column-pruned to the referenced lineitem columns") {
     val scans = nodes(Queries.q1Agg(spark, sf)).collect {
@@ -105,10 +143,12 @@ class PlanGuardsSpec extends AnyFunSuite {
     // query must be keyed, forever. Global totals are scalar
     // aggregates broadcast-crossed back (CorpusOps.classBalance);
     // tiny top-k frames rank via sorted-array posexplode position
-    // (CorpusOps.weightedSample) — neither plans a WindowExec.
+    // (CorpusOps.weightedSample) — neither plans a WindowExec. A
+    // pinned intermediate's window runs in the pin's own execution,
+    // so those plans are walked too.
     val offenders = SparkEntry.queries.keys.toSeq.sorted
       .filter { name =>
-        nodes(SparkEntry.queries(name)(spark, sf)).exists {
+        queryNodes(SparkEntry.queries(name)(spark, sf)).exists {
           case w: WindowExec => w.partitionSpec.isEmpty
           case _ => false
         }
@@ -121,15 +161,22 @@ class PlanGuardsSpec extends AnyFunSuite {
     // the r12 winnowDedup regression: the expensive fingerprint
     // transform sat ABOVE its repartition barrier, so every consumer
     // (df agg, both self-join sides) re-ran it — 615 s at sf0.1. The
-    // contract is: evaluate once below a shared exchange, every
-    // consumer reuses that exchange. Count EVALUATIONS of the
-    // transform in the executed plan: walk without descending into
-    // reused exchanges (a ReusedExchange shares the evaluation),
-    // dedupe by node identity, require exactly one site — a Generate
-    // (the winnow postings generator) or a Project (the ngram shingle
-    // transform).
+    // contract is ONE evaluation per query. It is met either below a
+    // shared exchange that every consumer reuses, or inside a pinned
+    // materialization (`operators.materialize`): the pin runs the
+    // transform once in its own localCheckpoint/checkpoint execution
+    // while the query is built, and its consumers read the pinned
+    // rows. So count EVALUATIONS of the transform across the final
+    // executed plan AND every pin execution the query ran: walk
+    // without descending into reused exchanges (a ReusedExchange
+    // shares the evaluation), dedupe by node identity, require
+    // exactly one site — a Generate (the winnow postings generator)
+    // or a Project (the ngram shingle transform). An evaluation in a
+    // pin counts as the one site; a pin plus any re-evaluation in the
+    // final plan counts as two.
     import org.apache.spark.sql.execution.{GenerateExec, ProjectExec}
-    def evalSites(df: DataFrame, marker: String): Int = {
+    def evalSites(build: => DataFrame, marker: String): Int = {
+      val (df, pins) = withPinnedPlans(build)
       // execute THIS QueryExecution (df.write builds a fresh one whose
       // AQE plan never finalizes) so the walk sees runtime stage reuse
       df.queryExecution.toRdd.count()
@@ -139,7 +186,7 @@ class PlanGuardsSpec extends AnyFunSuite {
         case r: ReusedExchangeExec => Seq(r) // shared evaluation — stop
         case other => other +: other.children.flatMap(w)
       }
-      w(df.queryExecution.executedPlan)
+      (df.queryExecution.executedPlan +: pins).flatMap(w)
         .collect {
           case p: ProjectExec
               if p.projectList.exists(_.toString.toLowerCase.contains(marker)) => p
@@ -227,7 +274,7 @@ class PlanGuardsSpec extends AnyFunSuite {
 
   test("heavy pair pipelines plan no cartesian product") {
     for (q <- Seq("q_token_jaccard_join", "q_dedup_ngram", "q_dedup_minhash")) {
-      val ns = nodes(SparkEntry.queries(q)(spark, sf))
+      val ns = queryNodes(SparkEntry.queries(q)(spark, sf))
       assert(!ns.exists(_.isInstanceOf[CartesianProductExec]),
         s"$q plans a cartesian product")
     }
