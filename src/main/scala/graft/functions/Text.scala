@@ -44,12 +44,6 @@ object Text {
   def tokens(c: Column): Column =
     filter(split(cleanName(c), " "), t => length(t) > 0)
 
-  /** Tokens longer than `minLen` — the reference's "significant word"
-    * filter (halalService.ts:119 `word.length > 2`).
-    */
-  def significantTokens(c: Column, minLen: Int = 2): Column =
-    filter(split(cleanName(c), " "), t => length(t) > minLen)
-
   /** `{w}` ∪ all single-character deletions of `w`. */
   def delNbh1(w: Column): Column =
     when(length(w) === 0, array(w)).otherwise(concat(
@@ -92,13 +86,6 @@ object Text {
   /** Punctuation-character ratio, rounded for oracle-stable output. */
   def punctRatio(c: Column, scale: Int = 6): Column =
     round(length(regexp_replace(c, "[a-zA-Z0-9 ]", "")) / greatest(length(c), lit(1)).cast("double"), scale)
-
-  /** Ratio of tokens that are in `stopwords`. */
-  def stopwordRatio(c: Column, stopwords: Seq[String], scale: Int = 6): Column = {
-    val toks = split(lower(trim(c)), "\\s+")
-    val stops = filter(toks, t => t.isInCollection(stopwords))
-    round(size(stops) / greatest(size(toks), lit(1)).cast("double"), scale)
-  }
 
   /** Mean token length. */
   def avgWordLen(c: Column, scale: Int = 6): Column = {

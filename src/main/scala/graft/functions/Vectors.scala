@@ -26,22 +26,6 @@ object Vectors {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
 
-  /** Fixed-width dot product: an unrolled 64-term (etc.) sum of
-    * `element_at` products. Unlike the higher-order-function form this
-    * is fully whole-stage-codegen'd — the HOF lambda interpreter costs
-    * ~10× on pair-join hot paths. Fold order matches [[dot]]
-    * (left-to-right from 0.0), so results are bit-identical.
-    */
-  def dotFixed(a: Column, b: Column, dim: Int): Column =
-    (1 to dim).map(i =>
-      element_at(a, i).cast("double") * element_at(b, i).cast("double")).reduce(_ + _)
-
-  /** Fixed-width L2 norm, codegen'd; fold order matches [[norm]]. */
-  def normFixed(a: Column, dim: Int): Column =
-    sqrt((1 to dim).map { i =>
-      val e = element_at(a, i).cast("double"); e * e
-    }.reduce(_ + _))
-
   /** Integer components of `nPlanes` deterministic pseudo-random
     * hyperplanes for random-hyperplane (angular) LSH: component
     * `(seed, i)` is `md5("seed:i")`'s first 8 hex chars as an unsigned

@@ -359,11 +359,8 @@ object AnnOps {
 
   private[graft] def annIvfCompactedFrom(feed: DataFrame, emb: DataFrame): DataFrame = {
     import graft.plans.VectorExpressions
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_ns").desc, col("event_id").desc)
-    val dead = feed.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("op") === "d")
+    val dead = newestPerKey(feed, Seq("user_id"), "ts_ns", "event_id")
+      .filter(col("op") === "d")
       .select(col("user_id").as("vec_id"))
     val live = emb.select(col("vec_id"), col("embedding"))
       .join(dead, Seq("vec_id"), "left_anti")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -28,19 +28,14 @@ object CdcOps {
     * user_id wins (ties broken by event_id, i.e. the CDC sequence
     * number).
     */
-  def cdcLatest(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_ns").desc, col("event_id").desc)
-    Tables.events(spark, dir)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+  def cdcLatest(spark: SparkSession, dir: String): DataFrame =
+    newestPerKey(Tables.events(spark, dir), Seq("user_id"), "ts_ns", "event_id")
       .select(
         col("user_id"),
         col("event_id").as("last_event_id"),
         col("event_type").as("last_type"),
         round(col("value"), 2).as("last_value"),
         expr(s"ts_ns DIV $NsPerSec").as("last_epoch_s"))
-  }
 
   /** Debezium-style op tag for the synthetic change feed: ~10% of
     * records are deletes (content-hash selected on the CDC sequence
@@ -71,21 +66,25 @@ object CdcOps {
     * is [[graft.streaming.CdcStream.compactState]].
     */
   def cdcCompact(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_ns").desc, col("event_id").desc)
-    changeFeed(spark, dir)
-      .withColumn("rn", row_number().over(w))
+    // n_changes counts every change to the key, so it is taken before compaction
+    val counted = changeFeed(spark, dir)
       .withColumn("n_changes", count(lit(1)).over(Window.partitionBy(col("user_id"))))
-      .filter(col("rn") === 1 && col("op") =!= "d")
-      .select(
+    liveImage(newestPerKey(counted, Seq("user_id"), "ts_ns", "event_id"), col("n_changes"))
+  }
+
+  /** The op-aware snapshot image shared by [[cdcCompact]] and
+    * [[cdcEnvelope]] over [[newestPerKey]] rows: a `d` head drops the
+    * key, every other head becomes its serving row (plus `extra`).
+    */
+  private def liveImage(newest: DataFrame, extra: Column*): DataFrame =
+    newest.filter(col("op") =!= "d")
+      .select(Seq(
         col("user_id"),
         col("event_id").as("last_event_id"),
         col("op").as("last_op"),
         col("event_type").as("last_type"),
         round(col("value"), 2).as("last_value"),
-        expr(s"ts_ns DIV $NsPerSec").as("last_epoch_s"),
-        col("n_changes"))
-  }
+        expr(s"ts_ns DIV $NsPerSec").as("last_epoch_s")) ++ extra: _*)
 
   /** Slowly-changing-dimension type-2 history built from the change
     * feed: every non-delete change opens a validity interval
@@ -294,18 +293,7 @@ object CdcOps {
       .transform(widen(_, col("user_id"))))
     CdcEnvelope.BatchDeadLetterGuard.install(spark)
     val rec = CdcEnvelope.records(CdcEnvelope.observedParse(wire))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_ns").desc, col("event_id").desc)
-    rec
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("op") =!= "d")
-      .select(
-        col("user_id"),
-        col("event_id").as("last_event_id"),
-        col("op").as("last_op"),
-        col("event_type").as("last_type"),
-        round(col("value"), 2).as("last_value"),
-        expr(s"ts_ns DIV $NsPerSec").as("last_epoch_s"))
+    liveImage(newestPerKey(rec, Seq("user_id"), "ts_ns", "event_id"))
   }
 
   /** Gap-based sessionization: a >30-minute silence starts a new
@@ -654,18 +642,12 @@ object CdcOps {
     * consumer's cut is the batch boundary, not the midpoint).
     */
   private[graft] def txnSnapshotUncut(sliced: DataFrame): DataFrame = {
-    val wP = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_ns").desc, col("event_id").desc)
-    val parent = sliced
-      .withColumn("rn", row_number().over(wP))
-      .filter(col("rn") === 1 && col("op") =!= "d")
+    val parent = newestPerKey(sliced, Seq("user_id"), "ts_ns", "event_id")
+      .filter(col("op") =!= "d")
       .select(col("user_id"), col("event_id").as("p_event_id"),
         col("event_type").as("p_type"), round(col("value"), 2).as("p_value"))
-    val wC = Window.partitionBy(col("user_id"), col("event_type"))
-      .orderBy(col("ts_ns").desc, col("event_id").desc)
-    val child = sliced
-      .withColumn("rn", row_number().over(wC))
-      .filter(col("rn") === 1 && col("op") =!= "d")
+    val child = newestPerKey(sliced, Seq("user_id", "event_type"), "ts_ns", "event_id")
+      .filter(col("op") =!= "d")
       .select(col("user_id"), col("event_type").as("child_type"),
         col("event_id").as("c_event_id"), round(col("value"), 2).as("c_value"))
     parent.join(child, Seq("user_id"), "full_outer")

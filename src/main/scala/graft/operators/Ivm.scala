@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** §2.F lib — incremental view maintenance over the op-typed CDC
   * envelope: merge a stored compacted snapshot with a compacted change
@@ -12,10 +11,11 @@ import org.apache.spark.sql.expressions.Window
   * This is the batch-refresh economics the reference's nightly full
   * reload (src/services/dataManager.ts:132-187) cannot offer: at
   * 100 TB the base snapshot and its aggregate view are STORED
-  * artifacts; a refresh costs O(|delta| + |touched keys|) — two keyed
-  * equi-joins on the entity key — instead of O(|base|). Nothing here
-  * shuffles anything wider than the delta and the touched slice of
-  * the base.
+  * artifacts; a refresh costs O(|delta| + |touched keys|) — one keyed
+  * equi-join that picks the touched slice of the base, and one keyed
+  * latest-wins window over that slice ∪ the delta — instead of
+  * O(|base|). Nothing here shuffles anything wider than the delta and
+  * the touched slice of the base.
   *
   * State rows RETAIN tombstones (`deleted = true`), log-compaction
   * style: a late-arriving change older than a retained delete is
@@ -56,7 +56,7 @@ object Ivm {
   }
 
   /** State/envelope column set (after [[compactSlice]]). */
-  private val stateCols = Seq(
+  private[graft] val stateCols = Seq(
     "user_id", "last_event_id", "last_op", "last_type",
     "last_value", "last_ts_ns", "deleted")
 
@@ -65,12 +65,8 @@ object Ivm {
     * retained. One keyed window shuffle — the same shape as
     * CdcOps.cdcCompact.
     */
-  def compactSlice(feed: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts_ns").desc, col("event_id").desc)
-    feed
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
+  def compactSlice(feed: DataFrame): DataFrame =
+    newestPerKey(feed, Seq("user_id"), "ts_ns", "event_id")
       .select(
         col("user_id"),
         col("event_id").as("last_event_id"),
@@ -79,28 +75,18 @@ object Ivm {
         col("value").as("last_value"),
         col("ts_ns").as("last_ts_ns"),
         (col("op") === "d").as("deleted"))
-  }
 
-  /** Latest-wins merge of two compacted states (ties broken by the CDC
-    * sequence number, matching cdcCompact): the stored base plus a
-    * compacted delta. FULL OUTER keyed equi-join — cost is one shuffle
-    * of base ∪ delta when run wholesale, or of the touched slice when
-    * the caller pre-restricts the base (as [[maintainView]] does).
+  /** Latest-wins merge of two compacted states: the stored base plus a
+    * compacted delta, compacted again — [[newestPerKey]] over
+    * base ∪ delta on (`last_ts_ns`, `last_event_id`), so
+    * `mergeState(compactSlice(a), compactSlice(b))` equals
+    * `compactSlice(a ∪ b)`. One keyed window shuffle of base ∪ delta
+    * when run wholesale, or of the touched slice when the caller
+    * pre-restricts the base (as [[maintainView]] does).
     */
   def mergeState(base: DataFrame, delta: DataFrame): DataFrame = {
-    val b = base.select(col("user_id").as("_bk"),
-      struct(stateCols.map(col): _*).as("_b"))
-    val d = delta.select(col("user_id").as("_dk"),
-      struct(stateCols.map(col): _*).as("_d"))
-    val newer = col("_d.last_ts_ns") > col("_b.last_ts_ns") ||
-      (col("_d.last_ts_ns") === col("_b.last_ts_ns") &&
-        col("_d.last_event_id") > col("_b.last_event_id"))
-    b.join(d, col("_bk") === col("_dk"), "full_outer")
-      .select(when(col("_bk").isNull, col("_d"))
-        .when(col("_dk").isNull, col("_b"))
-        .when(newer, col("_d"))
-        .otherwise(col("_b")).as("s"))
-      .select(col("s.*"))
+    def state(df: DataFrame) = df.select(stateCols.map(col): _*)
+    newestPerKey(state(base).unionByName(state(delta)), Seq("user_id"), "last_ts_ns", "last_event_id")
   }
 
   /** Tombstone-free serving view of a compacted state. */

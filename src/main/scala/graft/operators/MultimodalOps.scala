@@ -80,6 +80,26 @@ object MultimodalOps {
         s"frame mirrors enumerate at most $OracleMaxFrames frames/blob " +
         "(range(0, 64)); widen the oracle range and this guard together"))
       .isNull)
+
+  /** The non-empty blobs a GIF-family frame query decodes ([[blobDocs]],
+    * `wide` as there), each at most [[GifOracleMaxFrames]] ×
+    * `Gif.FramePx` bytes — the ceiling every DuckDB frame mirror of the
+    * family (gif, avi, rle, mc, wht, rice, gop, demux) is sized for.
+    * [[guardFrameBound]]'s discipline: a longer blob aborts the job
+    * with a message naming the `mirror`, instead of losing tail frames
+    * in the oracle only.
+    */
+  private def boundedBlobs(spark: SparkSession, dir: String, wide: Boolean,
+      mirror: String): DataFrame = {
+    val maxBytes = GifOracleMaxFrames * graft.multimodal.Gif.FramePx
+    blobDocs(spark, dir, wide)
+      .filter(length(col("text")) > 0)
+      .filter(assert_true(length(col("text")) <= maxBytes,
+        lit(s"blob exceeds $maxBytes bytes, the frame ceiling of the DuckDB $mirror " +
+          "mirror; widen the oracle range and this guard together"))
+        .isNull)
+  }
+
   private val FrameStride = 3
 
   /** Frame sampling over the blob column (the video path): fixed-size
@@ -348,17 +368,7 @@ object MultimodalOps {
 
 
   def gifFrames(spark: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Gif.features(spark,
-        blobDocs(spark, dir, wide = true)
-          .filter(length(col("text")) > 0)
-          // same loud-ceiling discipline as guardFrameBound: the GIF
-          // oracle enumerates at most GifOracleMaxFrames frames/blob
-          .filter(assert_true(
-            length(col("text")) <= GifOracleMaxFrames * graft.multimodal.Gif.FramePx,
-            lit(s"blob exceeds ${GifOracleMaxFrames * graft.multimodal.Gif.FramePx} " +
-              s"bytes: the DuckDB gif mirror enumerates at most $GifOracleMaxFrames " +
-              "frames/blob (range(0, 16)); widen the oracle range and this guard together"))
-            .isNull))
+    graft.multimodal.Gif.features(spark, boundedBlobs(spark, dir, wide = true, mirror = "gif"))
       .toDF()
       .select(col("doc_id"), col("frame_idx"), col("n_frames"),
         col("px_sum"), col("px_max"))
@@ -381,17 +391,7 @@ object MultimodalOps {
     * media stub: exactly inter-frame (H.264-class) codecs.
     */
   def aviFrames(spark: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Avi.features(spark,
-        blobDocs(spark, dir, wide = true)
-          .filter(length(col("text")) > 0)
-          // same loud-ceiling discipline as the GIF mirror: the AVI
-          // oracle enumerates at most GifOracleMaxFrames frames/blob
-          .filter(assert_true(
-            length(col("text")) <= GifOracleMaxFrames * graft.multimodal.Gif.FramePx,
-            lit(s"blob exceeds ${GifOracleMaxFrames * graft.multimodal.Gif.FramePx} " +
-              s"bytes: the DuckDB avi mirror enumerates at most $GifOracleMaxFrames " +
-              "frames/blob (range(0, 16)); widen the oracle range and this guard together"))
-            .isNull))
+    graft.multimodal.Avi.features(spark, boundedBlobs(spark, dir, wide = true, mirror = "avi"))
       .toDF()
       .select(col("doc_id"), col("frame_idx"), col("n_frames"),
         col("width"), col("height"), col("decode_ok"))
@@ -414,16 +414,7 @@ object MultimodalOps {
     * transform-coded, motion-compensated (H.264-class) codecs.
     */
   def rleFrames(spark: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Rle.features(spark,
-        blobDocs(spark, dir, wide = false)
-          .filter(length(col("text")) > 0)
-          // same loud-ceiling discipline as the GIF/AVI mirrors
-          .filter(assert_true(
-            length(col("text")) <= GifOracleMaxFrames * graft.multimodal.Gif.FramePx,
-            lit(s"blob exceeds ${GifOracleMaxFrames * graft.multimodal.Gif.FramePx} " +
-              s"bytes: the DuckDB rle mirror enumerates at most $GifOracleMaxFrames " +
-              "frames/blob (range(0, 16)); widen the oracle range and this guard together"))
-            .isNull))
+    graft.multimodal.Rle.features(spark, boundedBlobs(spark, dir, wide = false, mirror = "rle"))
       .toDF()
       .select(col("doc_id"), col("frame_idx"), col("n_frames"),
         col("px_sum"), col("px_max"), col("row0_sum"), col("n_px_written"))
@@ -444,18 +435,7 @@ object MultimodalOps {
     * sequential decode fails loudly, seek decode still succeeds.
     */
   def rleSeek(spark: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Rle.seekLast(spark,
-        blobDocs(spark, dir, wide = false)
-          .filter(length(col("text")) > 0)
-          // the oracle's arithmetic has no frame-count ceiling here,
-          // but keep the suite-wide guard so all RLE mirrors share one
-          // documented bound
-          .filter(assert_true(
-            length(col("text")) <= GifOracleMaxFrames * graft.multimodal.Gif.FramePx,
-            lit(s"blob exceeds ${GifOracleMaxFrames * graft.multimodal.Gif.FramePx} " +
-              "bytes: widen the RLE mirrors' documented frame ceiling " +
-              "and this guard together"))
-            .isNull))
+    graft.multimodal.Rle.seekLast(spark, boundedBlobs(spark, dir, wide = false, mirror = "rle"))
       .toDF()
       .select(col("doc_id"), col("n_frames"), col("target_idx"),
         col("frames_decoded"), col("px_sum"), col("px_max"), col("row0_sum"))
@@ -485,17 +465,7 @@ object MultimodalOps {
     * transform coding (DCT/quantization).
     */
   def mcFrames(spark: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Mc.features(spark,
-        blobDocs(spark, dir, wide = true)
-          .filter(length(col("text")) > 0)
-          // same loud-ceiling discipline: the MC mirror enumerates at
-          // most McOracleMaxFrames scroll frames per blob
-          .filter(assert_true(
-            length(col("text")) <= GifOracleMaxFrames * graft.multimodal.Gif.FramePx,
-            lit(s"blob exceeds ${GifOracleMaxFrames * graft.multimodal.Gif.FramePx} " +
-              s"bytes: the DuckDB mc mirror enumerates at most $McOracleMaxFrames " +
-              "frames/blob; widen the oracle range and this guard together"))
-            .isNull))
+    graft.multimodal.Mc.features(spark, boundedBlobs(spark, dir, wide = true, mirror = "mc"))
       .toDF()
       .select(col("doc_id"), col("frame_idx"), col("n_frames"), col("px_sum"),
         col("n_mv_nonzero"), col("n_px_resid"), col("resid_abs_sum"))
@@ -514,17 +484,7 @@ object MultimodalOps {
     * reference frame feeds wrong pixels through every copied block.
     */
   def mcSeek(spark: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Mc.seekLast(spark,
-        blobDocs(spark, dir, wide = true)
-          .filter(length(col("text")) > 0)
-          // keep the suite-wide blob ceiling (the oracle's arithmetic
-          // has no frame-count ceiling on this one)
-          .filter(assert_true(
-            length(col("text")) <= GifOracleMaxFrames * graft.multimodal.Gif.FramePx,
-            lit(s"blob exceeds ${GifOracleMaxFrames * graft.multimodal.Gif.FramePx} " +
-              "bytes: widen the MC mirrors' documented ceiling and this " +
-              "guard together"))
-            .isNull))
+    graft.multimodal.Mc.seekLast(spark, boundedBlobs(spark, dir, wide = true, mirror = "mc"))
       .toDF()
       .select(col("doc_id"), col("n_frames"), col("target_idx"),
         col("frames_decoded"), col("px_sum"))
@@ -552,16 +512,7 @@ object MultimodalOps {
     * + the closed-loop lossy-reference assembly.
     */
   def whtFrames(spark: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Xf.features(spark,
-        blobDocs(spark, dir, wide = false)
-          .filter(length(col("text")) > 0)
-          // same loud-ceiling discipline as the GIF/AVI/RLE mirrors
-          .filter(assert_true(
-            length(col("text")) <= GifOracleMaxFrames * graft.multimodal.Gif.FramePx,
-            lit(s"blob exceeds ${GifOracleMaxFrames * graft.multimodal.Gif.FramePx} " +
-              s"bytes: the DuckDB wht mirror enumerates at most $GifOracleMaxFrames " +
-              "frames/blob (range(0, 16)); widen the oracle range and this guard together"))
-            .isNull))
+    graft.multimodal.Xf.features(spark, boundedBlobs(spark, dir, wide = false, mirror = "wht"))
       .toDF()
       .select(col("doc_id"), col("frame_idx"), col("n_frames"), col("px_sum"),
         col("px_max"), col("n_nz_ac"), col("sad"))
@@ -585,16 +536,7 @@ object MultimodalOps {
     * scope.
     */
   def riceFrames(spark: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Xf.riceFeatures(spark,
-        blobDocs(spark, dir, wide = false)
-          .filter(length(col("text")) > 0)
-          // same loud-ceiling discipline as the GIF/AVI/RLE mirrors
-          .filter(assert_true(
-            length(col("text")) <= GifOracleMaxFrames * graft.multimodal.Gif.FramePx,
-            lit(s"blob exceeds ${GifOracleMaxFrames * graft.multimodal.Gif.FramePx} " +
-              s"bytes: the DuckDB rice mirror enumerates at most $GifOracleMaxFrames " +
-              "frames/blob (range(0, 16)); widen the oracle range and this guard together"))
-            .isNull))
+    graft.multimodal.Xf.riceFeatures(spark, boundedBlobs(spark, dir, wide = false, mirror = "rice"))
       .toDF()
       .select(col("doc_id"), col("frame_idx"), col("n_frames"), col("px_sum"),
         col("n_bits"), col("sad"))
@@ -619,17 +561,7 @@ object MultimodalOps {
     * malformed-stream failure.
     */
   def gopFrames(spark: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Gop.features(spark,
-        blobDocs(spark, dir, wide = true)
-          .filter(length(col("text")) > 0)
-          // same loud-ceiling discipline: the recursive mirror iterates
-          // at most McOracleMaxFrames scroll frames per blob
-          .filter(assert_true(
-            length(col("text")) <= GifOracleMaxFrames * graft.multimodal.Gif.FramePx,
-            lit(s"blob exceeds ${GifOracleMaxFrames * graft.multimodal.Gif.FramePx} " +
-              s"bytes: the DuckDB gop mirror iterates at most $McOracleMaxFrames " +
-              "frames/blob; widen the oracle recursion and this guard together"))
-            .isNull))
+    graft.multimodal.Gop.features(spark, boundedBlobs(spark, dir, wide = true, mirror = "gop"))
       .toDF()
       .select(col("doc_id"), col("frame_idx"), col("n_frames"), col("px_sum"),
         col("n_mv_nonzero"), col("n_bits"), col("sad"))
@@ -645,15 +577,7 @@ object MultimodalOps {
     * recomputed by the same recursive oracle.
     */
   def gopSeek(spark: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Gop.seekLast(spark,
-        blobDocs(spark, dir, wide = true)
-          .filter(length(col("text")) > 0)
-          .filter(assert_true(
-            length(col("text")) <= GifOracleMaxFrames * graft.multimodal.Gif.FramePx,
-            lit(s"blob exceeds ${GifOracleMaxFrames * graft.multimodal.Gif.FramePx} " +
-              s"bytes: the DuckDB gop mirror iterates at most $McOracleMaxFrames " +
-              "frames/blob; widen the oracle recursion and this guard together"))
-            .isNull))
+    graft.multimodal.Gop.seekLast(spark, boundedBlobs(spark, dir, wide = true, mirror = "gop"))
       .toDF()
       .select(col("doc_id"), col("n_frames"), col("target_idx"),
         col("frames_decoded"), col("px_sum"))
@@ -671,16 +595,7 @@ object MultimodalOps {
     * that routes by position instead of stream id diverges.
     */
   def aviDemux(spark: SparkSession, dir: String): DataFrame =
-    graft.multimodal.Demux.features(spark,
-        blobDocs(spark, dir, wide = false)
-          .filter(length(col("text")) > 0)
-          // same loud-ceiling discipline as the other frame mirrors
-          .filter(assert_true(
-            length(col("text")) <= GifOracleMaxFrames * graft.multimodal.Gif.FramePx,
-            lit(s"blob exceeds ${GifOracleMaxFrames * graft.multimodal.Gif.FramePx} " +
-              s"bytes: the DuckDB demux mirror enumerates at most $GifOracleMaxFrames " +
-              "frames/blob (range(0, 16)); widen the oracle range and this guard together"))
-            .isNull))
+    graft.multimodal.Demux.features(spark, boundedBlobs(spark, dir, wide = false, mirror = "demux"))
       .toDF()
       .select(col("doc_id"), col("frame_idx"), col("n_frames"), col("px_sum"),
         col("audio_n"), col("audio_sum"), col("audio_peak"))

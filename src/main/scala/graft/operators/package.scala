@@ -1,9 +1,32 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{broadcast, col, count, lit}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{broadcast, col, count, lit, row_number}
 
 package object operators {
+
+  /** Latest-wins, the one CDC compaction rule: per `keys` the row with
+    * the greatest (`ts`, `seq`) survives — the newest change wins and
+    * a tie on `ts` goes to the higher CDC sequence number. Feeds pass
+    * (`ts_ns`, `event_id`), compacted rows (`last_ts_ns`,
+    * `last_event_id`). One keyed window; the caller applies its own
+    * tombstone filter and projection. Every batch compactor and both
+    * sinks' in-batch guards go through here, and the streaming state
+    * folds through [[isNewer]], so stream and batch cannot drift.
+    */
+  private[graft] def newestPerKey(df: DataFrame, keys: Seq[String], ts: String, seq: String)
+      : DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(ts).desc, col(seq).desc)
+    df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
+  }
+
+  /** [[newestPerKey]]'s rule as a row predicate for the streaming
+    * state folds: does the change at (`ts`, `seq`) replace the state
+    * last set at (`lastTs`, `lastSeq`)?
+    */
+  private[graft] def isNewer(ts: Long, seq: Long, lastTs: Long, lastSeq: Long): Boolean =
+    ts > lastTs || (ts == lastTs && seq > lastSeq)
 
   /** The one document-frequency cap on blocking keys (dedup shingles,
     * contamination grams, fuzzy bigrams and deletion signatures, the

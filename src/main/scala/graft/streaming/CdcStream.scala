@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.isNewer
+
 /** §2.F (streaming twins) — Structured Streaming CDC pipeline.
   *
   * The reference's nightly snapshot refresh (src/services/
@@ -36,9 +38,7 @@ object CdcStream {
         (userId: Long, batch: Iterator[Event], state: GroupState[UserState]) => {
           val prev = state.getOption
           val all = batch.foldLeft(prev) { (acc, e) =>
-            val newer = acc.forall(s =>
-              e.ts_ns > s.last_ts_ns ||
-                (e.ts_ns == s.last_ts_ns && e.event_id > s.last_event_id))
+            val newer = acc.forall(s => isNewer(e.ts_ns, e.event_id, s.last_ts_ns, s.last_event_id))
             val n = acc.map(_.n_events).getOrElse(0L) + 1
             if (newer) Some(UserState(userId, e.event_id, e.event_type, e.value, e.ts_ns, n))
             else acc.map(_.copy(n_events = n))
@@ -108,9 +108,7 @@ object CdcStream {
           } else {
             val prev = state.getOption
             val out = batch.foldLeft(prev) { (acc, c) =>
-              val newer = acc.forall(s =>
-                c.ts_ns > s.last_ts_ns ||
-                  (c.ts_ns == s.last_ts_ns && c.event_id > s.last_event_id))
+              val newer = acc.forall(s => isNewer(c.ts_ns, c.event_id, s.last_ts_ns, s.last_event_id))
               val n = acc.map(_.n_changes).getOrElse(0L) + 1
               if (newer)
                 Some(Compacted(userId, c.op == "d", c.event_id, c.op,

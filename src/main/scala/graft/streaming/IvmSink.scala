@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Ivm
+import graft.operators.{Ivm, newestPerKey}
 
 /** §2.F composition — the continuously-maintained aggregate view:
   * [[CdcStream.compactState]] deltas applied through
@@ -58,13 +58,8 @@ object IvmSink {
     // stream batch. Local on purpose: replay from checkpointLocation
     // recovers a lost batch, and a reliable pin (operators.materialize)
     // would write every micro-batch to disk.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id"))
-      .orderBy(col("last_ts_ns").desc, col("last_event_id").desc)
-    val delta = batch
-      .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-      .select(col("user_id"), col("last_event_id"), col("last_op"),
-        col("last_type"), col("last_value"), col("last_ts_ns"), col("deleted"))
+    val delta = newestPerKey(batch, Seq("user_id"), "last_ts_ns", "last_event_id")
+      .select(Ivm.stateCols.map(col): _*)
       .localCheckpoint()
     val base = readState(spark, storeDir).getOrElse(delta.limit(0))
     val oldView = readView(spark, storeDir).getOrElse(Ivm.typeView(delta.limit(0)))

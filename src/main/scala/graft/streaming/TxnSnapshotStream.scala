@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.isNewer
+
 /** §2.F lib — the STREAMING twin of the transactionally-consistent
   * multi-table snapshot ([[graft.operators.CdcOps.cdcTxnSnapshot]]):
   * the parent table (keyed user_id) and the child table (keyed
@@ -71,7 +73,7 @@ object TxnSnapshotStream {
     BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   private def newer(h: Option[Head], c: CdcStream.TimedChange): Boolean =
-    h.forall(s => c.ts_ns > s.ts_ns || (c.ts_ns == s.ts_ns && c.event_id > s.event_id))
+    h.forall(s => isNewer(c.ts_ns, c.event_id, s.ts_ns, s.event_id))
 
   /** The serving row-set for one user's current state — the
     * [[graft.operators.CdcOps.txnSnapshotUncut]] full-outer-join +

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.operators.newestPerKey
+
 /** §2.F lib — the SINK side of the CDC connector story: an
   * exactly-once upsert/delete serving store driven by
   * `writeStream.foreachBatch`, completing source (CdcEnvelope) →
@@ -83,16 +85,12 @@ object UpsertSink {
     * partially applied: `sink.writeStream.foreachBatch(
     * UpsertSink.applyBatch(spark, storeDir) _)`.
     */
-  def applyBatch(spark: SparkSession, storeDir: String)(batch: DataFrame, batchId: Long): Unit = {
+  def applyBatch(spark: SparkSession, storeDir: String)(batch: DataFrame, batchId: Long): Unit =
     // defensive in-batch compaction — compactState emits one row per
     // key per batch, but the sink must not corrupt the store if fed a
     // raw multi-row feed
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("user_id"))
-      .orderBy(col("last_ts_ns").desc, col("last_event_id").desc)
     applyKeyedBatch(spark, storeDir, Seq("user_id"))(
-      batch.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn"), batchId)
-  }
+      newestPerKey(batch, Seq("user_id"), "last_ts_ns", "last_event_id"), batchId)
 
   /** [[applyBatch]] generalized to an arbitrary key-column set — the
     * two-table snapshot store ([[TxnSnapshotStream]]) is keyed on

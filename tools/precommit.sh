@@ -8,9 +8,10 @@
 # refs, unresolvable plans) that compile alone cannot — plus the specs
 # that pin the shared df-capped co-count engine's invariants across
 # queries (CrossOperatorConsistencySpec, ScaleGuardsSpec,
-# ContainmentSpec), and the local file system and upsert sink specs
-# (LocalFsSpec, UpsertSinkSpec). Use before END-OF-ROUND snapshots and
-# after touching query plumbing.
+# ContainmentSpec), the local file system and upsert sink specs
+# (LocalFsSpec, UpsertSinkSpec), and the latest-wins compaction specs
+# (LatestWinsTieBreakSpec, IvmSpec). Use before END-OF-ROUND snapshots
+# and after touching query plumbing.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch Test/compile >/tmp/precommit.log 2>&1 || {
@@ -29,6 +30,16 @@ if grep -rnF --include='*.scala' -e '.localCheckpoint(true)' -e '.checkpoint()' 
   exit 1
 fi
 echo "PRECOMMIT OK: every operator pin goes through operators.materialize."
+
+# Latest-wins gate: the "newest change per key" window lives only in
+# operators.newestPerKey (operators/package.scala), so no other main
+# source may order a window by ts_ns/last_ts_ns descending.
+if grep -rnF --include='*.scala' -e 'orderBy(col("ts_ns").desc' -e 'orderBy(col("last_ts_ns").desc' \
+    src/main/scala/ | grep -v '^src/main/scala/graft/operators/package\.scala:' >&2; then
+  echo "PRECOMMIT FAIL: latest-wins window above bypasses operators.newestPerKey — route it through the helper." >&2
+  exit 1
+fi
+echo "PRECOMMIT OK: every latest-wins compaction goes through operators.newestPerKey."
 
 # Bench gate (round-12 lesson: q_winnow_dedup reached the registry
 # without ever being benched and shipped a 615 s plan): every
@@ -63,11 +74,11 @@ echo "PRECOMMIT OK: every registered query has a bench entry."
 #      that only min-of-2 absorbed). If any per-query p2/p1 ratio
 #      exceeds 3x, run a third pass for the record.
 if [[ "${PRECOMMIT_SMOKE:-0}" == "1" ]]; then
-  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec graft.LocalFsSpec graft.UpsertSinkSpec" \
+  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec graft.LocalFsSpec graft.UpsertSinkSpec graft.operators.LatestWinsTieBreakSpec graft.operators.IvmSpec" \
       >/tmp/precommit_smoke.log 2>&1 || {
     echo "PRECOMMIT FAIL: smoke specs broken — do not commit." >&2
     tail -n 40 /tmp/precommit_smoke.log >&2
     exit 1
   }
-  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine, local file system and upsert sink specs green."
+  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine, local file system, upsert sink and latest-wins specs green."
 fi
