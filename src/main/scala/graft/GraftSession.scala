@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Session factory with the defaults every graft entrypoint shares.
   *
@@ -56,5 +59,68 @@ object GraftSession {
     // haversine, dot/l2norm/cosine, content key, hyperplane sigs)
     GraftFunctions.register(spark)
     spark
+  }
+
+  /** The session memo: every trained or derived artifact (LR weights,
+    * BPE merges, k-means anchors, PQ codebooks, contaminated ids, corpus
+    * row counts) is computed once per session and reused by every
+    * query built in it. Training is a fixed cost per (corpus, params);
+    * re-running it per query build repays that cost for nothing. The
+    * session is the reuse scope: a new session recomputes, which is
+    * right when the directory contents may have changed between
+    * sessions, and a collected session's entries go with it (weak
+    * keys). Three rules:
+    *  1. A value must not reference its session. A `Dataset` does, so
+    *     it would pin the weak key forever; frames go through
+    *     [[memoFrame]], which keeps the collected rows.
+    *  2. A key names its family and every training input, since all
+    *     families share one map: `rows|$dir/$name`, `anchors|…`,
+    *     `pqcodebook|…`, `lr|$dir`, `lr_ngram|$dir`, `bpe|…|k=`,
+    *     `contam_ids|$dir`.
+    *  3. `compute` runs outside the map's lock, forced through a per-key
+    *     holder, so a compute may itself call `memo` (trained anchors
+    *     inside a derived artifact) without a recursive-update error or
+    *     a deadlock. Concurrent callers of one key wait for one compute;
+    *     a compute that throws leaves the key unset.
+    * A hit starts no Spark job. [[clearMemos]] drops a session's
+    * entries, so the next use recomputes under the session's current
+    * configuration.
+    */
+  def memo[V](spark: SparkSession, key: String)(compute: => V): V = {
+    val perSession = memos.synchronized {
+      memos.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Memo]())
+    }
+    perSession.computeIfAbsent(key, _ => new Memo(() => compute)).get.asInstanceOf[V]
+  }
+
+  /** [[memo]] for a frame: the value kept is the collected rows and
+    * schema (bounded artifacts: k·dim cells, an id set), and a hit
+    * rebuilds a `LocalRelation` from them — zero jobs, and the local
+    * table broadcasts for free.
+    */
+  def memoFrame(spark: SparkSession, key: String)(df: => DataFrame): DataFrame = {
+    val (schema, rows) = memo[(StructType, Array[Row])](spark, key) {
+      val d = df
+      (d.schema, d.collect())
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** Drops every memoized artifact of `spark`. */
+  def clearMemos(spark: SparkSession): Unit = memos.synchronized { memos.remove(spark) }
+
+  private val memos = new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Memo]]()
+
+  /** One key's value, computed on first `get`; the thunk is dropped
+    * once it has run, so it does not keep its captures alive. */
+  private final class Memo(private var compute: () => Any) {
+    private var value: Any = _
+    def get: Any = synchronized {
+      if (compute != null) {
+        value = compute()
+        compute = null
+      }
+      value
+    }
   }
 }

@@ -639,7 +639,7 @@ object AnnOps {
   /** The session's ONE Lloyd-trained anchor table per (dir, params) —
     * shared by q_ann_ivf_kmeans and q_semdedup_kmeans (both consume
     * the identical portable-mode layout), trained on first use
-    * ([[Kmeans.memoized]]).
+    * ([[graft.GraftSession.memoFrame]]).
     */
   private[graft] def trainedAnchors(spark: SparkSession, dir: String): DataFrame =
     trainedAnchorsK(spark, dir, IvfCells)
@@ -649,8 +649,8 @@ object AnnOps {
     * path keeps [[IvfCells]]; both memoize per (session, dir, k).
     */
   private[graft] def trainedAnchorsK(spark: SparkSession, dir: String, k: Int): DataFrame =
-    Kmeans.memoized(spark,
-        s"$dir|anchors|k=$k|iters=$IvfKmeansIters|portable=true") {
+    graft.GraftSession.memoFrame(spark,
+        s"anchors|$dir|k=$k|iters=$IvfKmeansIters|portable=true") {
       val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
       Kmeans.anchors(e, k, IvfKmeansIters, portable = true)
     }
@@ -890,9 +890,10 @@ object AnnOps {
         subs(e.filter(col("vec_id") < PqK), "vec_id")
           .select(col("m"), col("vec_id").as("code"), col("sub").as("c_sub"))
       else
-        // session-memoized: the trained codebook is a fixed cost per
-        // (dir, iters); train once, reuse across invocations
-        Kmeans.memoized(spark, s"$dir|pqcodebook|iters=$trainIters") {
+        // session-memoized (GraftSession.memoFrame): the trained codebook
+        // is a fixed cost per (dir, iters); train once, reuse across
+        // invocations
+        graft.GraftSession.memoFrame(spark, s"pqcodebook|$dir|iters=$trainIters") {
           pqCodebook(subs(e, "vec_id").select(col("vec_id"), col("m"),
             transform(col("sub"), x => x.cast("double")).as("sub")), trainIters)
         }

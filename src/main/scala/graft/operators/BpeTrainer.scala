@@ -162,19 +162,12 @@ object BpeTrainer {
   /** The session's ONE trained merge list per (dir-tagged word frame,
     * k) — q_bpe_merges and q_bpe_encode both consume the identical
     * rules without re-running the k training rounds twice per session
-    * (the [[Kmeans.memoized]] contract, driver state bounded at k
-    * rules per entry).
+    * ([[graft.GraftSession.memo]], driver state bounded at k rules per
+    * entry).
     */
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, Seq[Merge]]()
   def trainMemoized(spark: SparkSession, key: String, wordCounts: => DataFrame,
       nMerges: Int): Seq[Merge] =
-    memo.computeIfAbsent(s"${spark.hashCode()}|$key|k=$nMerges",
-      _ => train(spark, wordCounts, nMerges))
-
-  /** Drop the cache — ConfParitySpec's hostile-config variants must
-    * RETRAIN, not replay the baseline's artifact.
-    */
-  private[graft] def resetMemo(): Unit = memo.clear()
+    graft.GraftSession.memo(spark, s"bpe|$key|k=$nMerges")(train(spark, wordCounts, nMerges))
 
   /** Driver-side encoder: apply the learned rules in rank order to one
     * word (the per-record application a serving tokenizer runs; the

@@ -66,9 +66,12 @@ object CdcOps {
     * is [[graft.streaming.CdcStream.compactState]].
     */
   def cdcCompact(spark: SparkSession, dir: String): DataFrame = {
-    // n_changes counts every change to the key, so it is taken before compaction
-    val counted = changeFeed(spark, dir)
-      .withColumn("n_changes", count(lit(1)).over(Window.partitionBy(col("user_id"))))
+    // n_changes counts every change to the key, so it is taken before
+    // compaction, over the whole key in latest-wins order: both windows
+    // then share one sort
+    val counted = changeFeed(spark, dir).withColumn("n_changes", count(lit(1)).over(
+      latestFirst(Seq("user_id"), "ts_ns", "event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
     liveImage(newestPerKey(counted, Seq("user_id"), "ts_ns", "event_id"), col("n_changes"))
   }
 

@@ -661,8 +661,8 @@ object CorpusOps {
     *    trained artifact ([[TextOps.lrWeights]] — 4 micro-unit longs, the
     *    bounded driver state the training family already owns);
     *  - the contaminated-id set is a BOUNDED side artifact
-    *    (materialized once, like the trainer's
-    *    feature frame) and joins back broadcast-anti — the e2e plan
+    *    (collected once per session, like the trained weights) and
+    *    joins back broadcast-anti — the e2e plan
     *    itself reads the parquet exactly once (spec-asserted);
     *  - the per-source cap uses the hierarchical two-window layout of
     *    [[sourceCapBucketed]] (ranked on the trained p_quality, not
@@ -675,27 +675,15 @@ object CorpusOps {
     * prefix, the dedup/contamination mirrors, the same rank cuts), so
     * the WHOLE pipeline passes the hash gate end to end.
     */
-  /** ONE materialized contaminated-id artifact per (session, dir) —
-    * repeated q_curate_e2e calls (two verify SFs, bench passes,
-    * parity probes) reuse it instead of pinning a FRESH checkpoint
-    * each call (the accumulating-retention pattern advice #4 removed
-    * from the LR memo). Cleared — with its blocks unpersisted — by
-    * [[resetArtifactCaches]], which the parity spec's retrain reset
-    * reaches via [[TextOps.resetTrainedCaches]].
+  /** ONE contaminated-id artifact per (session, dir)
+    * ([[graft.GraftSession.memoFrame]]) — repeated q_curate_e2e calls
+    * (two verify SFs, bench passes, parity probes) reuse it instead of
+    * recomputing the contamination join each call. Its consumers
+    * broadcast it, so the driver holds these rows either way.
     */
-  private val contamMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def contamIdsMemoized(spark: SparkSession, dir: String): DataFrame =
-    contamMemo.computeIfAbsent(s"${spark.hashCode()}|$dir", { _ =>
-      materialize(contamination(spark, dir).select("doc_id"))
-    })
-
-  /** Drop the memoized derived-artifact frames and release their
-    * block-manager storage. */
-  private[graft] def resetArtifactCaches(): Unit = {
-    contamMemo.values().forEach(df => df.unpersist(blocking = false))
-    contamMemo.clear()
-  }
+    graft.GraftSession.memoFrame(spark, s"contam_ids|$dir")(
+      contamination(spark, dir).select("doc_id"))
 
   /** The curation stages' per-doc projection — ONE copy shared by the
     * batch pipeline, its funnel, and the streaming ingest gate

@@ -669,7 +669,8 @@ object DedupOps {
     // expected occupancy) restores linear candidate volume; the
     // oracle computes the identical rule from count(*)
     // (Vectors.sqlHyperplaneSigsCteAdaptive). The count is the
-    // session-memoized corpus statistic (one metadata-cheap job per
+    // session-memoized corpus statistic (GraftSession.memo via
+    // Tables.rowCount: one metadata-cheap job per
     // (session, dir) — the same class of statistic AQE reads, never
     // re-run per query build), and the bits pass through the SQL
     // plane-pool guard so a corpus past the mirror's ceiling fails
@@ -846,7 +847,7 @@ object DedupOps {
   /** Shared nearest-anchor assignment of [[semDedup]] and
     * [[prototypes]]: `e` carries (vec_id, embedding, nrm); returns the
     * slim (vec_id, cell, ccos) triple. Cells = [[semCells]] of the
-    * memoized corpus count; per-vector argmax is a codegen'd
+    * session-memoized corpus count ([[Tables.rowCount]]); per-vector argmax is a codegen'd
     * min(struct) partial aggregate — n rows shuffled, never
     * n × |cells| into per-vector sorts.
     */

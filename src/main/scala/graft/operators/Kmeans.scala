@@ -110,45 +110,6 @@ object Kmeans {
       portable: Boolean = false): DataFrame =
     anchorsTrace(e, k, iters, portable).last
 
-  /** Session-scoped memoized trained artifacts (anchor tables, PQ
-    * codebooks) keyed by (session, key). Training is a fixed cost per
-    * corpus, but a production pipeline trains ONCE per (corpus,
-    * params) and reuses the layout across every consumer — re-running
-    * Lloyd per query invocation repays that fixed cost for nothing.
-    * The cached VALUE is the collected rows + schema (k·dim cells —
-    * driver-bounded, tiny), NOT the trainer's DataFrame: a Dataset
-    * strongly references its SparkSession, so a frame value would pin
-    * the weak key forever and the whole point of the WeakHashMap (a
-    * closed session's entries are collectable, a new session
-    * re-trains — the [[graft.sources.Tables.rowCount]] discipline)
-    * would silently fail. A hit rebuilds a LocalRelation from the
-    * rows — zero jobs, and the local table broadcasts for free. The
-    * key must encode every training input (dir, family, k, iters,
-    * portable).
-    */
-  private val trainCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[
-        String, (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])]]()
-
-  def memoized(spark: org.apache.spark.sql.SparkSession, key: String)(
-      train: => DataFrame): DataFrame = {
-    val perSession = trainCache.synchronized {
-      var m = trainCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[
-          String, (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])]()
-        trainCache.put(spark, m)
-      }
-      m
-    }
-    val (schema, rows) = perSession.computeIfAbsent(key, _ => {
-      val df = train
-      (df.schema, df.collect())
-    })
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
-
   /** Mean spherical quantization cost `avg(1 − cos)` of `e` under its
     * best assignment to `anchors` — the quantity each Lloyd iteration
     * is guaranteed not to increase. One row: (cost).

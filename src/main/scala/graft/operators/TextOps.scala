@@ -1077,7 +1077,7 @@ object TextOps {
     */
   def qualityLr(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val w = lrTrained(spark, dir)
+    val w = lrWeights(spark, dir)
     val m = lrFeatures(spark, dir).select(count(lit(1)).as("n"),
       round(avg(when((lrPm(w) >= 500000L) === (col("y") === 1.0), 1.0).otherwise(0.0)), 6).as("acc"))
       .collect()(0)
@@ -1085,19 +1085,18 @@ object TextOps {
       .toDF("n_docs", "w_bias", "w_len", "w_stop", "w_punct", "train_acc")
   }
 
-  /** The session's ONE training run per dir — q_quality_lr,
-    * q_quality_lr_score and the composed curation pipeline share it
-    * (the trainMemoized contract). Only the 4-element WEIGHT vector
-    * is memoized: the feature frame is persisted for the 20-step loop
-    * and released in `finally` the moment training ends (readouts
-    * recompute the cheap codegen'd projection instead), so no
-    * block-manager memory is retained per (session, dir) for the
-    * session lifetime.
+  /** The trained weight vector (micro-unit longs) — the session's ONE
+    * training run per dir ([[graft.GraftSession.memo]]), shared by
+    * q_quality_lr, q_quality_lr_score and the composed curation
+    * pipeline, which consumes it as scalar literals. Only the
+    * 4-element WEIGHT vector is memoized: the feature frame is
+    * persisted for the 20-step loop and released in `finally` the
+    * moment training ends (readouts recompute the cheap codegen'd
+    * projection instead), so no block-manager memory is retained per
+    * (session, dir) for the session lifetime.
     */
-  private val lrMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-  private def lrTrained(spark: SparkSession, dir: String): Array[Long] =
-    lrMemo.computeIfAbsent(s"${spark.hashCode()}|$dir", { _ =>
+  private[graft] def lrWeights(spark: SparkSession, dir: String): Array[Long] =
+    graft.GraftSession.memo(spark, s"lr|$dir") {
       val f = lrFeatures(spark, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -1126,26 +1125,7 @@ object TextOps {
       } finally {
         f.unpersist(blocking = false)
       }
-    })
-
-  /** The trained weight vector alone (micro-unit longs) — the bounded
-    * artifact the composed curation pipeline consumes as scalar
-    * literals.
-    */
-  private[graft] def lrWeights(spark: SparkSession, dir: String): Array[Long] =
-    lrTrained(spark, dir)
-
-  /** Drop every session-scoped trained-artifact cache (LR weights +
-    * frames here, BPE merges in [[BpeTrainer]]) — ConfParitySpec
-    * calls this so each hostile-config variant RETRAINS from scratch
-    * instead of replaying the baseline's cached artifact.
-    */
-  private[graft] def resetTrainedCaches(): Unit = {
-    lrMemo.clear()
-    lrNgramMemo.clear()
-    BpeTrainer.resetMemo()
-    CorpusOps.resetArtifactCaches()
-  }
+    }
 
   /** §2.I q_quality_lr_score — the SERVE side of the trained quality
     * classifier ([[qualityLr]]'s trained-artifact twin, the same
@@ -1157,7 +1137,7 @@ object TextOps {
     * once per session (memoized weights).
     */
   def qualityLrScore(spark: SparkSession, dir: String): DataFrame = {
-    val w = lrTrained(spark, dir)
+    val w = lrWeights(spark, dir)
     // p_quality = pm / 1e6: an exact IEEE division of an integer ≤ 1e6
     // — bit-identical on any engine, no round() needed
     lrFeatures(spark, dir)
@@ -1221,7 +1201,7 @@ object TextOps {
 
   /** The generic integer-exact full-batch GD trainer over a dense
     * micro-unit feature-array frame `(xs: array<long>[dim], y)` —
-    * [[lrTrained]]'s loop generalized from 4 scalar columns to
+    * [[lrWeights]]'s loop generalized from 4 scalar columns to
     * (1 + dim) weights. Each step is ONE distributed aggregation
     * (1 + dim map-side-combined decimal sums) + a (1 + dim)-number
     * driver update: the bounded-driver-state family. Exposed to the
@@ -1252,19 +1232,17 @@ object TextOps {
     w
   }
 
-  /** The session's ONE n-gram training run per dir (the [[lrTrained]]
+  /** The session's ONE n-gram training run per dir (the [[lrWeights]]
     * memo discipline: only the (1 + NgramDim)-long weight vector is retained; the
     * feature frame is persisted for the loop and released when
     * training ends). */
-  private val lrNgramMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
   private def lrNgramTrained(spark: SparkSession, dir: String): Array[Long] =
-    lrNgramMemo.computeIfAbsent(s"${spark.hashCode()}|$dir", { _ =>
+    graft.GraftSession.memo(spark, s"lr_ngram|$dir") {
       val f = lrNgramFeatures(spark, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try trainVec(f, NgramDim, NgramSteps)
       finally f.unpersist(blocking = false)
-    })
+    }
 
   /** §2.I q_quality_lr_ngram — the trained quality classifier scaled
     * from 4 scalar features to the fastText-shaped model a curation

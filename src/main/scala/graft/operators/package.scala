@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions.{broadcast, col, count, lit, row_number}
 
 package object operators {
@@ -16,10 +16,16 @@ package object operators {
     * folds through [[isNewer]], so stream and batch cannot drift.
     */
   private[graft] def newestPerKey(df: DataFrame, keys: Seq[String], ts: String, seq: String)
-      : DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(ts).desc, col(seq).desc)
-    df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
-  }
+      : DataFrame =
+    df.withColumn("_rn", row_number().over(latestFirst(keys, ts, seq)))
+      .filter(col("_rn") === 1).drop("_rn")
+
+  /** [[newestPerKey]]'s window: per `keys`, newest (`ts`, `seq`) first.
+    * Another window over the same rows shares its sort when it uses
+    * this spec (with its own frame).
+    */
+  private[graft] def latestFirst(keys: Seq[String], ts: String, seq: String): WindowSpec =
+    Window.partitionBy(keys.map(col): _*).orderBy(col(ts).desc, col(seq).desc)
 
   /** [[newestPerKey]]'s rule as a row predicate for the streaming
     * state folds: does the change at (`ts`, `seq`) replace the state

@@ -62,28 +62,11 @@ object Tables {
   def documents(spark: SparkSession, d: String): DataFrame = load(spark, d, "documents")
   def embeddings(spark: SparkSession, d: String): DataFrame = load(spark, d, "embeddings")
 
-  /** Session-scoped memoized table row counts — the corpus statistic
-    * adaptive operators (embedding-dedup banding, recall sampling)
-    * size themselves by. One metadata-cheap count job per
-    * (session, dir, table), not one per query BUILD: a 100 TB session
-    * constructing many adaptive plans over the same corpus must not
-    * re-count per construction. Keyed by the session object itself
-    * (weakly, so a closed session's entries are collectable) — a new
-    * session re-counts, which is the correct cache scope when the
-    * directory contents may have changed between sessions.
+  /** The table's row count, once per session ([[graft.GraftSession.memo]])
+    * — the corpus statistic adaptive operators (embedding-dedup
+    * banding, recall sampling) size themselves by. One metadata-cheap
+    * count job per (session, dir, table), not one per query build.
     */
-  private val countCache =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, Long]]()
-
-  def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
-    val perSession = countCache.synchronized {
-      var m = countCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-        countCache.put(spark, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(s"$sfDir/$name", _ => load(spark, sfDir, name).count())
-  }
+  def rowCount(spark: SparkSession, sfDir: String, name: String): Long =
+    graft.GraftSession.memo(spark, s"rows|$sfDir/$name")(load(spark, sfDir, name).count())
 }

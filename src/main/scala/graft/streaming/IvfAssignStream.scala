@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * posting lists grow incrementally (faiss `add` on an already-
   * trained index). This is that shape for the repo's IVF family:
   * the TRAINED anchor table arrives as the pretrained bounded
-  * artifact (collected (cell, unit-norm centroid) rows — the
+  * artifact (collected (cell, unit-norm centroid) rows, as
+  * [[graft.GraftSession.memoFrame]] keeps them — the
   * lrWeights/CurateStream serve contract; training stays a batch
   * job, exactly like faiss `train` → `add`), and each arriving
   * vector is scored against every anchor with the SAME arithmetic

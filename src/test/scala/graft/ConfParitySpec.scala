@@ -86,12 +86,13 @@ class ConfParitySpec extends AnyFunSuite {
   }
 
   test("results are identical with AQE off, an odd shuffle width, and no broadcast joins") {
-    // session-scoped trained-artifact memos (LR weights, BPE merges)
-    // would otherwise hand the hostile run the BASELINE's training
-    // result and make the training-loop probes vacuous — every
-    // variant must retrain from scratch under its own config
+    // the session memo (LR weights, BPE merges, k-means anchors, PQ
+    // codebooks, contaminated ids, row counts) would otherwise hand the
+    // hostile run the BASELINE's artifacts and make the training-loop
+    // probes vacuous — every variant must retrain from scratch under
+    // its own config
     def fresh(n: String): Seq[String] = {
-      operators.TextOps.resetTrainedCaches()
+      GraftSession.clearMemos(spark)
       rows(SparkEntry.queries(n)(spark, sf))
     }
     val baseline = Probes.map(n => n -> fresh(n)).toMap

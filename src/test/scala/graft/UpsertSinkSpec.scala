@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -12,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{CdcStream, UpsertSink}
 import graft.streaming.CdcStream.Change
+import graft.TestSpark.jobsStartedBy
 
 /** The serving store behind foreachBatch must be exactly-once under
   * the at-least-once replay contract: applying upserts and tombstones
@@ -33,33 +31,6 @@ class UpsertSinkSpec extends AnyFunSuite {
 
   private def snapshotDirs(store: String): Seq[String] =
     new java.io.File(store).list().filter(_.matches("v\\d+")).sorted.toSeq
-
-  /** Jobs `body` starts, counted by a SparkListener. Only jobs carrying
-    * this call's local-property tag count; the listener bus is
-    * asynchronous, so an untagged fence job marks the end of delivery.
-    */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val started = new AtomicInteger
-    val fenced = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("upsert.sink.spec")) match {
-          case Some(`tag`) => started.incrementAndGet()
-          case Some("fence") => fenced.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("upsert.sink.spec", tag)
-      try body finally sc.setLocalProperty("upsert.sink.spec", "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("upsert.sink.spec", null)
-      assert(fenced.await(60, TimeUnit.SECONDS), "listener bus never delivered the fence job")
-      started.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   // realistic epoch-ns event times — compactState's watermark machinery
   // treats near-zero event times as already-late rows and drops them

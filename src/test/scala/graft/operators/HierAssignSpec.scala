@@ -46,7 +46,7 @@ class HierAssignSpec extends AnyFunSuite {
     // the contract is train-ONCE, not reference equality — pin it by
     // counting executions of the train block itself
     var trains = 0
-    def call() = Kmeans.memoized(spark, "hierassign-memo-spec") {
+    def call() = graft.GraftSession.memoFrame(spark, "hierassign-memo-spec") {
       trains += 1
       AnnOps.trainedAnchors(spark, sf)
     }

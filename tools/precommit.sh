@@ -9,9 +9,10 @@
 # that pin the shared df-capped co-count engine's invariants across
 # queries (CrossOperatorConsistencySpec, ScaleGuardsSpec,
 # ContainmentSpec), the local file system and upsert sink specs
-# (LocalFsSpec, UpsertSinkSpec), and the latest-wins compaction specs
-# (LatestWinsTieBreakSpec, IvmSpec). Use before END-OF-ROUND snapshots
-# and after touching query plumbing.
+# (LocalFsSpec, UpsertSinkSpec), the latest-wins compaction specs
+# (LatestWinsTieBreakSpec, IvmSpec), and the session memo specs
+# (GraftSessionMemoSpec, HierAssignSpec, ConfParitySpec). Use before
+# END-OF-ROUND snapshots and after touching query plumbing.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch Test/compile >/tmp/precommit.log 2>&1 || {
@@ -41,16 +42,32 @@ if grep -rnF --include='*.scala' -e 'orderBy(col("ts_ns").desc' -e 'orderBy(col(
 fi
 echo "PRECOMMIT OK: every latest-wins compaction goes through operators.newestPerKey."
 
+# Session-memo gate: every session-scoped artifact cache is
+# GraftSession.memo, so no other main source may key a map by the
+# session's hash code or hold sessions in a WeakHashMap.
+if grep -rnF --include='*.scala' -e 'hashCode()}|' -e 'WeakHashMap[' \
+    src/main/scala/ | grep -v '^src/main/scala/graft/GraftSession\.scala:' >&2; then
+  echo "PRECOMMIT FAIL: session-scoped cache above bypasses GraftSession.memo — route it through the helper." >&2
+  exit 1
+fi
+echo "PRECOMMIT OK: every session-scoped artifact cache goes through GraftSession.memo."
+
 # Bench gate (round-12 lesson: q_winnow_dedup reached the registry
 # without ever being benched and shipped a 615 s plan): every
 # registered query must have a per-query entry in bench_queries.json —
 # after ANY registry change, re-run `tools/run.sh graft.Bench` at
 # sf0.1 (and tools/curve.sh for the new queries) before committing.
+# bench_queries.json is a local, git-ignored output; a checkout without
+# one reads the committed round baseline.
 tools/run.sh graft.ListQueries > /tmp/registry_names.txt
 python3 - <<'EOF' || { echo "PRECOMMIT FAIL: bench gate — re-run graft.Bench (and curve.sh for new queries) before commit." >&2; exit 1; }
-import json, sys
+import json, os, sys
 reg = set(open("/tmp/registry_names.txt").read().split())
-bench = json.load(open("bench_queries.json")).get("queries", {})
+path = "bench_queries.json"
+if not os.path.exists(path):
+    path = "artifacts/BENCH_LOCAL_r20_baseline.json"
+print("bench gate reads", path)
+bench = json.load(open(path)).get("queries", {})
 missing = sorted(reg - set(bench))
 if missing:
     print("registered but never benched:", ", ".join(missing), file=sys.stderr)
@@ -74,11 +91,11 @@ echo "PRECOMMIT OK: every registered query has a bench entry."
 #      that only min-of-2 absorbed). If any per-query p2/p1 ratio
 #      exceeds 3x, run a third pass for the record.
 if [[ "${PRECOMMIT_SMOKE:-0}" == "1" ]]; then
-  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec graft.LocalFsSpec graft.UpsertSinkSpec graft.operators.LatestWinsTieBreakSpec graft.operators.IvmSpec" \
+  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec graft.LocalFsSpec graft.UpsertSinkSpec graft.operators.LatestWinsTieBreakSpec graft.operators.IvmSpec graft.GraftSessionMemoSpec graft.operators.HierAssignSpec graft.ConfParitySpec" \
       >/tmp/precommit_smoke.log 2>&1 || {
     echo "PRECOMMIT FAIL: smoke specs broken — do not commit." >&2
     tail -n 40 /tmp/precommit_smoke.log >&2
     exit 1
   }
-  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine, local file system, upsert sink and latest-wins specs green."
+  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine, local file system, upsert sink, latest-wins and session memo specs green."
 fi
