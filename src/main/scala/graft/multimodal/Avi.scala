@@ -6,7 +6,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 
 /** REAL MJPEG-in-AVI video decode — the stub boundary pushed from
   * "any video" to genuinely INTER-FRAME codecs (H.264-class). MJPEG
@@ -48,7 +48,7 @@ object Avi {
   // blob — see the note in Gif.scala); once per executor JVM
   ImageIO.setUseCache(false)
 
-  import Gif.{FrameW, FrameH, FramePx, SampleStride}
+  import Gif.{FrameW, FrameH, FramePx, SampleStride, frameCount, framePixels}
 
   private def fourcc(s: String): Array[Byte] = {
     require(s.length == 4)
@@ -56,18 +56,11 @@ object Avi {
   }
 
   /** One frame's pixels as a grayscale image under the shared frame
-    * rule (text byte f·64+p, 0 beyond the end).
+    * rule ([[Gif.framePixels]]).
     */
   private def frameImage(bytes: Array[Byte], f: Int): BufferedImage = {
     val img = new BufferedImage(FrameW, FrameH, BufferedImage.TYPE_BYTE_GRAY)
-    val raster = img.getRaster
-    var p = 0
-    while (p < FramePx) {
-      val k = f * FramePx + p
-      raster.setSample(p % FrameW, p / FrameW, 0,
-        if (k < bytes.length) bytes(k) & 0xff else 0)
-      p += 1
-    }
+    img.getRaster.setSamples(0, 0, FrameW, FrameH, 0, framePixels(bytes, f))
     img
   }
 
@@ -103,21 +96,20 @@ object Avi {
       "avi synth input must be ASCII; non-ASCII would diverge from the oracle")
     val bytes = text.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
     require(bytes.nonEmpty, "avi synth input must be non-empty")
-    val nFrames = (bytes.length + FramePx - 1) / FramePx
-    val jpegs = IndexedSeq.tabulate(nFrames)(f => encodeJpegWith(writer, frameImage(bytes, f)))
+    val jpegs = IndexedSeq.tabulate(frameCount(bytes.length))(f => encodeJpegWith(writer, frameImage(bytes, f)))
     // MJPEG: every frame is an independent JPEG (intra-only), so every
     // idx1 entry carries AVIIF_KEYFRAME and strf declares no palette
     buildContainer(jpegs, handler = "MJPG", compression = fourcc("MJPG"),
       bitCount = 24, palette = Array.emptyByteArray, isKey = _ => true)
   }
 
-  /** Shared RIFF/AVI container builder — the MJPEG path and the
-    * BI_RLE8 path ([[Rle]]) differ only in the stream handler, the
-    * `strf` pixel format (bit depth / biCompression / palette) and
+  /** Shared RIFF/AVI container builder — MJPEG and the five 8-bit
+    * video codecs ([[VideoFormat]]) differ only in the stream handler,
+    * the `strf` pixel format (bit depth / biCompression / palette) and
     * which idx1 entries carry the keyframe flag; everything
     * structural (avih cross-check field, the JUNK chunk every walk
     * must skip, word-aligned `00dc` movi chunks, idx1 offsets) is one
-    * copy here so the two codecs can never drift.
+    * copy here so the codecs can never drift.
     */
   private[multimodal] def buildContainer(frames: IndexedSeq[Array[Byte]],
       handler: String, compression: Array[Byte], bitCount: Int,
@@ -293,8 +285,7 @@ object Avi {
     * skipped by declared size, read `avih`'s dwTotalFrames and the
     * `strf` stream format out of the hdrl LIST, collect the movi
     * LIST's frame chunks IN CONTAINER ORDER, and cross-check the two
-    * frame counts — one copy serving both the MJPEG and the BI_RLE8
-    * ([[Rle]]) decode paths.
+    * frame counts — one copy serving every AVI decode path.
     */
   private[multimodal] def readPayload(avi: Array[Byte]): AviPayload = {
     val buf = ByteBuffer.wrap(avi).order(ByteOrder.LITTLE_ENDIAN)
@@ -366,6 +357,120 @@ object Avi {
       keyFlags.toIndexedSeq, audio.toIndexedSeq)
   }
 
+  // ------------------------------------------------------------------
+  // THE SHARED VIDEO DECODE PATH — the container-side contract of the
+  // five 8-bit video codecs ([[Rle]] MRLE, [[Mc]] GMC1, [[Xf]] GWT1 and
+  // GWR1, [[Gop]] GGP1), written once. A codec supplies its
+  // [[VideoFormat]] and its own per-frame encode/decode; the strf
+  // check, the validated read, the persistent-canvas loop, the idx1
+  // keyframe seek and the per-document seek query live here.
+  // ------------------------------------------------------------------
+
+  /** A video codec's container identity: the strh handler fourcc and
+    * the strf biCompression code (the fourcc's own bytes, except for
+    * registered numeric codes such as BI_RLE8 = 1). Frames are 8-bit
+    * indexes into [[Rle.GrayPalette]].
+    */
+  private[multimodal] final case class VideoFormat(fourcc: String, compression: Array[Byte])
+
+  /** Build `fmt`'s AVI around already-encoded frames. */
+  private[multimodal] def buildVideo(frames: IndexedSeq[Array[Byte]], fmt: VideoFormat,
+      isKey: Int => Boolean, audio: IndexedSeq[Array[Byte]] = IndexedSeq.empty): Array[Byte] =
+    buildContainer(frames, fmt.fourcc, fmt.compression, bitCount = 8,
+      palette = Rle.GrayPalette, isKey = isKey, audio = audio)
+
+  /** The strf BITMAPINFOHEADER check, run BEFORE any frame decodes:
+    * a 40-byte header declaring the shared frame size, 8-bit pixels
+    * and `fmt`'s biCompression. Every failure names `fmt.fourcc`.
+    */
+  private[multimodal] def checkStrf(pl: AviPayload, fmt: VideoFormat): Unit = {
+    val name = fmt.fourcc
+    require(pl.strf.length >= 40, s"$name: missing or truncated strf BITMAPINFOHEADER")
+    val h = ByteBuffer.wrap(pl.strf).order(ByteOrder.LITTLE_ENDIAN)
+    val biSize = h.getInt; val w = h.getInt; val ht = h.getInt
+    h.getShort // planes
+    val bits = h.getShort.toInt
+    val comp = new Array[Byte](4); h.get(comp)
+    require(biSize == 40, s"$name: unexpected BITMAPINFOHEADER size $biSize")
+    require(w == FrameW && ht == FrameH, s"$name: unexpected dimensions ${w}x$ht")
+    require(bits == 8, s"$name requires 8-bit pixels, strf declares $bits")
+    def show(c: Array[Byte]): String =
+      if (c.forall(b => b >= 0x20 && b < 0x7f)) new String(c, "US-ASCII")
+      else ByteBuffer.wrap(c).order(ByteOrder.LITTLE_ENDIAN).getInt.toString
+    require(java.util.Arrays.equals(comp, fmt.compression),
+      s"$name: biCompression ${show(comp)} is not ${show(fmt.compression)}")
+  }
+
+  /** Walk `avi` and check its strf against `fmt` — the read every
+    * video decode path starts from. */
+  private[multimodal] def readVideo(avi: Array[Byte], fmt: VideoFormat): AviPayload = {
+    val pl = readPayload(avi)
+    checkStrf(pl, fmt)
+    pl
+  }
+
+  /** A codec's per-frame decode: `step(canvas, data, f, start)` applies
+    * frame `f`'s payload to the persistent canvas, where `start` is the
+    * frame the loop began from (0 in sequence, the keyframe when
+    * seeking). Each codec derives its own start-frame rule from the
+    * two — the loops impose none.
+    */
+  private[multimodal] type Step[S] = (Array[Int], Array[Byte], Int, Int) => S
+
+  /** Decode EVERY frame in order through ONE persistent canvas (a
+    * P-frame needs its predecessors): each frame's canvas snapshot and
+    * the codec's per-frame result. */
+  private[multimodal] def decodeSequential[S](frames: IndexedSeq[Array[Byte]])(
+      step: Step[S]): IndexedSeq[(Array[Int], S)] = {
+    val canvas = new Array[Int](FramePx)
+    frames.indices.map { f =>
+      val s = step(canvas, frames(f), f, 0)
+      (canvas.clone(), s)
+    }
+  }
+
+  /** KEYFRAME-SEEK decode — the reason keyframes exist: to decode
+    * frame `target`, read the idx1 INDEX for the nearest flagged
+    * keyframe at or before it and decode forward from THERE on a
+    * fresh canvas, never touching the frames before it (decode cost
+    * per target is bounded by the keyframe cadence, not by stream
+    * position). The codec checks that the keyframe self-contains, so
+    * an index that lies fails loudly. Returns the decoded canvas and
+    * how many frames were actually decoded.
+    */
+  private[multimodal] def decodeSeek(pl: AviPayload, target: Int)(
+      step: Step[Any]): (Array[Int], Int) = {
+    require(target >= 0 && target < pl.frames.length,
+      s"seek target $target outside 0..${pl.frames.length - 1}")
+    require(pl.keyFlags.length == pl.frames.length,
+      s"idx1 carries ${pl.keyFlags.length} entries for ${pl.frames.length} " +
+        "frames — a seeking decoder needs the full index")
+    val key = (target to 0 by -1).find(pl.keyFlags(_)).getOrElse(
+      throw new IllegalArgumentException(
+        s"no keyframe at or before frame $target in idx1"))
+    val canvas = new Array[Int](FramePx)
+    (key to target).foreach(f => step(canvas, pl.frames(f), f, key))
+    (canvas, target - key + 1)
+  }
+
+  /** One row per document: its LAST frame seek-decoded. `nFramesOf`
+    * is the codec's frame count for a text length, `seek(text, target)`
+    * its synth + [[decodeSeek]], and `row(docId, nFrames,
+    * framesDecoded, canvas)` its output row. */
+  private[multimodal] def seekLast[R: Encoder](spark: SparkSession, docs: DataFrame,
+      nFramesOf: Int => Int)(seek: (String, Int) => (Array[Int], Int))(
+      row: (Long, Int, Int, Array[Int]) => R): Dataset[R] = {
+    import spark.implicits._
+    docs.selectExpr("cast(doc_id as long) doc_id", "text").as[(Long, String)]
+      .mapPartitions { rows =>
+        rows.map { case (id, text) =>
+          val nf = nFramesOf(text.length)
+          val (cv, dec) = seek(text, nf - 1)
+          row(id, nf, dec, cv)
+        }
+      }
+  }
+
   private def parseSampledWith(reader: javax.imageio.ImageReader,
       avi: Array[Byte], source: String, stride: Int): Seq[AviFrame] = {
     val frames = readPayload(avi).frames
@@ -376,13 +481,12 @@ object Avi {
         reader.setInput(iis, false, true)
         val img = reader.read(0)
         val raster = img.getRaster
+        val want = framePixels(bytes, f)
         var sae = 0L
         var p = 0
         val n = img.getWidth * img.getHeight
         while (p < n) {
-          val k = f * FramePx + p
-          val want = if (k < bytes.length) bytes(k) & 0xff else 0
-          sae += math.abs(raster.getSample(p % img.getWidth, p / img.getWidth, 0) - want)
+          sae += math.abs(raster.getSample(p % img.getWidth, p / img.getWidth, 0) - want(p))
           p += 1
         }
         AviFrame(f, frames.length, img.getWidth, img.getHeight, sae.toDouble / n)

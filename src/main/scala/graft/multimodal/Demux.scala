@@ -31,7 +31,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   */
 object Demux {
 
-  import Gif.{FrameW, FrameH, FramePx}
+  import Gif.FramePx
 
   /** Build a real interleaved audio+video AVI from `text`. */
   def synth(text: String): Array[Byte] = {
@@ -44,9 +44,7 @@ object Demux {
       (lo until hi).foreach(i => b.putShort((((bytes(i) & 0xff) - 96) * 256).toShort))
       b.array()
     }
-    Avi.buildContainer(video, handler = "MRLE", compression = Rle.BiRle8,
-      bitCount = 8, palette = Rle.GrayPalette,
-      isKey = _ % Rle.KeyInterval == 0, audio = audio)
+    Avi.buildVideo(video, Rle.Format, isKey = _ % Rle.KeyInterval == 0, audio = audio)
   }
 
   /** One demuxed frame: decoded video pixel sum + the frame's audio
@@ -60,8 +58,7 @@ object Demux {
     * not match the frame count, or an odd-length (torn-sample) block.
     */
   def parse(avi: Array[Byte]): Seq[AvFrame] = {
-    val pl = Avi.readPayload(avi)
-    Rle.validateStrf(pl)
+    val pl = Avi.readVideo(avi, Rle.Format)
     // the audio stream's declared format — selected by its strl's
     // strh fccType ('auds'), NOT by list position, so a container
     // whose strl lists are ordered audio-first still validates the

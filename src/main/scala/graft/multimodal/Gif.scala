@@ -12,8 +12,7 @@ import javax.imageio.{IIOImage, ImageIO}
   * writes image SEQUENCES, headless-safe, no external library), so
   * the frame-sampling query can walk a genuine container — frame
   * count from the stream, per-frame decoded pixels — instead of
-  * [[Blob]]'s fixed-size byte segmentation. The remaining stub
-  * boundary is now exactly H.264-class video.
+  * [[Blob]]'s fixed-size byte segmentation.
   *
   * Synthesis is deterministic from the text corpus, the frame-wise
   * analogue of [[Bmp]]'s pixel rule: frame f is a [[FrameW]]×[[FrameH]]
@@ -45,6 +44,19 @@ object Gif {
   val FramePx: Int = FrameW * FrameH
   val SampleStride = 3
 
+  /** Frames needed to carry `len` text bytes under [[framePixels]]. */
+  private[multimodal] def frameCount(len: Int): Int = (len + FramePx - 1) / FramePx
+
+  /** The intra frame rule [[Avi]], [[Rle]] and [[Xf]] share with this
+    * codec: frame f's pixel p (row-major) is text byte f·[[FramePx]]+p,
+    * 0 beyond the end.
+    */
+  private[multimodal] def framePixels(bytes: Array[Byte], f: Int): Array[Int] =
+    Array.tabulate(FramePx) { p =>
+      val k = f * FramePx + p
+      if (k < bytes.length) bytes(k) & 0xff else 0
+    }
+
   private val GrayPalette: IndexColorModel = {
     val ramp = Array.tabulate(256)(_.toByte)
     new IndexColorModel(8, 256, ramp, ramp, ramp)
@@ -69,7 +81,7 @@ object Gif {
       "gif synth input must be ASCII; non-ASCII would diverge from the oracle")
     val bytes = text.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
     require(bytes.nonEmpty, "gif synth input must be non-empty")
-    val nFrames = (bytes.length + FramePx - 1) / FramePx
+    val nFrames = frameCount(bytes.length)
     val out = new ByteArrayOutputStream()
     val ios = ImageIO.createImageOutputStream(out)
     writer.setOutput(ios)
@@ -81,14 +93,7 @@ object Gif {
     var f = 0
     while (f < nFrames) {
       val img = new BufferedImage(FrameW, FrameH, BufferedImage.TYPE_BYTE_INDEXED, GrayPalette)
-      val raster = img.getRaster
-      var p = 0
-      while (p < FramePx) {
-        val k = f * FramePx + p
-        raster.setSample(p % FrameW, p / FrameW, 0,
-          if (k < bytes.length) bytes(k) & 0xff else 0)
-        p += 1
-      }
+      img.getRaster.setSamples(0, 0, FrameW, FrameH, 0, framePixels(bytes, f))
       writer.writeToSequence(new IIOImage(img, null, null), param)
       f += 1
     }

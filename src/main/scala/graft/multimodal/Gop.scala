@@ -50,7 +50,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 object Gop {
 
   import Gif.{FrameW, FrameH, FramePx, SampleStride}
-  import Xf.{BitReader, BitWriter, fwd, zigzag, unzigzag}
+  import Xf.{BitReader, BitWriter, clamp, dequantize, fwd, inverse, quantize, riceCenter, zigzag, unzigzag}
 
   /** Keyframe cadence (the [[Mc.KeyInterval]]/[[Rle.KeyInterval]] contract). */
   val KeyInterval = 8
@@ -64,38 +64,11 @@ object Gop {
   private val NBlocks = FrameH * BlocksPerRow // 16
   /** Blocks in rows 0..2 — MC candidates (row 3 is uncovered → intra). */
   private val McBlocks = (FrameH - 1) * BlocksPerRow // 12
-  private val Bias = 2048
 
   /** Rice parameter (the [[Xf.RiceK]] value). */
   val RiceK: Int = Xf.RiceK
 
-  /** Rice centering: the quantized value of a zero coefficient. */
-  private def riceCenter(q: Int): Int = (Bias + q / 2) / q
-
-  /** biCompression fourcc for this codec's strf. */
-  private[multimodal] val GopComp: Array[Byte] = "GGP1".getBytes("US-ASCII")
-
-  /** Quantize one transform coefficient (biased non-negative rounded
-    * division — the [[Xf]] DIV-portability discipline). */
-  private def quantize(c: Int, q: Int): Int = (c + Bias + q / 2) / q
-
-  /** Inverse-transform output j from dequantized coefficients, with
-    * the biased rounded division by 4 (dividend kept non-negative). */
-  private def invPixel(s: Int): Int = (s + 16386) / 4 - 4096
-
-  /** Rice-encode one value (centered + zigzag-mapped upstream). */
-  private def putRice(w: BitWriter, v: Int): Unit = {
-    var u = v >> RiceK
-    while (u > 0) { w.put(1); u -= 1 }
-    w.put(0)
-    w.putN(v & ((1 << RiceK) - 1), RiceK)
-  }
-
-  private def readRice(r: BitReader): Int = {
-    var u = 0
-    while (r.read() == 1) u += 1
-    (u << RiceK) | r.readN(RiceK)
-  }
+  private[multimodal] val Format = Avi.VideoFormat("GGP1", "GGP1".getBytes("US-ASCII"))
 
   /** Encode one frame against the encoder's RECONSTRUCTED previous
     * frame `ref` (closed loop), returning (payload, new reconstruction).
@@ -131,12 +104,12 @@ object Gop {
         j += 1
       }
       val tq = fwd(r(0), r(1), r(2), r(3)).map(quantize(_, q))
-      tq.foreach(t => putRice(w, zigzag(t - ctr)))
-      val s = fwd(tq(0) * q - Bias, tq(1) * q - Bias, tq(2) * q - Bias, tq(3) * q - Bias)
+      tq.foreach(t => w.putRice(zigzag(t - ctr)))
+      val s = inverse(tq.map(dequantize(_, q)))
       j = 0
       while (j < BlockW) {
         val pred = if (predOff < 0) 0 else ref(predOff + j)
-        recon(off + j) = math.max(0, math.min(255, pred + invPixel(s(j))))
+        recon(off + j) = clamp(pred + s(j))
         j += 1
       }
       b += 1
@@ -169,29 +142,7 @@ object Gop {
 
   /** Build a real GGP1 AVI from `text` through the shared container. */
   def synth(text: String, q: Int = Quant): Array[Byte] =
-    Avi.buildContainer(encodeStream(Rle.checkedBytes(text), q), handler = "GGP1",
-      compression = GopComp, bitCount = 8, palette = Rle.GrayPalette,
-      isKey = _ % KeyInterval == 0)
-
-  private[multimodal] def validateStrf(pl: Avi.AviPayload): Unit = {
-    require(pl.strf.length >= 40, "missing or truncated strf BITMAPINFOHEADER")
-    val h = java.nio.ByteBuffer.wrap(pl.strf).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val biSize = h.getInt; val w = h.getInt; val ht = h.getInt
-    h.getShort
-    val bits = h.getShort.toInt
-    val comp = new Array[Byte](4); h.get(comp)
-    require(biSize == 40, s"unexpected BITMAPINFOHEADER size $biSize")
-    require(w == FrameW && ht == FrameH, s"unexpected dimensions ${w}x$ht")
-    require(bits == 8, s"GGP1 requires 8-bit pixels, strf declares $bits")
-    require(java.util.Arrays.equals(comp, GopComp),
-      s"biCompression ${new String(comp, "US-ASCII")} is not GGP1")
-  }
-
-  private[multimodal] def readValidated(avi: Array[Byte]): Avi.AviPayload = {
-    val pl = Avi.readPayload(avi)
-    validateStrf(pl)
-    pl
-  }
+    Avi.buildVideo(encodeStream(Rle.checkedBytes(text), q), Format, isKey = _ % KeyInterval == 0)
 
   /** Per-frame decode telemetry: motion count + actual consumed bits. */
   private[multimodal] final case class FrameStats(nMv: Int, nBits: Int)
@@ -217,12 +168,11 @@ object Gop {
         if (dy == 1) nMv += 1
         predOff = off + Step * dy
       }
-      val tq = Array.fill(BlockW)((unzigzag(readRice(r)) + ctr) * q - Bias)
-      val s = fwd(tq(0), tq(1), tq(2), tq(3))
+      val s = inverse(Array.fill(BlockW)(dequantize(unzigzag(r.readRice()) + ctr, q)))
       var j = 0
       while (j < BlockW) {
         val pred = if (predOff < 0) 0 else prev(predOff + j)
-        canvas(off + j) = math.max(0, math.min(255, pred + invPixel(s(j))))
+        canvas(off + j) = clamp(pred + s(j))
         j += 1
       }
       b += 1
@@ -235,43 +185,28 @@ object Gop {
   }
 
   /** Sequential decode through one persistent canvas: (canvas
-    * snapshot, stats) per frame. */
+    * snapshot, stats) per frame. The bitstream changes shape on key
+    * frames, so in sequence every frame ≡ 0 mod [[KeyInterval]] is
+    * decoded as one. */
   private[multimodal] def decodeFrames(frames: IndexedSeq[Array[Byte]],
-      q: Int = Quant): IndexedSeq[(Array[Int], FrameStats)] = {
-    val canvas = new Array[Int](FramePx)
-    frames.zipWithIndex.map { case (data, f) =>
-      val st = applyFrame(canvas, data, isKey = f % KeyInterval == 0, q)
-      (canvas.clone(), st)
-    }
-  }
+      q: Int = Quant): IndexedSeq[(Array[Int], FrameStats)] =
+    Avi.decodeSequential(frames)((canvas, data, f, _) =>
+      applyFrame(canvas, data, isKey = f % KeyInterval == 0, q))
 
   private[multimodal] def decodeAll(avi: Array[Byte],
       q: Int = Quant): IndexedSeq[(Array[Int], FrameStats)] =
-    decodeFrames(readValidated(avi).frames, q)
+    decodeFrames(Avi.readVideo(avi, Format).frames, q)
 
-  /** Keyframe-seek decode via idx1 (the [[Mc.decodeSeek]] contract):
-    * because the loop is closed and keyframes are fully intra, the
-    * seek-decoded canvas is bit-identical to the full decode's — the
-    * re-sync property GopSpec pins. Returns (canvas, frames decoded).
+  /** [[Avi.decodeSeek]] on this codec, the seek's keyframe decoded as
+    * a key frame: because the loop is closed and keyframes are fully
+    * intra, the seek-decoded canvas is bit-identical to the full
+    * decode's — the re-sync property GopSpec pins. Returns (canvas,
+    * frames decoded).
     */
   private[multimodal] def decodeSeek(avi: Array[Byte], target: Int,
-      q: Int = Quant): (Array[Int], Int) = {
-    val pl = readValidated(avi)
-    require(target >= 0 && target < pl.frames.length,
-      s"seek target $target outside 0..${pl.frames.length - 1}")
-    require(pl.keyFlags.length == pl.frames.length,
-      "idx1 must cover every frame for a seeking decoder")
-    val key = (target to 0 by -1).find(pl.keyFlags(_)).getOrElse(
-      throw new IllegalArgumentException(
-        s"no keyframe at or before frame $target in idx1"))
-    val canvas = new Array[Int](FramePx)
-    var f = key
-    while (f <= target) {
-      applyFrame(canvas, pl.frames(f), isKey = f == key, q)
-      f += 1
-    }
-    (canvas, target - key + 1)
-  }
+      q: Int = Quant): (Array[Int], Int) =
+    Avi.decodeSeek(Avi.readVideo(avi, Format), target)((canvas, data, f, key) =>
+      applyFrame(canvas, data, isKey = f == key, q))
 
   /** One output row per SAMPLED frame. */
   case class GopRow(doc_id: Long, frame_idx: Long, n_frames: Long,
@@ -317,15 +252,8 @@ object Gop {
     */
   def seekLast(spark: SparkSession, docs: DataFrame): Dataset[GopSeekRow] = {
     import spark.implicits._
-    docs.selectExpr("cast(doc_id as long) doc_id", "text").as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val nf = Mc.nFramesOf(text.length)
-          val (cv, dec) = decodeSeek(synth(text), nf - 1)
-          var sum = 0L; var p = 0
-          while (p < FramePx) { sum += cv(p); p += 1 }
-          GopSeekRow(id, nf.toLong, (nf - 1).toLong, dec.toLong, sum)
-        }
-      }
+    Avi.seekLast(spark, docs, Mc.nFramesOf)((text, t) => decodeSeek(synth(text), t)) {
+      (id, nf, dec, cv) => GopSeekRow(id, nf.toLong, (nf - 1).toLong, dec.toLong, cv.foldLeft(0L)(_ + _))
+    }
   }
 }

@@ -134,6 +134,8 @@ object Mc {
   /** biCompression fourcc for this codec's strf. */
   private[multimodal] val McComp: Array[Byte] = "GMC1".getBytes("US-ASCII")
 
+  private[multimodal] val Format = Avi.VideoFormat("GMC1", McComp)
+
   private[multimodal] def encodeStream(bytes: Array[Byte]): IndexedSeq[Array[Byte]] = {
     val bsum = bytes.foldLeft(0L)((s, x) => s + (x & 0xff))
     val nFrames = nFramesOf(bytes.length)
@@ -148,30 +150,7 @@ object Mc {
 
   /** Build a real GMC1 AVI from `text` through the shared container. */
   def synth(text: String): Array[Byte] =
-    Avi.buildContainer(encodeStream(Rle.checkedBytes(text)), handler = "GMC1",
-      compression = McComp, bitCount = 8, palette = Rle.GrayPalette,
-      isKey = _ % KeyInterval == 0)
-
-  /** strf checks for this codec (dimensions, 8-bit, GMC1 fourcc). */
-  private[multimodal] def validateStrf(pl: Avi.AviPayload): Unit = {
-    require(pl.strf.length >= 40, "missing or truncated strf BITMAPINFOHEADER")
-    val h = java.nio.ByteBuffer.wrap(pl.strf).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val biSize = h.getInt; val w = h.getInt; val ht = h.getInt
-    h.getShort
-    val bits = h.getShort.toInt
-    val comp = new Array[Byte](4); h.get(comp)
-    require(biSize == 40, s"unexpected BITMAPINFOHEADER size $biSize")
-    require(w == FrameW && ht == FrameH, s"unexpected dimensions ${w}x$ht")
-    require(bits == 8, s"GMC1 requires 8-bit pixels, strf declares $bits")
-    require(java.util.Arrays.equals(comp, McComp),
-      s"biCompression ${new String(comp, "US-ASCII")} is not GMC1")
-  }
-
-  private[multimodal] def readValidated(avi: Array[Byte]): Avi.AviPayload = {
-    val pl = Avi.readPayload(avi)
-    validateStrf(pl)
-    pl
-  }
+    Avi.buildVideo(encodeStream(Rle.checkedBytes(text)), Format, isKey = _ % KeyInterval == 0)
 
   /** Per-frame decode telemetry — the hash-gated motion evidence. */
   private[multimodal] final case class FrameStats(
@@ -238,42 +217,24 @@ object Mc {
     FrameStats(nMv, nResid, residAbs, literal)
   }
 
+  /** The start-frame rule, in sequence and when seeking alike: the
+    * frame a decode starts from must be fully intra. */
+  private val step: Avi.Step[FrameStats] =
+    (canvas, data, f, start) => applyFrame(canvas, data, isFirst = f == start)
+
   /** Sequential decode of every frame through one persistent canvas:
     * (canvas snapshot, stats) per frame. */
   private[multimodal] def decodeFrames(
-      frames: IndexedSeq[Array[Byte]]): IndexedSeq[(Array[Int], FrameStats)] = {
-    val canvas = new Array[Int](FramePx)
-    frames.zipWithIndex.map { case (data, f) =>
-      val st = applyFrame(canvas, data, isFirst = f == 0)
-      (canvas.clone(), st)
-    }
-  }
+      frames: IndexedSeq[Array[Byte]]): IndexedSeq[(Array[Int], FrameStats)] =
+    Avi.decodeSequential(frames)(step)
 
   private[multimodal] def decodeAll(avi: Array[Byte]): IndexedSeq[(Array[Int], FrameStats)] =
-    decodeFrames(readValidated(avi).frames)
+    decodeFrames(Avi.readVideo(avi, Format).frames)
 
-  /** Keyframe-seek decode via idx1 (the [[Rle.decodeSeek]] contract):
-    * decode `target` from the nearest flagged keyframe on a fresh
-    * canvas; the keyframe must self-contain. Returns the canvas and
-    * the number of frames actually decoded.
-    */
-  private[multimodal] def decodeSeek(avi: Array[Byte], target: Int): (Array[Int], Int) = {
-    val pl = readValidated(avi)
-    require(target >= 0 && target < pl.frames.length,
-      s"seek target $target outside 0..${pl.frames.length - 1}")
-    require(pl.keyFlags.length == pl.frames.length,
-      "idx1 must cover every frame for a seeking decoder")
-    val key = (target to 0 by -1).find(pl.keyFlags(_)).getOrElse(
-      throw new IllegalArgumentException(
-        s"no keyframe at or before frame $target in idx1"))
-    val canvas = new Array[Int](FramePx)
-    var f = key
-    while (f <= target) {
-      applyFrame(canvas, pl.frames(f), isFirst = f == key)
-      f += 1
-    }
-    (canvas, target - key + 1)
-  }
+  /** [[Avi.decodeSeek]] on this codec: the keyframe must self-contain.
+    * Returns the canvas and the number of frames actually decoded. */
+  private[multimodal] def decodeSeek(avi: Array[Byte], target: Int): (Array[Int], Int) =
+    Avi.decodeSeek(Avi.readVideo(avi, Format), target)(step)
 
   /** One output row per SAMPLED frame. */
   case class McRow(doc_id: Long, frame_idx: Long, n_frames: Long,
@@ -293,16 +254,9 @@ object Mc {
     */
   def seekLast(spark: SparkSession, docs: DataFrame): Dataset[McSeekRow] = {
     import spark.implicits._
-    docs.selectExpr("cast(doc_id as long) doc_id", "text").as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val nf = nFramesOf(text.length)
-          val (cv, dec) = decodeSeek(synth(text), nf - 1)
-          var sum = 0L; var p = 0
-          while (p < FramePx) { sum += cv(p); p += 1 }
-          McSeekRow(id, nf.toLong, (nf - 1).toLong, dec.toLong, sum)
-        }
-      }
+    Avi.seekLast(spark, docs, nFramesOf)((text, t) => decodeSeek(synth(text), t)) {
+      (id, nf, dec, cv) => McSeekRow(id, nf.toLong, (nf - 1).toLong, dec.toLong, cv.foldLeft(0L)(_ + _))
+    }
   }
 
   /** End-to-end pipeline over a (doc_id, text) frame: synthesize →
@@ -319,9 +273,7 @@ object Mc {
           val all = decodeAll(synth(text))
           (0 until all.length by SampleStride).map { f =>
             val (cv, st) = all(f)
-            var sum = 0L; var p = 0
-            while (p < FramePx) { sum += cv(p); p += 1 }
-            McRow(id, f.toLong, all.length.toLong, sum,
+            McRow(id, f.toLong, all.length.toLong, cv.foldLeft(0L)(_ + _),
               st.nMv.toLong, st.nResid.toLong, st.residAbs)
           }
         }

@@ -33,12 +33,11 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * recomputes in SQL — the inter-frame-ness is inside the hash gate,
   * not just the spec.
   *
-  * The container is [[Avi.buildContainer]] (one copy of the RIFF
-  * structure for both codecs) with handler 'MRLE', biCompression 1,
-  * 8-bit pixels through an identity gray palette, and keyframe flags
-  * only on key ordinals; the walk back is [[Avi.readPayload]], with
-  * the strf BITMAPINFOHEADER validated (dimensions, bit depth,
-  * BI_RLE8) before any frame decodes.
+  * The container is [[Avi.buildVideo]] with handler 'MRLE',
+  * biCompression 1, 8-bit pixels through an identity gray palette,
+  * and keyframe flags only on key ordinals; the walk back is
+  * [[Avi.readVideo]], with the strf BITMAPINFOHEADER checked
+  * (dimensions, bit depth, BI_RLE8) before any frame decodes.
   *
   * 100 TB shape: encode and decode are pure JVM byte work (no ImageIO
   * plugin at all) inside the mapPartitions batch boundary; blob bytes
@@ -50,17 +49,10 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   */
 object Rle {
 
-  import Gif.{FrameW, FrameH, FramePx, SampleStride}
+  import Gif.{FrameW, FrameH, FramePx, SampleStride, frameCount, framePixels}
 
   /** Keyframe cadence: frame ordinals ≡ 0 (mod 8) are fully coded. */
   val KeyInterval = 8
-
-  /** The shared frame rule: frame f's pixel p = text byte 64f+p. */
-  private def framePixels(bytes: Array[Byte], f: Int): Array[Int] =
-    Array.tabulate(FramePx) { p =>
-      val k = f * FramePx + p
-      if (k < bytes.length) bytes(k) & 0xff else 0
-    }
 
   /** Encode one KEYFRAME: every pixel emitted exactly once as encoded
     * runs (maximal equal-value runs per row), rows bottom-up, EOL
@@ -149,21 +141,19 @@ object Rle {
   }
 
   /** Build a real BI_RLE8 AVI from `text`: keyframes every
-    * [[KeyInterval]] frames, delta frames between, through the shared
-    * [[Avi.buildContainer]] RIFF structure (handler 'MRLE',
-    * biCompression 1, gray palette, keyframe idx1 flags on key
-    * ordinals only).
+    * [[KeyInterval]] frames (the only idx1-flagged ordinals), delta
+    * frames between.
     */
   def synth(text: String): Array[Byte] =
-    Avi.buildContainer(encodeStream(checkedBytes(text)), handler = "MRLE",
-      compression = BiRle8, bitCount = 8, palette = GrayPalette,
-      isKey = _ % KeyInterval == 0)
+    Avi.buildVideo(encodeStream(checkedBytes(text)), Format, isKey = _ % KeyInterval == 0)
 
   private[multimodal] val BiRle8: Array[Byte] = {
     // biCompression = 1 (BI_RLE8), little-endian int
     val b = java.nio.ByteBuffer.allocate(4).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     b.putInt(1); b.array()
   }
+
+  private[multimodal] val Format = Avi.VideoFormat("MRLE", BiRle8)
 
   private[multimodal] def checkedBytes(text: String): Array[Byte] = {
     require(text.forall(_ < 0x80),
@@ -177,9 +167,8 @@ object Rle {
     * shared by the single-stream [[synth]] and the interleaved
     * audio+video container ([[Demux]]). */
   private[multimodal] def encodeStream(bytes: Array[Byte]): IndexedSeq[Array[Byte]] = {
-    val nFrames = (bytes.length + FramePx - 1) / FramePx
     var prev: Array[Int] = null
-    IndexedSeq.tabulate(nFrames) { f =>
+    IndexedSeq.tabulate(frameCount(bytes.length)) { f =>
       val cur = framePixels(bytes, f)
       val enc = if (f % KeyInterval == 0) encodeKey(cur) else encodeDelta(prev, cur)
       prev = cur
@@ -240,49 +229,23 @@ object Rle {
     written
   }
 
-  /** Decode EVERY frame (temporal dependency: a P-frame needs its
-    * predecessors) through ONE persistent canvas, returning each
-    * frame's full image-space canvas snapshot and the decoder's
-    * actual opcode-written pixel count — the REAL count from applying
+  /** The start-frame rule, in sequence and when seeking alike: the
+    * frame a decode starts from must cover the whole canvas. */
+  private val step: Avi.Step[Int] =
+    (canvas, data, f, start) => applyFrame(canvas, data, isFirst = f == start)
+
+  /** Sequential decode of an already-validated frame sequence: each
+    * frame's image-space canvas snapshot and the decoder's actual
+    * opcode-written pixel count — the REAL count from applying
     * opcodes, never derived from canvas diffs (deriving it would make
     * the n_px_written hash gate tautological).
     */
-  /** Walk + validate the stream format (BITMAPINFOHEADER dimensions,
-    * bit depth, BI_RLE8) BEFORE touching any frame bytes — one copy
-    * for the sequential and the seeking decode paths.
-    */
-  private[multimodal] def readValidated(avi: Array[Byte]): Avi.AviPayload = {
-    val pl = Avi.readPayload(avi)
-    validateStrf(pl)
-    pl
-  }
-
-  /** strf BITMAPINFOHEADER checks alone, for callers that already
-    * hold a walked payload (the [[Demux]] path). */
-  private[multimodal] def validateStrf(pl: Avi.AviPayload): Unit = {
-    require(pl.strf.length >= 40, "missing or truncated strf BITMAPINFOHEADER")
-    val h = java.nio.ByteBuffer.wrap(pl.strf).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val biSize = h.getInt; val w = h.getInt; val ht = h.getInt
-    h.getShort // planes
-    val bits = h.getShort.toInt; val comp = h.getInt
-    require(biSize == 40, s"unexpected BITMAPINFOHEADER size $biSize")
-    require(w == FrameW && ht == FrameH, s"unexpected dimensions ${w}x$ht")
-    require(bits == 8, s"BI_RLE8 requires 8-bit pixels, strf declares $bits")
-    require(comp == 1, s"biCompression $comp is not BI_RLE8 (1)")
-  }
+  private[multimodal] def decodeFrames(
+      frames: IndexedSeq[Array[Byte]]): IndexedSeq[(Array[Int], Int)] =
+    Avi.decodeSequential(frames)(step)
 
   private[multimodal] def decodeAllCounted(avi: Array[Byte]): IndexedSeq[(Array[Int], Int)] =
-    decodeFrames(readValidated(avi).frames)
-
-  /** Sequential decode of an already-validated frame sequence. */
-  private[multimodal] def decodeFrames(
-      frames: IndexedSeq[Array[Byte]]): IndexedSeq[(Array[Int], Int)] = {
-    val canvas = new Array[Int](FramePx)
-    frames.zipWithIndex.map { case (data, f) =>
-      val written = applyFrame(canvas, data, isFirst = f == 0)
-      (canvas.clone(), written)
-    }
-  }
+    decodeFrames(Avi.readVideo(avi, Format).frames)
 
   /** Spec-facing: each frame's decoded image-space pixels. */
   private[multimodal] def decodeAll(avi: Array[Byte]): IndexedSeq[Array[Int]] =
@@ -320,38 +283,13 @@ object Rle {
     }
   }
 
-  /** KEYFRAME-SEEK decode — the reason keyframes exist: to decode
-    * frame `target`, read the idx1 INDEX for the nearest flagged
-    * keyframe at or before it and decode forward from THERE on a
-    * fresh canvas, never touching the frames before the keyframe
-    * (decode cost per target is bounded by [[KeyInterval]], not by
-    * stream position — at corpus scale, sampling the tail of an
-    * hour-long stream must not cost an hour of decode). The keyframe
-    * is verified to fully cover the canvas (a delta frame falsely
-    * flagged as a keyframe in idx1 fails loudly — an index that lies
-    * must not silently produce garbage pixels). Returns the decoded
-    * frame and how many frames were actually decoded.
+  /** [[Avi.decodeSeek]] on this codec: the keyframe is verified to
+    * fully cover the canvas exactly like a stream-initial frame, so a
+    * delta frame falsely flagged as a keyframe in idx1 fails loudly.
+    * Returns the decoded frame and how many frames were decoded.
     */
-  private[multimodal] def decodeSeek(avi: Array[Byte], target: Int): (Array[Int], Int) = {
-    val pl = readValidated(avi)
-    require(target >= 0 && target < pl.frames.length,
-      s"seek target $target outside 0..${pl.frames.length - 1}")
-    require(pl.keyFlags.length == pl.frames.length,
-      s"idx1 carries ${pl.keyFlags.length} entries for ${pl.frames.length} " +
-        "frames — a seeking decoder needs the full index")
-    val key = (target to 0 by -1).find(pl.keyFlags(_)).getOrElse(
-      throw new IllegalArgumentException(
-        s"no keyframe at or before frame $target in idx1"))
-    val canvas = new Array[Int](FramePx)
-    var f = key
-    while (f <= target) {
-      // the keyframe must self-contain: full canvas coverage, checked
-      // exactly like a stream-initial frame
-      applyFrame(canvas, pl.frames(f), isFirst = f == key)
-      f += 1
-    }
-    (canvas, target - key + 1)
-  }
+  private[multimodal] def decodeSeek(avi: Array[Byte], target: Int): (Array[Int], Int) =
+    Avi.decodeSeek(Avi.readVideo(avi, Format), target)(step)
 
   /** One output row per SAMPLED frame. */
   case class RleRow(doc_id: Long, frame_idx: Long, n_frames: Long,
@@ -371,15 +309,11 @@ object Rle {
     */
   def seekLast(spark: SparkSession, docs: DataFrame): Dataset[SeekRow] = {
     import spark.implicits._
-    docs.selectExpr("cast(doc_id as long) doc_id", "text").as[(Long, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, text) =>
-          val nf = (text.length + FramePx - 1) / FramePx
-          val (cv, dec) = decodeSeek(synth(text), nf - 1)
-          val (sum, mx, r0) = canvasStats(cv)
-          SeekRow(id, nf.toLong, (nf - 1).toLong, dec.toLong, sum, mx.toLong, r0)
-        }
-      }
+    Avi.seekLast(spark, docs, frameCount)((text, t) => decodeSeek(synth(text), t)) {
+      (id, nf, dec, cv) =>
+        val (sum, mx, r0) = canvasStats(cv)
+        SeekRow(id, nf.toLong, (nf - 1).toLong, dec.toLong, sum, mx.toLong, r0)
+    }
   }
 
   /** End-to-end pipeline over a (doc_id, text) frame: synthesize →

@@ -34,9 +34,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * Frames are intra (all idx1-key-flagged) — transform coding is
   * orthogonal to the temporal axis ([[Rle]] owns run-length deltas,
   * [[Mc]] motion compensation); the container is the SHARED
-  * [[Avi.buildContainer]] path with fourcc GWT1. Remaining media
-  * stub after this: only entropy coding and the closed-loop
-  * lossy-reference integration (the full H.264 assembly).
+  * [[Avi.buildVideo]] path with fourcc GWT1. The transform, quantizer,
+  * inverse and Rice code below are the one copy [[Gop]] also calls.
   *
   * 100 TB shape: pure JVM integer byte work inside the mapPartitions
   * batch boundary, fixed 128-byte frame payloads, one slim row per
@@ -44,7 +43,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   */
 object Xf {
 
-  import Gif.{FrameW, FrameH, FramePx, SampleStride}
+  import Gif.{FramePx, SampleStride, frameCount, framePixels}
 
   /** Registered quantization step (the lossy operating point). */
   val Quant = 8
@@ -55,62 +54,50 @@ object Xf {
     * (|c| ≤ 4·255 = 1020 < 2048). */
   private val Bias = 2048
 
-  /** The intra family's shared frame rule: frame f pixel p = text
-    * byte 64f+p (the Gif/Avi/Rle rule — no scroll, no overlay). */
-  private def framePixels(bytes: Array[Byte], f: Int): Array[Int] =
-    Array.tabulate(FramePx) { p =>
-      val k = f * FramePx + p
-      if (k < bytes.length) bytes(k) & 0xff else 0
-    }
-
   /** Forward 4-point WHT of one block (H symmetric, H·H = 4I). */
   private[multimodal] def fwd(x0: Int, x1: Int, x2: Int, x3: Int): Array[Int] =
     Array(x0 + x1 + x2 + x3, x0 - x1 + x2 - x3, x0 + x1 - x2 - x3, x0 - x1 - x2 + x3)
 
+  /** Quantize one coefficient: biased non-negative rounded division
+    * (dividend ≥ 1028 > 0, so truncating and flooring agree). */
+  private[multimodal] def quantize(c: Int, q: Int): Int = (c + Bias + q / 2) / q
+
+  private[multimodal] def dequantize(tq: Int, q: Int): Int = tq * q - Bias
+
+  /** Inverse WHT of one block of dequantized coefficients, unclamped:
+    * x = (H·c)/4 with the biased rounded division, the dividend kept
+    * non-negative (s + 16386 > 0 for every reachable s). */
+  private[multimodal] def inverse(c: Array[Int]): Array[Int] =
+    fwd(c(0), c(1), c(2), c(3)).map(s => (s + 8 * Bias + 2) / 4 - 2 * Bias)
+
+  private[multimodal] def clamp(v: Int): Int = math.max(0, math.min(255, v))
+
+  /** Transform + quantize every block of a frame: 64 coefficients. */
+  private def quantizeFrame(cur: Array[Int], q: Int): Array[Int] =
+    cur.grouped(BlockW).flatMap(b => fwd(b(0), b(1), b(2), b(3)).map(quantize(_, q))).toArray
+
+  /** Dequantize + inverse-transform + clamp every block of a frame. */
+  private def reconstruct(tq: Array[Int], q: Int): Array[Int] =
+    tq.grouped(BlockW).flatMap(b => inverse(b.map(dequantize(_, q))).map(clamp)).toArray
+
   /** Encode one frame: 16 blocks × 4 quantized coefficients, int16 LE. */
   private def encodeFrame(cur: Array[Int], q: Int): Array[Byte] = {
     val b = ByteBuffer.allocate(NBlocks * BlockW * 2).order(ByteOrder.LITTLE_ENDIAN)
-    var blk = 0
-    while (blk < NBlocks) {
-      val off = BlockW * blk
-      val c = fwd(cur(off), cur(off + 1), cur(off + 2), cur(off + 3))
-      var k = 0
-      while (k < BlockW) {
-        b.putShort(((c(k) + Bias + q / 2) / q).toShort) // dividend ≥ 1028 > 0
-        k += 1
-      }
-      blk += 1
-    }
+    quantizeFrame(cur, q).foreach(t => b.putShort(t.toShort))
     b.array()
   }
 
-  private[multimodal] def encodeStream(bytes: Array[Byte], q: Int): IndexedSeq[Array[Byte]] = {
-    val nFrames = (bytes.length + FramePx - 1) / FramePx
-    IndexedSeq.tabulate(nFrames)(f => encodeFrame(framePixels(bytes, f), q))
-  }
+  private[multimodal] def encodeStream(bytes: Array[Byte], q: Int): IndexedSeq[Array[Byte]] =
+    IndexedSeq.tabulate(frameCount(bytes.length))(f => encodeFrame(framePixels(bytes, f), q))
 
   /** biCompression fourcc for this codec's strf. */
   private[multimodal] val XfComp: Array[Byte] = "GWT1".getBytes("US-ASCII")
 
+  private[multimodal] val Format = Avi.VideoFormat("GWT1", XfComp)
+
   /** Build a real GWT1 AVI from `text` (all frames intra/key). */
   def synth(text: String, q: Int = Quant): Array[Byte] =
-    Avi.buildContainer(encodeStream(Rle.checkedBytes(text), q), handler = "GWT1",
-      compression = XfComp, bitCount = 8, palette = Rle.GrayPalette,
-      isKey = _ => true)
-
-  private[multimodal] def validateStrf(pl: Avi.AviPayload): Unit = {
-    require(pl.strf.length >= 40, "missing or truncated strf BITMAPINFOHEADER")
-    val h = ByteBuffer.wrap(pl.strf).order(ByteOrder.LITTLE_ENDIAN)
-    val biSize = h.getInt; val w = h.getInt; val ht = h.getInt
-    h.getShort
-    val bits = h.getShort.toInt
-    val comp = new Array[Byte](4); h.get(comp)
-    require(biSize == 40, s"unexpected BITMAPINFOHEADER size $biSize")
-    require(w == FrameW && ht == FrameH, s"unexpected dimensions ${w}x$ht")
-    require(bits == 8, s"GWT1 requires 8-bit pixels, strf declares $bits")
-    require(java.util.Arrays.equals(comp, XfComp),
-      s"biCompression ${new String(comp, "US-ASCII")} is not GWT1")
-  }
+    Avi.buildVideo(encodeStream(Rle.checkedBytes(text), q), Format, isKey = _ => true)
 
   /** One decoded frame's telemetry: reconstructed pixels + the rate
     * half of the gate (nonzero quantized AC coefficients). */
@@ -124,36 +111,13 @@ object Xf {
     require(data.length == NBlocks * BlockW * 2,
       s"GWT1 frame payload is ${data.length} bytes, expected ${NBlocks * BlockW * 2}")
     val in = ByteBuffer.wrap(data).order(ByteOrder.LITTLE_ENDIAN)
-    val out = new Array[Int](FramePx)
-    var nNz = 0
-    var blk = 0
-    while (blk < NBlocks) {
-      val c = new Array[Int](BlockW)
-      var k = 0
-      while (k < BlockW) {
-        c(k) = in.getShort.toInt * q - Bias // dequantize
-        if (k > 0 && c(k) != 0) nNz += 1
-        k += 1
-      }
-      // inverse: x = (H·c)/4, biased so the dividend stays non-negative
-      val s = fwd(c(0), c(1), c(2), c(3))
-      val off = BlockW * blk
-      var j = 0
-      while (j < BlockW) {
-        val v = (s(j) + 4 * Bias * 2 + 2) / 4 - 2 * Bias // s ≥ −4·(Bias+…) ⇒ dividend > 0
-        out(off + j) = math.max(0, math.min(255, v))
-        j += 1
-      }
-      blk += 1
-    }
-    XfFrame(out, nNz)
+    val tq = Array.fill(NBlocks * BlockW)(in.getShort.toInt)
+    val nNz = tq.indices.count(i => i % BlockW > 0 && dequantize(tq(i), q) != 0)
+    XfFrame(reconstruct(tq, q), nNz)
   }
 
-  private[multimodal] def decodeAll(avi: Array[Byte], q: Int = Quant): IndexedSeq[XfFrame] = {
-    val pl = Avi.readPayload(avi)
-    validateStrf(pl)
-    pl.frames.map(decodeFrame(_, q))
-  }
+  private[multimodal] def decodeAll(avi: Array[Byte], q: Int = Quant): IndexedSeq[XfFrame] =
+    Avi.readVideo(avi, Format).frames.map(decodeFrame(_, q))
 
   // ------------------------------------------------------------------
   // ENTROPY CODING — Rice/Golomb over the quantized coefficients (the
@@ -172,9 +136,12 @@ object Xf {
   /** Rice parameter (fixed — adaptive k is the JPEG-LS refinement). */
   val RiceK = 3
 
-  /** Center: the quantized value of an all-zero coefficient block
-    * ((0 + Bias + Q/2) DIV Q for the registered [[Quant]]). */
-  val RiceCenter: Int = (Bias + Quant / 2) / Quant // 256
+  /** Rice centering: the quantized value of a zero coefficient. */
+  def riceCenter(q: Int): Int = quantize(0, q)
+
+  /** Center at the registered [[Quant]] — the one this arm codes with
+    * at every q. */
+  val RiceCenter: Int = riceCenter(Quant) // 256
 
   private[multimodal] final class BitWriter {
     private val buf = new scala.collection.mutable.ArrayBuffer[Byte]()
@@ -188,6 +155,13 @@ object Xf {
     def putN(value: Int, n: Int): Unit = {
       var i = n - 1
       while (i >= 0) { put((value >> i) & 1); i -= 1 }
+    }
+    /** One Rice code: unary(v >> k), terminator, k raw low bits. */
+    def putRice(v: Int): Unit = {
+      var u = v >> RiceK
+      while (u > 0) { put(1); u -= 1 }
+      put(0)
+      putN(v & ((1 << RiceK) - 1), RiceK)
     }
     def bits: Int = nBits
     def toBytes: Array[Byte] = {
@@ -211,6 +185,11 @@ object Xf {
       while (i < n) { v = (v << 1) | read(); i += 1 }
       v
     }
+    def readRice(): Int = {
+      var u = 0
+      while (read() == 1) u += 1
+      (u << RiceK) | readN(RiceK)
+    }
     def consumed: Int = pos
     def remaining: Int = data.length * 8 - pos
   }
@@ -221,47 +200,21 @@ object Xf {
   /** Rice-encode one frame's 64 quantized coefficients. */
   private def encodeRiceFrame(cur: Array[Int], q: Int): Array[Byte] = {
     val w = new BitWriter
-    var blk = 0
-    while (blk < NBlocks) {
-      val off = BlockW * blk
-      val c = fwd(cur(off), cur(off + 1), cur(off + 2), cur(off + 3))
-      var k = 0
-      while (k < BlockW) {
-        val tq = (c(k) + Bias + q / 2) / q
-        val v = zigzag(tq - RiceCenter)
-        var u = v >> RiceK
-        while (u > 0) { w.put(1); u -= 1 }
-        w.put(0)
-        w.putN(v & ((1 << RiceK) - 1), RiceK)
-        k += 1
-      }
-      blk += 1
-    }
+    quantizeFrame(cur, q).foreach(tq => w.putRice(zigzag(tq - RiceCenter)))
     w.toBytes
   }
 
-  private[multimodal] def encodeRiceStream(bytes: Array[Byte], q: Int): IndexedSeq[Array[Byte]] = {
-    val nFrames = (bytes.length + FramePx - 1) / FramePx
-    IndexedSeq.tabulate(nFrames)(f => encodeRiceFrame(framePixels(bytes, f), q))
-  }
+  private[multimodal] def encodeRiceStream(bytes: Array[Byte], q: Int): IndexedSeq[Array[Byte]] =
+    IndexedSeq.tabulate(frameCount(bytes.length))(f => encodeRiceFrame(framePixels(bytes, f), q))
 
   /** biCompression fourcc for the entropy-coded variant's strf. */
   private[multimodal] val RiceComp: Array[Byte] = "GWR1".getBytes("US-ASCII")
 
+  private[multimodal] val RiceFormat = Avi.VideoFormat("GWR1", RiceComp)
+
   /** Build a real GWR1 AVI from `text` (WHT + quant + Rice, intra). */
   def riceSynth(text: String, q: Int = Quant): Array[Byte] =
-    Avi.buildContainer(encodeRiceStream(Rle.checkedBytes(text), q), handler = "GWR1",
-      compression = RiceComp, bitCount = 8, palette = Rle.GrayPalette,
-      isKey = _ => true)
-
-  private[multimodal] def validateRiceStrf(pl: Avi.AviPayload): Unit = {
-    require(pl.strf.length >= 40, "missing or truncated strf BITMAPINFOHEADER")
-    val h = ByteBuffer.wrap(pl.strf).order(ByteOrder.LITTLE_ENDIAN)
-    h.getInt; h.getInt; h.getInt; h.getShort; h.getShort
-    val comp = new Array[Byte](4); h.get(comp)
-    require(java.util.Arrays.equals(comp, RiceComp),
-      s"biCompression ${new String(comp, "US-ASCII")} is not GWR1")
-  }
+    Avi.buildVideo(encodeRiceStream(Rle.checkedBytes(text), q), RiceFormat, isKey = _ => true)
 
   /** One entropy-decoded frame: pixels + the REAL consumed bit count
     * (before byte-alignment padding) — the rate the oracle recomputes. */
@@ -273,40 +226,16 @@ object Xf {
     */
   private def decodeRiceFrame(data: Array[Byte], q: Int): RiceFrame = {
     val r = new BitReader(data)
-    val out = new Array[Int](FramePx)
-    var blk = 0
-    while (blk < NBlocks) {
-      val c = new Array[Int](BlockW)
-      var k = 0
-      while (k < BlockW) {
-        var u = 0
-        while (r.read() == 1) u += 1
-        val v = (u << RiceK) | r.readN(RiceK)
-        c(k) = (unzigzag(v) + RiceCenter) * q - Bias
-        k += 1
-      }
-      val s = fwd(c(0), c(1), c(2), c(3))
-      val off = BlockW * blk
-      var j = 0
-      while (j < BlockW) {
-        val v = (s(j) + 4 * Bias * 2 + 2) / 4 - 2 * Bias
-        out(off + j) = math.max(0, math.min(255, v))
-        j += 1
-      }
-      blk += 1
-    }
+    val tq = Array.fill(NBlocks * BlockW)(unzigzag(r.readRice()) + RiceCenter)
     val consumed = r.consumed
     require(r.remaining < 8,
       s"${r.remaining} bits after the last code — trailing data in a GWR1 frame")
     while (r.remaining > 0) require(r.read() == 0, "nonzero padding bits")
-    RiceFrame(out, consumed)
+    RiceFrame(reconstruct(tq, q), consumed)
   }
 
-  private[multimodal] def riceDecodeAll(avi: Array[Byte], q: Int = Quant): IndexedSeq[RiceFrame] = {
-    val pl = Avi.readPayload(avi)
-    validateRiceStrf(pl)
-    pl.frames.map(decodeRiceFrame(_, q))
-  }
+  private[multimodal] def riceDecodeAll(avi: Array[Byte], q: Int = Quant): IndexedSeq[RiceFrame] =
+    Avi.readVideo(avi, RiceFormat).frames.map(decodeRiceFrame(_, q))
 
   /** One output row per SAMPLED frame of the entropy-coded variant:
     * reconstruction + the compressed size in bits. */

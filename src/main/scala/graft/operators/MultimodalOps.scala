@@ -257,8 +257,7 @@ object MultimodalOps {
     * segmentation to a genuine container walk — the stream's own
     * frame count, every 3rd frame LZW-decoded through the explicit
     * 256-gray palette (lossless, no quantization caveat), features
-    * from decoded pixels only. The remaining media stub is exactly
-    * H.264-class video.
+    * from decoded pixels only.
     */
   private val GifOracleMaxFrames = 16
 
@@ -283,7 +282,7 @@ object MultimodalOps {
     val ki = graft.multimodal.Gop.KeyInterval
     val q = graft.multimodal.Gop.Quant
     val rk = graft.multimodal.Gop.RiceK
-    val ctr = (2048 + q / 2) / q // Rice centering at the registered Quant
+    val ctr = graft.multimodal.Xf.riceCenter(q) // Rice centering at the registered Quant
     // synth rule: frame g's pixel p under scroll + ticker (the
     // q_mc_frames pix block, with the ≥0 guard for the virtual g−1=−1)
     def pix(pv: String, gv: String): String =
@@ -387,8 +386,7 @@ object MultimodalOps {
     * walk, frame order, or codec bug flips it and diverges the hash.
     * AviSpec pins the quantitative half (per-frame MAE positive
     * somewhere / bounded everywhere at both gate SFs, frame order by
-    * nearest-own-segment, corrupted-frame loud failure). Remaining
-    * media stub: exactly inter-frame (H.264-class) codecs.
+    * nearest-own-segment, corrupted-frame loud failure).
     */
   def aviFrames(spark: SparkSession, dir: String): DataFrame =
     graft.multimodal.Avi.features(spark, boundedBlobs(spark, dir, wide = true, mirror = "avi"))
@@ -410,8 +408,7 @@ object MultimodalOps {
     * decoder's actual opcode-written count — equals 64 on keyframes
     * and the Hamming distance between consecutive frames on delta
     * frames, which the oracle recomputes in SQL: the inter-frame
-    * coding itself is inside the hash gate. Remaining media stub:
-    * transform-coded, motion-compensated (H.264-class) codecs.
+    * coding itself is inside the hash gate.
     */
   def rleFrames(spark: SparkSession, dir: String): DataFrame =
     graft.multimodal.Rle.features(spark, boundedBlobs(spark, dir, wide = false, mirror = "rle"))
@@ -461,8 +458,7 @@ object MultimodalOps {
     * temporal dependency (poison corrupts successors until the next
     * keyframe), idx1 seek parity, decoder generality on hand-crafted
     * exotic vectors, and encoder partiality (P-frames carry only the
-    * uncovered row as literals). Remaining media stub: exactly
-    * transform coding (DCT/quantization).
+    * uncovered row as literals).
     */
   def mcFrames(spark: SparkSession, dir: String): DataFrame =
     graft.multimodal.Mc.features(spark, boundedBlobs(spark, dir, wide = true, mirror = "mc"))
@@ -508,8 +504,7 @@ object MultimodalOps {
     * closed-form SQL. XfSpec pins exact losslessness at Q=1 (the
     * transform is perfectly invertible), the Q=8 per-pixel error
     * bound, energy compaction (flat blocks = zero ACs), and loud
-    * malformed-payload failure. Remaining media stub: entropy coding
-    * + the closed-loop lossy-reference assembly.
+    * malformed-payload failure.
     */
   def whtFrames(spark: SparkSession, dir: String): DataFrame =
     graft.multimodal.Xf.features(spark, boundedBlobs(spark, dir, wide = false, mirror = "wht"))
@@ -529,11 +524,6 @@ object MultimodalOps {
     * unary run and every subsequent coefficient lands on the wrong
     * bit, diverging pixels AND the bit count. Reconstruction and
     * distortion are the q_wht_frames gate (same transform + quant).
-    * With this, every codec INGREDIENT is real — container walk,
-    * intra transform + quantization, entropy coding, run-length
-    * temporal, motion compensation, keyframe seek; only their
-    * closed-loop assembly (the full H.264 integration) stays out of
-    * scope.
     */
   def riceFrames(spark: SparkSession, dir: String): DataFrame =
     graft.multimodal.Xf.riceFeatures(spark, boundedBlobs(spark, dir, wide = false, mirror = "rice"))

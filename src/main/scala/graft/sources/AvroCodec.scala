@@ -154,8 +154,8 @@ object AvroCodec {
     * inside one task.
     */
   def importAvro(spark: SparkSession, path: String): DataFrame = {
-    val bin = spark.read.format("binaryFile").load(s"$path/*.avro")
-      .select("content")
+    val bin = spark.read.format("binaryFile").option("pathGlobFilter", "*.avro")
+      .load(path).select("content")
     val sidecar = Paths.get(path, "_schema.avsc")
     val schemaJson =
       if (Files.exists(sidecar))

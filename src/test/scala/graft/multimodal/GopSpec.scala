@@ -151,7 +151,7 @@ class GopSpec extends AnyFunSuite {
   }
 
   test("keyframe cadence is in the container: idx1 flags exactly frames ≡ 0 mod 8") {
-    val pl = Gop.readValidated(Gop.synth(text))
+    val pl = Avi.readVideo(Gop.synth(text), Gop.Format)
     assert(pl.keyFlags.zipWithIndex.forall { case (k, f) => k == (f % Gop.KeyInterval == 0) })
     assert(pl.frames.length == 22 && pl.headerFrames == 22)
   }

@@ -96,7 +96,7 @@ class McSpec extends AnyFunSuite {
   }
 
   test("temporal dependency: a poisoned reference pixel rides the motion chain and heals at the keyframe") {
-    val pl = Mc.readValidated(Mc.synth(text))
+    val pl = Avi.readVideo(Mc.synth(text), Mc.Format)
     val frames = pl.frames.map(_.clone())
     // poison frame 9's intra bottom row at p = 49 (not an overlay
     // position, and never a residual target on the scroll chain):

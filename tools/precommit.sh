@@ -10,8 +10,10 @@
 # queries (CrossOperatorConsistencySpec, ScaleGuardsSpec,
 # ContainmentSpec), the local file system and upsert sink specs
 # (LocalFsSpec, UpsertSinkSpec), the latest-wins compaction specs
-# (LatestWinsTieBreakSpec, IvmSpec), and the session memo specs
-# (GraftSessionMemoSpec, HierAssignSpec, ConfParitySpec). Use before
+# (LatestWinsTieBreakSpec, IvmSpec), the session memo specs
+# (GraftSessionMemoSpec, HierAssignSpec, ConfParitySpec), and the AVI
+# video codec specs (RleSpec, McSpec, GopSpec, XfSpec, DemuxSpec,
+# CodecPropertiesSpec, VideoCodecContractSpec). Use before
 # END-OF-ROUND snapshots and after touching query plumbing.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -52,6 +54,16 @@ if grep -rnF --include='*.scala' -e 'hashCode()}|' -e 'WeakHashMap[' \
 fi
 echo "PRECOMMIT OK: every session-scoped artifact cache goes through GraftSession.memo."
 
+# Video decode gate: the strf BITMAPINFOHEADER check and the idx1
+# keyframe seek live only in multimodal/Avi.scala (Avi.checkStrf,
+# Avi.decodeSeek), so no other main source may carry their messages.
+if grep -rnF --include='*.scala' -e 'missing or truncated strf' -e 'no keyframe at or before' \
+    src/main/scala/ | grep -v '^src/main/scala/graft/multimodal/Avi\.scala:' >&2; then
+  echo "PRECOMMIT FAIL: video container check above bypasses the shared path in Avi.scala — route it through Avi.readVideo/Avi.decodeSeek." >&2
+  exit 1
+fi
+echo "PRECOMMIT OK: every AVI video codec goes through the shared strf check and idx1 seek in Avi.scala."
+
 # Bench gate (round-12 lesson: q_winnow_dedup reached the registry
 # without ever being benched and shipped a 615 s plan): every
 # registered query must have a per-query entry in bench_queries.json —
@@ -91,11 +103,11 @@ echo "PRECOMMIT OK: every registered query has a bench entry."
 #      that only min-of-2 absorbed). If any per-query p2/p1 ratio
 #      exceeds 3x, run a third pass for the record.
 if [[ "${PRECOMMIT_SMOKE:-0}" == "1" ]]; then
-  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec graft.LocalFsSpec graft.UpsertSinkSpec graft.operators.LatestWinsTieBreakSpec graft.operators.IvmSpec graft.GraftSessionMemoSpec graft.operators.HierAssignSpec graft.ConfParitySpec" \
+  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec graft.LocalFsSpec graft.UpsertSinkSpec graft.operators.LatestWinsTieBreakSpec graft.operators.IvmSpec graft.GraftSessionMemoSpec graft.operators.HierAssignSpec graft.ConfParitySpec graft.multimodal.RleSpec graft.multimodal.McSpec graft.multimodal.GopSpec graft.multimodal.XfSpec graft.multimodal.DemuxSpec graft.multimodal.CodecPropertiesSpec graft.multimodal.VideoCodecContractSpec" \
       >/tmp/precommit_smoke.log 2>&1 || {
     echo "PRECOMMIT FAIL: smoke specs broken — do not commit." >&2
     tail -n 40 /tmp/precommit_smoke.log >&2
     exit 1
   }
-  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine, local file system, upsert sink, latest-wins and session memo specs green."
+  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine, local file system, upsert sink, latest-wins, session memo and video codec specs green."
 fi
