@@ -12,20 +12,27 @@ package object operators {
     * (`ts_ns`, `event_id`), compacted rows (`last_ts_ns`,
     * `last_event_id`). One keyed window; the caller applies its own
     * tombstone filter and projection. Every batch compactor and both
-    * sinks' in-batch guards go through here, and the streaming state
-    * folds through [[isNewer]], so stream and batch cannot drift.
+    * sinks go through here, and the streaming state folds through
+    * [[isNewer]], so stream and batch cannot drift. `first` sorts
+    * ahead of the rule: the upsert sink's merge passes its
+    * batch-before-store tag, so a batch row outranks a stored row
+    * whatever their (`ts`, `seq`).
     */
-  private[graft] def newestPerKey(df: DataFrame, keys: Seq[String], ts: String, seq: String)
-      : DataFrame =
-    df.withColumn("_rn", row_number().over(latestFirst(keys, ts, seq)))
-      .filter(col("_rn") === 1).drop("_rn")
+  private[graft] def newestPerKey(df: DataFrame, keys: Seq[String], ts: String, seq: String,
+      first: Column*): DataFrame =
+    firstPerKey(df, latestFirst(keys, ts, seq, first: _*))
 
-  /** [[newestPerKey]]'s window: per `keys`, newest (`ts`, `seq`) first.
-    * Another window over the same rows shares its sort when it uses
-    * this spec (with its own frame).
+  /** [[newestPerKey]]'s window: per `keys`, the `first` columns, then
+    * newest (`ts`, `seq`) first. Another window over the same rows
+    * shares its sort when it uses this spec (with its own frame).
     */
-  private[graft] def latestFirst(keys: Seq[String], ts: String, seq: String): WindowSpec =
-    Window.partitionBy(keys.map(col): _*).orderBy(col(ts).desc, col(seq).desc)
+  private[graft] def latestFirst(keys: Seq[String], ts: String, seq: String, first: Column*)
+      : WindowSpec =
+    Window.partitionBy(keys.map(col): _*).orderBy(first ++ Seq(col(ts).desc, col(seq).desc): _*)
+
+  /** The first row of each partition of `w` (a `row_number` of 1). */
+  private[graft] def firstPerKey(df: DataFrame, w: WindowSpec): DataFrame =
+    df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
 
   /** [[newestPerKey]]'s rule as a row predicate for the streaming
     * state folds: does the change at (`ts`, `seq`) replace the state

@@ -4,10 +4,11 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
-import graft.operators.newestPerKey
+import graft.operators.{firstPerKey, newestPerKey}
 
 /** §2.F lib — the SINK side of the CDC connector story: an
   * exactly-once upsert/delete serving store driven by
@@ -33,12 +34,17 @@ import graft.operators.newestPerKey
   * formats like the Delta/Iceberg logs generalize), built from nothing
   * but parquet + an atomically renamed marker file.
   *
-  * The merge is ONE keyed left_anti join of the current snapshot
-  * against the batch's touched keys plus a union of the batch's
-  * upserts — O(|store| + |batch|) per data batch, and a wide one: the
-  * pinned batch has no size statistics, so the join is a SortMergeJoin
-  * that shuffles the whole store. Tombstones apply as row REMOVAL, so
-  * the store tracks the live key set.
+  * The merge is ONE keyed pass over `store ∪ batch`: the batch rows
+  * are tagged to outrank the stored rows, one exchange on the key
+  * feeds one `row_number` window, and the first row per key survives
+  * unless it is a tombstone — O(|store| + |batch|) per data batch, the
+  * store shuffled once. For each key the batch touches, the batch's
+  * row replaces the stored one even when its (ts, seq) is older or
+  * equal (`compactState` re-emits a late change's key with the same
+  * (ts, seq) and a bumped `n_changes`); untouched keys keep their
+  * row. AQE coalesces the exchange, so a small store is written as
+  * few files. Tombstones apply as row REMOVAL, so the store tracks
+  * the live key set.
   */
 object UpsertSink {
 
@@ -86,40 +92,57 @@ object UpsertSink {
     * UpsertSink.applyBatch(spark, storeDir) _)`.
     */
   def applyBatch(spark: SparkSession, storeDir: String)(batch: DataFrame, batchId: Long): Unit =
-    // defensive in-batch compaction — compactState emits one row per
-    // key per batch, but the sink must not corrupt the store if fed a
-    // raw multi-row feed
-    applyKeyedBatch(spark, storeDir, Seq("user_id"))(
-      newestPerKey(batch, Seq("user_id"), "last_ts_ns", "last_event_id"), batchId)
+    // defensive in-batch compaction in the same window — compactState
+    // emits one row per key per batch, but the sink must not corrupt
+    // the store if fed a raw multi-row feed
+    upsert(spark, storeDir, batch, batchId)(
+      newestPerKey(_, Seq("user_id"), "last_ts_ns", "last_event_id", col(FromStore)))
 
   /** [[applyBatch]] generalized to an arbitrary key-column set — the
     * two-table snapshot store ([[TxnSnapshotStream]]) is keyed on
     * (user_id, child line) rather than user_id alone. Same snapshot-
     * versioned commit protocol, same idempotent replay; the caller's
     * stateful operator must emit AT MOST ONE row per key per batch
-    * (flatMapGroupsWithState does by construction), so no defensive
-    * in-batch window is applied. Key columns must be non-null (a NULL
-    * key would silently survive the anti-join — encode absent key
-    * parts, e.g. `coalesce(child_type, '∅')`).
+    * (flatMapGroupsWithState does by construction), so the merge
+    * orders by the batch-over-store tag alone. Key columns must be
+    * non-null: the window groups every NULL key as one key, so a
+    * NULL-key row would replace another key's row — encode absent key
+    * parts, e.g. `coalesce(child_type, '∅')`.
     */
   def applyKeyedBatch(spark: SparkSession, storeDir: String, keys: Seq[String])(
-      batch: DataFrame, batchId: Long): Unit = {
+      batch: DataFrame, batchId: Long): Unit =
+    upsert(spark, storeDir, batch, batchId)(
+      firstPerKey(_, Window.partitionBy(keys.map(col): _*).orderBy(col(FromStore))))
+
+  /** The merge's tag: 0 on batch rows, 1 on stored rows, so ascending it puts the batch first. */
+  private val FromStore = "_from_store"
+
+  /** The pin, merge and commit both entry points share. `keepFirst`
+    * keeps one row per key of the tagged `store ∪ batch` (a stored row
+    * carries `deleted = false`); the kept tombstones are then dropped.
+    * A batch column the store lacks is dropped: the store keeps its
+    * schema.
+    */
+  private def upsert(spark: SparkSession, storeDir: String, batch: DataFrame, batchId: Long)(
+      keepFirst: DataFrame => DataFrame): Unit = {
     val fs = fileSystem(spark, storeDir)
     if (fs.exists(commitPath(storeDir, batchId))) return // replayed batch: already applied
-    // pin: the rewrite must not re-pull the stream batch; its job counts the rows.
-    // Local on purpose: replay from checkpointLocation recovers a lost batch, and
-    // a reliable pin (operators.materialize) would write every micro-batch to disk.
+    // pin the raw batch, before any window: the rewrite must not re-pull the
+    // stream batch; its job counts the rows. Local on purpose: replay from
+    // checkpointLocation recovers a lost batch, and a reliable pin
+    // (operators.materialize) would write every micro-batch to disk.
     val rows = new Observation()
     val b = batch.observe(rows, count(lit(1)).as("n")).localCheckpoint()
     val prev = lastCommit(spark, storeDir, before = batchId)
     val commit = prev match {
       case Some(c) if rows.get("n") == 0L => c // empty batch: point at the previous snapshot
       case _ =>
-        val upserts = b.filter(!col("deleted")).drop("deleted")
-        val next = prev.map(snapshot(spark, storeDir, _)).fold(upserts) { old =>
-          old.join(b.select(keys.map(col): _*), keys, "left_anti")
-            .unionByName(upserts.select(old.columns.map(col): _*))
+        val tagged = b.withColumn(FromStore, lit(0))
+        val merged = prev.map(snapshot(spark, storeDir, _)).fold(tagged) { old =>
+          val stored = old.withColumn("deleted", lit(false)).withColumn(FromStore, lit(1))
+          stored.union(tagged.select(stored.columns.map(col): _*))
         }
+        val next = keepFirst(merged).filter(!col("deleted")).drop("deleted", FromStore)
         next.write.mode("overwrite").parquet(s"$storeDir/v$batchId")
         Commit(batchId, next.schema)
     }

@@ -1,16 +1,13 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec}
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark.planNodes
 
 /** Plan-shape regression guards: the properties `.explain` reviews
   * manually, pinned in CI. A pass that silently loses column pruning,
@@ -21,47 +18,27 @@ class PlanGuardsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = TestSpark.Sf
 
-  private def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => a +: walk(a.executedPlan)
-    case q: QueryStageExec => q +: walk(q.plan)
-    case r: ReusedExchangeExec => r +: walk(r.child)
-    case other => other +: other.children.flatMap(walk)
-  }
-
   private def nodes(df: DataFrame): Seq[SparkPlan] =
-    walk(df.queryExecution.executedPlan)
+    planNodes(df.queryExecution.executedPlan)
 
   /** Builds `build` and returns it with the executed plans of every
     * `localCheckpoint`/`checkpoint` execution that building it ran.
     * `operators.materialize` pins eagerly: the pinned lineage runs as
     * its own execution while the query is built, and the query's
-    * `executedPlan` only scans the pinned rows. Listener delivery is
-    * asynchronous, so a fence action, recognised by its
-    * QueryExecution, closes the capture.
+    * `executedPlan` only scans the pinned rows.
     */
   private def withPinnedPlans(build: => DataFrame): (DataFrame, Seq[SparkPlan]) = {
-    val pins = new ConcurrentLinkedQueue[SparkPlan]
-    val fence = spark.range(1).toDF()
-    val fenced = new CountDownLatch(1)
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe eq fence.queryExecution) fenced.countDown()
-        else if (funcName == "localCheckpoint" || funcName == "checkpoint") pins.add(qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    var df: DataFrame = null
+    val pins = TestSpark.executedPlans { df = build }.collect {
+      case (f, p) if f == "localCheckpoint" || f == "checkpoint" => p
     }
-    spark.listenerManager.register(listener)
-    try {
-      val df = build
-      fence.collect()
-      assert(fenced.await(60, TimeUnit.SECONDS), "listener bus never delivered the fence action")
-      (df, pins.asScala.toSeq)
-    } finally spark.listenerManager.unregister(listener)
+    (df, pins)
   }
 
   /** `nodes` of the built query plus the nodes of every pin it ran. */
   private def queryNodes(build: => DataFrame): Seq[SparkPlan] = {
     val (df, pins) = withPinnedPlans(build)
-    nodes(df) ++ pins.flatMap(walk)
+    nodes(df) ++ pins.flatMap(planNodes)
   }
 
   test("q1_agg scan is column-pruned to the referenced lineitem columns") {
@@ -127,7 +104,7 @@ class PlanGuardsSpec extends AnyFunSuite {
     // crossJoin's condition — either way it must sit in the semi
     // join's LEFT (probe) subtree
     val bloomBelow = semis.exists(j =>
-      walk(j.children.head).exists { p =>
+      planNodes(j.children.head).exists { p =>
         val self = p.simpleString(10000)
         self.contains("xxhash64") && self.contains("forall")
       })

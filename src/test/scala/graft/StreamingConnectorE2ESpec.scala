@@ -82,15 +82,28 @@ class StreamingConnectorE2ESpec extends AnyFunSuite {
     // listener events are delivered asynchronously: wait on the
     // POSITIVE signal that the guard audited every line fed to the
     // main leg before the negative assertion — a fixed sleep would
-    // let an over-eager-guard regression slip through on a slow host
+    // let an over-eager-guard regression slip through on a slow host.
+    // First the query's own progress (recorded before any event is
+    // posted, so no listener bus in between), then the guard: a
+    // failure names the stage that fell short
     val fedToMainLeg = lines.length + corrupt.length
+    def observedPerBatch = mainQ.recentProgress.toSeq.flatMap(p =>
+      Option(p.observedMetrics.get(CdcEnvelope.GuardMetric)).map(m =>
+        (p.batchId, m.getAs[Long]("total"), m.getAs[Long]("dead")))).distinctBy(_._1)
+    def observed = observedPerBatch.map(_._2).sum
+    def perBatch = observedPerBatch.mkString("(batchId, total, dead) per batch: ", ", ", "")
     locally {
       val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+      while (observed < fedToMainLeg && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(observed >= fedToMainLeg,
+        s"the main query's own progress observed $observed of $fedToMainLeg fed records — " +
+          s"the observe under-counted before any listener ran; $perBatch")
       while (guard.recordsAudited < fedToMainLeg && System.nanoTime() < deadline)
         Thread.sleep(20)
       assert(guard.recordsAudited >= fedToMainLeg,
         s"guard audited ${guard.recordsAudited} of $fedToMainLeg fed records — " +
-          "progress events never fully delivered")
+          s"progress events never fully delivered; the query's own $perBatch")
     }
     mainQ.stop(); deadQ.stop()
     spark.streams.removeListener(guard)

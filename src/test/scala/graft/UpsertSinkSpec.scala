@@ -2,14 +2,19 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.newestPerKey
 import graft.streaming.{CdcStream, UpsertSink}
 import graft.streaming.CdcStream.Change
-import graft.TestSpark.jobsStartedBy
+import graft.TestSpark.{executedPlans, jobsStartedBy, planNodes}
 
 /** The serving store behind foreachBatch must be exactly-once under
   * the at-least-once replay contract: applying upserts and tombstones
@@ -204,5 +209,126 @@ class UpsertSinkSpec extends AnyFunSuite {
     assert(UpsertSink.committedBatches(spark, store) === Seq(2L, 3L))
     assert(snapshotDirs(store) === Seq("v1"))
     assert(storeMap(store) === live)
+  }
+
+  // ---- differential: the one-pass merge against the merge it replaced
+
+  /** The merge as the sink wrote it before its one-pass rewrite: the
+    * store left_anti-joined against the batch's keys, plus a union of
+    * the batch's upserts. `batch` must hold at most one row per key.
+    */
+  private def antiJoinMerge(old: DataFrame, batch: DataFrame, keys: Seq[String]): DataFrame =
+    old.join(batch.select(keys.map(col): _*), keys, "left_anti")
+      .unionByName(batch.filter(!col("deleted")).drop("deleted").select(old.columns.toSeq.map(col): _*))
+
+  /** Every row, columns in name order, sorted: duplicates and column order cannot hide. */
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.toSeq.map(col): _*).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+
+  /** The rows `apply` leaves after `batch` in a store that holds `base`,
+    * and the rows the anti-join merge of `reference` leaves there.
+    */
+  private def mergedVsReference(keys: Seq[String], base: DataFrame, batch: DataFrame,
+      reference: DataFrame)(apply: (String, DataFrame, Long) => Unit): (Seq[String], Seq[String]) = {
+    val store = newStore()
+    apply(store, base, 0L)
+    val old = UpsertSink.read(spark, store).get
+    val expected = rowsOf(antiJoinMerge(old, reference, keys))
+    apply(store, batch, 1L)
+    (rowsOf(UpsertSink.read(spark, store).get), expected)
+  }
+
+  test("applyBatch's one keyed pass equals the anti-join-plus-union merge over a non-empty store") {
+    val base = compactedDf((1L to 6L).map(k =>
+      (k, false, k, "c", "signup", k.toDouble, if (k == 1L) 100L else 200L, 1L)))
+    val batch = compactedDf(Seq(
+      // in-batch duplicates with a ts_ns tie: the higher event id wins
+      (1L, false, 10L, "u", "view", 10.0, 300L, 2L),
+      (1L, false, 11L, "u", "click", 11.0, 300L, 3L),
+      (1L, false, 9L, "u", "early", 9.0, 250L, 1L),
+      // older than the stored row: the batch row still replaces it
+      (2L, false, 12L, "u", "late", 12.0, 150L, 2L),
+      // a late-change copy: equal (ts, seq), bumped n_changes — it wins
+      (3L, false, 3L, "c", "signup", 3.0, 200L, 2L),
+      // delete of a stored key
+      (4L, true, 13L, "d", "signup", 4.0, 300L, 2L),
+      // delete, then re-insert, within one batch
+      (5L, true, 14L, "d", "signup", 5.0, 300L, 2L),
+      (5L, false, 15L, "c", "view", 15.0, 310L, 3L),
+      // a new key inserted then deleted, and a new key
+      (7L, false, 16L, "c", "view", 16.0, 300L, 1L),
+      (7L, true, 17L, "d", "view", 16.0, 310L, 2L),
+      (8L, false, 18L, "c", "view", 18.0, 300L, 1L)))
+    // key 6 is untouched
+    val (merged, reference) = mergedVsReference(Seq("user_id"), base, batch,
+      newestPerKey(batch, Seq("user_id"), "last_ts_ns", "last_event_id"))(
+      UpsertSink.applyBatch(spark, _)(_, _))
+    assert(merged === reference)
+    assert(merged.size === 6)
+  }
+
+  test("applyKeyedBatch's one keyed pass equals the anti-join-plus-union merge on a two-column key") {
+    import spark.implicits._
+    def keyed(rows: Seq[(Long, String, Boolean, Long, String, Long, Long)]) =
+      rows.toDF("user_id", "ckey", "deleted", "last_event_id", "last_type", "last_ts_ns", "n_changes")
+    val base = keyed(Seq(
+      (1L, "a", false, 1L, "signup", 200L, 1L),
+      (1L, "b", false, 2L, "signup", 200L, 1L),
+      (2L, "a", false, 3L, "signup", 200L, 1L),
+      (2L, "b", false, 4L, "signup", 200L, 1L),
+      (3L, "a", false, 5L, "signup", 200L, 1L)))
+    val batch = keyed(Seq(
+      // older than the stored row: still replaces it; (1, b) is untouched
+      (1L, "a", false, 6L, "late", 150L, 2L),
+      // equal (ts, seq), bumped n_changes
+      (2L, "a", false, 3L, "signup", 200L, 2L),
+      // delete of a stored key, and of a key the store never held
+      (2L, "b", true, 7L, "signup", 300L, 2L),
+      (4L, "a", true, 8L, "signup", 300L, 1L),
+      // a new key sharing user 3 with the untouched (3, a)
+      (3L, "b", false, 9L, "view", 300L, 1L)))
+    val keys = Seq("user_id", "ckey")
+    val (merged, reference) = mergedVsReference(keys, base, batch, batch)(
+      UpsertSink.applyKeyedBatch(spark, _, keys)(_, _))
+    assert(merged === reference)
+    assert(merged.size === 5)
+  }
+
+  // ---- plan and job guards on the merge
+
+  test("a data batch merges in one exchange: no sort-merge join, no window in the batch's pin") {
+    val store = newStore()
+    UpsertSink.applyBatch(spark, store)(compactedDf((1L to 50L).map(k =>
+      (k, false, k, "c", "signup", 1.0, 100L, 1L))), 0L)
+    val (pins, merges) = executedPlans(UpsertSink.applyBatch(spark, store)(compactedDf(Seq(
+      (2L, false, 60L, "u", "view", 2.0, 200L, 2L),
+      (2L, false, 61L, "u", "click", 2.0, 200L, 3L),
+      (3L, true, 62L, "d", "signup", 1.0, 200L, 2L),
+      (99L, false, 63L, "c", "view", 9.0, 200L, 1L))), 1L))
+      .partition(_._1 == "localCheckpoint")
+    assert(pins.size === 1)
+    assert(pins.flatMap(p => planNodes(p._2)).collect { case w: WindowExec => w }.isEmpty,
+      "the pin must hold the raw batch, before any window")
+    val merge = merges.flatMap(p => planNodes(p._2))
+    assert(merge.collect { case e: Exchange => e }.size === 1, merges.map(_._2).mkString("\n"))
+    assert(merge.collect { case j: SortMergeJoinExec => j }.isEmpty)
+    assert(merge.collect { case w: WindowExec => w }.size === 1)
+    assert(storeMap(store)(2L) === ((61L, "click")))
+    assert(!storeMap(store).contains(3L))
+  }
+
+  test("snapshot part files never outgrow the shuffle width over five commits") {
+    val store = newStore()
+    val width = spark.sessionState.conf.numShufflePartitions
+    (0L until 5L).foreach { i =>
+      UpsertSink.applyBatch(spark, store)(compactedDf((0L until 40L).map(k =>
+        (i * 20 + k, false, i * 100 + k, "c", "signup", 1.0, 100L + i, 1L))), i)
+    }
+    assert(snapshotDirs(store).size === 5)
+    snapshotDirs(store).foreach { v =>
+      val parts = new java.io.File(s"$store/$v").list().count(_.startsWith("part-"))
+      assert(parts >= 1 && parts <= width, s"$v has $parts part files, shuffle width $width")
+    }
+    assert(storeMap(store).size === 120)
   }
 }

@@ -11,10 +11,12 @@
 # ContainmentSpec), the local file system and upsert sink specs
 # (LocalFsSpec, UpsertSinkSpec), the latest-wins compaction specs
 # (LatestWinsTieBreakSpec, IvmSpec), the session memo specs
-# (GraftSessionMemoSpec, HierAssignSpec, ConfParitySpec), and the AVI
+# (GraftSessionMemoSpec, HierAssignSpec, ConfParitySpec), the AVI
 # video codec specs (RleSpec, McSpec, GopSpec, XfSpec, DemuxSpec,
-# CodecPropertiesSpec, VideoCodecContractSpec). Use before
-# END-OF-ROUND snapshots and after touching query plumbing.
+# CodecPropertiesSpec, VideoCodecContractSpec), and the streaming
+# specs that commit through the upsert sink (TxnSnapshotStreamSpec,
+# CdcStreamSpec, StreamingConnectorE2ESpec, IvmConnectorE2ESpec). Use
+# before END-OF-ROUND snapshots and after touching query plumbing.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 sbt -batch Test/compile >/tmp/precommit.log 2>&1 || {
@@ -103,11 +105,11 @@ echo "PRECOMMIT OK: every registered query has a bench entry."
 #      that only min-of-2 absorbed). If any per-query p2/p1 ratio
 #      exceeds 3x, run a third pass for the record.
 if [[ "${PRECOMMIT_SMOKE:-0}" == "1" ]]; then
-  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec graft.LocalFsSpec graft.UpsertSinkSpec graft.operators.LatestWinsTieBreakSpec graft.operators.IvmSpec graft.GraftSessionMemoSpec graft.operators.HierAssignSpec graft.ConfParitySpec graft.multimodal.RleSpec graft.multimodal.McSpec graft.multimodal.GopSpec graft.multimodal.XfSpec graft.multimodal.DemuxSpec graft.multimodal.CodecPropertiesSpec graft.multimodal.VideoCodecContractSpec" \
+  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec graft.LocalFsSpec graft.UpsertSinkSpec graft.operators.LatestWinsTieBreakSpec graft.operators.IvmSpec graft.GraftSessionMemoSpec graft.operators.HierAssignSpec graft.ConfParitySpec graft.multimodal.RleSpec graft.multimodal.McSpec graft.multimodal.GopSpec graft.multimodal.XfSpec graft.multimodal.DemuxSpec graft.multimodal.CodecPropertiesSpec graft.multimodal.VideoCodecContractSpec graft.TxnSnapshotStreamSpec graft.CdcStreamSpec graft.StreamingConnectorE2ESpec graft.IvmConnectorE2ESpec" \
       >/tmp/precommit_smoke.log 2>&1 || {
     echo "PRECOMMIT FAIL: smoke specs broken — do not commit." >&2
     tail -n 40 /tmp/precommit_smoke.log >&2
     exit 1
   }
-  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine, local file system, upsert sink, latest-wins, session memo and video codec specs green."
+  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine, local file system, upsert sink, latest-wins, session memo, video codec and streaming sink specs green."
 fi
