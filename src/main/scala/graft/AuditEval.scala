@@ -22,9 +22,9 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   */
 object AuditEval {
   private val markers = Seq(
-    "shinglesexpr", "shinglepostingsgen", "minhashexpr", "chunkhashesexpr",
-    "winnowfingerprintsexpr", "winnowpostingsgen", "hyperplanesigsexpr", "md5(",
-    "charentropyexpr", "chardistinctexpr", "multipatternscrubexpr")
+    "shinglescompute", "shinglepostingsgen", "minhashcompute", "chunkhashescompute",
+    "winnowfingerprintscompute", "winnowpostingsgen", "hyperplanesigscompute", "md5(",
+    "charentropycompute", "chardistinctcompute", "multiscrubcompute")
 
   def main(args: Array[String]): Unit = {
     val sf = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"

@@ -2,108 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, ExpressionInfo, Multiply}
-
-import graft.plans.{TextExpressions, VectorExpressions}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Session-extension entry point: install the graft native functions
-  * into any SparkSession via configuration —
-  * `--conf spark.sql.extensions=graft.GraftExtensions` — the standard
-  * deployment hook for cluster-wide availability (no code changes in
-  * user jobs). The SQL-UDF helpers (graft_clean_name,
+  * ([[GraftFunctions.natives]], the one table) into any SparkSession
+  * via configuration — `--conf spark.sql.extensions=graft.GraftExtensions`
+  * — the standard deployment hook for cluster-wide availability (no
+  * code changes in user jobs). The SQL-UDF helpers (graft_clean_name,
   * graft_haversine_km) still register per-session via
   * [[GraftFunctions.register]] since SQL UDFs are session-scoped.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[VectorExpressions.DotProductExpr].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => VectorExpressions.DotProductExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_l2norm"),
-      new ExpressionInfo(classOf[VectorExpressions.L2NormExpr].getName, "graft_l2norm"),
-      (exprs: Seq[Expression]) => VectorExpressions.L2NormExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_long_dot"),
-      new ExpressionInfo(classOf[VectorExpressions.LongDotExpr].getName, "graft_long_dot"),
-      (exprs: Seq[Expression]) => VectorExpressions.LongDotExpr(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[VectorExpressions.DotProductExpr].getName, "graft_cosine"),
-      (exprs: Seq[Expression]) => GraftExtensions.cosineExpr(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hyperplane_sigs"),
-      new ExpressionInfo(classOf[VectorExpressions.HyperplaneSigsExpr].getName, "graft_hyperplane_sigs"),
-      (exprs: Seq[Expression]) => GraftExtensions.hyperplaneSigsExpr(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_char_entropy"),
-      new ExpressionInfo(classOf[TextExpressions.CharEntropyExpr].getName, "graft_char_entropy"),
-      (exprs: Seq[Expression]) => TextExpressions.CharEntropyExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_char_distinct"),
-      new ExpressionInfo(classOf[TextExpressions.CharDistinctExpr].getName, "graft_char_distinct"),
-      (exprs: Seq[Expression]) => TextExpressions.CharDistinctExpr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow_fingerprints"),
-      new ExpressionInfo(classOf[TextExpressions.WinnowFingerprintsExpr].getName,
-        "graft_winnow_fingerprints"),
-      (exprs: Seq[Expression]) => GraftExtensions.winnowExpr(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_chunk_hashes"),
-      new ExpressionInfo(classOf[TextExpressions.ChunkHashesExpr].getName, "graft_chunk_hashes"),
-      (exprs: Seq[Expression]) => GraftExtensions.chunkHashesExpr(exprs)))
-  }
-}
-
-object GraftExtensions {
-
-  /** cos(a, b) = dot(a, b) / (‖a‖·‖b‖), composed from the native
-    * expressions so the whole thing stays one codegen'd pipeline.
-    */
-  private[graft] def cosineExpr(exprs: Seq[Expression]): Expression =
-    Divide(
-      VectorExpressions.DotProductExpr(exprs(0), exprs(1)),
-      Multiply(
-        VectorExpressions.L2NormExpr(exprs(0)),
-        VectorExpressions.L2NormExpr(exprs(1))))
-
-  /** graft_hyperplane_sigs(vec, bands, bitsPerBand, dim): the md5
-    * portable LSH band signatures. bands/bits/dim must be literals —
-    * the plane table is materialized at plan time.
-    */
-  private[graft] def hyperplaneSigsExpr(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 4,
-      "graft_hyperplane_sigs(vec, bands, bitsPerBand, dim) takes 4 arguments")
-    val Seq(bands, bits, dim) = exprs.tail.map { e =>
-      require(e.foldable, "graft_hyperplane_sigs bands/bitsPerBand/dim must be literals")
-      e.eval().asInstanceOf[Number].intValue()
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.natives.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.build))
     }
-    VectorExpressions.HyperplaneSigsExpr(
-      exprs.head, graft.functions.Vectors.hyperplaneWeights(bands * bits, dim), bits)
-  }
-
-  /** graft_winnow_fingerprints(text, k, w): the codegen'd winnowing
-    * selector (md5 char k-grams, window-min w) — k/w must be literals.
-    */
-  private[graft] def winnowExpr(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 3, "graft_winnow_fingerprints(text, k, w) takes 3 arguments")
-    val Seq(k, w) = exprs.tail.map { e =>
-      require(e.foldable, "graft_winnow_fingerprints k/w must be literals")
-      e.eval().asInstanceOf[Number].intValue()
-    }
-    TextExpressions.WinnowFingerprintsExpr(exprs.head, k, w)
-  }
-
-  /** graft_chunk_hashes(tokens, k, div): content-defined chunk md5s
-    * over a token array — k/div must be literals.
-    */
-  private[graft] def chunkHashesExpr(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 3, "graft_chunk_hashes(tokens, k, div) takes 3 arguments")
-    val Seq(k, div) = exprs.tail.map { e =>
-      require(e.foldable, "graft_chunk_hashes k/div must be literals")
-      e.eval().asInstanceOf[Number].intValue()
-    }
-    TextExpressions.ChunkHashesExpr(exprs.head, k, div)
-  }
 }

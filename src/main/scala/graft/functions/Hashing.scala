@@ -21,7 +21,7 @@ object Hashing {
     * joined by single spaces.
     *
     * Evaluates as ONE native Catalyst node
-    * (plans/TextExpressions.ShinglesExpr). Two earlier formulations
+    * (plans/TextExpressions.shinglesCompute). Two earlier formulations
     * died of measured diseases: `transform(sequence(...), i =>
     * slice(toks, i, k))` re-computes the whole token expression per
     * window index (O(L²)/doc in the interpreted evaluator), and the

@@ -1,30 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
-/** Dense-vector column functions over `array<float>` embedding columns.
-  *
-  * Built from `zip_with`/`aggregate` higher-order functions so the dot
-  * products run inside codegen with no UDF boundary. Elements are
-  * widened to double before accumulation for cross-engine FP parity.
+/** Random-hyperplane LSH planes and banding rules for `array<float>`
+  * embedding columns, with their DuckDB SQL mirrors. The vector math
+  * itself (dot, norm, cosine, band signatures) is the native kernels
+  * in [[graft.plans.VectorExpressions]].
   */
 object Vectors {
-
-  /** Σ aᵢ·bᵢ */
-  def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, v) => acc + v)
-
-  /** ‖a‖₂ */
-  def norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double")))
-
-  /** Cosine similarity. */
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (norm(a) * norm(b))
 
   /** Integer components of `nPlanes` deterministic pseudo-random
     * hyperplanes for random-hyperplane (angular) LSH: component
@@ -46,11 +27,6 @@ object Vectors {
       }
     }
 
-  /** DuckDB CTE mirroring [[hyperplaneWeights]] +
-    * [[graft.plans.VectorExpressions.HyperplaneSigsExpr]]: emits
-    * `sigs(vec_id, band, sig)` for table alias `src`(vec_id, embedding)
-    * with `bands × bitsPerBand` planes over `dim` dimensions.
-    */
   /** The corpus-adaptive bits-per-band rule shared by
     * [[graft.operators.DedupOps.dedupEmbedding]] and its oracle:
     * enough bits that the expected band-bucket occupancy stays near
@@ -122,6 +98,11 @@ object Vectors {
        |  FROM pbits GROUP BY 1, 2
        |)""".stripMargin
 
+  /** DuckDB CTE mirroring [[hyperplaneWeights]] +
+    * [[graft.plans.VectorExpressions.hyperplaneSigsCompute]]: emits
+    * `sigs(vec_id, band, sig)` for table alias `src`(vec_id, embedding)
+    * with `bands × bitsPerBand` planes over `dim` dimensions.
+    */
   def sqlHyperplaneSigsCte(src: String, bands: Int, bitsPerBand: Int, dim: Int): String =
     s"""qv AS (
        |  SELECT vec_id, list_transform(range(0, $dim),

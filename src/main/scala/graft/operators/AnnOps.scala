@@ -98,7 +98,7 @@ object AnnOps {
     * hyperplane band buckets; probes scored only against bucket
     * cohorts, exact-cosine verified. The banding is bit-for-bit
     * reproducible in SQL (integer quantization + integer planes — see
-    * [[graft.plans.VectorExpressions.HyperplaneSigsExpr]]), so even
+    * [[graft.plans.VectorExpressions.hyperplaneSigsCompute]]), so even
     * this probabilistic pipeline is hash-checked against the oracle.
     */
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
@@ -713,7 +713,7 @@ object AnnOps {
   }
 
   /** Approximate cosine from the two quantized sides: integer dot
-    * (engine-exact; codegen'd [[graft.plans.VectorExpressions.LongDotExpr]]
+    * (engine-exact; codegen'd [[graft.plans.VectorExpressions.longDotCompute]]
     * so the corpus scan stays inside whole-stage codegen) rescaled by
     * the scales and exact norms, rounded to 6 decimals because it
     * feeds the top-[[Sq8Rerank]] DECISION. Expects (qv, qs, nrm) and

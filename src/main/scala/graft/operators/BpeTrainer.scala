@@ -1,14 +1,13 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.plans.Kernel
 
 /** Byte-pair-encoding tokenizer TRAINING on Spark — the
   * tokenizer-construction workload a training-data pipeline runs
@@ -27,8 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *      (k rules total — the same bounded-driver-state contract as
   *      the Kmeans anchor collect), and
   *   3. one codegen'd projection applying the merge to every word's
-  *      symbol array ([[MergePairExpr]] — a sequential in-array scan,
-  *      never an explode/re-group of the corpus).
+  *      symbol array (the [[mergePairCompute]] kernel — a sequential
+  *      in-array scan, never an explode/re-group of the corpus).
   * State between rounds is the word-type frame, pinned per round
   * (`materialize`) so no round re-reads lineage.
   *
@@ -45,7 +44,6 @@ object BpeTrainer {
   /** Merge one adjacent symbol pair (a, b) → ab, left-to-right with
     * no re-scan of the just-merged token — the standard BPE apply
     * order (a run "aaa" under merge (a,a) becomes ["aa", "a"]).
-    * Static entry point referenced from generated code.
     */
   def mergePairCompute(arr: ArrayData, a: UTF8String, b: UTF8String): ArrayData = {
     val n = arr.numElements()
@@ -64,33 +62,10 @@ object BpeTrainer {
     new GenericArrayData(out.toArray)
   }
 
-  /** Codegen'd single-pass merge application over a symbol array. */
-  case class MergePairExpr(child: Expression, a: String, b: String)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"merge_pair expects array<string>, got $other")
-    }
-
-    override def nullSafeEval(v: Any): Any =
-      mergePairCompute(v.asInstanceOf[ArrayData],
-        UTF8String.fromString(a), UTF8String.fromString(b))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val aRef = ctx.addReferenceObj("mergeA", UTF8String.fromString(a))
-      val bRef = ctx.addReferenceObj("mergeB", UTF8String.fromString(b))
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = graft.operators.BpeTrainer.mergePairCompute($v, $aRef, $bRef);")
-    }
-
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
   private def mergePairNative(arr: Column, a: String, b: String): Column =
-    ColumnBridge.column(MergePairExpr(ColumnBridge.expression(arr), a, b))
+    Kernel.column(Kernel.call(this, "mergePairCompute",
+      ArrayType(StringType, containsNull = false),
+      Seq(Kernel.expr(arr), Literal(a), Literal(b))))
 
   /** Word-type counts of a document frame (doc_id, text): one explode
     * + one keyed aggregation — the only corpus-sized pass in training.
@@ -151,7 +126,7 @@ object BpeTrainer {
     merges.result()
   }
 
-  /** Distributed encoder: the [[MergePairExpr]] chain applying the
+  /** Distributed encoder: the [[mergePairCompute]] chain applying the
     * learned rules in rank order to a symbol-array column — the same
     * codegen'd pass the trainer folds each round, so trained-then-
     * encoded corpora are consistent by construction.
@@ -171,7 +146,7 @@ object BpeTrainer {
 
   /** Driver-side encoder: apply the learned rules in rank order to one
     * word (the per-record application a serving tokenizer runs; the
-    * distributed form is the same [[MergePairExpr]] chain the trainer
+    * distributed form is the same [[mergePairCompute]] chain the trainer
     * uses). Symbols start as single characters (code points).
     */
   def encodeWord(word: String, merges: Seq[Merge]): Seq[String] = {

@@ -113,7 +113,7 @@ object DedupOps {
     * distinct per doc — the shared input of [[winnowDedup]] and
     * [[winnowPreflight]]. The whole selector (md5 char k-grams →
     * sliding window-min → distinct) evaluates as ONE codegen'd node
-    * ([[graft.plans.TextExpressions.WinnowFingerprintsExpr]]) and is
+    * ([[graft.plans.TextExpressions.winnowFingerprintsCompute]]) and is
     * projected ONCE below a [[repartByKey]] barrier, so exchange
     * reuse shares the single evaluation across every consumer (the
     * df aggregation and both self-join sides) — the r12 formulation
@@ -1237,7 +1237,7 @@ object DedupOps {
       .select(col("doc_id"), toks(col("text")).as("toks"))
     // the whole per-document chunk pipeline (window hashes → boundary
     // flags → chunk slices → chunk md5s) evaluates as ONE native
-    // Catalyst expression, plans/TextExpressions.ChunkHashesExpr.
+    // kernel, plans/TextExpressions.chunkHashesCompute.
     // Chunking stays token-explode-free: the only generated rows are
     // the ~|toks|/ChunkDiv chunk hashes, so the shuffle carries chunk
     // rows, never token rows (at web scale a ~16× smaller exchange

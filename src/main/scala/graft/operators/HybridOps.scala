@@ -209,8 +209,8 @@ object HybridOps {
     * 100 TB shape: cost is k² per probe over the BOUNDED fused list —
     * candidate pairs are ≤ probes × k² rows joined to exactly the
     * candidates' embeddings (never corpus pairs); the greedy runs as
-    * one interpreted node per probe row ([[graft.plans
-    * .VectorExpressions.MmrSelectExpr]] — ≤ probes rows, not a hot
+    * one kernel call per probe row ([[graft.plans
+    * .VectorExpressions.mmrSelectCompute]] — ≤ probes rows, not a hot
     * path). Corpus cost stays exactly the fusion's.
     */
   def hybridMmr(spark: SparkSession, dir: String): DataFrame = {

@@ -115,7 +115,7 @@ object PiiOps {
   def piiRedact(spark: SparkSession, dir: String): DataFrame = {
     val counts = spanCounts(col("_scrub"), col("_cards"))
     // the four regex kinds rewrite AND count in ONE string walk (the
-    // codegen'd single-pass MultiPatternScrubExpr — the 5-deep nested
+    // codegen'd single-pass multiScrubCompute kernel — the 5-deep nested
     // regexp_replace chain plus 4 extract_all counting scans walked
     // each decorated string nine times); valid cards are then
     // replaced EXACTLY (string replace of each verified match — a

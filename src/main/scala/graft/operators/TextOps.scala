@@ -803,7 +803,7 @@ object TextOps {
     * distinct-character count: the gibberish / encoding-corruption /
     * key-mash filter (natural text sits ~4 bits, base64 blobs ~6,
     * single-char floods ~0). Both statistics are single codegen'd
-    * expressions ([[graft.plans.TextExpressions.CharEntropyExpr]]) —
+    * expressions ([[graft.plans.TextExpressions.charEntropyCompute]]) —
     * one histogram pass per ROW, alphabet-sized state — so the query
     * is a zero-shuffle scan-bound projection; the explode-per-char
     * formulation would shuffle |chars| rows (≈ the corpus itself) to
@@ -919,7 +919,7 @@ object TextOps {
     * encode the whole corpus (at word-TYPE altitude, weighted by word
     * frequency) with the learned rules and emit per-token totals —
     * the vocabulary histogram a token-budget planner reads. One
-    * codegen'd [[BpeTrainer.MergePairExpr]] chain over the word-type
+    * codegen'd [[BpeTrainer.mergePairCompute]] chain over the word-type
     * frame (|types| ≪ |tokens| rows), one explode, one keyed sum.
     */
   def bpeEncode(spark: SparkSession, dir: String): DataFrame = {
@@ -1179,7 +1179,7 @@ object TextOps {
     val toks = split(col("text"), " ")
     // r19 optimization: the whole hashed-n-gram histogram is a pure
     // per-document function, so it evaluates as ONE codegen'd node
-    // (plans/TextExpressions.NgramBucketMicrosExpr) instead of the
+    // (plans/TextExpressions.ngramBucketMicrosCompute) instead of the
     // explode → groupBy(doc, bucket) → groupBy(doc) map rebuild → join
     // pipeline — two corpus-wide shuffles of feature rows and a
     // documents self-join gone; the md5-per-feature work is unchanged

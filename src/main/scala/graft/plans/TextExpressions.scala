@@ -5,15 +5,17 @@ import java.security.MessageDigest
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for text chunking.
+import graft.plans.Kernel.expr
+
+/** Native kernels for text (the [[Kernel]] shape), starting with
+  * content-defined chunking.
   *
   * Why not the array-expression formulation (shifted-slice shingles →
   * md5 boundary flags → position zip → slice-per-chunk): that tree is
@@ -24,10 +26,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * fresh session at sf0.1, against ~2 s of actual compute. The
   * full-registry bench pays that every pass (the 100-entry codegen
   * cache cannot hold 108 queries), and so does any real user's first
-  * run. This expression evaluates the whole chunk pipeline as ONE
-  * node — a tight JVM loop per row — and its generated code is a
-  * single static call, so plan cost is negligible and eval is faster
-  * than the interpreted higher-order lambdas it replaces.
+  * run. This kernel evaluates the whole chunk pipeline as ONE node —
+  * a tight JVM loop per row — and its generated code is a single
+  * static call, so plan cost is negligible and eval is faster than the
+  * interpreted higher-order lambdas it replaces.
   *
   * Semantics are bit-identical to the array formulation (and to the
   * DuckDB oracle SQL in DedupOps): a chunk boundary falls at token
@@ -62,7 +64,23 @@ object TextExpressions {
     u.toString
   }
 
-  /** Static entry point referenced from generated code. */
+  /** The analysis-time input check of a text kernel: a string, or an
+    * array<string> when `tokens`.
+    */
+  private def textTypeError(name: String, got: DataType, tokens: Boolean): Option[String] =
+    got match {
+      case StringType if !tokens => None
+      case ArrayType(StringType, _) if tokens => None
+      case other => Some(s"$name expects ${if (tokens) "array<string>" else "string"}, got $other")
+    }
+
+  private val Strings = ArrayType(StringType, containsNull = false)
+
+  /** Content-defined chunk hashes of a token array — see object doc.
+    * Input must be `array<string>` with non-null elements (a `split`
+    * output); output is `array<string>` of chunk md5 hex values, one
+    * per chunk, preserving document order and intra-doc repeats.
+    */
   def chunkHashesCompute(toks: ArrayData, k: Int, div: Int): ArrayData = {
     val n = toks.numElements()
     val t = new Array[String](n)
@@ -106,36 +124,28 @@ object TextExpressions {
     new GenericArrayData(out)
   }
 
-  /** Content-defined chunk hashes of a token array — see object doc.
-    * Input must be `array<string>` with non-null elements (a `split`
-    * output); output is `array<string>` of chunk md5 hex values, one
-    * per chunk, preserving document order and intra-doc repeats.
-    */
-  case class ChunkHashesExpr(child: Expression, k: Int, div: Int)
-      extends UnaryExpression {
+  /** `graft_chunk_hashes(tokens, k, div)`. */
+  case class ChunkHashes(child: Expression, k: Int, div: Int)
+      extends Kernel.Function with UnaryLike[Expression] {
     require(k >= 1 && div >= 1, s"chunk_hashes: k and div must be >= 1, got k=$k div=$div")
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"chunk_hashes expects array<string>, got $other")
-    }
-
-    override def nullSafeEval(a: Any): Any =
-      chunkHashesCompute(a.asInstanceOf[ArrayData], k, div)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.plans.TextExpressions.chunkHashesCompute($a, $k, $div);")
-
+    override def prettyName: String = "graft_chunk_hashes"
+    override def dataType: DataType = Strings
+    override protected def typeError: Option[String] =
+      textTypeError(prettyName, child.dataType, tokens = true)
+    override lazy val replacement: Expression = Kernel.call(TextExpressions,
+      "chunkHashesCompute", dataType, Seq(child, Literal(k), Literal(div)))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
   def chunkHashesNative(toks: Column, k: Int, div: Int): Column =
-    ColumnBridge.column(ChunkHashesExpr(ColumnBridge.expression(toks), k, div))
+    Kernel.column(ChunkHashes(expr(toks), k, div))
 
-  /** Static entry point referenced from generated code. */
+  /** Contiguous k-token windows joined by single spaces — the native
+    * form of the k-shifted-slice `zip_with` reduction the functions
+    * layer used to build (functions/Hashing.shingles). Same output;
+    * the k-deep lambda tree (duplicated per consumer, paid in
+    * analysis + janino time on every fresh plan) becomes one node.
+    */
   def shinglesCompute(toks: ArrayData, k: Int): ArrayData = {
     val n = toks.numElements()
     val ns = math.max(n - (k - 1), 0)
@@ -155,39 +165,19 @@ object TextExpressions {
     new GenericArrayData(out)
   }
 
-  /** Contiguous k-token windows joined by single spaces — the native
-    * form of the k-shifted-slice `zip_with` reduction the functions
-    * layer used to build (functions/Hashing.shingles). Same output;
-    * the k-deep lambda tree (duplicated per consumer, paid in
-    * analysis + janino time on every fresh plan) becomes one node.
-    */
-  case class ShinglesExpr(child: Expression, k: Int) extends UnaryExpression {
+  def shinglesNative(toks: Column, k: Int): Column = {
     require(k >= 1, s"shingles: k must be >= 1, got $k")
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"shingles expects array<string>, got $other")
-    }
-
-    override def nullSafeEval(a: Any): Any =
-      shinglesCompute(a.asInstanceOf[ArrayData], k)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.plans.TextExpressions.shinglesCompute($a, $k);")
-
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+    Kernel.column(Kernel.call(this, "shinglesCompute", Strings, Seq(expr(toks), Literal(k))))
   }
 
-  def shinglesNative(toks: Column, k: Int): Column =
-    ColumnBridge.column(ShinglesExpr(ColumnBridge.expression(toks), k))
-
-  /** Static entry point referenced from generated code. Returns null
-    * for an empty shingle array (the `array_min` convention).
+  /** Minimum md5 hex over `prefix ‖ shingle` — one native node in
+    * place of `array_min(transform(arr, s => md5(concat(...))))`,
+    * whose per-seed lambda trees dominate plan-compile time when a
+    * signature matrix needs bands × rows of them. Lexicographic min
+    * over lowercase hex strings, null on an empty array — exactly the
+    * `array_min` convention the HOF form had.
     */
-  def minhashCompute(shingles: ArrayData, prefix: UTF8String): AnyRef = {
+  def minhashCompute(shingles: ArrayData, prefix: UTF8String): UTF8String = {
     val n = shingles.numElements()
     if (n == 0) return null
     val md = MessageDigest.getInstance("MD5")
@@ -202,46 +192,11 @@ object TextExpressions {
     UTF8String.fromString(best)
   }
 
-  /** Minimum md5 hex over `prefix ‖ shingle` — one native node in
-    * place of `array_min(transform(arr, s => md5(concat(...))))`,
-    * whose per-seed lambda trees dominate plan-compile time when a
-    * signature matrix needs bands × rows of them. Lexicographic min
-    * over lowercase hex strings, null on an empty array — exactly the
-    * `array_min` convention the HOF form had.
-    */
-  case class MinHashExpr(child: Expression, prefix: UTF8String)
-      extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"minhash expects array<string>, got $other")
-    }
-
-    override def nullSafeEval(a: Any): Any =
-      minhashCompute(a.asInstanceOf[ArrayData], prefix)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val pre = ctx.addReferenceObj("prefix", prefix)
-      nullSafeCodeGen(ctx, ev, a => s"""
-        |${ev.value} = (org.apache.spark.unsafe.types.UTF8String)
-        |  graft.plans.TextExpressions.minhashCompute($a, $pre);
-        |${ev.isNull} = ${ev.value} == null;
-        |""".stripMargin)
-    }
-
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
   def minhashNative(shingleArr: Column, prefix: String): Column =
-    ColumnBridge.column(MinHashExpr(
-      ColumnBridge.expression(shingleArr), UTF8String.fromString(prefix)))
+    Kernel.column(Kernel.call(this, "minhashCompute", StringType,
+      Seq(expr(shingleArr), Literal(prefix)), nullableResult = true))
 
-  /** Static entry point referenced from generated code.
-    *
-    * Winnowing fingerprint selection (Schleimer et al. 2003) over a
+  /** Winnowing fingerprint selection (Schleimer et al. 2003) over a
     * document string: md5 hex of every char k-gram, sliding
     * window-min of width w (lexicographic, ≡ `array_min` over hex),
     * distinct mins in first-occurrence order (≡ `array_distinct`).
@@ -256,6 +211,8 @@ object TextExpressions {
     * materialized — the HOF formulation this replaces built an
     * L-element array of 32-char hex strings and then L window slices
     * per doc, outside whole-stage codegen (615 s of the r12 bench).
+    * Empty when the text has fewer than k + w − 1 chars (no full hash
+    * window exists).
     */
   def winnowFingerprintsCompute(text: UTF8String, k: Int, w: Int): ArrayData = {
     val bytes = text.getBytes
@@ -310,35 +267,25 @@ object TextExpressions {
     new GenericArrayData(arr)
   }
 
-  /** Distinct winnowing fingerprints of a document string — see
-    * [[winnowFingerprintsCompute]]. Empty array when the text has
-    * fewer than k + w − 1 chars (no full hash window exists).
+  /** `graft_winnow_fingerprints(text, k, w)`: the distinct winnowing
+    * fingerprints of a document string, see [[winnowFingerprintsCompute]].
     */
-  case class WinnowFingerprintsExpr(child: Expression, k: Int, w: Int)
-      extends UnaryExpression {
+  case class WinnowFingerprints(child: Expression, k: Int, w: Int)
+      extends Kernel.Function with UnaryLike[Expression] {
     require(k >= 1 && w >= 1, s"winnow_fingerprints: k and w must be >= 1, got k=$k w=$w")
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"winnow_fingerprints expects string, got $other")
-    }
-
-    override def nullSafeEval(a: Any): Any =
-      winnowFingerprintsCompute(a.asInstanceOf[UTF8String], k, w)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.plans.TextExpressions.winnowFingerprintsCompute($a, $k, $w);")
-
+    override def prettyName: String = "graft_winnow_fingerprints"
+    override def dataType: DataType = Strings
+    override protected def typeError: Option[String] =
+      textTypeError(prettyName, child.dataType, tokens = false)
+    override lazy val replacement: Expression = Kernel.call(TextExpressions,
+      "winnowFingerprintsCompute", dataType, Seq(child, Literal(k), Literal(w)))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
   def winnowFingerprintsNative(text: Column, k: Int, w: Int): Column =
-    ColumnBridge.column(WinnowFingerprintsExpr(ColumnBridge.expression(text), k, w))
+    Kernel.column(WinnowFingerprints(expr(text), k, w))
 
-  /** Generator form of [[WinnowFingerprintsExpr]]: streams the
+  /** Generator form of [[winnowFingerprintsCompute]]: streams the
     * distinct fingerprints of one document as rows, one output column
     * `s` (non-nullable).
     *
@@ -359,11 +306,8 @@ object TextExpressions {
     override def elementSchema: StructType =
       StructType(StructField("s", StringType, nullable = false) :: Nil)
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"winnow_postings expects string, got $other")
-    }
+    override def checkInputDataTypes(): TypeCheckResult =
+      Kernel.typeCheck(textTypeError("winnow_postings", child.dataType, tokens = false))
 
     override def eval(input: InternalRow): IterableOnce[InternalRow] = {
       val t = child.eval(input)
@@ -385,10 +329,10 @@ object TextExpressions {
   }
 
   def winnowPostingsNative(text: Column, k: Int, w: Int): Column =
-    ColumnBridge.column(WinnowPostingsGen(ColumnBridge.expression(text), k, w))
+    Kernel.column(WinnowPostingsGen(expr(text), k, w))
 
-  /** Static entry point referenced from generated/eval code: DISTINCT
-    * k-token shingles of a token array, first-occurrence order.
+  /** [[ShinglePostingsGen]]'s kernel: DISTINCT k-token shingles of a
+    * token array, first-occurrence order.
     */
   def shinglePostingsCompute(toks: ArrayData, k: Int): java.util.LinkedHashSet[String] = {
     val n = toks.numElements()
@@ -428,11 +372,8 @@ object TextExpressions {
     override def elementSchema: StructType =
       StructType(StructField("s", StringType, nullable = false) :: Nil)
 
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"shingle_postings expects array<string>, got $other")
-    }
+    override def checkInputDataTypes(): TypeCheckResult =
+      Kernel.typeCheck(textTypeError("shingle_postings", child.dataType, tokens = true))
 
     override def eval(input: InternalRow): IterableOnce[InternalRow] = {
       val t = child.eval(input)
@@ -454,11 +395,10 @@ object TextExpressions {
   }
 
   def shinglePostingsNative(toks: Column, k: Int): Column =
-    ColumnBridge.column(ShinglePostingsGen(ColumnBridge.expression(toks), k))
+    Kernel.column(ShinglePostingsGen(expr(toks), k))
 
-  /** Static entry point referenced from generated code: Shannon
-    * entropy in bits per character over the CODE-POINT histogram of
-    * one string (exact integer counts; entropy = log2(n) −
+  /** Shannon entropy in bits per character over the CODE-POINT
+    * histogram of one string (exact integer counts; entropy = log2(n) −
     * Σ c·log2(c) / n). The histogram fits a tiny map (alphabet-sized,
     * not text-sized), so the whole statistic is one pass per row —
     * no per-char explode, no shuffle. Empty input → 0.0.
@@ -481,8 +421,7 @@ object TextExpressions {
     Math.log(n.toDouble) / ln2 - acc / n.toDouble
   }
 
-  /** Static entry point referenced from generated code: distinct
-    * code-point count of one string (same single histogram pass as
+  /** Distinct code-point count of one string (same single histogram pass as
     * [[charEntropyCompute]]).
     */
   def charDistinctCompute(text: UTF8String): Long = {
@@ -497,69 +436,45 @@ object TextExpressions {
     m.size.toLong
   }
 
-  /** Per-row character-level Shannon entropy (double, bits/char) —
-    * the gibberish/encoding-corruption quality signal. A single
-    * codegen'd node whose generated code is one static call; the
-    * array-free alternative to explode-per-char + two keyed
-    * aggregations (which would put |chars| rows through a shuffle
-    * for a per-row statistic).
+  /** `graft_char_entropy(text)`: per-row character-level Shannon
+    * entropy (double, bits/char) — the gibberish/encoding-corruption
+    * quality signal; the array-free alternative to explode-per-char +
+    * two keyed aggregations (which would put |chars| rows through a
+    * shuffle for a per-row statistic).
     */
-  case class CharEntropyExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"char_entropy expects string, got $other")
-    }
-
-    override def nullSafeEval(a: Any): Any =
-      charEntropyCompute(a.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.plans.TextExpressions.charEntropyCompute($a);")
-
+  case class CharEntropy(child: Expression) extends Kernel.Function with UnaryLike[Expression] {
+    override def prettyName: String = "graft_char_entropy"
+    override def dataType: DataType = DoubleType
+    override protected def typeError: Option[String] =
+      textTypeError(prettyName, child.dataType, tokens = false)
+    override lazy val replacement: Expression =
+      Kernel.call(TextExpressions, "charEntropyCompute", dataType, Seq(child))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  /** Per-row distinct code-point count — [[CharEntropyExpr]]'s
-    * companion statistic, kept a SEPARATE expression (not one
-    * struct-returning node) so each projected column is exactly one
-    * evaluation site under the AuditEval one-evaluation contract.
+  /** `graft_char_distinct(text)`: per-row distinct code-point count —
+    * [[CharEntropy]]'s companion statistic, kept a SEPARATE kernel
+    * (not one struct-returning node) so each projected column is
+    * exactly one evaluation site under the AuditEval one-evaluation
+    * contract.
     */
-  case class CharDistinctExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"char_distinct expects string, got $other")
-    }
-
-    override def nullSafeEval(a: Any): Any =
-      charDistinctCompute(a.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.plans.TextExpressions.charDistinctCompute($a);")
-
+  case class CharDistinct(child: Expression) extends Kernel.Function with UnaryLike[Expression] {
+    override def prettyName: String = "graft_char_distinct"
+    override def dataType: DataType = LongType
+    override protected def typeError: Option[String] =
+      textTypeError(prettyName, child.dataType, tokens = false)
+    override lazy val replacement: Expression =
+      Kernel.call(TextExpressions, "charDistinctCompute", dataType, Seq(child))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  def charEntropyNative(text: Column): Column =
-    ColumnBridge.column(CharEntropyExpr(ColumnBridge.expression(text)))
+  def charEntropyNative(text: Column): Column = Kernel.column(CharEntropy(expr(text)))
 
-  def charDistinctNative(text: Column): Column =
-    ColumnBridge.column(CharDistinctExpr(ColumnBridge.expression(text)))
+  def charDistinctNative(text: Column): Column = Kernel.column(CharDistinct(expr(text)))
 
   // ---- single-pass multi-pattern PII scrub ----
 
-  private val patternCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.regex.Pattern]()
-
-  /** Static entry point referenced from generated code: ONE
-    * left-to-right walk of `text` over the ordered alternation
+  /** ONE left-to-right walk of `text` over the ordered alternation
     * `(p1)|(p2)|...` — each match is replaced by the tag of the first
     * alternative matching at the leftmost position and counted per
     * kind. One string scan and ONE rebuilt string serve all kinds,
@@ -577,13 +492,11 @@ object TextExpressions {
     * the CHAINED form, so a corpus ever reaching the boundary fails
     * the hash gate loudly instead of drifting.
     */
-  def multiScrubCompute(text: UTF8String, pattern: String,
+  def multiScrubCompute(text: UTF8String, pattern: java.util.regex.Pattern,
       tags: Array[String]): InternalRow = {
-    val p = patternCache.computeIfAbsent(pattern,
-      (k: String) => java.util.regex.Pattern.compile(k))
     val s = text.toString
     val counts = new Array[Long](tags.length)
-    val m = p.matcher(s)
+    val m = pattern.matcher(s)
     if (!m.find())
       return new GenericInternalRow(Array[Any](text, new GenericArrayData(counts)))
     val sb = new java.lang.StringBuilder(s.length)
@@ -615,58 +528,31 @@ object TextExpressions {
     * telemetry (multi-referenced and non-cheap, so CollapseProject
     * keeps it materialized — one walk per row).
     */
-  case class MultiPatternScrubExpr(child: Expression, kinds: Seq[(String, String)])
-      extends UnaryExpression {
+  def multiScrubNative(text: Column, kinds: Seq[(String, String)]): Column = {
     require(kinds.nonEmpty && kinds.forall(!_._1.contains("(")),
       "multi_scrub patterns must be group-free (alternation groups are the kind dispatch)")
-    private val pattern = kinds.map(k => "(" + k._1 + ")").mkString("|")
-    private val tags = kinds.map(_._2).toArray
-
-    override def dataType: DataType = StructType(Seq(
+    val pattern = java.util.regex.Pattern.compile(kinds.map(k => "(" + k._1 + ")").mkString("|"))
+    val dataType = StructType(Seq(
       StructField("redacted", StringType, nullable = false),
-      StructField("counts",
-        ArrayType(org.apache.spark.sql.types.LongType, containsNull = false),
-        nullable = false)))
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(s"multi_scrub expects string, got $other")
-    }
-
-    override def nullSafeEval(a: Any): Any =
-      multiScrubCompute(a.asInstanceOf[UTF8String], pattern, tags)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val pat = ctx.addReferenceObj("scrubPattern", pattern)
-      val tg = ctx.addReferenceObj("scrubTags", tags, "java.lang.String[]")
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.plans.TextExpressions.multiScrubCompute($a, $pat, $tg);")
-    }
-
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+      StructField("counts", ArrayType(LongType, containsNull = false), nullable = false)))
+    Kernel.column(Kernel.call(this, "multiScrubCompute", dataType,
+      Seq(expr(text), Kernel.const(pattern), Kernel.const(kinds.map(_._2).toArray))))
   }
-
-  def multiScrubNative(text: Column, kinds: Seq[(String, String)]): Column =
-    ColumnBridge.column(MultiPatternScrubExpr(ColumnBridge.expression(text), kinds))
 
   // ---- integer LR sigmoid ----
 
-  /** Static entry point referenced from generated code: the micro-unit
-    * integer sigmoid (z from micro weights × micro features via one
-    * floor division, clamp, table lookup + linear interpolation) as
-    * ONE tight long-arithmetic call. Math.floorDiv ≡ the
-    * pmod-then-divide construction the DuckDB oracle uses, and the
-    * table is the SAME [[graft.operators.TextOps.SigTable]] constants
-    * the oracle interpolates as literals — semantics pinned by the
-    * QualityLrSpec integer replica and the LR oracles' hash gate.
+  /** The micro-unit integer sigmoid of a micro-unit linear sum `s`
+    * (z = s DIV 1e6 via one floor division, clamp, table lookup +
+    * linear interpolation). Math.floorDiv ≡ the pmod-then-divide
+    * construction the DuckDB oracle uses, and the table is the SAME
+    * [[graft.operators.TextOps.SigTable]] constants the oracle
+    * interpolates as literals — semantics pinned by the QualityLrSpec
+    * integer replica and the LR oracles' hash gate.
     */
-  def lrSigmoidCompute(x1m: Long, x2m: Long, x3m: Long,
-      w: Array[Long], tab: Array[Long], step: Int): Long = {
+  private def sigmoidMicros(s: Long, tab: Array[Long], step: Int): Long = {
     val half = (tab.length - 1) / 2
     val lo = -half.toLong * step
     val hi = half.toLong * step - 1
-    val s = w(0) * 1000000L + w(1) * x1m + w(2) * x2m + w(3) * x3m
     val z = Math.floorDiv(s, 1000000L)
     val zc = if (z < lo) lo else if (z > hi) hi else z
     val off = zc - lo
@@ -675,106 +561,65 @@ object TextExpressions {
     tab(idx) + (tab(idx + 1) - tab(idx)) * frac / step
   }
 
-  /** The integer sigmoid as one codegen'd node — the Column-tree
-    * formulation (two element_at lookups on a 4097-literal array plus
-    * three pmod/divide chains) measured ~25% slower across the
-    * composed curation pipeline's multiple evaluation sites; this is
-    * the ChunkHashesExpr discipline applied to the scorer: a single
-    * static call, weights and table as reference objects.
+  /** The integer sigmoid over three micro-unit features as ONE tight
+    * long-arithmetic call — the Column-tree formulation (two
+    * element_at lookups on a 4097-literal array plus three
+    * pmod/divide chains) measured ~25% slower across the composed
+    * curation pipeline's multiple evaluation sites.
     */
-  case class LrSigmoidExpr(first: Expression, second: Expression, third: Expression,
-      w: Array[Long], tab: Array[Long], step: Int)
-      extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-    require(w.length == 4 && tab.length % 2 == 1 && step >= 1,
-      "lr_sigmoid: need 4 weights, an odd-length table, step >= 1")
-    override def dataType: DataType = org.apache.spark.sql.types.LongType
+  def lrSigmoidCompute(x1m: Long, x2m: Long, x3m: Long,
+      w: Array[Long], tab: Array[Long], step: Int): Long =
+    sigmoidMicros(w(0) * 1000000L + w(1) * x1m + w(2) * x2m + w(3) * x3m, tab, step)
 
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (children.forall(_.dataType == org.apache.spark.sql.types.LongType))
-        TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"lr_sigmoid expects (long, long, long), got ${children.map(_.dataType)}")
-
-    override def nullSafeEval(a: Any, b: Any, c: Any): Any =
-      lrSigmoidCompute(a.asInstanceOf[Long], b.asInstanceOf[Long], c.asInstanceOf[Long],
-        w, tab, step)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val wRef = ctx.addReferenceObj("lrW", w, "long[]")
-      val tRef = ctx.addReferenceObj("lrTab", tab, "long[]")
-      nullSafeCodeGen(ctx, ev, (a, b, c) =>
-        s"${ev.value} = graft.plans.TextExpressions.lrSigmoidCompute($a, $b, $c, $wRef, $tRef, $step);")
-    }
-
-    override protected def withNewChildrenInternal(
-        newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-      copy(first = newFirst, second = newSecond, third = newThird)
-  }
+  private def requireTable(tab: Array[Long], step: Int): Unit =
+    require(tab.length % 2 == 1 && step >= 1, "lr_sigmoid: need an odd-length table, step >= 1")
 
   def lrSigmoidNative(x1m: Column, x2m: Column, x3m: Column,
-      w: Array[Long], tab: Array[Long], step: Int): Column =
-    ColumnBridge.column(LrSigmoidExpr(ColumnBridge.expression(x1m),
-      ColumnBridge.expression(x2m), ColumnBridge.expression(x3m), w, tab, step))
+      w: Array[Long], tab: Array[Long], step: Int): Column = {
+    require(w.length == 4, "lr_sigmoid: need 4 weights")
+    requireTable(tab, step)
+    Kernel.column(Kernel.call(this, "lrSigmoidCompute", LongType,
+      Seq(expr(x1m), expr(x2m), expr(x3m), Kernel.const(w), Kernel.const(tab), Literal(step))))
+  }
 
-  /** Vector form of [[lrSigmoidCompute]] for the hashed-n-gram model:
-    * z = (w(0)·1e6 + Σ_b w(b+1)·xs(b)) DIV 1e6, then the same clamped
-    * table interpolation. Magnitude contract: |w| ≤ ~1e8 after
-    * training and xs ≤ 1e6 micro, so each term ≤ 1e14 and the 129-term
-    * sum ≤ ~1.3e16 ≪ 2^63 — exact in long arithmetic.
+  /** Vector form of [[lrSigmoidCompute]] for the hashed-n-gram model,
+    * over an `array<long>` micro-unit feature column (weights = bias
+    * +: per-bucket): z = (w(0)·1e6 + Σ_b w(b+1)·xs(b)) DIV 1e6, then
+    * the same clamped table interpolation. Serves the hashed-n-gram
+    * quality classifier's training loop (20 passes) and scorer without
+    * any interpreted HOF lambda in the hot path. Magnitude contract:
+    * |w| ≤ ~1e8 after training and xs ≤ 1e6 micro, so each term ≤
+    * 1e14 and the 129-term sum ≤ ~1.3e16 ≪ 2^63 — exact in long
+    * arithmetic.
     */
   def lrSigmoidVecCompute(xs: ArrayData, w: Array[Long], tab: Array[Long],
       step: Int): Long = {
-    val half = (tab.length - 1) / 2
-    val lo = -half.toLong * step
-    val hi = half.toLong * step - 1
     var s = w(0) * 1000000L
     var i = 0
     val n = xs.numElements()
     while (i < n) { s += w(i + 1) * xs.getLong(i); i += 1 }
-    val z = Math.floorDiv(s, 1000000L)
-    val zc = if (z < lo) lo else if (z > hi) hi else z
-    val off = zc - lo
-    val idx = (off / step).toInt
-    val frac = off % step
-    tab(idx) + (tab(idx + 1) - tab(idx)) * frac / step
-  }
-
-  /** [[LrSigmoidExpr]]'s dense-feature-array sibling — one codegen'd
-    * node over an `array<long>` micro-unit feature column, weights
-    * (bias +: per-bucket) and table as reference objects. Serves the
-    * hashed-n-gram quality classifier's training loop (20 passes) and
-    * scorer without any interpreted HOF lambda in the hot path.
-    */
-  case class LrSigmoidVecExpr(child: Expression, w: Array[Long],
-      tab: Array[Long], step: Int) extends UnaryExpression {
-    require(w.length >= 2 && tab.length % 2 == 1 && step >= 1,
-      "lr_sigmoid_vec: need bias + at least one weight, an odd-length table, step >= 1")
-    override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(org.apache.spark.sql.types.LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"lr_sigmoid_vec expects array<long>, got $other")
-    }
-
-    override def nullSafeEval(a: Any): Any =
-      lrSigmoidVecCompute(a.asInstanceOf[ArrayData], w, tab, step)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val wRef = ctx.addReferenceObj("lrVecW", w, "long[]")
-      val tRef = ctx.addReferenceObj("lrVecTab", tab, "long[]")
-      nullSafeCodeGen(ctx, ev, a =>
-        s"${ev.value} = graft.plans.TextExpressions.lrSigmoidVecCompute($a, $wRef, $tRef, $step);")
-    }
-
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+    sigmoidMicros(s, tab, step)
   }
 
   def lrSigmoidVecNative(xs: Column, w: Array[Long], tab: Array[Long],
-      step: Int): Column =
-    ColumnBridge.column(LrSigmoidVecExpr(ColumnBridge.expression(xs), w, tab, step))
+      step: Int): Column = {
+    require(w.length >= 2, "lr_sigmoid_vec: need bias + at least one weight")
+    requireTable(tab, step)
+    Kernel.column(Kernel.call(this, "lrSigmoidVecCompute", LongType,
+      Seq(expr(xs), Kernel.const(w), Kernel.const(tab), Literal(step))))
+  }
 
-  /** Static entry point referenced from generated code. Null for an
+  /** The hashed-n-gram feature histogram of one document as ONE node:
+    * per token and per adjacent token bigram, the md5-hex32 % nb
+    * bucket, counted into an nb-long histogram and normalized to
+    * round-half-up micro-units of the feature total. Replaces the
+    * explode → groupBy(doc, bucket) → groupBy(doc) map-rebuild
+    * pipeline (two corpus shuffles plus a self-join of documents) the
+    * n-gram classifier's feature build used — the md5 work per feature
+    * is unchanged, but no feature row ever leaves its document's task.
+    * Bit-identical to the aggregation form: bucket = first 8 md5 hex
+    * chars as unsigned int mod nb (CorpusOps.bucket), value =
+    * rhu(count·1e6, total-features), absent buckets 0. Null for an
     * empty token array (no features — mirrors the explode/inner-join
     * shape, which drops such a doc; a `split` output is never empty,
     * so the branch is defensive).
@@ -809,43 +654,10 @@ object TextExpressions {
     ArrayData.toArrayData(out)
   }
 
-  /** The hashed-n-gram feature histogram of one document as ONE node:
-    * per token and per adjacent token bigram, the md5-hex32 % nb
-    * bucket, counted into an nb-long histogram and normalized to
-    * round-half-up micro-units of the feature total. Replaces the
-    * explode → groupBy(doc, bucket) → groupBy(doc) map-rebuild
-    * pipeline (two corpus shuffles plus a self-join of documents) the
-    * n-gram classifier's feature build used — the md5 work per feature
-    * is unchanged, but no feature row ever leaves its document's task.
-    * Bit-identical to the aggregation form: bucket = first 8 md5 hex
-    * chars as unsigned int mod nb (CorpusOps.bucket), value =
-    * rhu(count·1e6, total-features), absent buckets 0.
-    */
-  case class NgramBucketMicrosExpr(child: Expression, nb: Int) extends UnaryExpression {
+  def ngramBucketMicrosNative(toks: Column, nb: Int): Column = {
     require(nb >= 1, s"ngram_bucket_micros: nb must be >= 1, got $nb")
-    override def dataType: DataType =
-      ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-    override def nullable: Boolean = true
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"ngram_bucket_micros expects array<string>, got $other")
-    }
-
-    override def nullSafeEval(a: Any): Any =
-      ngramBucketMicrosCompute(a.asInstanceOf[ArrayData], nb)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => s"""
-        |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-        |  graft.plans.TextExpressions.ngramBucketMicrosCompute($a, $nb);
-        |${ev.isNull} = ${ev.value} == null;
-        |""".stripMargin)
-
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+    Kernel.column(Kernel.call(this, "ngramBucketMicrosCompute",
+      ArrayType(LongType, containsNull = false), Seq(expr(toks), Literal(nb)),
+      nullableResult = true))
   }
-
-  def ngramBucketMicrosNative(toks: Column, nb: Int): Column =
-    ColumnBridge.column(NgramBucketMicrosExpr(ColumnBridge.expression(toks), nb))
 }

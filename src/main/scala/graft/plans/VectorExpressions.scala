@@ -1,22 +1,23 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Divide, Expression, Literal, Multiply}
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StructField, StructType}
 
-/** Native Catalyst expressions for dense-vector math.
+import graft.plans.Kernel.expr
+
+/** Native kernels for dense-vector math (the [[Kernel]] shape).
   *
   * Why not `zip_with`/`aggregate` or an unrolled `element_at` sum:
   * pair-join hot paths (all-pairs dedup, ANN scoring) evaluate the
-  * similarity inside a BroadcastNestedLoopJoin *condition*, which Spark
-  * executes with the interpreted evaluator — a higher-order-function
-  * lambda or a 64-term expression tree costs microseconds per pair
-  * there. These expressions evaluate as ONE node running a tight
-  * primitive loop (~100 ns), a ~50× win measured at sf0.1.
+  * similarity inside a BroadcastNestedLoopJoin *condition* and a
+  * higher-order-function lambda or a 64-term expression tree costs
+  * microseconds per pair there. These kernels evaluate as ONE node
+  * running a tight primitive loop (~100 ns), a ~50× win measured at
+  * sf0.1.
   *
   * Accumulation order is left-to-right from 0.0, bit-identical to the
   * `aggregate`-fold and unrolled-sum forms (and to the DuckDB oracle's
@@ -26,117 +27,186 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   */
 object VectorExpressions {
 
-  private def elemIsFloat(t: DataType): Boolean = t match {
+  private def isFloatArray(t: DataType): Boolean = t match {
     case ArrayType(FloatType, _) => true
     case ArrayType(DoubleType, _) => false
     case other => throw new IllegalArgumentException(s"expected array<float|double>, got $other")
   }
 
-  private def vectorTypeCheck(name: String, types: DataType*): TypeCheckResult = {
-    val bad = types.collectFirst {
-      case t if !t.isInstanceOf[ArrayType] ||
-        (t.asInstanceOf[ArrayType].elementType != FloatType &&
-          t.asInstanceOf[ArrayType].elementType != DoubleType) => t
-    }
-    bad match {
-      case Some(t) =>
-        TypeCheckResult.TypeCheckFailure(s"$name expects array<float> or array<double>, got $t")
-      case None if types.distinct.lengthCompare(1) > 0 =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$name expects both arguments to have the same element type, got ${types.mkString(" vs ")}")
-      case None => TypeCheckResult.TypeCheckSuccess
-    }
+  private def isVector(t: DataType): Boolean = t match {
+    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
+    case _ => false
   }
 
-  private def lengthMismatch(name: String, n1: Int, n2: Int): Nothing =
-    throw new IllegalArgumentException(s"$name: vector length mismatch ($n1 vs $n2)")
+  private def vectorTypeError(name: String, types: DataType*): Option[String] =
+    types.find(!isVector(_)) match {
+      case Some(t) => Some(s"$name expects array<float> or array<double>, got $t")
+      case None if types.distinct.lengthCompare(1) > 0 =>
+        Some(s"$name expects both arguments to have the same element type, got ${types.mkString(" vs ")}")
+      case None => None
+    }
+
+  private def checkLengths(name: String, n1: Int, n2: Int): Unit =
+    if (n1 != n2) throw new IllegalArgumentException(s"$name: vector length mismatch ($n1 vs $n2)")
+
+  // ---- kernels ----
+
+  /** Σ xᵢ·yᵢ in double precision, elements widened per side. */
+  private def dot(name: String, x: ArrayData, y: ArrayData, xFloat: Boolean,
+      yFloat: Boolean): Double = {
+    val n = x.numElements()
+    checkLengths(name, n, y.numElements())
+    var s = 0.0
+    var i = 0
+    if (xFloat && yFloat) while (i < n) { s += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
+    else if (xFloat) while (i < n) { s += x.getFloat(i).toDouble * y.getDouble(i); i += 1 }
+    else if (yFloat) while (i < n) { s += x.getDouble(i) * y.getFloat(i).toDouble; i += 1 }
+    else while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
+    s
+  }
+
+  /** `graft_dot`: both sides share one element type (checked at analysis). */
+  def dotCompute(x: ArrayData, y: ArrayData, isFloat: Boolean): Double =
+    dot("graft_dot", x, y, isFloat, isFloat)
+
+  def widenedDotCompute(x: ArrayData, y: ArrayData, xFloat: Boolean, yFloat: Boolean): Double =
+    dot("graft_widened_dot", x, y, xFloat, yFloat)
+
+  def l2NormCompute(x: ArrayData, isFloat: Boolean): Double = {
+    val n = x.numElements()
+    var s = 0.0
+    var i = 0
+    if (isFloat) while (i < n) { val e = x.getFloat(i).toDouble; s += e * e; i += 1 }
+    else while (i < n) { val e = x.getDouble(i); s += e * e; i += 1 }
+    math.sqrt(s)
+  }
+
+  def longDotCompute(x: ArrayData, y: ArrayData): Long = {
+    val n = x.numElements()
+    checkLengths("graft_long_dot", n, y.numElements())
+    var s = 0L
+    var i = 0
+    while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
+    s
+  }
+
+  /** All band signatures of a float vector — see [[HyperplaneSigs]]. */
+  def hyperplaneSigsCompute(x: ArrayData, weights: Array[Array[Long]], bitsPerBand: Int): ArrayData = {
+    val dim = weights(0).length
+    checkLengths("graft_hyperplane_sigs", dim, x.numElements())
+    val q = new Array[Long](dim)
+    var i = 0
+    while (i < dim) { q(i) = math.floor(x.getFloat(i).toDouble * 1e6).toLong; i += 1 }
+    val bands = weights.length / bitsPerBand
+    val sigs = new Array[Long](bands)
+    var b = 0
+    while (b < bands) {
+      var sig = 0L
+      var j = 0
+      while (j < bitsPerBand) {
+        val w = weights(b * bitsPerBand + j)
+        var s = 0L
+        var k = 0
+        while (k < dim) { s += q(k) * w(k); k += 1 }
+        if (s >= 0) sig |= 1L << j
+        j += 1
+      }
+      sigs(b) = sig
+      b += 1
+    }
+    new GenericArrayData(sigs)
+  }
+
+  // ---- expressions ----
 
   /** Σ aᵢ·bᵢ in double precision. Both inputs must be arrays of the
     * same float/double element type and equal length (analysis-time
     * type check; runtime length check) — the SQL-facing `graft_dot`
     * would otherwise silently read garbage on mixed inputs.
     */
-  case class DotProductExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
+  case class Dot(left: Expression, right: Expression)
+      extends Kernel.Function with BinaryLike[Expression] {
+    override def prettyName: String = "graft_dot"
     override def dataType: DataType = DoubleType
-    private lazy val isFloat = elemIsFloat(left.dataType)
-
-    override def checkInputDataTypes(): TypeCheckResult =
-      vectorTypeCheck("graft_dot", left.dataType, right.dataType)
-
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = x.numElements()
-      if (y.numElements() != n) lengthMismatch("graft_dot", n, y.numElements())
-      var s = 0.0
-      var i = 0
-      if (isFloat) while (i < n) { s += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
-      else while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
-      s
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val get = if (isFloat) "getFloat" else "getDouble"
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        s"""
-           |int $n = $a.numElements();
-           |if ($b.numElements() != $n) {
-           |  throw new IllegalArgumentException(
-           |    "graft_dot: vector length mismatch (" + $n + " vs " + $b.numElements() + ")");
-           |}
-           |${ev.value} = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  ${ev.value} += (double) $a.$get($i) * (double) $b.$get($i);
-           |}
-         """.stripMargin
-      })
-    }
-
+    override protected def typeError: Option[String] =
+      vectorTypeError(prettyName, left.dataType, right.dataType)
+    override lazy val replacement: Expression = Kernel.call(VectorExpressions, "dotCompute", dataType,
+      Seq(left, right, Literal(isFloatArray(left.dataType))))
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
   }
 
   /** ‖a‖₂ in double precision. */
-  case class L2NormExpr(child: Expression) extends UnaryExpression {
+  case class L2Norm(child: Expression) extends Kernel.Function with UnaryLike[Expression] {
+    override def prettyName: String = "graft_l2norm"
     override def dataType: DataType = DoubleType
-    private lazy val isFloat = elemIsFloat(child.dataType)
-
-    override def checkInputDataTypes(): TypeCheckResult =
-      vectorTypeCheck("graft_l2norm", child.dataType)
-
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val n = x.numElements()
-      var s = 0.0
-      var i = 0
-      if (isFloat) while (i < n) { val e = x.getFloat(i).toDouble; s += e * e; i += 1 }
-      else while (i < n) { val e = x.getDouble(i); s += e * e; i += 1 }
-      math.sqrt(s)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val get = if (isFloat) "getFloat" else "getDouble"
-      nullSafeCodeGen(ctx, ev, a => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val s = ctx.freshName("s")
-        val e = ctx.freshName("e")
-        s"""
-           |int $n = $a.numElements();
-           |double $s = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double $e = (double) $a.$get($i);
-           |  $s += $e * $e;
-           |}
-           |${ev.value} = java.lang.Math.sqrt($s);
-         """.stripMargin
-      })
-    }
-
+    override protected def typeError: Option[String] = vectorTypeError(prettyName, child.dataType)
+    override lazy val replacement: Expression = Kernel.call(VectorExpressions, "l2NormCompute", dataType,
+      Seq(child, Literal(isFloatArray(child.dataType))))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  }
+
+  /** cos(a, b) = dot(a, b) / (‖a‖·‖b‖). */
+  case class Cosine(left: Expression, right: Expression)
+      extends Kernel.Function with BinaryLike[Expression] {
+    override def prettyName: String = "graft_cosine"
+    override def dataType: DataType = DoubleType
+    override protected def typeError: Option[String] =
+      vectorTypeError(prettyName, left.dataType, right.dataType)
+    override lazy val replacement: Expression =
+      Divide(Dot(left, right), Multiply(L2Norm(left), L2Norm(right)))
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+      copy(left = l, right = r)
+  }
+
+  /** Σ aᵢ·bᵢ over two `array<bigint>` in LONG arithmetic — the SQ8
+    * candidate-scan kernel. Exact integer math (engine-portable by
+    * construction — no rounding question at all), codegen'd so the
+    * quantized corpus scan runs inside whole-stage codegen instead of
+    * an interpreted higher-order-function fold.
+    */
+  case class LongDot(left: Expression, right: Expression)
+      extends Kernel.Function with BinaryLike[Expression] {
+    override def prettyName: String = "graft_long_dot"
+    override def dataType: DataType = LongType
+    override protected def typeError: Option[String] =
+      if (Seq(left.dataType, right.dataType).forall {
+        case ArrayType(LongType, _) => true
+        case _ => false
+      }) None
+      else Some(s"$prettyName expects array<bigint> on both sides, " +
+        s"got ${left.dataType} vs ${right.dataType}")
+    override lazy val replacement: Expression = Kernel.call(VectorExpressions, "longDotCompute", dataType,
+      Seq(left, right))
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+      copy(left = l, right = r)
+  }
+
+  /** Σ aᵢ·bᵢ with PER-SIDE widening: each side may independently be
+    * array<float> or array<double>, every element widens to double
+    * before the multiply, accumulation in array order — bit-identical
+    * to the `aggregate(zip_with(a, b, x.cast(double)·y), 0.0, +)`
+    * HOF it replaces at the anchor-scoring sites (float corpus ×
+    * trained double anchors). WHY it exists: higher-order-function
+    * lambdas evaluate INTERPRETED, and anchor scoring runs them at
+    * corpus × |anchors| volume — the r13 slice bench measured
+    * q_semdedup_kmeans at 4.4× its deterministic-anchor twin purely
+    * on that interpreter overhead. The same-type [[Dot]] stays strict
+    * by design (the SQL-facing graft_dot must not silently mix
+    * widths); this variant NAMES the widening.
+    */
+  case class WidenedDot(left: Expression, right: Expression)
+      extends Kernel.Function with BinaryLike[Expression] {
+    override def prettyName: String = "graft_widened_dot"
+    override def dataType: DataType = DoubleType
+    override protected def typeError: Option[String] =
+      if (isVector(left.dataType) && isVector(right.dataType)) None
+      else Some(s"$prettyName expects array<float|double> on each side, " +
+        s"got ${left.dataType.catalogString} vs ${right.dataType.catalogString}")
+    override lazy val replacement: Expression = Kernel.call(VectorExpressions, "widenedDotCompute", dataType,
+      Seq(left, right, Literal(isFloatArray(left.dataType)), Literal(isFloatArray(right.dataType))))
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+      copy(left = l, right = r)
   }
 
   /** All random-hyperplane LSH band signatures of a float vector, in
@@ -151,230 +221,47 @@ object VectorExpressions {
     * taken on an integer sum — no floating-point accumulation order
     * can ever flip a bit between engines.
     */
-  case class HyperplaneSigsExpr(child: Expression, weights: Array[Array[Long]], bitsPerBand: Int)
-      extends UnaryExpression {
+  case class HyperplaneSigs(child: Expression, weights: Array[Array[Long]], bitsPerBand: Int)
+      extends Kernel.Function with UnaryLike[Expression] {
     require(weights.nonEmpty && weights.length % bitsPerBand == 0,
       s"plane count ${weights.length} must be a positive multiple of bitsPerBand=$bitsPerBand")
-    private val bands = weights.length / bitsPerBand
-    private val dim = weights(0).length
-
+    override def prettyName: String = "graft_hyperplane_sigs"
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_hyperplane_sigs expects array<float>, got $other")
+    override protected def typeError: Option[String] = child.dataType match {
+      case ArrayType(FloatType, _) => None
+      case other => Some(s"$prettyName expects array<float>, got $other")
     }
-
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      if (x.numElements() != dim) lengthMismatch("graft_hyperplane_sigs", dim, x.numElements())
-      val q = new Array[Long](dim)
-      var i = 0
-      while (i < dim) { q(i) = math.floor(x.getFloat(i).toDouble * 1e6).toLong; i += 1 }
-      val sigs = new Array[Long](bands)
-      var b = 0
-      while (b < bands) {
-        var sig = 0L
-        var j = 0
-        while (j < bitsPerBand) {
-          val w = weights(b * bitsPerBand + j)
-          var s = 0L
-          var k = 0
-          while (k < dim) { s += q(k) * w(k); k += 1 }
-          if (s >= 0) sig |= 1L << j
-          j += 1
-        }
-        sigs(b) = sig
-        b += 1
-      }
-      new GenericArrayData(sigs)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val wRef = ctx.addReferenceObj("planeWeights", weights, "long[][]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val q = ctx.freshName("q")
-        val sigs = ctx.freshName("sigs")
-        val sig = ctx.freshName("sig")
-        val b = ctx.freshName("b")
-        val j = ctx.freshName("j")
-        val k = ctx.freshName("k")
-        val s = ctx.freshName("s")
-        val w = ctx.freshName("w")
-        s"""
-           |if ($a.numElements() != $dim) {
-           |  throw new IllegalArgumentException(
-           |    "graft_hyperplane_sigs: vector length mismatch ($dim vs " + $a.numElements() + ")");
-           |}
-           |long[] $q = new long[$dim];
-           |for (int $k = 0; $k < $dim; $k++) {
-           |  $q[$k] = (long) java.lang.Math.floor((double) $a.getFloat($k) * 1.0E6);
-           |}
-           |long[] $sigs = new long[$bands];
-           |for (int $b = 0; $b < $bands; $b++) {
-           |  long $sig = 0L;
-           |  for (int $j = 0; $j < $bitsPerBand; $j++) {
-           |    long[] $w = $wRef[$b * $bitsPerBand + $j];
-           |    long $s = 0L;
-           |    for (int $k = 0; $k < $dim; $k++) { $s += $q[$k] * $w[$k]; }
-           |    if ($s >= 0L) $sig |= 1L << $j;
-           |  }
-           |  $sigs[$b] = $sig;
-           |}
-           |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sigs);
-         """.stripMargin
-      })
-    }
-
+    override lazy val replacement: Expression = Kernel.call(VectorExpressions, "hyperplaneSigsCompute",
+      dataType, Seq(child, Kernel.const(weights), Literal(bitsPerBand)))
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  /** Σ aᵢ·bᵢ over two `array<bigint>` in LONG arithmetic — the SQ8
-    * candidate-scan kernel. Exact integer math (engine-portable by
-    * construction — no rounding question at all), codegen'd so the
-    * quantized corpus scan runs inside whole-stage codegen instead of
-    * an interpreted higher-order-function fold.
-    */
-  case class LongDotExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-
-    override def checkInputDataTypes(): TypeCheckResult = {
-      val ok = Seq(left.dataType, right.dataType).forall {
-        case ArrayType(LongType, _) => true
-        case _ => false
-      }
-      if (ok) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"graft_long_dot expects array<bigint> on both sides, " +
-          s"got ${left.dataType} vs ${right.dataType}")
-    }
-
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = x.numElements()
-      if (y.numElements() != n) lengthMismatch("graft_long_dot", n, y.numElements())
-      var s = 0L
-      var i = 0
-      while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
-      s
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        s"""
-           |int $n = $a.numElements();
-           |if ($b.numElements() != $n) {
-           |  throw new IllegalArgumentException(
-           |    "graft_long_dot: vector length mismatch (" + $n + " vs " + $b.numElements() + ")");
-           |}
-           |${ev.value} = 0L;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  ${ev.value} += $a.getLong($i) * $b.getLong($i);
-           |}
-         """.stripMargin
-      })
-
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-  }
-
-  /** Σ aᵢ·bᵢ with PER-SIDE widening: each side may independently be
-    * array<float> or array<double>, every element widens to double
-    * before the multiply, accumulation in array order — bit-identical
-    * to the `aggregate(zip_with(a, b, x.cast(double)·y), 0.0, +)`
-    * HOF it replaces at the anchor-scoring sites (float corpus ×
-    * trained double anchors). WHY it exists: higher-order-function
-    * lambdas evaluate INTERPRETED, and anchor scoring runs them at
-    * corpus × |anchors| volume — the r13 slice bench measured
-    * q_semdedup_kmeans at 4.4× its deterministic-anchor twin purely
-    * on that interpreter overhead. The same-type [[DotProductExpr]]
-    * stays strict by design (the SQL-facing graft_dot must not
-    * silently mix widths); this variant NAMES the widening.
-    */
-  case class WidenedDotExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    private def sideOk(t: DataType): Boolean = t match {
-      case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    private lazy val leftFloat = elemIsFloat(left.dataType)
-    private lazy val rightFloat = elemIsFloat(right.dataType)
-
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (sideOk(left.dataType) && sideOk(right.dataType)) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"graft_widened_dot expects array<float|double> on each side, " +
-          s"got ${left.dataType.catalogString} vs ${right.dataType.catalogString}")
-
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = x.numElements()
-      if (y.numElements() != n) lengthMismatch("graft_widened_dot", n, y.numElements())
-      var s = 0.0
-      var i = 0
-      while (i < n) {
-        val xv = if (leftFloat) x.getFloat(i).toDouble else x.getDouble(i)
-        val yv = if (rightFloat) y.getFloat(i).toDouble else y.getDouble(i)
-        s += xv * yv
-        i += 1
-      }
-      s
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val getL = if (leftFloat) "getFloat" else "getDouble"
-      val getR = if (rightFloat) "getFloat" else "getDouble"
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        s"""
-           |int $n = $a.numElements();
-           |if ($b.numElements() != $n) {
-           |  throw new IllegalArgumentException(
-           |    "graft_widened_dot: vector length mismatch (" + $n + " vs " + $b.numElements() + ")");
-           |}
-           |${ev.value} = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  ${ev.value} += (double) $a.$getL($i) * (double) $b.$getR($i);
-           |}
-         """.stripMargin
-      })
-    }
-
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-  }
-
   def widenedDotNative(a: Column, b: Column): Column =
-    ColumnBridge.column(WidenedDotExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+    Kernel.column(WidenedDot(expr(a), expr(b)))
 
-  def longDotNative(a: Column, b: Column): Column =
-    ColumnBridge.column(LongDotExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  def longDotNative(a: Column, b: Column): Column = Kernel.column(LongDot(expr(a), expr(b)))
 
-  def dotNative(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProductExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  def dotNative(a: Column, b: Column): Column = Kernel.column(Dot(expr(a), expr(b)))
 
   /** Band signatures for `bands × bitsPerBand` md5-derived hyperplanes
     * over a `dim`-dimensional float vector (plane seeds start at 0).
     */
   def hyperplaneSigsNative(v: Column, bands: Int, bitsPerBand: Int, dim: Int): Column =
-    ColumnBridge.column(HyperplaneSigsExpr(
-      ColumnBridge.expression(v),
-      graft.functions.Vectors.hyperplaneWeights(bands * bitsPerBand, dim),
-      bitsPerBand))
+    Kernel.column(HyperplaneSigs(expr(v),
+      graft.functions.Vectors.hyperplaneWeights(bands * bitsPerBand, dim), bitsPerBand))
 
-  def normNative(a: Column): Column =
-    ColumnBridge.column(L2NormExpr(ColumnBridge.expression(a)))
+  def normNative(a: Column): Column = Kernel.column(L2Norm(expr(a)))
 
   def cosineNative(a: Column, aNorm: Column, b: Column, bNorm: Column): Column =
     dotNative(a, b) / (aNorm * bNorm)
+
+  // ---- greedy MMR ----
+
+  private val mmrItemType = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("rel_micro", LongType, nullable = false),
+    StructField("maxsim_micro", LongType, nullable = false),
+    StructField("score_pm", LongType, nullable = false)))
 
   /** GREEDY MMR selection over one probe's BOUNDED candidate list —
     * maximal marginal relevance (Carbonell & Goldstein 1998):
@@ -388,115 +275,78 @@ object VectorExpressions {
     * Inputs: `cands` = array<struct<doc_id long, relm long>> (≤ k per
     * probe — the fused top-k, corpus-free), `pairs` = array<struct<a
     * long, b long, simm long>> with a < b covering every candidate
-    * pair. One interpreted node per PROBE row (≤ probes rows total —
-    * never a hot path; the k² loop is ~100 ops), the ChunkHashesExpr
-    * stance: a tight JVM loop beats a giant HOF tree whose plan alone
-    * would dwarf the work.
+    * pair. A null `cands` gives null; a null `pairs` means "no
+    * similarities" (a probe with < 2 candidates has no pair rows), not
+    * "no answer". One call per PROBE row (≤ probes rows total — never
+    * a hot path; the k² loop is ~100 ops): a tight JVM loop beats a
+    * giant HOF tree whose plan alone would dwarf the work.
     */
-  case class MmrSelectExpr(cands: Expression, pairs: Expression, lambdaMicro: Long)
-      extends BinaryExpression
-      with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-    require(lambdaMicro >= 0L && lambdaMicro <= 1000000L,
-      s"mmr lambda must be in micro-units [0, 1e6], got $lambdaMicro")
-
-    override def left: Expression = cands
-    override def right: Expression = pairs
-
-    private val itemType = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("rel_micro", LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("maxsim_micro", LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("score_pm", LongType, nullable = false)))
-
-    override def dataType: DataType = ArrayType(itemType, containsNull = false)
-
-    override def checkInputDataTypes(): TypeCheckResult = (cands.dataType, pairs.dataType) match {
-      case (ArrayType(c: org.apache.spark.sql.types.StructType, _),
-            ArrayType(p: org.apache.spark.sql.types.StructType, _))
-        if c.fields.length == 2 && p.fields.length == 3 &&
-          c.fields.forall(_.dataType == LongType) && p.fields.forall(_.dataType == LongType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"mmr_select expects (array<struct<long,long>>, array<struct<long,long,long>>), got $other")
+  def mmrSelectCompute(cands: ArrayData, pairs: ArrayData, lambdaMicro: Long): ArrayData = {
+    if (cands == null) return null
+    val n = cands.numElements()
+    val ids = new Array[Long](n)
+    val rel = new Array[Long](n)
+    var i = 0
+    while (i < n) {
+      val r = cands.getStruct(i, 2)
+      ids(i) = r.getLong(0); rel(i) = r.getLong(1)
+      i += 1
     }
-
-    // a probe with < 2 candidates legitimately has NO pair rows — a
-    // null pairs input means "no similarities", not "no answer"
-    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-      val cv = cands.eval(input)
-      if (cv == null) null
-      else nullSafeEval(cv,
-        Option(pairs.eval(input)).getOrElse(new GenericArrayData(Array.empty[Any])))
+    val sim = new java.util.HashMap[Long, java.util.HashMap[Long, Long]]()
+    def put(x: Long, y: Long, s: Long): Unit = {
+      val m = sim.computeIfAbsent(x, _ => new java.util.HashMap[Long, Long]())
+      m.put(y, s)
     }
-
-    override def nullSafeEval(cv: Any, pv: Any): Any = {
-      val cs = cv.asInstanceOf[ArrayData]
-      val ps = pv.asInstanceOf[ArrayData]
-      val n = cs.numElements()
-      val ids = new Array[Long](n)
-      val rel = new Array[Long](n)
-      var i = 0
-      while (i < n) {
-        val r = cs.getStruct(i, 2)
-        ids(i) = r.getLong(0); rel(i) = r.getLong(1)
-        i += 1
-      }
-      val sim = new java.util.HashMap[Long, java.util.HashMap[Long, Long]]()
-      def put(x: Long, y: Long, s: Long): Unit = {
-        val m = sim.computeIfAbsent(x, _ => new java.util.HashMap[Long, Long]())
-        m.put(y, s)
-      }
-      i = 0
-      while (i < ps.numElements()) {
-        val r = ps.getStruct(i, 3)
-        put(r.getLong(0), r.getLong(1), r.getLong(2))
-        put(r.getLong(1), r.getLong(0), r.getLong(2))
-        i += 1
-      }
-      val lam1 = 1000000L - lambdaMicro
-      val taken = new Array[Boolean](n)
-      val out = new Array[Any](n)
-      var step = 0
-      while (step < n) {
-        var bestIdx = -1; var bestScore = 0L; var bestMs = 0L
-        var c = 0
-        while (c < n) {
-          if (!taken(c)) {
-            // maxsim is clamped at 0: a negatively-similar selected
-            // item exerts no diversity penalty (mirrored in the oracle)
-            var ms = 0L
-            val m = sim.get(ids(c))
-            var s = 0
-            while (s < n) {
-              if (taken(s) && m != null) {
-                val v = m.getOrDefault(ids(s), 0L)
-                if (v > ms) ms = v
-              }
-              s += 1
+    i = 0
+    while (pairs != null && i < pairs.numElements()) {
+      val r = pairs.getStruct(i, 3)
+      put(r.getLong(0), r.getLong(1), r.getLong(2))
+      put(r.getLong(1), r.getLong(0), r.getLong(2))
+      i += 1
+    }
+    val lam1 = 1000000L - lambdaMicro
+    val taken = new Array[Boolean](n)
+    val out = new Array[Any](n)
+    var step = 0
+    while (step < n) {
+      var bestIdx = -1; var bestScore = 0L; var bestMs = 0L
+      var c = 0
+      while (c < n) {
+        if (!taken(c)) {
+          // maxsim is clamped at 0: a negatively-similar selected
+          // item exerts no diversity penalty (mirrored in the oracle)
+          var ms = 0L
+          val m = sim.get(ids(c))
+          var s = 0
+          while (s < n) {
+            if (taken(s) && m != null) {
+              val v = m.getOrDefault(ids(s), 0L)
+              if (v > ms) ms = v
             }
-            val score = lambdaMicro * rel(c) - lam1 * ms
-            if (bestIdx < 0 || score > bestScore ||
-              (score == bestScore && ids(c) < ids(bestIdx))) {
-              bestIdx = c; bestScore = score; bestMs = ms
-            }
+            s += 1
           }
-          c += 1
+          val score = lambdaMicro * rel(c) - lam1 * ms
+          if (bestIdx < 0 || score > bestScore ||
+            (score == bestScore && ids(c) < ids(bestIdx))) {
+            bestIdx = c; bestScore = score; bestMs = ms
+          }
         }
-        taken(bestIdx) = true
-        out(step) = org.apache.spark.sql.catalyst.InternalRow(
-          ids(bestIdx), rel(bestIdx), bestMs, bestScore)
-        step += 1
+        c += 1
       }
-      new GenericArrayData(out)
+      taken(bestIdx) = true
+      out(step) = InternalRow(ids(bestIdx), rel(bestIdx), bestMs, bestScore)
+      step += 1
     }
-
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(cands = l, pairs = r)
+    new GenericArrayData(out)
   }
 
   /** `mmrSelect(cands, pairs, λ_micro)`: the greedy MMR pick order as
     * array<struct<doc_id, rel_micro, maxsim_micro, score_pm>>. */
-  def mmrSelect(cands: Column, pairs: Column, lambdaMicro: Long): Column =
-    ColumnBridge.column(MmrSelectExpr(ColumnBridge.expression(cands),
-      ColumnBridge.expression(pairs), lambdaMicro))
+  def mmrSelect(cands: Column, pairs: Column, lambdaMicro: Long): Column = {
+    require(lambdaMicro >= 0L && lambdaMicro <= 1000000L,
+      s"mmr lambda must be in micro-units [0, 1e6], got $lambdaMicro")
+    Kernel.column(Kernel.call(this, "mmrSelectCompute", ArrayType(mmrItemType, containsNull = false),
+      Seq(expr(cands), expr(pairs), Literal(lambdaMicro)),
+      nullableResult = true, propagateNull = false))
+  }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * applies unchanged.
   *
   * Band keys are bit-for-bit the batch Column pipeline's (band, sig)
-  * keys ([[graft.plans.VectorExpressions.HyperplaneSigsExpr]]): the
+  * keys ([[graft.plans.VectorExpressions.hyperplaneSigsCompute]]): the
   * vector is floor-quantized to integers, projected onto the SAME
   * md5-derived integer hyperplanes
   * ([[graft.functions.Vectors.hyperplaneWeights]]), and the sign of an
@@ -51,7 +51,7 @@ object EmbDedupStream {
       _ => graft.functions.Vectors.hyperplaneWeights(Bands * bits, Dim))
 
   /** JVM-side mirror of the batch
-    * [[graft.plans.VectorExpressions.HyperplaneSigsExpr]] band keys:
+    * [[graft.plans.VectorExpressions.hyperplaneSigsCompute]] band keys:
     * `band:sig` strings over the identical integer arithmetic
     * (floor(x·10⁶) quantization, integer plane dots, sign bits packed
     * low-to-high). Band index is part of the key, so the Bands keys of

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * job, exactly like faiss `train` → `add`), and each arriving
   * vector is scored against every anchor with the SAME arithmetic
   * as the batch assignment: left-to-right widened float×double dot
-  * (the [[graft.plans.VectorExpressions.WidenedDotExpr]] eval loop,
+  * (the [[graft.plans.VectorExpressions.widenedDotCompute]] loop,
   * replicated verbatim), ÷ the vector's L2 norm, rounded to 6
   * decimals (portable mode), argmax with ties to the LOWEST cell —
   * the repo-wide assignment decision contract. IvfAssignStreamSpec

@@ -18,17 +18,17 @@ class AuditBaselineSpec extends AnyFunSuite {
 
   /** query → marker → max allowed evaluation sites. */
   private val Adjudicated: Map[String, Map[String, Int]] = Map(
-    "q_ann_lsh" -> Map("hyperplanesigsexpr" -> 2),         // probe × corpus two-input
+    "q_ann_lsh" -> Map("hyperplanesigscompute" -> 2),      // probe × corpus two-input
     "q_boilerplate" -> Map("shinglepostingsgen" -> 2),     // agg-consumer re-eval beats barrier (measured)
     "q_cdc_incremental_view" -> Map("md5(" -> 3),          // base/delta two-input + op tags
-    "q_chunk_dedup" -> Map("chunkhashesexpr" -> 2),        // df agg + join side
+    "q_chunk_dedup" -> Map("chunkhashescompute" -> 2),     // df agg + join side
     "q_contamination" -> Map("shinglepostingsgen" -> 2, "md5(" -> 2), // bench × train
     "q_dedup_incremental" -> Map("shinglepostingsgen" -> 3, "md5(" -> 2), // old/new/pair inputs
-    "q_dedup_minhash" -> Map("shinglesexpr" -> 2, "md5(" -> 3), // survivor-bounded verify
+    "q_dedup_minhash" -> Map("shinglescompute" -> 2, "md5(" -> 3), // survivor-bounded verify
     "q_heavy_hitters" -> Map("md5(" -> 2),                 // sketch build + readout probe
-    "q_lm_bigram" -> Map("shinglesexpr" -> 3),             // model build + doc scoring
+    "q_lm_bigram" -> Map("shinglescompute" -> 3),          // model build + doc scoring
     "q_lsh_bucket_stats" -> Map("md5(" -> 3),              // per-row-cheap band keys
-    "q_minhash_est_error" -> Map("shinglesexpr" -> 2, "shinglepostingsgen" -> 2, "md5(" -> 6), // minhash baseline + est path
+    "q_minhash_est_error" -> Map("shinglescompute" -> 2, "shinglepostingsgen" -> 2, "md5(" -> 6), // minhash baseline + est path
     "q_minhash_recall" -> Map("shinglepostingsgen" -> 2, "md5(" -> 4), // truth + found pipelines
     "q_scd2_incremental" -> Map("md5(" -> 2),              // base/delta op tags
     // the shared-watermark slice feeds TWO per-table compactions
@@ -48,7 +48,7 @@ class AuditBaselineSpec extends AnyFunSuite {
     // flag evaluate once per side of the asymmetric candidate join,
     // plus the survivor-bounded exact-Jaccard verify — the
     // q_dedup_minhash adjudication shape with the two-branch flag
-    "q_contam_fuzzy" -> Map("shinglesexpr" -> 2, "md5(" -> 5),
+    "q_contam_fuzzy" -> Map("shinglescompute" -> 2, "md5(" -> 5),
     // base-state + delta two-input over ONE per-row-cheap projection
     // (normalized hash + bench flag): the base branch feeds both the
     // survivor pipeline and the dedup hash-state consumer, the delta

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{Geo, Hashing, Text, Vectors}
+import graft.functions.{Geo, Hashing, Text}
+import graft.plans.VectorExpressions
 
 class FunctionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -41,7 +42,9 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("cosine of identical vectors is 1") {
     val df = Seq((Seq(1.0f, 2.0f, 3.0f), Seq(1.0f, 2.0f, 3.0f))).toDF("a", "b")
-    val Array(c) = df.select(round(Vectors.cosine($"a", $"b"), 9)).as[Double].collect()
+    val Array(c) = df.select(round(VectorExpressions.cosineNative(
+      $"a", VectorExpressions.normNative($"a"), $"b", VectorExpressions.normNative($"b")), 9))
+      .as[Double].collect()
     assert(c === 1.0)
   }
 

@@ -30,15 +30,15 @@ class GraftFunctionsSpec extends AnyFunSuite {
     assert(row.getLong(1) === 0L)
     // interpreted path: direct Expression.eval never goes through
     // whole-stage codegen (a df.select would), so this genuinely pins
-    // nullSafeEval against the codegen result above
+    // the kernel's interpreted call against the codegen result above
     import graft.plans.VectorExpressions
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types.{ArrayType, LongType}
     def arr(xs: Seq[Long]) = Literal.create(xs, ArrayType(LongType))
-    assert(VectorExpressions.LongDotExpr(arr(Seq(1L, 2L, 3L)), arr(Seq(4L, 5L, 6L)))
-      .eval(null) === 32L)
-    assert(VectorExpressions.LongDotExpr(arr(Seq(127L, -127L, 3L)), arr(Seq(127L, 127L, 0L)))
-      .eval(null) === 0L)
+    assert(VectorExpressions.LongDot(arr(Seq(1L, 2L, 3L)), arr(Seq(4L, 5L, 6L)))
+      .replacement.eval(null) === 32L)
+    assert(VectorExpressions.LongDot(arr(Seq(127L, -127L, 3L)), arr(Seq(127L, 127L, 0L)))
+      .replacement.eval(null) === 0L)
     val err = intercept[Exception] {
       spark.sql("SELECT graft_long_dot(array(1L), array(1L, 2L))").collect()
     }
@@ -68,5 +68,56 @@ class GraftFunctionsSpec extends AnyFunSuite {
     val n = spark.sql(
       "SELECT count(*) FROM docs WHERE graft_clean_name(text) <> ''").collect()(0).getLong(0)
     assert(n > 0)
+  }
+
+  /** One sample call per native function, with its expected value. */
+  private val samples: Map[String, (String, Any)] = Map(
+    "graft_dot" -> ("graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))", 11.0),
+    "graft_l2norm" -> ("graft_l2norm(array(3.0D, 4.0D))", 5.0),
+    "graft_long_dot" -> ("graft_long_dot(array(2L, 3L), array(4L, 5L))", 23L),
+    "graft_cosine" -> ("graft_cosine(array(2.0F, 0.0F), array(3.0F, 0.0F))", 1.0),
+    "graft_hyperplane_sigs" -> ("size(graft_hyperplane_sigs(array(0.5F, -0.25F), 3, 4, 2))", 3),
+    "graft_char_entropy" -> ("round(graft_char_entropy('abab'), 9)", 1.0),
+    "graft_char_distinct" -> ("graft_char_distinct('café ca')", 5L),
+    "graft_winnow_fingerprints" -> ("size(graft_winnow_fingerprints('abcdef', 7, 1))", 0),
+    "graft_chunk_hashes" ->
+      ("graft_chunk_hashes(split('a b', ' '), 2, 1) = array(md5(cast('a b' AS BINARY)))", true))
+
+  test("register exposes every native function of the one table, and each evaluates from SQL") {
+    GraftFunctions.register(spark)
+    assert(samples.keySet === GraftFunctions.natives.map(_.name).toSet)
+    val reg = spark.sessionState.functionRegistry
+    GraftFunctions.natives.foreach { f =>
+      assert(reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(f.name)), f.name)
+    }
+    samples.foreach { case (name, (call, want)) =>
+      assert(spark.sql(s"SELECT $call v").collect()(0).get(0) === want, name)
+    }
+  }
+
+  private def nullLiteralFails(sql: String, fn: String, what: String): Unit = {
+    GraftFunctions.register(spark)
+    val err = intercept[Exception](spark.sql(sql).collect())
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .flatMap(e => Option(e.getMessage)).toSeq
+    assert(msgs.exists(_.contains(s"$fn $what must be literals")),
+      s"no function-named literal error in: ${msgs.mkString(" | ")}")
+    assert(!Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[NullPointerException]))
+  }
+
+  test("graft_chunk_hashes: a NULL literal argument fails with the function-named error") {
+    nullLiteralFails("SELECT graft_chunk_hashes(split('a b c', ' '), NULL, 2)",
+      "graft_chunk_hashes", "k/div")
+  }
+
+  test("graft_winnow_fingerprints: a NULL literal argument fails with the function-named error") {
+    nullLiteralFails("SELECT graft_winnow_fingerprints('abcdef', 3, NULL)",
+      "graft_winnow_fingerprints", "k/w")
+  }
+
+  test("graft_hyperplane_sigs: a NULL literal argument fails with the function-named error") {
+    nullLiteralFails("SELECT graft_hyperplane_sigs(array(0.5F, -0.25F), 2, NULL, 2)",
+      "graft_hyperplane_sigs", "bands/bitsPerBand/dim")
   }
 }

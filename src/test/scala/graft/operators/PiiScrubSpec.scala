@@ -108,10 +108,10 @@ class PiiScrubSpec extends AnyFunSuite {
   test("one evaluation site: the scrub struct stays materialized under CollapseProject") {
     val plan = PiiOps.piiRedact(spark, TestSpark.Sf)
       .queryExecution.executedPlan.toString
-    assert(plan.toLowerCase.contains("multipatternscrubexpr"))
+    assert(plan.toLowerCase.contains("multiscrubcompute"))
     // exactly one evaluation site (the audit-marker contract): the
     // multi-referenced non-cheap struct must not be inlined per field
-    val sites = "multipatternscrubexpr".r
+    val sites = "multiscrubcompute".r
       .findAllIn(plan.toLowerCase).size
     assert(sites <= 2, s"scrub expression appears at $sites plan sites")
   }

@@ -15,7 +15,10 @@
 # video codec specs (RleSpec, McSpec, GopSpec, XfSpec, DemuxSpec,
 # CodecPropertiesSpec, VideoCodecContractSpec), and the streaming
 # specs that commit through the upsert sink (TxnSnapshotStreamSpec,
-# CdcStreamSpec, StreamingConnectorE2ESpec, IvmConnectorE2ESpec). Use
+# CdcStreamSpec, StreamingConnectorE2ESpec, IvmConnectorE2ESpec), and
+# the native-kernel specs (KernelContractSpec, TextExpressionsSpec,
+# GraftFunctionsSpec, GraftExtensionsSpec, WinnowSpec, PiiScrubSpec,
+# AuditBaselineSpec, PlanGuardsSpec). Use
 # before END-OF-ROUND snapshots and after touching query plumbing.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -66,6 +69,15 @@ if grep -rnF --include='*.scala' -e 'missing or truncated strf' -e 'no keyframe 
 fi
 echo "PRECOMMIT OK: every AVI video codec goes through the shared strf check and idx1 seek in Avi.scala."
 
+# Native-kernel gate: a Catalyst kernel is a static method reached
+# through StaticInvoke (plans/Kernel.scala), so no main source may
+# hand-write generated Java: no doGenCode or nullSafeCodeGen body.
+if grep -rnE --include='*.scala' -e 'doGenCode|nullSafeCodeGen' src/main/scala/ >&2; then
+  echo "PRECOMMIT FAIL: hand-written codegen above bypasses the native-kernel shape — write the kernel once and reach it through plans.Kernel." >&2
+  exit 1
+fi
+echo "PRECOMMIT OK: every native kernel reaches codegen through StaticInvoke."
+
 # Bench gate (round-12 lesson: q_winnow_dedup reached the registry
 # without ever being benched and shipped a 615 s plan): every
 # registered query must have a per-query entry in bench_queries.json —
@@ -105,11 +117,11 @@ echo "PRECOMMIT OK: every registered query has a bench entry."
 #      that only min-of-2 absorbed). If any per-query p2/p1 ratio
 #      exceeds 3x, run a third pass for the record.
 if [[ "${PRECOMMIT_SMOKE:-0}" == "1" ]]; then
-  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec graft.LocalFsSpec graft.UpsertSinkSpec graft.operators.LatestWinsTieBreakSpec graft.operators.IvmSpec graft.GraftSessionMemoSpec graft.operators.HierAssignSpec graft.ConfParitySpec graft.multimodal.RleSpec graft.multimodal.McSpec graft.multimodal.GopSpec graft.multimodal.XfSpec graft.multimodal.DemuxSpec graft.multimodal.CodecPropertiesSpec graft.multimodal.VideoCodecContractSpec graft.TxnSnapshotStreamSpec graft.CdcStreamSpec graft.StreamingConnectorE2ESpec graft.IvmConnectorE2ESpec" \
+  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec graft.LocalFsSpec graft.UpsertSinkSpec graft.operators.LatestWinsTieBreakSpec graft.operators.IvmSpec graft.GraftSessionMemoSpec graft.operators.HierAssignSpec graft.ConfParitySpec graft.multimodal.RleSpec graft.multimodal.McSpec graft.multimodal.GopSpec graft.multimodal.XfSpec graft.multimodal.DemuxSpec graft.multimodal.CodecPropertiesSpec graft.multimodal.VideoCodecContractSpec graft.TxnSnapshotStreamSpec graft.CdcStreamSpec graft.StreamingConnectorE2ESpec graft.IvmConnectorE2ESpec graft.plans.KernelContractSpec graft.plans.TextExpressionsSpec graft.GraftFunctionsSpec graft.GraftExtensionsSpec graft.operators.WinnowSpec graft.operators.PiiScrubSpec graft.AuditBaselineSpec graft.PlanGuardsSpec" \
       >/tmp/precommit_smoke.log 2>&1 || {
     echo "PRECOMMIT FAIL: smoke specs broken — do not commit." >&2
     tail -n 40 /tmp/precommit_smoke.log >&2
     exit 1
   }
-  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine, local file system, upsert sink, latest-wins, session memo, video codec and streaming sink specs green."
+  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine, local file system, upsert sink, latest-wins, session memo, video codec, streaming sink and native-kernel specs green."
 fi

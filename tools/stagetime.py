@@ -24,11 +24,16 @@ def lines(path):
 
 def main():
     import glob
+    import os
     d = sys.argv[1]
     topn = int(sys.argv[2]) if len(sys.argv) > 2 else 25
+    # rolling logs: eventlog_v2_<app>/events_<n>_<app>[.zstd]; the
+    # default (spark.eventLog.rolling.enabled=false) writes one file per
+    # app, <app>[.zstd], straight into the directory
     fs = glob.glob(f"{d}/events_*") + glob.glob(f"{d}/*/events_*") + \
-        [f for f in glob.glob(f"{d}/*") if "eventlog" not in f and "appstatus" not in f
-         and not f.endswith(".inprogress") == False and False]
+        [f for f in glob.glob(f"{d}/*") if os.path.isfile(f)
+         and not os.path.basename(f).startswith(("events_", "eventlog", "appstatus"))
+         and not f.endswith(".inprogress")]
     stages, props = {}, {}
     for f in fs:
         for line in lines(f):
