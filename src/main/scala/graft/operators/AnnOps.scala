@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.functions.Vectors
 import graft.sources.Tables
@@ -80,19 +79,27 @@ object AnnOps {
     * bounded per-probe top-k.
     */
   private[operators] def exactCosineTopK(spark: SparkSession, dir: String, k: Int): DataFrame = {
-    import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id"))) // corpus side parallel despite single-row-group input
-    val probes = e.filter(col("vec_id") < NProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"), col("nrm").as("probe_nrm"))
-    val scored = e.crossJoin(broadcast(probes))
+    val e = NearestAnchor.corpus(spark, dir)
+    val scored = e.crossJoin(broadcast(probesOf(e)))
       .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", round(VectorExpressions.cosineNative(
-        col("probe_emb"), col("probe_nrm"), col("embedding"), col("nrm")), 6))
+      .withColumn("cos", probeCos)
     probeTopKDesc(scored, col("cos"), k, Seq("vec_id", "cos"))
       .orderBy("probe_id", "rnk")
   }
+
+  /** The [[NProbes]] lowest-id vectors of a normed corpus `e` as
+    * probes: (probe_id, p_emb, p_nrm, extra…).
+    */
+  private def probesOf(e: DataFrame, extra: Column*): DataFrame =
+    e.filter(col("vec_id") < NProbes)
+      .select((col("vec_id").as("probe_id") +: col("embedding").as("p_emb") +:
+        col("nrm").as("p_nrm") +: extra): _*)
+
+  /** Exact probe cosine, rounded to 6 decimals: (p_emb, p_nrm) against
+    * (embedding, nrm).
+    */
+  private def probeCos: Column = round(graft.plans.VectorExpressions.cosineNative(
+    col("p_emb"), col("p_nrm"), col("embedding"), col("nrm")), 6)
 
   /** LSH-bucketed ANN: corpus vectors hashed into md5-derived
     * hyperplane band buckets; probes scored only against bucket
@@ -103,9 +110,7 @@ object AnnOps {
     */
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id"))) // single-row-group input otherwise scans on one core
+    val e = NearestAnchor.corpus(spark, dir)
     val banded = e.select(col("vec_id"),
       posexplode(VectorExpressions.hyperplaneSigsNative(col("embedding"), LshBands, LshBits, Dim))
         .as(Seq("band", "sig")))
@@ -120,9 +125,8 @@ object AnnOps {
     val scored = cand
       .join(e.select(col("vec_id"), col("embedding"), col("nrm")), "vec_id")
       .join(broadcast(e.select(col("vec_id").as("probe_id"),
-        col("embedding").as("probe_emb"), col("nrm").as("probe_nrm"))), "probe_id")
-      .withColumn("cos", round(VectorExpressions.cosineNative(
-        col("probe_emb"), col("probe_nrm"), col("embedding"), col("nrm")), 6))
+        col("embedding").as("p_emb"), col("nrm").as("p_nrm"))), "probe_id")
+      .withColumn("cos", probeCos)
     probeTopKDesc(scored, col("cos"), K, Seq("vec_id", "cos"))
       .orderBy("probe_id", "rnk")
   }
@@ -149,75 +153,32 @@ object AnnOps {
     * `e` must carry (vec_id, embedding, nrm).
     */
   private def ivfAnchors(e: DataFrame): DataFrame =
-    e.filter(col("vec_id") < IvfCells)
-      .select(col("vec_id").as("cell"), col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
+    NearestAnchor.lowestIdAnchors(e, IvfCells)
 
-  /** Nearest-anchor cell per corpus vector → (vec_id, cell). The
-    * assignment DECISION discipline — cosine rounded to 6 decimals,
-    * ties to the lowest cell — is the oracle-portability contract
-    * every deterministic-anchor IVF query shares; it lives HERE so it
-    * cannot drift between them. The window input is the slim (vec_id,
-    * cell, ccos) triple, never the embedding.
+  /** Nearest-anchor cell per corpus vector → (vec_id, cell, ccos), the
+    * [[NearestAnchor]] decision over `layout`'s score. `hierarchical`
+    * routes it through the two-level [[HierAssign]] path (broadcast
+    * supers → grp-keyed leaf join, route = groups: exact by
+    * construction) in place of the flat anchor broadcast.
     */
-  private def assignCells(e: DataFrame, cents: DataFrame): DataFrame = {
-    import graft.plans.VectorExpressions
-    // argmax as a codegen'd min(struct(-ccos, cell)) aggregate: the
-    // broadcast crossJoin emits each vector's |cells| scored rows
-    // inside one partition, so the partial aggregate collapses them to
-    // ONE row per vector before the exchange — n rows shuffled instead
-    // of n × |cells| into a per-vector sort window
-    e.crossJoin(broadcast(cents))
-      .withColumn("ccos", round(VectorExpressions.cosineNative(
-        col("c_emb"), col("c_nrm"), col("embedding"), col("nrm")), 6))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(negate(col("ccos")).as("nc"), col("cell").as("cell"))).as("best"))
-      .select(col("vec_id"), col("best.cell").as("cell"))
-  }
+  private def assignCells(e: DataFrame, cents: DataFrame,
+      layout: NearestAnchor.Layout = NearestAnchor.FloatAnchors,
+      hierarchical: Boolean = false): DataFrame =
+    if (hierarchical) {
+      val g = HierAssign.defaultGroups(IvfCells)
+      HierAssign.assign(e, cents, layout, g, g)
+    }
+    else NearestAnchor.assignCorpus(e, cents, layout)
 
-  /** Probe → its [[IvfProbeCells]] nearest cells, same decision
-    * discipline as [[assignCells]]. `probes` must carry (probe_id,
-    * p_emb, p_nrm, ...); `carry` names the probe columns to keep
-    * beside (probe_id, cell) for the downstream scoring join.
+  /** Probe → its [[IvfProbeCells]] nearest cells of `cents` under
+    * `layout`, same decision as [[assignCells]]. `probes` must carry
+    * (probe_id, p_emb, p_nrm, ...); `carry` names the probe columns to
+    * keep beside (probe_id, cell) for the downstream scoring join.
     */
   private def nearestProbeCells(probes: DataFrame, cents: DataFrame,
-      carry: Seq[String]): DataFrame = {
-    import graft.plans.VectorExpressions
-    // bounded top-nprobe aggregate (input is |probes| × |cells| rows —
-    // small, but kept window-free so the whole ANN family shares one
-    // rank discipline); `carry` columns are probe-constant, first()
-    // re-attaches them
-    probes.crossJoin(broadcast(cents))
-      .withColumn("ccos", round(VectorExpressions.cosineNative(
-        col("c_emb"), col("c_nrm"), col("p_emb"), col("p_nrm")), 6))
-      .groupBy(col("probe_id"))
-      .agg(graft.plans.TopKAgg.topK(
-          struct(negate(col("ccos")).as("nc"), col("cell").as("cell")), IvfProbeCells).as("_tk"),
-        carry.map(c => first(col(c)).as(c)): _*)
-      .select((col("probe_id") +: carry.map(col)) :+ explode(col("_tk.cell")).as("cell"): _*)
-  }
-
-  /** [[nearestProbeCells]] with the rank kept: ALL [[IvfCells]] cells
-    * per probe in centroid-cosine order (same (−ccos, cell) decision
-    * struct), each carrying its 1-based `cell_rnk`. The filtered path
-    * cuts this ranked list per probe at its label's adaptive nprobe —
-    * the k of the bounded aggregate is |cells|, still a constant
-    * independent of corpus size.
-    */
-  private def rankedProbeCells(probes: DataFrame, cents: DataFrame,
-      carry: Seq[String]): DataFrame = {
-    import graft.plans.VectorExpressions
-    probes.crossJoin(broadcast(cents))
-      .withColumn("ccos", round(VectorExpressions.cosineNative(
-        col("c_emb"), col("c_nrm"), col("p_emb"), col("p_nrm")), 6))
-      .groupBy(col("probe_id"))
-      .agg(graft.plans.TopKAgg.topK(
-          struct(negate(col("ccos")).as("nc"), col("cell").as("cell")), IvfCells).as("_tk"),
-        carry.map(c => first(col(c)).as(c)): _*)
-      .select(col("probe_id") +: carry.map(col) :+
-        posexplode(col("_tk.cell")).as(Seq("_pos", "cell")): _*)
-      .select((col("probe_id") +: carry.map(col)) :+ col("cell") :+
-        (col("_pos") + 1).cast("int").as("cell_rnk"): _*)
-  }
+      carry: Seq[String], layout: NearestAnchor.Layout = NearestAnchor.FloatAnchors): DataFrame =
+    NearestAnchor.nearestCells(probes, cents, "probe_id",
+      layout.score(col("p_emb"), col("p_nrm")), IvfProbeCells, carry = carry)
 
   /** The per-label adaptive-nprobe dial for FILTERED search — the
     * corpus-adaptive rule the preflight's cell×label table motivates
@@ -271,7 +232,7 @@ object AnnOps {
     * shuffle — embeddings re-attach by key afterwards.
     */
   def annIvf(spark: SparkSession, dir: String): DataFrame =
-    annIvfAssigned(spark, dir, assignCells)
+    annIvfAssigned(spark, dir)
 
   /** [[annIvf]] with the corpus assignment routed through the
     * two-level [[HierAssign]] path (broadcast supers → grp-keyed leaf
@@ -282,50 +243,35 @@ object AnnOps {
     * (spec-pinned; the registered oracle IS the flat pipeline's SQL).
     */
   def annIvfHier(spark: SparkSession, dir: String): DataFrame =
-    annIvfAssigned(spark, dir, (e, cents) => {
-      val g = HierAssign.defaultGroups(IvfCells)
-      // route = groups: exact by construction (see HierAssign doc) —
-      // the registered configuration removes the leaf-table BROADCAST
-      // (the actual scale ceiling), not the per-vector candidate count
-      HierAssign.assignFloat(e, cents, g, g)
-        .select(col("vec_id"), col("cell"))
-    })
+    annIvfAssigned(spark, dir, hierarchical = true)
 
   /** [[annIvf]]'s pipeline at a caller-chosen k — the vector arm of
     * the IVF-backed hybrid fusion reuses the plan unchanged.
     */
   private[operators] def ivfTopK(spark: SparkSession, dir: String, k: Int): DataFrame =
-    annIvfAssigned(spark, dir, assignCells, k)
+    annIvfAssigned(spark, dir, k = k)
 
   private def annIvfAssigned(spark: SparkSession, dir: String,
-      assignFn: (DataFrame, DataFrame) => DataFrame, k: Int = K): DataFrame = {
-    import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id"))) // single-row-group input otherwise scans on one core
-    ivfSearchOver(e, assignFn, k)
+      hierarchical: Boolean = false, k: Int = K): DataFrame = {
+    val e = NearestAnchor.corpus(spark, dir)
+    ivfSearchOver(e, ivfAnchors(e), NearestAnchor.FloatAnchors, hierarchical, k)
   }
 
   /** The flat-IVF search core over an explicit (vec_id, embedding,
-    * nrm) corpus: deterministic lowest-id anchors FROM that corpus,
-    * assignment, probe-cell cut, candidate scoring, bounded per-probe
-    * top-k. Shared by [[annIvfAssigned]] and the compaction-composed
-    * [[annIvfCompacted]] (where the corpus is the post-compaction
-    * live set).
+    * nrm) corpus and anchor table `cents` of `layout`: assignment,
+    * probe-cell cut, candidate scoring, bounded per-probe top-k.
+    * Shared by [[annIvfAssigned]] (lowest-id anchors FROM the corpus),
+    * [[annIvfWith]] (a supplied unit-norm table) and the
+    * compaction-composed [[annIvfCompacted]] (where the corpus is the
+    * post-compaction live set).
     */
-  private def ivfSearchOver(e: DataFrame,
-      assignFn: (DataFrame, DataFrame) => DataFrame, k: Int = K): DataFrame = {
-    import graft.plans.VectorExpressions
-    val cents = ivfAnchors(e)
-    val assigned = assignFn(e, cents).join(e, "vec_id")
-    val probeCells = nearestProbeCells(
-      e.filter(col("vec_id") < NProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"), col("nrm").as("p_nrm")),
-      cents, Seq("p_emb", "p_nrm"))
+  private def ivfSearchOver(e: DataFrame, cents: DataFrame, layout: NearestAnchor.Layout,
+      hierarchical: Boolean = false, k: Int = K): DataFrame = {
+    val assigned = assignCells(e, cents, layout, hierarchical).join(e, "vec_id")
+    val probeCells = nearestProbeCells(probesOf(e), cents, Seq("p_emb", "p_nrm"), layout)
     val scored = assigned.join(broadcast(probeCells), "cell")
       .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", round(VectorExpressions.cosineNative(
-        col("p_emb"), col("p_nrm"), col("embedding"), col("nrm")), 6))
+      .withColumn("cos", probeCos)
     probeTopKDesc(scored, col("cos"), k, Seq("vec_id", "cos"))
       .orderBy("probe_id", "rnk")
   }
@@ -358,15 +304,12 @@ object AnnOps {
       Tables.embeddings(spark, dir))
 
   private[graft] def annIvfCompactedFrom(feed: DataFrame, emb: DataFrame): DataFrame = {
-    import graft.plans.VectorExpressions
     val dead = newestPerKey(feed, Seq("user_id"), "ts_ns", "event_id")
       .filter(col("op") === "d")
       .select(col("user_id").as("vec_id"))
-    val live = emb.select(col("vec_id"), col("embedding"))
-      .join(dead, Seq("vec_id"), "left_anti")
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id")))
-    ivfSearchOver(live, assignCells)
+    val live = NearestAnchor.normed(emb.select(col("vec_id"), col("embedding"))
+      .join(dead, Seq("vec_id"), "left_anti"))
+    ivfSearchOver(live, ivfAnchors(live), NearestAnchor.FloatAnchors)
   }
 
   /** [[annIvf]] with an externally supplied anchor table (cell,
@@ -374,57 +317,16 @@ object AnnOps {
     * [[Kmeans.anchors]], the production cell layout. The registered
     * query keeps the deterministic lowest-id anchors so its pipeline
     * stays oracle-checkable bit for bit; this variant swaps ONLY the
-    * centroid table — the plan is identical (broadcast assignment
-    * pass, keyed cell join, per-probe top-k).
+    * centroid table and its score ([[NearestAnchor.UnitAnchors]]) —
+    * the plan is [[ivfSearchOver]]'s (broadcast assignment pass, keyed
+    * cell join, per-probe top-k). `hierarchical` swaps ONLY the
+    * assignment for the two-level [[HierAssign]] routing (same scores,
+    * same decision).
     */
   def annIvfWith(spark: SparkSession, dir: String, anchors: DataFrame,
-      roundCcos: Boolean = false, hierarchical: Boolean = false): DataFrame = {
-    import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id")))
-    // cosine against a unit-norm double anchor: dot / ‖x‖ through the
-    // codegen'd widened dot (float corpus × double anchors — the
-    // interpreted zip_with/aggregate form this replaces ran at
-    // corpus × |anchors| volume). `roundCcos` pins the assignment
-    // score to 6 decimals so the argmax decision is reproducible by
-    // an external SQL engine.
-    def anchorCos(emb: Column, nrm: Column): Column = {
-      val c = VectorExpressions.widenedDotNative(emb, col("c")) / nrm
-      if (roundCcos) round(c, 6) else c
-    }
-    // per-vector argmax via codegen'd min(struct) — see [[assignCells]];
-    // `hierarchical` swaps ONLY this stage for the two-level
-    // [[HierAssign]] routing (same scores, same decision contract)
-    val assignedIds =
-      if (hierarchical) {
-        val g = HierAssign.defaultGroups(IvfCells)
-        HierAssign.assignUnit(e, anchors, g, g, roundCcos)
-          .select(col("vec_id"), col("cell"))
-      }
-      else
-        e.crossJoin(broadcast(anchors))
-          .withColumn("ccos", anchorCos(col("embedding"), col("nrm")))
-          .groupBy(col("vec_id"))
-          .agg(min(struct(negate(col("ccos")).as("nc"), col("cell").as("cell"))).as("best"))
-          .select(col("vec_id"), col("best.cell").as("cell"))
-    val assigned = assignedIds.join(e, "vec_id")
-    val probeCells = e.filter(col("vec_id") < NProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"), col("nrm").as("p_nrm"))
-      .crossJoin(broadcast(anchors))
-      .withColumn("ccos", anchorCos(col("p_emb"), col("p_nrm")))
-      .groupBy(col("probe_id"))
-      .agg(graft.plans.TopKAgg.topK(
-          struct(negate(col("ccos")).as("nc"), col("cell").as("cell")), IvfProbeCells).as("_tk"),
-        first(col("p_emb")).as("p_emb"), first(col("p_nrm")).as("p_nrm"))
-      .select(col("probe_id"), col("p_emb"), col("p_nrm"), explode(col("_tk.cell")).as("cell"))
-    val scored = assigned.join(broadcast(probeCells), "cell")
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", round(VectorExpressions.cosineNative(
-        col("p_emb"), col("p_nrm"), col("embedding"), col("nrm")), 6))
-    probeTopKDesc(scored, col("cos"), K, Seq("vec_id", "cos"))
-      .orderBy("probe_id", "rnk")
-  }
+      hierarchical: Boolean = false): DataFrame =
+    ivfSearchOver(NearestAnchor.corpus(spark, dir), anchors, NearestAnchor.UnitAnchors,
+      hierarchical)
 
   /** §2.H q_ann_ivf_filtered — FILTERED vector search, the
     * FAISS-IDSelector shape every production vector store needs (the
@@ -454,26 +356,21 @@ object AnnOps {
     * adaptive pipeline exactly.
     */
   def annIvfFiltered(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"), col("label"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id"))) // single-row-group input otherwise scans on one core
+    val e = NearestAnchor.corpus(spark, dir, "label")
     val slim = e.select(col("vec_id"), col("embedding"), col("nrm"))
     val cents = ivfAnchors(slim)
     val assigned = assignCells(slim, cents).join(e, "vec_id")
-    val probeCells = rankedProbeCells(
-      e.filter(col("vec_id") < NProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
-          col("nrm").as("p_nrm"), col("label").as("p_label")),
-      cents, Seq("p_emb", "p_nrm", "p_label"))
+    // every cell ranked per probe (the k of the bounded cut is |cells|,
+    // a constant), then cut at the probe label's adaptive nprobe
+    val probeCells = NearestAnchor.rankedCells(probesOf(e, col("label").as("p_label")), cents,
+        "probe_id", NearestAnchor.FloatAnchors.score(col("p_emb"), col("p_nrm")), IvfCells,
+        carry = Seq("p_emb", "p_nrm", "p_label"))
       .join(broadcast(filteredNprobeDial(e)), "p_label")
       .filter(col("cell_rnk") <= col("np"))
       .drop("cell_rnk", "np")
     val scored = assigned.join(broadcast(probeCells), "cell")
       .filter(col("vec_id") =!= col("probe_id") && col("label") === col("p_label"))
-      .withColumn("cos", round(VectorExpressions.cosineNative(
-        col("p_emb"), col("p_nrm"), col("embedding"), col("nrm")), 6))
+      .withColumn("cos", probeCos)
     probeTopKDesc(scored, col("cos"), K, Seq("vec_id", "cos"))
       .orderBy("probe_id", "rnk")
   }
@@ -494,11 +391,7 @@ object AnnOps {
     * bounded by cells × labels, never corpus-sized.
     */
   def annIvfFilteredPreflight(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"), col("label"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id")))
+    val e = NearestAnchor.corpus(spark, dir, "label")
     val slim = e.select(col("vec_id"), col("embedding"), col("nrm"))
     val counts = assignCells(slim, ivfAnchors(slim))
       .join(e.select(col("vec_id"), col("label")), "vec_id")
@@ -523,20 +416,12 @@ object AnnOps {
     * old fixed nprobe), inside the unfiltered ≥0.85 band.
     */
   def annFilteredRecall(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"), col("label"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id")))
-    val probes = e.filter(col("vec_id") < NProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
-        col("nrm").as("p_nrm"), col("label").as("p_label"))
+    val e = NearestAnchor.corpus(spark, dir, "label")
     // exact filtered truth: one streaming pass against broadcast
     // probes, predicate applied before scoring, bounded top-k
-    val scored = e.crossJoin(broadcast(probes))
+    val scored = e.crossJoin(broadcast(probesOf(e, col("label").as("p_label"))))
       .filter(col("vec_id") =!= col("probe_id") && col("label") === col("p_label"))
-      .withColumn("cos", round(VectorExpressions.cosineNative(
-        col("p_emb"), col("p_nrm"), col("embedding"), col("nrm")), 6))
+      .withColumn("cos", probeCos)
     val exact = probeTopKDesc(scored, col("cos"), K, Seq("vec_id", "cos"))
       .select(col("probe_id"), col("vec_id"))
     val approx = annIvfFiltered(spark, dir).select(col("probe_id"), col("vec_id"))
@@ -554,30 +439,15 @@ object AnnOps {
 
   /** The Lloyd-refined IVF end to end — [[annIvfWith]] fed
     * [[Kmeans.anchors]] in portable mode (means and assignment dots
-    * pinned to 6 decimals), `roundCcos` on. Registered so the refined
+    * pinned to 6 decimals). Registered so the refined
     * layout is ORACLE-checkable, not just spec-checked: the DuckDB
     * mirror unrolls the same two Lloyd rounds (same init, same
     * rounding, same ties) and must reproduce the anchor table — and
     * therefore the search results — exactly.
     */
   def annIvfKmeans(spark: SparkSession, dir: String): DataFrame =
-    annIvfWith(spark, dir, trainedAnchors(spark, dir), roundCcos = true)
+    annIvfWith(spark, dir, trainedAnchors(spark, dir))
 
-  /** §2.H q_ann_ivf_hier_kmeans — the TRAINED hierarchical layout:
-    * [[annIvfKmeans]]'s Lloyd-refined portable-mode anchors routed
-    * through the two-level [[HierAssign]] assignment (broadcast
-    * supers → grp-keyed leaf join) instead of the flat anchor
-    * broadcast. This composes the two scale answers the registered
-    * family proved separately — q_ann_ivf_hier removed the leaf-table
-    * BROADCAST (exact mode: bit-identical to flat), q_ann_ivf_kmeans
-    * made the anchor table TRAINED — into the actual billion-vector
-    * shape: a corpus-adaptive trained anchor table that no longer
-    * needs to fit in a broadcast. Exact mode (route = groups) keeps
-    * candidate scores and ties bit-identical to the flat trained
-    * path, so the oracle IS q_ann_ivf_kmeans' unrolled-Lloyd SQL and
-    * the composition itself passes the hash gate; HierAssignSpec pins
-    * ≡ flat on the executed plans.
-    */
   /** §2.H q_ann_ivf_hier_pq — the FULL billion-vector layout, every
     * trained/scale answer composed at once: Lloyd-refined cell
     * anchors ([[trainedAnchors]] — corpus-adaptive), routed through
@@ -598,43 +468,32 @@ object AnnOps {
     * real data every run).
     */
   def annIvfHierPq(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.VectorExpressions
     val (e, codes, lut) = pqParts(spark, dir, trainIters = PqKmeansIters)
     val anchors = trainedAnchors(spark, dir)
-    val g = HierAssign.defaultGroups(IvfCells)
-    val assigned = HierAssign.assignUnit(e, anchors, g, g, roundCcos = true)
-      .select(col("vec_id"), col("cell"))
     // probe cells: portable round-6 top-IvfProbeCells against the
     // trained anchors (probes are few — the flat broadcast is right)
-    val probeCells = e.filter(col("vec_id") < NProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
-        col("nrm").as("p_nrm"))
-      .crossJoin(broadcast(anchors))
-      .withColumn("ccos",
-        round(VectorExpressions.widenedDotNative(col("p_emb"), col("c")) / col("p_nrm"), 6))
-      .groupBy(col("probe_id"))
-      .agg(graft.plans.TopKAgg.topK(
-        struct(negate(col("ccos")).as("nc"), col("cell").as("cell")), IvfProbeCells).as("_tk"))
-      .select(col("probe_id"), explode(col("_tk.cell")).as("cell"))
-    val cand = assigned.join(broadcast(probeCells), "cell")
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"))
-    val scored = cand.join(codes, "vec_id")
-      .join(broadcast(lut), Seq("probe_id", "m", "code"))
-      .groupBy(col("probe_id"), col("vec_id"))
-      .agg(sum(col("pdotq")).as("qdot")) // exact long sum — order-free
-      .join(e.select(col("vec_id"), col("nrm")), "vec_id")
-      .join(broadcast(e.filter(col("vec_id") < NProbes)
-        .select(col("vec_id").as("probe_id"), col("nrm").as("p_nrm"))), "probe_id")
-      .select(col("probe_id"), col("vec_id"),
-        round(col("qdot").cast("double") / lit(1e6) / (col("nrm") * col("p_nrm")), 6)
-          .as("qcos"))
-    sq8Rerank(scored, e, PqRerank)
+    ivfPqSearch(e, codes, lut,
+      assignCells(e, anchors, NearestAnchor.UnitAnchors, hierarchical = true),
+      nearestProbeCells(probesOf(e), anchors, Nil, NearestAnchor.UnitAnchors))
   }
 
+  /** §2.H q_ann_ivf_hier_kmeans — the TRAINED hierarchical layout:
+    * [[annIvfKmeans]]'s Lloyd-refined portable-mode anchors routed
+    * through the two-level [[HierAssign]] assignment (broadcast
+    * supers → grp-keyed leaf join) instead of the flat anchor
+    * broadcast. This composes the two scale answers the registered
+    * family proved separately — q_ann_ivf_hier removed the leaf-table
+    * BROADCAST (exact mode: bit-identical to flat), q_ann_ivf_kmeans
+    * made the anchor table TRAINED — into the actual billion-vector
+    * shape: a corpus-adaptive trained anchor table that no longer
+    * needs to fit in a broadcast. Exact mode (route = groups) keeps
+    * candidate scores and ties bit-identical to the flat trained
+    * path, so the oracle IS q_ann_ivf_kmeans' unrolled-Lloyd SQL and
+    * the composition itself passes the hash gate; HierAssignSpec pins
+    * ≡ flat on the executed plans.
+    */
   def annIvfHierKmeans(spark: SparkSession, dir: String): DataFrame =
-    annIvfWith(spark, dir, trainedAnchors(spark, dir),
-      roundCcos = true, hierarchical = true)
+    annIvfWith(spark, dir, trainedAnchors(spark, dir), hierarchical = true)
 
   /** The session's ONE Lloyd-trained anchor table per (dir, params) —
     * shared by q_ann_ivf_kmeans and q_semdedup_kmeans (both consume
@@ -733,7 +592,6 @@ object AnnOps {
     */
   private def sq8Rerank(scored: DataFrame, e: DataFrame,
       rerank: Int = Sq8Rerank): DataFrame = {
-    import graft.plans.VectorExpressions
     // both cuts are bounded top-k aggregates (map-side combinable):
     // the candidate cut sees the corpus-sized scored stream, the final
     // cut sees ≤ rerank rows per probe
@@ -741,10 +599,8 @@ object AnnOps {
       .select(col("probe_id"), col("vec_id"), col("qcos"))
     val rescored = cand
       .join(e.select(col("vec_id"), col("embedding"), col("nrm")), "vec_id")
-      .join(broadcast(e.filter(col("vec_id") < NProbes).select(col("vec_id").as("probe_id"),
-        col("embedding").as("p_emb"), col("nrm").as("p_nrm"))), "probe_id")
-      .withColumn("cos", round(VectorExpressions.cosineNative(
-        col("p_emb"), col("p_nrm"), col("embedding"), col("nrm")), 6))
+      .join(broadcast(probesOf(e)), "probe_id")
+      .withColumn("cos", probeCos)
     probeTopKDesc(rescored, col("cos"), K, Seq("vec_id", "qcos", "cos"))
       .orderBy("probe_id", "rnk")
   }
@@ -765,9 +621,7 @@ object AnnOps {
     val assigned = assignCells(e, cents)
       .join(e.select(col("vec_id"), col("qs"), col("nrm"), col("qv")), "vec_id")
     val probeCells = nearestProbeCells(
-      e.filter(col("vec_id") < NProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
-          col("qs").as("p_qs"), col("nrm").as("p_nrm"), col("qv").as("p_qv")),
+      probesOf(e, col("qs").as("p_qs"), col("qv").as("p_qv")),
       cents, Seq("p_qs", "p_nrm", "p_qv"))
     val scored = assigned.join(broadcast(probeCells), "cell")
       .filter(col("vec_id") =!= col("probe_id"))
@@ -843,15 +697,7 @@ object AnnOps {
       .select(col("m"), col("vec_id").as("code"), col("sub").as("c_sub"))
       .transform(materialize)
     for (_ <- 0 until iters) {
-      val d2 = round(aggregate(zip_with(col("sub"), col("c_sub"), (a, b) =>
-          (a - b) * (a - b)), lit(0.0), (acc, v) => acc + v), 6)
-      // argmin as a codegen'd min(struct) partial aggregate — the
-      // [[assignCells]] discipline in (vec_id, m) subvector space
-      val asg = cached.join(broadcast(cur), "m")
-        .select(col("vec_id"), col("m"), col("code"), d2.as("d2"))
-        .groupBy(col("vec_id"), col("m"))
-        .agg(min(struct(col("d2"), col("code"))).as("best"))
-        .select(col("vec_id"), col("m"), col("best.code").as("code"))
+      val asg = nearestCode(cached, cur)
       val means = asg.join(cached, Seq("vec_id", "m"))
         .select(col("m"), col("code"), posexplode(col("sub")).as(Seq("dim", "v")))
         .groupBy("m", "code", "dim").agg(round(avg(col("v")), 6).as("mv"))
@@ -866,17 +712,33 @@ object AnnOps {
     cur
   }
 
-  /** Shared PQ machinery for [[annPqImpl]] and [[annIvfPq]]: the
+  /** Encode: per (vec_id, m) of the subvectors `subs` (vec_id, m,
+    * sub), the nearest codeword of `codebook` (m, code, c_sub) by
+    * squared L2 rounded to 6 decimals, ties to the lowest code —
+    * (vec_id, m, code). The argmin is a codegen'd min(struct) partial
+    * aggregate, as in [[NearestAnchor]]. Used by the encode and by
+    * every [[pqCodebook]] round.
+    */
+  private def nearestCode(subs: DataFrame, codebook: DataFrame): DataFrame = {
+    val d2 = round(aggregate(zip_with(col("sub"), col("c_sub"), (a, b) =>
+        (a.cast("double") - b.cast("double")) * (a.cast("double") - b.cast("double"))),
+      lit(0.0), (acc, v) => acc + v), 6)
+    subs.join(broadcast(codebook), "m")
+      .select(col("vec_id"), col("m"), col("code"), d2.as("d2"))
+      .groupBy(col("vec_id"), col("m"))
+      .agg(min(struct(col("d2"), col("code"))).as("best"))
+      .select(col("vec_id"), col("m"), col("best.code").as("code"))
+  }
+
+  /** Shared PQ machinery for [[annPqImpl]], [[annIvfPq]] and
+    * [[annIvfHierPq]]: the
     * normalized corpus `e`, the per-(vec_id, m) nearest-codeword codes
     * against the seed (or Lloyd-trained) codebook, and the probes'
     * integer ADC lookup table (probe_id, m, code, pdotq).
     */
   private def pqParts(spark: SparkSession, dir: String,
       trainIters: Int): (DataFrame, DataFrame, DataFrame) = {
-    import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id"))) // single-row-group input otherwise scans on one core
+    val e = NearestAnchor.corpus(spark, dir)
     // (id, m, sub): the M 8-dim subvectors, sliced once per row behind
     // the posexplode Generate barrier
     def subs(df: DataFrame, id: String): DataFrame = df.select(col(id),
@@ -897,16 +759,7 @@ object AnnOps {
           pqCodebook(subs(e, "vec_id").select(col("vec_id"), col("m"),
             transform(col("sub"), x => x.cast("double")).as("sub")), trainIters)
         }
-    // encode: nearest codeword per (vec_id, m) by rounded squared L2,
-    // ties to the lowest code — the assignCells decision discipline
-    val d2 = round(aggregate(zip_with(col("sub"), col("c_sub"), (a, b) =>
-        (a.cast("double") - b.cast("double")) * (a.cast("double") - b.cast("double"))),
-      lit(0.0), (acc, v) => acc + v), 6)
-    val codes = subs(e, "vec_id").join(broadcast(cb), "m")
-      .select(col("vec_id"), col("m"), col("code"), d2.as("d2"))
-      .groupBy(col("vec_id"), col("m"))
-      .agg(min(struct(col("d2"), col("code"))).as("best"))
-      .select(col("vec_id"), col("m"), col("best.code").as("code"))
+    val codes = nearestCode(subs(e, "vec_id"), cb)
     // probe ADC table: integer-scaled subvector dots, (probe_id, m,
     // code, pdotq) — M·K rows per probe, broadcast
     val pdotq = round(aggregate(zip_with(col("sub"), col("c_sub"), (a, b) =>
@@ -921,17 +774,38 @@ object AnnOps {
 
   private def annPqImpl(spark: SparkSession, dir: String, trainIters: Int): DataFrame = {
     val (e, codes, lut) = pqParts(spark, dir, trainIters)
-    val scored = codes.join(broadcast(lut), Seq("m", "code"))
-      .groupBy(col("probe_id"), col("vec_id"))
+    pqAdcRerank(codes.join(broadcast(lut), Seq("m", "code"))
+      .filter(col("vec_id") =!= col("probe_id")), e)
+  }
+
+  /** The ADC scoring tail of the PQ family: `hits` holds one LUT row
+    * (probe_id, vec_id, pdotq) per candidate pair and subspace; the
+    * per-pair sum is the exact integer dot, rescaled by the exact
+    * norms into the approximate cosine (6 decimals: it feeds the
+    * [[PqRerank]] cut), then the shared [[sq8Rerank]] tail.
+    */
+  private def pqAdcRerank(hits: DataFrame, e: DataFrame): DataFrame = {
+    val scored = hits.groupBy(col("probe_id"), col("vec_id"))
       .agg(sum(col("pdotq")).as("qdot")) // exact long sum — order-free
       .join(e.select(col("vec_id"), col("nrm")), "vec_id")
       .join(broadcast(e.filter(col("vec_id") < NProbes)
         .select(col("vec_id").as("probe_id"), col("nrm").as("p_nrm"))), "probe_id")
-      .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
         round(col("qdot").cast("double") / lit(1e6) / (col("nrm") * col("p_nrm")), 6)
           .as("qcos"))
     sq8Rerank(scored, e, PqRerank)
+  }
+
+  /** IVF-routed ADC: each probe's candidates are the members
+    * (`assigned`: vec_id, cell, …) of its `probeCells` (probe_id,
+    * cell), scored by their PQ `codes` through the probes' `lut`.
+    */
+  private def ivfPqSearch(e: DataFrame, codes: DataFrame, lut: DataFrame,
+      assigned: DataFrame, probeCells: DataFrame): DataFrame = {
+    val cand = assigned.join(broadcast(probeCells), "cell")
+      .filter(col("vec_id") =!= col("probe_id"))
+      .select(col("probe_id"), col("vec_id"))
+    pqAdcRerank(cand.join(codes, "vec_id").join(broadcast(lut), Seq("probe_id", "m", "code")), e)
   }
 
   /** IVF × PQ — the FAISS IVF-ADC layout, the production composition
@@ -955,26 +829,7 @@ object AnnOps {
   def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val (e, codes, lut) = pqParts(spark, dir, trainIters = 0)
     val cents = ivfAnchors(e)
-    val assigned = assignCells(e, cents)
-    val probeCells = nearestProbeCells(
-      e.filter(col("vec_id") < NProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
-          col("nrm").as("p_nrm")),
-      cents, Seq.empty)
-    val cand = assigned.join(broadcast(probeCells.select("probe_id", "cell")), "cell")
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"))
-    val scored = cand.join(codes, "vec_id")
-      .join(broadcast(lut), Seq("probe_id", "m", "code"))
-      .groupBy(col("probe_id"), col("vec_id"))
-      .agg(sum(col("pdotq")).as("qdot")) // exact long sum — order-free
-      .join(e.select(col("vec_id"), col("nrm")), "vec_id")
-      .join(broadcast(e.filter(col("vec_id") < NProbes)
-        .select(col("vec_id").as("probe_id"), col("nrm").as("p_nrm"))), "probe_id")
-      .select(col("probe_id"), col("vec_id"),
-        round(col("qdot").cast("double") / lit(1e6) / (col("nrm") * col("p_nrm")), 6)
-          .as("qcos"))
-    sq8Rerank(scored, e, PqRerank)
+    ivfPqSearch(e, codes, lut, assignCells(e, cents), nearestProbeCells(probesOf(e), cents, Nil))
   }
 
   /** Number of heaviest cells [[ivfRebalance]] splits per maintenance
@@ -1013,22 +868,18 @@ object AnnOps {
     */
   def ivfRebalance(spark: SparkSession, dir: String): DataFrame = {
     import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id")))
+    val e = NearestAnchor.corpus(spark, dir)
     val cents = ivfAnchors(e)
     val asg = assignCells(e, cents)
     val counts = asg.groupBy("cell").agg(count(lit(1)).as("n_before"))
     // the RebalSplit heaviest cells — a 16-row frame, driver-bounded
     val hot = counts.orderBy(col("n_before").desc, col("cell")).limit(RebalSplit)
       .select(col("cell"))
-    // hot members with their anchor cosine (keyed semi-join — cold
-    // cells' embeddings are never touched)
+    // hot members with their anchor cosine — the assignment's own
+    // rounded `ccos` (keyed semi-join — cold cells' embeddings are
+    // never touched)
     val withA = asg.join(broadcast(hot), "cell").join(e, "vec_id")
-      .join(broadcast(cents.join(broadcast(hot), "cell")), "cell")
-      .withColumn("cos_a", round(VectorExpressions.cosineNative(
-        col("c_emb"), col("c_nrm"), col("embedding"), col("nrm")), 6))
-      .select("cell", "vec_id", "embedding", "nrm", "cos_a")
+      .select(col("cell"), col("vec_id"), col("embedding"), col("nrm"), col("ccos").as("cos_a"))
     val seeds = withA.groupBy("cell")
       .agg(min(struct(col("cos_a").as("ca"), col("vec_id").as("vec_id"))).as("s"))
       .select(col("cell"), col("s.vec_id").as("seed_id"))
@@ -1066,10 +917,7 @@ object AnnOps {
     * — never a partition-less window).
     */
   def ivfCellStats(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id"))) // single-row-group input otherwise scans on one core
+    val e = NearestAnchor.corpus(spark, dir)
     val cents = ivfAnchors(e)
     val counts = assignCells(e, cents)
       .groupBy("cell").agg(count(lit(1)).as("n"))
@@ -1146,17 +994,11 @@ object AnnOps {
     * argmax vote is a codegen'd min(struct), never a window.
     */
   def knnClassify(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"), col("label"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id")))
-    val probes = e.filter(col("vec_id") < NProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"),
-        col("nrm").as("probe_nrm"), col("label").as("true_label"))
+    val e = NearestAnchor.corpus(spark, dir, "label")
+    val probes = probesOf(e, col("label").as("true_label"))
     val scored = e.crossJoin(broadcast(probes.drop("true_label")))
       .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", round(VectorExpressions.cosineNative(
-        col("probe_emb"), col("probe_nrm"), col("embedding"), col("nrm")), 6))
+      .withColumn("cos", probeCos)
     val votes = probeTopKDesc(scored, col("cos"), K, Seq("vec_id", "label"))
       .groupBy("probe_id", "label").agg(count(lit(1)).as("n_votes"))
     votes.groupBy("probe_id")
@@ -1179,10 +1021,7 @@ object AnnOps {
     * ≤ |cells| rows.
     */
   def clusterPurity(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"), col("label"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id")))
+    val e = NearestAnchor.corpus(spark, dir, "label")
     val asg = assignCells(e.select(col("vec_id"), col("embedding"), col("nrm")), ivfAnchors(e))
       .join(e.select(col("vec_id"), col("label")), "vec_id")
     val counts = asg.groupBy("cell", "label").agg(count(lit(1)).as("n"))

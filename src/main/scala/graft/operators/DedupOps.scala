@@ -658,10 +658,7 @@ object DedupOps {
     * recall spec checks against — never the registered query.
     */
   def dedupEmbedding(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id"))) // single-row-group input otherwise scans on one core
+    val e = NearestAnchor.corpus(spark, dir)
     // corpus-adaptive banding: the round-10 three-point curve caught
     // this query super-linear (e ≈ 1.5 over sf0.1 → sf1.0) — with
     // STATIC bits, bucket occupancy grows ∝ n and the bucket
@@ -778,11 +775,9 @@ object DedupOps {
     import graft.plans.VectorExpressions
     val n = Tables.rowCount(spark, dir, "embeddings")
     val bits = graft.functions.Vectors.adaptiveBitsSqlSafe(n, EmbBits, EmbBucketTarget)
-    val e = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") % embRecallMod(n) === 0)
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id")))
+    val e = NearestAnchor.normed(Tables.embeddings(spark, dir)
+        .filter(col("vec_id") % embRecallMod(n) === 0)
+        .select(col("vec_id"), col("embedding")))
       // r20: the sample feeds both brute-force truth sides AND the
       // production banding — four differently-renamed consumers that
       // each re-ran the scan + norm; the sample is Θ(target) rows by
@@ -816,9 +811,7 @@ object DedupOps {
     */
   def dedupEmbeddingAllPairs(spark: SparkSession, dir: String): DataFrame = {
     import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id")))
+    val e = NearestAnchor.corpus(spark, dir)
     e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .withColumn("cos", round(VectorExpressions.cosineNative(
         col("a.embedding"), col("a.nrm"), col("b.embedding"), col("b.nrm")), 6))
@@ -846,29 +839,21 @@ object DedupOps {
 
   /** Shared nearest-anchor assignment of [[semDedup]] and
     * [[prototypes]]: `e` carries (vec_id, embedding, nrm); returns the
-    * slim (vec_id, cell, ccos) triple. Cells = [[semCells]] of the
-    * session-memoized corpus count ([[Tables.rowCount]]); per-vector argmax is a codegen'd
-    * min(struct) partial aggregate — n rows shuffled, never
-    * n × |cells| into per-vector sorts.
+    * slim (vec_id, cell, ccos) triple against the [[semCells]]
+    * lowest-id anchors of the session-memoized corpus count
+    * ([[Tables.rowCount]]), through the [[NearestAnchor]] decision.
     */
-  private def semAssign(spark: SparkSession, dir: String, e: DataFrame): DataFrame = {
-    import graft.plans.VectorExpressions
-    val cells = semCells(Tables.rowCount(spark, dir, "embeddings"))
-    val cents = e.filter(col("vec_id") < cells)
-      .select(col("vec_id").as("cell"), col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
+  private def semAssign(spark: SparkSession, dir: String, e: DataFrame): DataFrame =
     // materialized ONCE: every caller fans the slim triple out 2-3
     // ways (pair sides, stats, both rank directions), and without the
     // pin each consumer re-runs the n x |cells| assignment cosine
     // pass — the expensive stage of the whole family; ~24 bytes/vector.
-    e.crossJoin(broadcast(cents))
-      .withColumn("ccos", round(VectorExpressions.cosineNative(
-        col("c_emb"), col("c_nrm"), col("embedding"), col("nrm")), 6))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(negate(col("ccos")).as("nc"), col("cell").as("cell"))).as("best"))
-      .select(col("vec_id"), col("best.cell").as("cell"),
-        negate(col("best.nc")).as("ccos"))
+    NearestAnchor.assignCorpus(e, semAnchors(spark, dir, e), NearestAnchor.FloatAnchors)
       .transform(materialize)
-  }
+
+  /** The [[semCells]] lowest-id float anchors of the corpus `e`. */
+  private def semAnchors(spark: SparkSession, dir: String, e: DataFrame): DataFrame =
+    NearestAnchor.lowestIdAnchors(e, semCells(Tables.rowCount(spark, dir, "embeddings")))
 
   /** SemDeDup — cluster-then-pair SEMANTIC dedup (Abbas et al. 2023,
     * arXiv:2303.09540): embeddings are coarse-clustered (nearest
@@ -891,35 +876,28 @@ object DedupOps {
     * the [[AnnOps.ivfCellStats]] pre-flight and splits under AQE's
     * skew-join handling; past ~10⁸ vectors the anchor table outgrows a
     * broadcast and assignment becomes a two-level (anchor-of-anchors)
-    * keyed join — the faiss IVF-HNSW seam, out of scope here.
+    * keyed join — [[semDedupHier]].
     */
   def semDedup(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id")))
+    val e = NearestAnchor.corpus(spark, dir)
     semPairs(semAssign(spark, dir, e), e)
   }
 
   /** [[semDedup]] with the assignment routed through the two-level
     * [[HierAssign]] path — the layout for the corpus-adaptive anchor
-    * table PAST the broadcast ceiling the flat [[semAssign]] doc
-    * names: only the √cells super anchors broadcast; leaves resolve
+    * table PAST the broadcast ceiling [[semDedup]]'s doc names:
+    * only the √cells super anchors broadcast; leaves resolve
     * through a grp-keyed join. Bit-identical to [[semDedup]] at
     * current scales (same rounded scores, same ties — spec-pinned,
     * and the registered oracle is the flat pipeline's SQL).
     */
   def semDedupHier(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id")))
+    val e = NearestAnchor.corpus(spark, dir)
     val cells = semCells(Tables.rowCount(spark, dir, "embeddings"))
-    val cents = e.filter(col("vec_id") < cells)
-      .select(col("vec_id").as("cell"), col("embedding").as("c_emb"), col("nrm").as("c_nrm"))
     // route = groups: exact by construction (see HierAssign doc)
     val g = HierAssign.defaultGroups(cells.toInt)
-    semPairs(materialize(HierAssign.assignFloat(e, cents, g, g)), e)
+    semPairs(materialize(HierAssign.assign(e, semAnchors(spark, dir, e),
+      NearestAnchor.FloatAnchors, g, g)), e)
   }
 
   /** Shared pair/verify/keeper stage of the SemDeDup family: `asg` is
@@ -955,30 +933,14 @@ object DedupOps {
   /** [[semDedup]] with an externally supplied UNIT-NORM double anchor
     * table (cell, c) — e.g. Lloyd-refined [[Kmeans.anchors]], the
     * layout the SemDeDup paper actually clusters with. Swaps ONLY the
-    * assignment's centroid table (the [[AnnOps.annIvfWith]]
-    * discipline): dot / ‖x‖ against unit anchors with the decision
-    * rounded to 6 decimals, argmax via the same codegen'd min(struct),
+    * assignment's centroid table and its score (the
+    * [[AnnOps.annIvfWith]] discipline): [[NearestAnchor.UnitAnchors]],
     * the same one-time checkpoint, the same shared [[semPairs]] tail.
     */
   def semDedupWith(spark: SparkSession, dir: String, anchors: DataFrame): DataFrame = {
-    import graft.plans.VectorExpressions
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id")))
-    // codegen'd widened dot (float corpus × double anchors) — the
-    // interpreted HOF form here was the r13 slice bench's 4.4×
-    // overhead vs the deterministic-anchor twin; accumulation order
-    // and widening are bit-identical, so scores (and the oracle) are
-    // unchanged
-    val asg = e.crossJoin(broadcast(anchors))
-      .withColumn("ccos", round(
-        VectorExpressions.widenedDotNative(col("embedding"), col("c")) / col("nrm"), 6))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(negate(col("ccos")).as("nc"), col("cell").as("cell"))).as("best"))
-      .select(col("vec_id"), col("best.cell").as("cell"),
-        negate(col("best.nc")).as("ccos"))
-      .transform(materialize)
-    semPairs(asg, e)
+    val e = NearestAnchor.corpus(spark, dir)
+    semPairs(NearestAnchor.assignCorpus(e, anchors, NearestAnchor.UnitAnchors)
+      .transform(materialize), e)
   }
 
   /** SemDeDup over the Lloyd-refined cluster layout — the paper's
@@ -1021,10 +983,8 @@ object DedupOps {
     * the cell table, not the corpus.
     */
   def prototypes(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.{TopKAgg, VectorExpressions}
-    val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", VectorExpressions.normNative(col("embedding")))
-      .transform(repartByKey(_, col("vec_id")))
+    import graft.plans.TopKAgg
+    val e = NearestAnchor.corpus(spark, dir)
     val asg = semAssign(spark, dir, e)
     // the mean over a DOUBLE column is summation-order-dependent at
     // the 6th decimal (partition merge order flips the rounded value
@@ -1034,16 +994,19 @@ object DedupOps {
       .agg(count(lit(1)).as("n_members"),
         round(sum(col("ccos").cast("decimal(18,6)")).cast("double") / count(lit(1)), 6)
           .as("mean_ccos"))
-    def ranked(role: String, key: Column) = asg
+    // "proto" ranks a cell's members nearest-anchor first (the
+    // decision order of NearestAnchor.key), "edge" farthest first;
+    // both tie to the lowest vec_id
+    val member = Seq(col("vec_id").as("vec_id"), col("ccos").as("ccos"))
+    def ranked(role: String, item: Column) = asg
       .groupBy(col("cell"))
-      .agg(TopKAgg.topK(struct(key.as("k"), col("vec_id").as("vec_id"),
-        col("ccos").as("ccos")), ProtoK).as("tk"))
+      .agg(TopKAgg.topK(item, ProtoK).as("tk"))
       .select(col("cell"), posexplode(col("tk")).as(Seq("pos", "it")))
       .select(col("cell"), lit(role).as("role"),
         (col("pos") + 1).cast("long").as("rnk"),
         col("it.vec_id").as("vec_id"), col("it.ccos").as("ccos"))
-    ranked("proto", negate(col("ccos")))
-      .union(ranked("edge", col("ccos")))
+    ranked("proto", NearestAnchor.key(col("ccos"), member: _*))
+      .union(ranked("edge", struct(col("ccos").as("k") +: member: _*)))
       .join(stats, "cell")
       .select(col("cell"), col("role"), col("rnk"), col("vec_id"),
         col("ccos"), col("n_members"), col("mean_ccos"))

@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.plans.{TopKAgg, VectorExpressions}
-
 /** Two-level (anchor-of-anchors) IVF coarse assignment — the scale
   * path past the flat broadcast's ceiling. Flat assignment crossJoins
   * the corpus against a BROADCAST anchor table; with corpus-adaptive
@@ -20,7 +18,7 @@ import graft.plans.{TopKAgg, VectorExpressions}
   *      K × G self-assignment, same 6-decimal/lowest-id decision
   *      contract as every assignment in this repo);
   *   3. each vector takes its `route` nearest supers (bounded
-  *      [[TopKAgg]], map-side combinable) and resolves against ONLY
+  *      [[graft.plans.TopKAgg]], map-side combinable) and resolves against ONLY
   *      the leaves routed under them through a GROUP-KEYED JOIN —
   *      deliberately not broadcast-hinted: the leaf table is
   *      corpus-derived at scale (AQE still broadcasts it while
@@ -50,78 +48,31 @@ object HierAssign {
   def defaultGroups(cells: Int): Int =
     math.max(2, math.ceil(math.sqrt(cells.toDouble)).toInt)
 
-  /** Float-layout assignment (the lowest-id anchor layout of
-    * [[DedupOps]]' semAssign and [[AnnOps]]' assignCells): `cents` is
-    * (cell, c_emb: array<float>, c_nrm: double), `e` is (vec_id,
-    * embedding, nrm). Returns (vec_id, cell, ccos) — the flat
-    * assignment's exact schema, ccos = the winning rounded cosine.
+  /** Two-level assignment of the corpus `e` (vec_id, embedding, nrm)
+    * to `cents` (cell plus the columns of `layout`): each leaf anchor
+    * routes to its nearest super, each vector takes its `route`
+    * nearest supers and resolves against their leaves. Every stage is
+    * the [[NearestAnchor]] decision over `layout`'s score, so
+    * candidate scores are bit-identical to the flat assignment.
+    * Returns (vec_id, cell, ccos) — the flat assignment's schema.
     */
-  def assignFloat(e: DataFrame, cents: DataFrame,
+  def assign(e: DataFrame, cents: DataFrame, layout: NearestAnchor.Layout,
       groups: Int, route: Int): DataFrame = {
-    val supers = broadcast(cents.filter(col("cell") < groups)
-      .select(col("cell").as("grp"), col("c_emb").as("g_emb"), col("c_nrm").as("g_nrm")))
-    def gcos(emb: Column, nrm: Column): Column =
-      round(VectorExpressions.cosineNative(col("g_emb"), col("g_nrm"), emb, nrm), 6)
+    val g: String => Column = c => col("g_" + c)
+    val supers = cents.filter(col("cell") < groups)
+      .select(col("cell").as("grp") +: layout.cols.map(c => col(c).as("g_" + c)): _*)
     // leaf → nearest super: K × G rows, the only pass that sees every
     // leaf against every super
-    val leafGrp = cents.crossJoin(supers)
-      .withColumn("gc", gcos(col("c_emb"), col("c_nrm")))
-      .groupBy(col("cell"))
-      .agg(min(struct(negate(col("gc")).as("ng"), col("grp").as("grp"))).as("best"),
-        first(col("c_emb")).as("c_emb"), first(col("c_nrm")).as("c_nrm"))
-      .select(col("best.grp").as("grp"), col("cell"), col("c_emb"), col("c_nrm"))
+    val (leafEmb, leafNrm) = layout.asVector(col)
+    val leafGrp = NearestAnchor.assign(cents, supers, "cell",
+        layout.score(g, leafEmb, leafNrm), cell = "grp", carry = layout.cols)
+      .select(col("grp") +: col("cell") +: layout.cols.map(col): _*)
     // vector → `route` nearest supers; only (vec_id, grp) rides out
-    val vgrp = e.crossJoin(supers)
-      .withColumn("gc", gcos(col("embedding"), col("nrm")))
-      .groupBy(col("vec_id"))
-      .agg(TopKAgg.topK(
-        struct(negate(col("gc")).as("ng"), col("grp").as("grp")), route).as("_tk"))
-      .select(col("vec_id"), explode(col("_tk.grp")).as("grp"))
+    val vgrp = NearestAnchor.nearestCells(e, supers, "vec_id",
+      layout.score(g, col("embedding"), col("nrm")), route, cell = "grp")
     // resolve against the routed leaves: the grp-keyed join (no
     // broadcast hint — see the object doc), then the flat argmax
-    vgrp.join(e, "vec_id").join(leafGrp, "grp")
-      .withColumn("ccos", round(VectorExpressions.cosineNative(
-        col("c_emb"), col("c_nrm"), col("embedding"), col("nrm")), 6))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(negate(col("ccos")).as("nc"), col("cell").as("cell"))).as("best"))
-      .select(col("vec_id"), col("best.cell").as("cell"),
-        negate(col("best.nc")).as("ccos"))
-  }
-
-  /** Unit-double-layout assignment (the [[Kmeans.anchors]] layout
-    * behind annIvfWith): `cents` is (cell, c: unit-norm
-    * array<double>), scored as dot / ‖x‖ with the SAME codegen'd
-    * widened dot (and the same `roundCcos` pin) as the flat
-    * annIvfWith pass, so candidate scores are bit-identical.
-    * Returns (vec_id, cell, ccos).
-    */
-  def assignUnit(e: DataFrame, cents: DataFrame,
-      groups: Int, route: Int, roundCcos: Boolean): DataFrame = {
-    def anchorCos(c: Column, emb: Column, nrm: Column): Column = {
-      val v = VectorExpressions.widenedDotNative(emb, c) / nrm
-      if (roundCcos) round(v, 6) else v
-    }
-    val supers = broadcast(cents.filter(col("cell") < groups)
-      .select(col("cell").as("grp"), col("c").as("g_c")))
-    // leaf supers-routing scores both unit anchors with the same fold;
-    // the leaf side needs (emb, nrm) shape → (c, 1.0), both unit-norm
-    val leafGrp = cents.crossJoin(supers)
-      .withColumn("gc", anchorCos(col("g_c"), col("c"), lit(1.0)))
-      .groupBy(col("cell"))
-      .agg(min(struct(negate(col("gc")).as("ng"), col("grp").as("grp"))).as("best"),
-        first(col("c")).as("c"))
-      .select(col("best.grp").as("grp"), col("cell"), col("c"))
-    val vgrp = e.crossJoin(supers)
-      .withColumn("gc", anchorCos(col("g_c"), col("embedding"), col("nrm")))
-      .groupBy(col("vec_id"))
-      .agg(TopKAgg.topK(
-        struct(negate(col("gc")).as("ng"), col("grp").as("grp")), route).as("_tk"))
-      .select(col("vec_id"), explode(col("_tk.grp")).as("grp"))
-    vgrp.join(e, "vec_id").join(leafGrp, "grp")
-      .withColumn("ccos", anchorCos(col("c"), col("embedding"), col("nrm")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(negate(col("ccos")).as("nc"), col("cell").as("cell"))).as("best"))
-      .select(col("vec_id"), col("best.cell").as("cell"),
-        negate(col("best.nc")).as("ccos"))
+    NearestAnchor.argmax(vgrp.join(e, "vec_id").join(leafGrp, "grp"), "vec_id",
+      layout.score(col("embedding"), col("nrm")))
   }
 }

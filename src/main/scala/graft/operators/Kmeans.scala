@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Deterministic Lloyd-iterated spherical k-means — the anchor
   * refinement that turns [[AnnOps.annIvf]]'s seed cells (lowest-id
@@ -22,8 +21,8 @@ import org.apache.spark.sql.expressions.Window
   *
   * 100 TB shape: each iteration is one broadcast-join scan of the
   * corpus plus a (cell, dim)-keyed aggregation onto k·dim cells —
-  * no corpus-sized shuffle. The argmax ships only the slim
-  * (vec_id, cell, dot) triple through its window; the mean
+  * no corpus-sized shuffle. The argmax ships one slim (vec_id,
+  * cell, dot) row per vector through its exchange; the mean
   * aggregates exploded scalars; the k-row anchor table is
   * pinned per round so corpus lineage never re-executes.
   */
@@ -39,22 +38,18 @@ object Kmeans {
     unitOf(transform(emb, x => x.cast("double")))
 
   /** Nearest anchor per vector: (vec_id, cell, dot) with dot = cosine
-    * (both sides unit-norm), ties to the lowest cell. `portable` rounds
-    * the dot to 6 decimals BEFORE the argmax so the decision is
-    * reproducible across engines (the fold itself is order-fixed, but
-    * another engine's list sum may differ in the low bits).
+    * (both sides unit-norm), ties to the lowest cell — the
+    * [[NearestAnchor]] decision. `portable` rounds the dot to 6
+    * decimals BEFORE the argmax so the decision is reproducible across
+    * engines (the fold itself is order-fixed, but another engine's list
+    * sum may differ in the low bits).
     */
   private def assign(nd: DataFrame, anchors: DataFrame,
       portable: Boolean = false): DataFrame = {
     val dotRaw = graft.plans.VectorExpressions.widenedDotNative(col("nv"), col("c"))
     val dot = if (portable) round(dotRaw, 6) else dotRaw
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("dot").desc, col("cell"))
-    nd.crossJoin(broadcast(anchors))
-      .withColumn("dot", dot)
-      .select(col("vec_id"), col("cell"), col("dot"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("cell"), col("dot"))
+    NearestAnchor.assign(nd, anchors, "vec_id", dot)
+      .select(col("vec_id"), col("cell"), col("ccos").as("dot"))
   }
 
   /** Anchor tables after 0, 1, …, `iters` Lloyd iterations — element 0

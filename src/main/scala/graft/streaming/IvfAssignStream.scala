@@ -1,7 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+
+import graft.plans.VectorExpressions
 
 /** Streaming IVF index maintenance — coarse assignment at INGEST.
   * A production vector index is not rebuilt per snapshot: vectors
@@ -14,11 +18,12 @@ import org.apache.spark.sql.functions._
   * lrWeights/CurateStream serve contract; training stays a batch
   * job, exactly like faiss `train` → `add`), and each arriving
   * vector is scored against every anchor with the SAME arithmetic
-  * as the batch assignment: left-to-right widened float×double dot
-  * (the [[graft.plans.VectorExpressions.widenedDotCompute]] loop,
-  * replicated verbatim), ÷ the vector's L2 norm, rounded to 6
+  * as the batch assignment: the batch kernels themselves
+  * ([[graft.plans.VectorExpressions.widenedDotCompute]] over the
+  * float vector and the double anchor, ÷
+  * [[graft.plans.VectorExpressions.l2NormCompute]]), rounded to 6
   * decimals (portable mode), argmax with ties to the LOWEST cell —
-  * the repo-wide assignment decision contract. IvfAssignStreamSpec
+  * the [[graft.operators.NearestAnchor]] decision. IvfAssignStreamSpec
   * pins stream ≡ the batch Column pipeline BIT-FOR-BIT across
   * micro-batch boundaries (the NearDupStream band-key discipline).
   *
@@ -56,24 +61,18 @@ object IvfAssignStream {
     val spark = vecs.sparkSession
     import spark.implicits._
     // lowest-cell-first order makes the strict-> fold's tie behavior
-    // exactly the batch min(struct(-ccos, cell)) contract
+    // exactly the batch min(struct(-ccos, cell)) contract; the anchors
+    // become ArrayData once, on the driver
     val sorted = anchors.sortBy(_._1)
+      .map { case (cell, c) => (cell, UnsafeArrayData.fromPrimitiveArray(c): ArrayData) }
     vecs.mapPartitions { rows =>
       rows.map { v =>
-        val emb = v.embedding
-        var s = 0.0
-        var i = 0
-        while (i < emb.length) { val e = emb(i).toDouble; s += e * e; i += 1 }
-        val nrm = math.sqrt(s)
+        val emb = UnsafeArrayData.fromPrimitiveArray(v.embedding)
+        val nrm = VectorExpressions.l2NormCompute(emb, true)
         var bestCell = -1L
         var bestC = Double.NegativeInfinity
         sorted.foreach { case (cell, c) =>
-          require(c.length == emb.length,
-            s"ivf-assign: dim mismatch (${c.length} vs ${emb.length})")
-          var d = 0.0
-          var j = 0
-          while (j < emb.length) { d += emb(j).toDouble * c(j); j += 1 }
-          val ccos = r6(d / nrm)
+          val ccos = r6(VectorExpressions.widenedDotCompute(emb, c, true, false) / nrm)
           if (ccos > bestC) { bestC = ccos; bestCell = cell }
         }
         Assigned(v.vec_id, bestCell, bestC)

@@ -26,8 +26,8 @@ class HierAssignSpec extends AnyFunSuite {
 
   test("two-level unit-anchor assignment reproduces flat annIvfWith over the trained layout") {
     val anchors = AnnOps.trainedAnchors(spark, sf)
-    val flat = AnnOps.annIvfWith(spark, sf, anchors, roundCcos = true)
-    val hier = AnnOps.annIvfWith(spark, sf, anchors, roundCcos = true, hierarchical = true)
+    val flat = AnnOps.annIvfWith(spark, sf, anchors)
+    val hier = AnnOps.annIvfWith(spark, sf, anchors, hierarchical = true)
     assert(rows(hier) === rows(flat))
   }
 

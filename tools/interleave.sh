@@ -3,9 +3,10 @@
 # artifact (round-16 verdict item 6). Cross-window bench comparisons are
 # contaminated by host-load "weather" (this container swings single-query
 # wall-times 2-3x minute to minute), so regressions are adjudicated by
-# rebuilding the PREVIOUS round's binary in a git worktree and running
-# prev/cur ALTERNATELY on the SAME slice data within one window: weather
-# hits both sides equally and the paired per-query ratios are honest.
+# rebuilding the PREVIOUS round's binary from a fresh `git archive` of
+# its commit and running prev/cur ALTERNATELY on the SAME slice data
+# within one window: weather hits both sides equally and the paired
+# per-query ratios are honest.
 #
 # Usage: tools/interleave.sh <prev-ref> <sf-dir> <out-json> <rounds> <query...>
 #   prev-ref  git ref of the previous round's final commit
@@ -14,8 +15,17 @@
 #   rounds    A/B alternations (each side runs `rounds` full Bench passes)
 #   query...  the query subset (must exist in BOTH refs' registries)
 #
-# Output JSON: per query the per-round min-of-2 samples for both sides,
-# each side's min across rounds, and the cur/prev ratio; plus totals.
+# The side that runs first alternates round by round (prev first in odd
+# rounds, cur first in even ones), so a warm-up or a drift inside a round
+# falls on both sides alike.
+#
+# Output JSON: per query the per-round samples for both sides, each
+# side's min and median across rounds, the cur/prev ratio of each, and
+# the prev side's own spread across rounds ((max - min) / min). A query
+# whose prev spread exceeds 10 % is marked `unresolved`: its ratio is
+# inside the build's own noise and cannot decide the 10 % rule — re-time
+# it warm in one JVM. Plus totals and `prev_sha`, the commit prev-ref
+# resolved to.
 set -euo pipefail
 REF=$1; SF=$2; OUT=$3; ROUNDS=$4; shift 4
 QUERIES=("$@")
@@ -23,25 +33,18 @@ QUERIES=("$@")
 REPO=$(cd "$(dirname "$0")/.." && pwd)
 OUT_ABS=$(cd "$(dirname "$OUT")" 2>/dev/null && pwd)/$(basename "$OUT") || OUT_ABS=$REPO/$OUT
 
-WT=/tmp/graft_interleave_wt
-if [ ! -d "$WT" ]; then
-  git -C "$REPO" worktree add --detach "$WT" "$REF" >&2
-else
-  # A stale worktree from a previous run may hold a DIFFERENT ref —
-  # silently benching against it would adjudicate vs a wrong baseline.
-  # Force the requested ref (and a clean tree) every time.
-  git -C "$WT" checkout --detach "$REF" >&2
-  git -C "$WT" reset --hard "$REF" >&2
-fi
-WT_HEAD=$(git -C "$WT" rev-parse HEAD)
-REF_SHA=$(git -C "$REPO" rev-parse "$REF^{commit}")
-[ "$WT_HEAD" = "$REF_SHA" ] || { echo "worktree HEAD $WT_HEAD != requested ref $REF_SHA" >&2; exit 1; }
-echo "[interleave] building prev ($REF) in $WT" >&2
+# The prev tree is the requested commit by construction: its committed
+# files, extracted into a fresh directory (removed on exit).
+REF_SHA=$(git -C "$REPO" rev-parse --verify "$REF^{commit}")
+WT=$(mktemp -d /tmp/graft_interleave_prev.XXXX)
+TMP=$(mktemp -d /tmp/graft_interleave_runs.XXXX)
+trap 'rm -rf "$WT" "$TMP"' EXIT
+git -C "$REPO" archive "$REF_SHA" | tar -x -C "$WT"
+echo "[interleave] building prev ($REF = $REF_SHA) in $WT" >&2
 (cd "$WT" && sbt -batch compile >/dev/null)
 echo "[interleave] building cur in $REPO" >&2
 (cd "$REPO" && sbt -batch compile >/dev/null)
 
-TMP=$(mktemp -d /tmp/graft_interleave_runs.XXXX)
 run_side() { # $1 = tree dir, $2 = tag, $3 = round
   echo "[interleave] round $3 $2" >&2
   (cd "$1" && SPARK_GRAFT_SF_DIR=$SF SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-4} \
@@ -49,13 +52,17 @@ run_side() { # $1 = tree dir, $2 = tag, $3 = round
   cp "$1/bench_queries.json" "$TMP/$2_$3.json"
 }
 for r in $(seq 1 "$ROUNDS"); do
-  run_side "$WT" prev "$r"
-  run_side "$REPO" cur "$r"
+  if (( r % 2 )); then
+    run_side "$WT" prev "$r"; run_side "$REPO" cur "$r"
+  else
+    run_side "$REPO" cur "$r"; run_side "$WT" prev "$r"
+  fi
 done
 
-python3 - "$REF" "$SF" "$ROUNDS" "$TMP" "$OUT_ABS" <<'EOF'
-import json, sys
-ref, sf, rounds, tmp, out = sys.argv[1], sys.argv[2], int(sys.argv[3]), sys.argv[4], sys.argv[5]
+python3 - "$REF" "$REF_SHA" "$SF" "$ROUNDS" "$TMP" "$OUT_ABS" <<'EOF'
+import json, statistics, sys
+ref, sha, sf, rounds, tmp, out = sys.argv[1:7]
+rounds = int(rounds)
 def load(tag):
     runs = []
     for r in range(1, rounds + 1):
@@ -74,26 +81,39 @@ for n in only_cur:
 for n in only_prev:
     print(f"[interleave] SKIP {n}: absent from cur registry", file=sys.stderr)
 names = sorted(set(cur[0]) & set(prev[0]))
+SPREAD = 0.10  # the rule's own bound: a wider prev spread cannot decide it
+def ratio(c, p):
+    return round(c / p, 3) if p > 0 else None
 qs = {}
 for n in names:
     p = [r[n] for r in prev if n in r]
     c = [r[n] for r in cur if n in r]
     pm, cm = min(p), min(c)
+    pmed, cmed = statistics.median(p), statistics.median(c)
+    spread = round((max(p) - pm) / pm, 3) if pm > 0 else None
     qs[n] = {"prev": p, "cur": c, "prev_min": pm, "cur_min": cm,
-             "ratio_cur_over_prev": round(cm / pm, 3) if pm > 0 else None}
+             "prev_median": pmed, "cur_median": cmed,
+             "ratio_cur_over_prev": ratio(cm, pm),
+             "ratio_median_cur_over_prev": ratio(cmed, pmed),
+             "prev_spread": spread,
+             "unresolved": spread is None or spread > SPREAD}
 tp = round(sum(q["prev_min"] for q in qs.values()), 3)
 tc = round(sum(q["cur_min"] for q in qs.values()), 3)
-doc = {"prev_ref": ref, "sf": sf, "rounds": rounds,
+doc = {"prev_ref": ref, "prev_sha": sha, "sf": sf, "rounds": rounds, "first_side": "prev in odd rounds, cur in even",
        "skipped_only_cur": only_cur, "skipped_only_prev": only_prev,
        "total_prev_min": tp, "total_cur_min": tc,
        "total_ratio_cur_over_prev": round(tc / tp, 3) if tp else None,
+       "unresolved": sorted(n for n, q in qs.items() if q["unresolved"]),
        "queries": qs}
 with open(out, "w") as f:
     json.dump(doc, f, indent=1, sort_keys=True)
 print(f"[interleave] wrote {out}: total cur/prev = {doc['total_ratio_cur_over_prev']}",
       file=sys.stderr)
-worst = sorted(qs.items(), key=lambda kv: -(kv[1]["ratio_cur_over_prev"] or 0))[:5]
+worst = sorted(qs.items(), key=lambda kv: -(kv[1]["ratio_median_cur_over_prev"] or 0))[:5]
 for n, q in worst:
-    print(f"[interleave]   {n}: {q['prev_min']:.2f} -> {q['cur_min']:.2f} "
-          f"({q['ratio_cur_over_prev']}x)", file=sys.stderr)
+    print(f"[interleave]   {n}: median {q['prev_median']:.2f} -> {q['cur_median']:.2f} "
+          f"({q['ratio_median_cur_over_prev']}x), min {q['ratio_cur_over_prev']}x"
+          f"{', unresolved (prev spread ' + str(q['prev_spread']) + ')' if q['unresolved'] else ''}",
+          file=sys.stderr)
+print(f"[interleave] unresolved: {len(doc['unresolved'])} {doc['unresolved']}", file=sys.stderr)
 EOF

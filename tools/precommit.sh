@@ -18,7 +18,11 @@
 # CdcStreamSpec, StreamingConnectorE2ESpec, IvmConnectorE2ESpec), and
 # the native-kernel specs (KernelContractSpec, TextExpressionsSpec,
 # GraftFunctionsSpec, GraftExtensionsSpec, WinnowSpec, PiiScrubSpec,
-# AuditBaselineSpec, PlanGuardsSpec). Use
+# AuditBaselineSpec, PlanGuardsSpec), and the vector-family specs that
+# rest on the nearest-anchor decision (NearestAnchorSpec, AnnIvfSpec,
+# AnnIvfCompactedSpec, AnnIvfPqSpec, AnnIvfHierPqSpec, AnnPqSpec,
+# AnnSq8Spec, SemDedupSpec, PrototypesSpec, KmeansSpec,
+# IvfRebalanceSpec, KnnClassifySpec, IvfAssignStreamSpec). Use
 # before END-OF-ROUND snapshots and after touching query plumbing.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -78,6 +82,17 @@ if grep -rnE --include='*.scala' -e 'doGenCode|nullSafeCodeGen' src/main/scala/ 
 fi
 echo "PRECOMMIT OK: every native kernel reaches codegen through StaticInvoke."
 
+# Nearest-anchor gate: the vector family's cell decision (highest
+# rounded score, ties to the lowest cell) lives only in
+# operators/NearestAnchor.scala, so no other main source may negate a
+# cell score into an argmax or top-k key.
+if grep -rnF --include='*.scala' -e 'negate(col("ccos"))' -e 'negate(col("gc"))' \
+    src/main/scala/ | grep -v '^src/main/scala/graft/operators/NearestAnchor\.scala:' >&2; then
+  echo "PRECOMMIT FAIL: cell decision above bypasses operators.NearestAnchor — route it through the helper." >&2
+  exit 1
+fi
+echo "PRECOMMIT OK: every nearest-anchor cell decision goes through operators.NearestAnchor."
+
 # Bench gate (round-12 lesson: q_winnow_dedup reached the registry
 # without ever being benched and shipped a 615 s plan): every
 # registered query must have a per-query entry in bench_queries.json —
@@ -117,11 +132,11 @@ echo "PRECOMMIT OK: every registered query has a bench entry."
 #      that only min-of-2 absorbed). If any per-query p2/p1 ratio
 #      exceeds 3x, run a third pass for the record.
 if [[ "${PRECOMMIT_SMOKE:-0}" == "1" ]]; then
-  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec graft.LocalFsSpec graft.UpsertSinkSpec graft.operators.LatestWinsTieBreakSpec graft.operators.IvmSpec graft.GraftSessionMemoSpec graft.operators.HierAssignSpec graft.ConfParitySpec graft.multimodal.RleSpec graft.multimodal.McSpec graft.multimodal.GopSpec graft.multimodal.XfSpec graft.multimodal.DemuxSpec graft.multimodal.CodecPropertiesSpec graft.multimodal.VideoCodecContractSpec graft.TxnSnapshotStreamSpec graft.CdcStreamSpec graft.StreamingConnectorE2ESpec graft.IvmConnectorE2ESpec graft.plans.KernelContractSpec graft.plans.TextExpressionsSpec graft.GraftFunctionsSpec graft.GraftExtensionsSpec graft.operators.WinnowSpec graft.operators.PiiScrubSpec graft.AuditBaselineSpec graft.PlanGuardsSpec" \
+  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec graft.LocalFsSpec graft.UpsertSinkSpec graft.operators.LatestWinsTieBreakSpec graft.operators.IvmSpec graft.GraftSessionMemoSpec graft.operators.HierAssignSpec graft.ConfParitySpec graft.multimodal.RleSpec graft.multimodal.McSpec graft.multimodal.GopSpec graft.multimodal.XfSpec graft.multimodal.DemuxSpec graft.multimodal.CodecPropertiesSpec graft.multimodal.VideoCodecContractSpec graft.TxnSnapshotStreamSpec graft.CdcStreamSpec graft.StreamingConnectorE2ESpec graft.IvmConnectorE2ESpec graft.plans.KernelContractSpec graft.plans.TextExpressionsSpec graft.GraftFunctionsSpec graft.GraftExtensionsSpec graft.operators.WinnowSpec graft.operators.PiiScrubSpec graft.AuditBaselineSpec graft.PlanGuardsSpec graft.operators.NearestAnchorSpec graft.operators.AnnIvfSpec graft.operators.AnnIvfCompactedSpec graft.operators.AnnIvfPqSpec graft.operators.AnnIvfHierPqSpec graft.operators.AnnPqSpec graft.operators.AnnSq8Spec graft.operators.SemDedupSpec graft.operators.PrototypesSpec graft.operators.KmeansSpec graft.operators.IvfRebalanceSpec graft.operators.KnnClassifySpec graft.IvfAssignStreamSpec" \
       >/tmp/precommit_smoke.log 2>&1 || {
     echo "PRECOMMIT FAIL: smoke specs broken — do not commit." >&2
     tail -n 40 /tmp/precommit_smoke.log >&2
     exit 1
   }
-  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine, local file system, upsert sink, latest-wins, session memo, video codec, streaming sink and native-kernel specs green."
+  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine, local file system, upsert sink, latest-wins, session memo, video codec, streaming sink, native-kernel and vector-family specs green."
 fi
