@@ -691,26 +691,13 @@ object AnnOps {
     * codeword table is pinned per round so corpus lineage never
     * re-executes.
     */
-  private def pqCodebook(subd: DataFrame, iters: Int): DataFrame = {
-    val cached = subd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var cur = cached.filter(col("vec_id") < PqK)
-      .select(col("m"), col("vec_id").as("code"), col("sub").as("c_sub"))
-      .transform(materialize)
-    for (_ <- 0 until iters) {
-      val asg = nearestCode(cached, cur)
-      val means = asg.join(cached, Seq("vec_id", "m"))
-        .select(col("m"), col("code"), posexplode(col("sub")).as(Seq("dim", "v")))
-        .groupBy("m", "code", "dim").agg(round(avg(col("v")), 6).as("mv"))
-        .groupBy("m", "code")
-        .agg(array_sort(collect_list(struct(col("dim"), col("mv")))).as("dm"))
-        .select(col("m"), col("code"), transform(col("dm"), s => s.getField("mv")).as("mc"))
-      cur = cur.as("p").join(means, Seq("m", "code"), "left")
-        .select(col("m"), col("code"), coalesce(col("mc"), col("p.c_sub")).as("c_sub"))
-        .transform(materialize)
+  private def pqCodebook(subd: DataFrame, iters: Int): DataFrame =
+    iterate(iters, Seq(subd))(_ => materialize(subd.filter(col("vec_id") < PqK)
+        .select(col("m"), col("vec_id").as("code"), col("sub").as("c_sub")))) { (_, cur) =>
+      val members = nearestCode(subd, cur).join(subd, Seq("vec_id", "m"))
+      Some(materialize(Kmeans.lloydStep(cur, members, Seq("m", "code"), "sub", "c_sub",
+        round(avg(col("v")), 6))))
     }
-    cached.unpersist() // codebooks are checkpointed; the cache is training-local
-    cur
-  }
 
   /** Encode: per (vec_id, m) of the subvectors `subs` (vec_id, m,
     * sub), the nearest codeword of `codebook` (m, code, c_sub) by

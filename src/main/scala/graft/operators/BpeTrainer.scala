@@ -28,8 +28,9 @@ import graft.plans.Kernel
   *   3. one codegen'd projection applying the merge to every word's
   *      symbol array (the [[mergePairCompute]] kernel — a sequential
   *      in-array scan, never an explode/re-group of the corpus).
-  * State between rounds is the word-type frame, pinned per round
-  * (`materialize`) so no round re-reads lineage.
+  * State between rounds is the word-type frame, cut per round
+  * ([[iterate]]'s lazy cut, materialized by the next round's collect)
+  * so no round re-reads lineage.
   *
   * Training is DETERMINISTIC: greedy argmax with a total order, so
   * BpeSpec pins the distributed loop against an independent
@@ -91,39 +92,33 @@ object BpeTrainer {
     * pair has support ≥ 2 (merging a count-1 pair encodes nothing).
     */
   def train(spark: SparkSession, wordCounts: DataFrame, nMerges: Int): Seq[Merge] = {
-    var state = materialize(
-      wordCounts.select(split(col("word"), "").as("syms"), col("n")))
-    val merges = Seq.newBuilder[Merge]
-    var rank = 0
-    var done = false
-    while (rank < nMerges && !done) {
-      // adjacent-pair supports, weighted by word count: one explode of
-      // the zipped (syms[i], syms[i+1]) stream, map-side combined to
-      // |pair types| rows; the argmax is a TakeOrdered over that
-      // bounded frame and a ONE-row collect (k rows of driver state
-      // over the whole training — the Kmeans anchor-collect contract)
-      val len1 = greatest(size(col("syms")) - 1, lit(0))
-      val top = state
-        .select(col("n"), explode(zip_with(
-          slice(col("syms"), lit(1), len1),
-          slice(col("syms"), lit(2), len1),
-          (a, b) => concat(a, lit(Sep), b))).as("p"))
-        .groupBy("p").agg(sum(col("n")).as("c"))
-        .filter(col("c") >= 2)
-        .orderBy(col("c").desc, col("p"))
-        .limit(1)
-        .collect()
-      if (top.isEmpty) done = true
-      else {
-        val Array(a, b) = top(0).getString(0).split(Sep, 2)
-        val c = top(0).getLong(1)
-        merges += Merge(rank, a, b, c)
-        state = materialize(
-          state.select(mergePairNative(col("syms"), a, b).as("syms"), col("n")))
-        rank += 1
-      }
+    val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
+    iterate(nMerges)(cut => cut(wordCounts.select(split(col("word"), "").as("syms"), col("n")))) {
+      (cut, state) =>
+        // adjacent-pair supports, weighted by word count: one explode of
+        // the zipped (syms[i], syms[i+1]) stream, map-side combined to
+        // |pair types| rows; the argmax is a TakeOrdered over that
+        // bounded frame and a ONE-row collect (k rows of driver state
+        // over the whole training — the Kmeans anchor-collect contract).
+        // The collect is the round's action: it materializes `state`'s cut.
+        val len1 = greatest(size(col("syms")) - 1, lit(0))
+        val top = state
+          .select(col("n"), explode(zip_with(
+            slice(col("syms"), lit(1), len1),
+            slice(col("syms"), lit(2), len1),
+            (a, b) => concat(a, lit(Sep), b))).as("p"))
+          .groupBy("p").agg(sum(col("n")).as("c"))
+          .filter(col("c") >= 2)
+          .orderBy(col("c").desc, col("p"))
+          .limit(1)
+          .collect()
+        top.headOption.map { t =>
+          val Array(a, b) = t.getString(0).split(Sep, 2)
+          merges += Merge(merges.length, a, b, t.getLong(1))
+          cut(state.select(mergePairNative(col("syms"), a, b).as("syms"), col("n")))
+        }
     }
-    merges.result()
+    merges.toSeq
   }
 
   /** Distributed encoder: the [[mergePairCompute]] chain applying the

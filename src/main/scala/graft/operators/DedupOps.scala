@@ -1027,87 +1027,43 @@ object DedupOps {
     * label with its label's label — halving the distance to the
     * component minimum, so convergence is O(log diameter) rounds, not
     * O(diameter) (a web-crawl dup chain of diameter 10⁶ converges in
-    * ~20 rounds). The pair input is pinned once through `materialize`
-    * (reliable when the session has a checkpoint dir, like every pin in
-    * `graft.operators`). Per-round lineage truncation is the ONE
-    * exception to that helper: it is LAZY (`checkpoint(false)` /
-    * `localCheckpoint(false)`, see `truncate`) so each round pays one
-    * job, and reliable mode adds a persist queue. Cluster deployments
-    * should `sc.setCheckpointDir(...)`; CheckpointModeSpec proves both
-    * modes converge to identical labels. THROWS if the round cap is
-    * hit before convergence — silently emitting unconverged labels
-    * would mislabel deep chains.
+    * ~20 rounds). The pair input is pinned once through `materialize`;
+    * the rounds run on the [[iterate]] driver, and each round's label
+    * table is a lazy cut that the round's convergence count
+    * materializes. CheckpointModeSpec proves local and reliable mode
+    * converge to identical labels. THROWS if the round cap is hit
+    * before convergence — silently emitting unconverged labels would
+    * mislabel deep chains.
     */
   private[operators] def connectedComponents(pairs: DataFrame, maxRounds: Int = 25): DataFrame = {
-    // r19 optimization: LAZY checkpoints — the marked plan still
-    // truncates to the materialized RDD for every later consumer, but
-    // materialization now happens inside the FIRST action that needs
-    // it instead of a dedicated eager job, so each round pays ONE job
-    // (the convergence count materializes that round's checkpoint) and
-    // the init label table materializes inside round 1's count. The
-    // loop ran 2 jobs/round + 2 init jobs before; job-count telemetry
-    // and label equality are pinned by CheckpointModeSpec/DedupOps
-    // specs. r20 (ADVICE): in RELIABLE mode a bare lazy checkpoint
-    // leaves the RDD unpersisted, so after the convergence count
-    // ReliableRDDCheckpointData.doCheckpoint launched a SECOND job
-    // re-running the round's join from lineage to write the checkpoint
-    // files — persist() first so the count's computed blocks feed the
-    // checkpoint write, then drop the cache once the files exist (the
-    // caller-side unpersist below). localCheckpoint needs neither: it
-    // IS the persist.
-    val reliable = pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
-    // reliable mode: the persist handles queue up so a LATER round can
-    // drop each round's cache once its checkpoint files exist —
-    // unpersisting is a caller concern because checkpoint(false)
-    // returns a wrapper Dataset that no longer owns the cache entry
-    val persistedQ = scala.collection.mutable.Queue.empty[DataFrame]
-    def truncate(df: DataFrame): DataFrame =
-      if (reliable) { df.persist(); persistedQ += df; df.checkpoint(false) }
-      else df.localCheckpoint(false)
-    // materialize the (expensive) upstream pair query exactly once —
-    // every loop round reads this pinned RDD, never the lineage.
     // The pair input stays EAGER: both loop arms (edges, labels) read
     // it, and the first lazy consumer would otherwise race the other
     // into recomputing the whole pair pipeline.
     val p = materialize(pairs.toDF("pa", "pb"))
     val edges = p.union(p.select(col("pb"), col("pa"))).toDF("ea", "eb")
-    var labels = truncate(edges.select(col("ea").as("id")).distinct()
-      .select(col("id"), col("id").as("lab")))
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
-      val prop = edges.join(labels, col("ea") === col("id"))
-        .select(col("eb").as("id"), col("lab"))
-      val merged = labels.union(prop).groupBy("id").agg(min("lab").as("lab"))
-      // pointer jump: lab ← lab(lab); labels always contain every
-      // vertex id, and lab is always some vertex id, so the inner
-      // self-join is total. The aliased projection gives the two join
-      // sides distinct attribute sets without a materialization.
-      val next = merged
-        .join(merged.select(col("id").as("jid"), col("lab").as("jlab")),
-          col("lab") === col("jid"))
-        .select(col("id"), col("jlab").as("lab"))
-      // ONE job per round: the count both materializes the lazily
-      // checkpointed (new lab, old lab) table and reads the
-      // convergence delta from it
-      val stepped = truncate(
-        next.join(labels.select(col("id"), col("lab").as("old")), "id"))
-      changed = stepped.filter(col("lab") =!= col("old")).count()
-      // the count materialized this round's checkpoint files — every
-      // EARLIER round's cached blocks are dead weight now (keep only
-      // the newest entry: its files exist too, but its blocks feed
-      // the next round's first read for free)
-      while (persistedQ.size > 1) persistedQ.dequeue().unpersist(false)
-      labels = stepped.select(col("id"), col("lab"))
-      rounds += 1
+    var moving = 1L
+    iterate(maxRounds, unconverged = Some(() =>
+        s"connectedComponents did not converge in $maxRounds rounds ($moving labels still moving)"))(
+      cut => cut(edges.select(col("ea").as("id")).distinct().select(col("id"), col("id").as("lab")))) {
+      (cut, labels) =>
+        val prop = edges.join(labels, col("ea") === col("id"))
+          .select(col("eb").as("id"), col("lab"))
+        val merged = labels.union(prop).groupBy("id").agg(min("lab").as("lab"))
+        // pointer jump: lab ← lab(lab); labels always contain every
+        // vertex id, and lab is always some vertex id, so the inner
+        // self-join is total. The aliased projection gives the two join
+        // sides distinct attribute sets without a materialization.
+        val next = merged
+          .join(merged.select(col("id").as("jid"), col("lab").as("jlab")),
+            col("lab") === col("jid"))
+          .select(col("id"), col("jlab").as("lab"))
+        // the count both materializes the cut (new lab, old lab) table
+        // and reads the convergence delta from it; once nothing moves,
+        // the previous labels are the answer
+        val stepped = cut(next.join(labels.select(col("id"), col("lab").as("old")), "id"))
+        moving = stepped.filter(col("lab") =!= col("old")).count()
+        Option.when(moving > 0)(stepped.select(col("id"), col("lab")))
     }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds ($changed labels still moving)")
-    // converged: the final labels live in checkpoint files — drop the
-    // last round's cache too rather than leak it past the call
-    persistedQ.dequeueAll(_ => true).foreach(_.unpersist(false))
-    labels
   }
 
   /** Cluster resolution keeping the BEST member — what a production

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * no corpus-sized shuffle. The argmax ships one slim (vec_id,
   * cell, dot) row per vector through its exchange; the mean
   * aggregates exploded scalars; the k-row anchor table is
-  * pinned per round so corpus lineage never re-executes.
+  * pinned per round ([[iterate]]) so corpus lineage never re-executes.
   */
 object Kmeans {
 
@@ -57,43 +57,49 @@ object Kmeans {
     * (cell: long, c: unit-norm array<double>). The full trace is
     * exposed so monotonicity of the quantization cost is checkable
     * per step; production callers take [[anchors]] (= the last).
+    * The normalized corpus is the loop's training set: read twice per
+    * round (assignment + mean), so [[iterate]] keeps it cached.
     */
   def anchorsTrace(e: DataFrame, k: Int, iters: Int,
       portable: Boolean = false): Seq[DataFrame] = {
     require(k > 0, s"k must be positive, got $k")
     require(iters >= 0, s"iters must be non-negative, got $iters")
-    // the normalized corpus is read 2× per round (assignment + mean);
-    // persist it for the duration of the recursion, the standard
-    // iterative-algorithm discipline (at cluster scale this is the
-    // cached training set every Lloyd implementation keeps)
     val nd = e.select(col("vec_id"), unitDouble(col("embedding")).as("nv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var cur = nd.filter(col("vec_id") < k)
-      .select(col("vec_id").cast("long").as("cell"), col("nv").as("c"))
-      .transform(materialize)
+    // portable mode pins the per-(cell, dim) mean to 6 decimals: the
+    // ONLY engine-order-sensitive float op in the recursion is this
+    // distributed avg (everything else is an index-ordered fold), so
+    // rounding it makes the whole anchor table oracle-reproducible
+    val mean = if (portable) round(avg(col("v")), 6) else avg(col("v"))
     val trace = Seq.newBuilder[DataFrame]
-    trace += cur
-    for (_ <- 0 until iters) {
-      val asg = assign(nd, cur, portable).select(col("vec_id"), col("cell"))
-      // portable mode pins the per-(cell, dim) mean to 6 decimals: the
-      // ONLY engine-order-sensitive float op in the recursion is this
-      // distributed avg (everything else is an index-ordered fold), so
-      // rounding it makes the whole anchor table oracle-reproducible
-      val mean = if (portable) round(avg(col("v")), 6) else avg(col("v"))
-      val means = asg.join(nd, "vec_id")
-        .select(col("cell"), posexplode(col("nv")).as(Seq("dim", "v")))
-        .groupBy("cell", "dim").agg(mean.as("m"))
-        .groupBy("cell")
-        .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("dm"))
-        .select(col("cell"), transform(col("dm"), s => s.getField("m")).as("mc"))
-      cur = cur.as("p").join(means, Seq("cell"), "left")
-        .select(col("cell"),
-          when(col("mc").isNull, col("p.c")).otherwise(unitOf(col("mc"))).as("c"))
-        .transform(materialize)
+    val last = iterate(iters, Seq(nd))(_ => materialize(nd.filter(col("vec_id") < k)
+        .select(col("vec_id").cast("long").as("cell"), col("nv").as("c")))) { (_, cur) =>
       trace += cur
+      val members = assign(nd, cur, portable).select(col("vec_id"), col("cell"))
+        .join(nd, "vec_id")
+      Some(materialize(lloydStep(cur, members, Seq("cell"), "nv", "c", mean, unitOf)))
     }
-    nd.unpersist() // anchors are checkpointed; the cache is round-local
-    trace.result()
+    (trace += last).result()
+  }
+
+  /** One Lloyd mean step, shared by [[anchorsTrace]] and the PQ
+    * codebook ([[AnnOps]]): per `keys` cell of the `members` rows, the
+    * per-dim `mean` (an aggregate over the exploded value `v`) of
+    * their `vec` vectors, collected in dim order and `finish`ed. A cell
+    * of `cur` with no member keeps its previous anchor `c`. A
+    * (keys, dim)-keyed aggregation onto |cells|·dim rows: no
+    * corpus-sized shuffle.
+    */
+  private[operators] def lloydStep(cur: DataFrame, members: DataFrame, keys: Seq[String],
+      vec: String, c: String, mean: Column, finish: Column => Column = identity): DataFrame = {
+    val ks = keys.map(col)
+    val means = members
+      .select(ks :+ posexplode(col(vec)).as(Seq("dim", "v")): _*)
+      .groupBy(ks :+ col("dim"): _*).agg(mean.as("mean"))
+      .groupBy(ks: _*)
+      .agg(array_sort(collect_list(struct(col("dim"), col("mean")))).as("dm"))
+      .select(ks :+ transform(col("dm"), s => s.getField("mean")).as("mc"): _*)
+    cur.as("p").join(means, keys, "left")
+      .select(ks :+ when(col("mc").isNull, col(s"p.$c")).otherwise(finish(col("mc"))).as(c): _*)
   }
 
   /** Lloyd-refined anchors: (cell, c) after `iters` iterations from

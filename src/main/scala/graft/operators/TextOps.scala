@@ -833,9 +833,8 @@ object TextOps {
     * contributions per target) — the textbook distributed PageRank
     * shape that scales to any vocabulary. The edge table (derived
     * from a corpus scan) is materialized ONCE before the loop and
-    * each rank table's lineage truncated per round (the
-    * connectedComponents discipline), so no iteration re-reads the
-    * corpus. Isolated nodes (tokens never adjacent to a different
+    * each rank table's lineage truncated per round (the [[iterate]]
+    * driver), so no iteration re-reads the corpus. Isolated nodes (tokens never adjacent to a different
     * token) keep the damping floor via the left join. The final cut
     * ranks by round(rank, 6) — fp-noise-free and engine-portable —
     * through the bounded top-k aggregate, so the vocabulary is never
@@ -859,21 +858,16 @@ object TextOps {
       edges.join(wdeg, "u")
         .select(col("u"), col("v"), (col("w") / col("wdeg").cast("double")).as("ratio")))
     val nodes = materialize(edges.select(col("u").as("t")).distinct())
-    // Per-round truncation measured FASTER here than the lazy 5-join
-    // chain (2.1-2.5 s vs 2.6-3.2 s at sf0.1): the rank table is
-    // node-sized, so each round's checkpoint is tiny, while the lazy
-    // chain pays AQE's sequential per-stage replanning over the full
-    // lineage. At cluster scale the same truncation also caps
-    // recovery cost per round — the connectedComponents discipline.
-    var ranks = nodes.select(col("t"), lit(1.0).as("r"))
-    for (_ <- 1 to TrIters) {
+    // a round has no action of its own, so it pins its rank table
+    // (node-sized, so each pin is tiny — see [[iterate]])
+    val ranks = iterate(TrIters)(_ => nodes.select(col("t"), lit(1.0).as("r"))) { (_, ranks) =>
       val contrib = trans.join(ranks.withColumnRenamed("t", "u"), "u")
         .groupBy(col("v").as("t"))
         .agg(sum(col("ratio") * col("r")).as("c"))
-      ranks = materialize(
+      Some(materialize(
         nodes.join(contrib, Seq("t"), "left")
           .select(col("t"),
-            (lit(1.0 - TrDamping) + lit(TrDamping) * coalesce(col("c"), lit(0.0))).as("r")))
+            (lit(1.0 - TrDamping) + lit(TrDamping) * coalesce(col("c"), lit(0.0))).as("r"))))
     }
     ranks.join(wdeg.withColumnRenamed("u", "t"), "t")
       .select(col("t"), round(col("r"), 6).as("rank"), col("wdeg"))
@@ -1045,8 +1039,16 @@ object TextOps {
     * IEEE division both engines perform identically).
     */
   private[graft] def lrPm(w: Array[Long]): Column =
-    graft.plans.TextExpressions.lrSigmoidNative(
-      col("x1m"), col("x2m"), col("x3m"), w, SigTable, SigStep)
+    graft.plans.TextExpressions.lrSigmoidVecNative(lrXs, w, SigTable, SigStep)
+
+  /** The three micro features as the trainer's and the scorer's
+    * 3-slot vector; null when any feature is null, so a row with a
+    * null feature scores null and adds nothing to a gradient.
+    */
+  private def lrXs: Column = {
+    val xs = Seq(col("x1m"), col("x2m"), col("x3m"))
+    when(xs.map(_.isNotNull).reduce(_ && _), array(xs: _*))
+  }
 
   /** §2.I q_quality_lr — distill the rule-based quality filter into a
     * trained scorer (the fastText-classifier workload of a curation
@@ -1055,9 +1057,10 @@ object TextOps {
     * and q_bpe_merges' tokenizer): [[LrSteps]] full-batch gradient
     * steps of logistic regression on (bias, capped-length, stopword
     * ratio, punctuation ratio) against the label `quality ≥
-    * [[LrThreshold]]`. Each step is ONE distributed aggregation (four
-    * map-side-combined sums) + a 4-number driver update — the bounded
-    * driver state of the Kmeans/BPE family; the corpus never moves.
+    * [[LrThreshold]]`. Each step is ONE distributed aggregation (the
+    * 4-slot exact gradient, [[trainVec]]) + a 4-number driver update —
+    * the bounded driver state of the Kmeans/BPE family; the corpus
+    * never moves.
     * Training is INTEGER-EXACT, like the suite's other trained
     * artifacts (q_dsir_weights, q_bootstrap_ci, the BPE counts):
     * features, sigmoid (micro-unit lookup table — [[SigTable]]),
@@ -1068,10 +1071,9 @@ object TextOps {
     * closed by construction, not mitigated; the DuckDB oracle unrolls
     * the same integer steps (same table literals) and must reproduce
     * the weight vector — and the training accuracy it implies —
-    * exactly. Gradient sums ride decimal(38,0): the d·x terms are
-    * ≤ 1e12/row, so a long sum would overflow past ~9e6 rows — the
-    * decimal sum is exact at any corpus size, and DuckDB's HUGEINT
-    * sum mirrors it. QualityLrSpec pins the distributed loop against
+    * exactly. Gradient sums are exact at any corpus size (the d·x
+    * terms are ≤ 1e12/row, so a plain long sum would overflow past
+    * ~9e6 rows), and DuckDB's HUGEINT sum mirrors them. QualityLrSpec pins the distributed loop against
     * a driver-side integer replica and that the distilled scorer
     * actually beats the majority class.
     */
@@ -1088,43 +1090,16 @@ object TextOps {
   /** The trained weight vector (micro-unit longs) — the session's ONE
     * training run per dir ([[graft.GraftSession.memo]]), shared by
     * q_quality_lr, q_quality_lr_score and the composed curation
-    * pipeline, which consumes it as scalar literals. Only the
-    * 4-element WEIGHT vector is memoized: the feature frame is
-    * persisted for the 20-step loop and released in `finally` the
-    * moment training ends (readouts recompute the cheap codegen'd
-    * projection instead), so no block-manager memory is retained per
-    * (session, dir) for the session lifetime.
+    * pipeline, which consumes it as scalar literals. The 4-feature
+    * model is a [[trainVec]] instance over the 3-slot [[lrXs]] vector.
+    * Only the 4-element WEIGHT vector is memoized: the feature frame
+    * is cached for the 20-step loop only (readouts recompute the cheap
+    * codegen'd projection instead), so no block-manager memory is
+    * retained per (session, dir) for the session lifetime.
     */
   private[graft] def lrWeights(spark: SparkSession, dir: String): Array[Long] =
     graft.GraftSession.memo(spark, s"lr|$dir") {
-      val f = lrFeatures(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = f.count()
-        var w = Array(0L, 0L, 0L, 0L)
-        // exact integer floor-division helpers on the driver (BigInt —
-        // the decimal gradient sums can exceed Long at corpus scale)
-        def fdivB(a: BigInt, b: BigInt): BigInt = (a - a.mod(b)) / b
-        def rhuB(num: BigInt, den: BigInt): BigInt = fdivB(num * 2 + den, den * 2)
-        val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-        for (_ <- 1 to LrSteps) {
-          val d = lrPm(w) - col("y").cast("long") * lit(1000000L)
-          val g = f.select(sum(d.cast(dec)), sum((d * col("x1m")).cast(dec)),
-              sum((d * col("x2m")).cast(dec)), sum((d * col("x3m")).cast(dec)))
-            .collect()(0)
-          val gm = Array.tabulate(4) { j =>
-            val s = BigInt(g.getDecimal(j).toBigIntegerExact)
-            // j = 0 averages micro-units; j ≥ 1 averages micro² (d·x),
-            // so the denominator carries the extra 1e6
-            val den = if (j == 0) BigInt(n) else BigInt(n) * 1000000L
-            rhuB(s, den)
-          }
-          w = Array.tabulate(4)(j => w(j) - LrRate * gm(j).toLong)
-        }
-        w
-      } finally {
-        f.unpersist(blocking = false)
-      }
+      trainVec(lrFeatures(spark, dir).select(lrXs.as("xs"), col("y")), 3)
     }
 
   /** §2.I q_quality_lr_score — the SERVE side of the trained quality
@@ -1199,21 +1174,23 @@ object TextOps {
         when(qualityCol >= LrThreshold, 1.0).otherwise(0.0).as("y"))
   }
 
-  /** The generic integer-exact full-batch GD trainer over a dense
-    * micro-unit feature-array frame `(xs: array<long>[dim], y)` —
-    * [[lrWeights]]'s loop generalized from 4 scalar columns to
-    * (1 + dim) weights. Each step is ONE distributed aggregation
-    * (1 + dim map-side-combined decimal sums) + a (1 + dim)-number
-    * driver update: the bounded-driver-state family. Exposed to the
-    * spec for the held-out comparison (both models are instances).
+  /** The integer-exact full-batch GD trainer over a dense micro-unit
+    * feature-array frame `(xs: array<long>[dim], y)`, (1 + dim)
+    * weights: both quality models are instances. Each step is ONE
+    * distributed aggregation (the (1 + dim)-slot exact gradient of
+    * [[graft.plans.LrGradAgg]]) + a (1 + dim)-number driver update:
+    * the bounded-driver-state family. `f` is the [[iterate]] loop's
+    * training set, cached for the `steps` rounds. Exposed to the spec
+    * for the held-out comparison.
     */
   private[operators] def trainVec(f: DataFrame, dim: Int,
       steps: Int = LrSteps): Array[Long] = {
-    val n = f.count()
-    var w = new Array[Long](dim + 1)
+    // exact integer floor-division helpers on the driver (BigInt —
+    // the decimal gradient sums can exceed Long at corpus scale)
     def fdivB(a: BigInt, b: BigInt): BigInt = (a - a.mod(b)) / b
     def rhuB(num: BigInt, den: BigInt): BigInt = fdivB(num * 2 + den, den * 2)
-    for (_ <- 1 to steps) {
+    var n = 0L
+    iterate(steps, Seq(f))(_ => { n = f.count(); new Array[Long](dim + 1) }) { (_, w) =>
       val pm = graft.plans.TextExpressions.lrSigmoidVecNative(
         col("xs"), w, SigTable, SigStep)
       val d = pm - col("y").cast("long") * lit(1000000L)
@@ -1224,24 +1201,21 @@ object TextOps {
         .collect()(0).getSeq[java.math.BigDecimal](0)
       val gm = Array.tabulate(dim + 1) { j =>
         val s = BigInt(g(j).toBigIntegerExact)
+        // j = 0 averages micro-units; j ≥ 1 averages micro² (d·x),
+        // so the denominator carries the extra 1e6
         val den = if (j == 0) BigInt(n) else BigInt(n) * 1000000L
         rhuB(s, den)
       }
-      w = Array.tabulate(dim + 1)(j => w(j) - LrRate * gm(j).toLong)
+      Some(Array.tabulate(dim + 1)(j => w(j) - LrRate * gm(j).toLong))
     }
-    w
   }
 
   /** The session's ONE n-gram training run per dir (the [[lrWeights]]
-    * memo discipline: only the (1 + NgramDim)-long weight vector is retained; the
-    * feature frame is persisted for the loop and released when
-    * training ends). */
+    * memo discipline: only the (1 + NgramDim)-long weight vector is
+    * retained). */
   private def lrNgramTrained(spark: SparkSession, dir: String): Array[Long] =
     graft.GraftSession.memo(spark, s"lr_ngram|$dir") {
-      val f = lrNgramFeatures(spark, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try trainVec(f, NgramDim, NgramSteps)
-      finally f.unpersist(blocking = false)
+      trainVec(lrNgramFeatures(spark, dir), NgramDim, NgramSteps)
     }
 
   /** §2.I q_quality_lr_ngram — the trained quality classifier scaled

@@ -561,33 +561,15 @@ object TextExpressions {
     tab(idx) + (tab(idx + 1) - tab(idx)) * frac / step
   }
 
-  /** The integer sigmoid over three micro-unit features as ONE tight
-    * long-arithmetic call — the Column-tree formulation (two
-    * element_at lookups on a 4097-literal array plus three
-    * pmod/divide chains) measured ~25% slower across the composed
-    * curation pipeline's multiple evaluation sites.
-    */
-  def lrSigmoidCompute(x1m: Long, x2m: Long, x3m: Long,
-      w: Array[Long], tab: Array[Long], step: Int): Long =
-    sigmoidMicros(w(0) * 1000000L + w(1) * x1m + w(2) * x2m + w(3) * x3m, tab, step)
-
-  private def requireTable(tab: Array[Long], step: Int): Unit =
-    require(tab.length % 2 == 1 && step >= 1, "lr_sigmoid: need an odd-length table, step >= 1")
-
-  def lrSigmoidNative(x1m: Column, x2m: Column, x3m: Column,
-      w: Array[Long], tab: Array[Long], step: Int): Column = {
-    require(w.length == 4, "lr_sigmoid: need 4 weights")
-    requireTable(tab, step)
-    Kernel.column(Kernel.call(this, "lrSigmoidCompute", LongType,
-      Seq(expr(x1m), expr(x2m), expr(x3m), Kernel.const(w), Kernel.const(tab), Literal(step))))
-  }
-
-  /** Vector form of [[lrSigmoidCompute]] for the hashed-n-gram model,
-    * over an `array<long>` micro-unit feature column (weights = bias
-    * +: per-bucket): z = (w(0)·1e6 + Σ_b w(b+1)·xs(b)) DIV 1e6, then
-    * the same clamped table interpolation. Serves the hashed-n-gram
-    * quality classifier's training loop (20 passes) and scorer without
-    * any interpreted HOF lambda in the hot path. Magnitude contract:
+  /** The integer sigmoid of both quality models as ONE tight
+    * long-arithmetic call, over an `array<long>` micro-unit feature
+    * column (weights = bias +: per-feature): z = (w(0)·1e6 + Σ_b
+    * w(b+1)·xs(b)) DIV 1e6, then the clamped table interpolation. The
+    * 4-feature model passes its 3 micro features as a 3-slot array;
+    * the hashed-n-gram model its 131 slots. No interpreted HOF lambda
+    * runs in the hot path (the Column-tree formulation of the 4-feature
+    * sigmoid measured ~25% slower across the composed curation
+    * pipeline's multiple evaluation sites). Magnitude contract:
     * |w| ≤ ~1e8 after training and xs ≤ 1e6 micro, so each term ≤
     * 1e14 and the 129-term sum ≤ ~1.3e16 ≪ 2^63 — exact in long
     * arithmetic.
@@ -604,7 +586,7 @@ object TextExpressions {
   def lrSigmoidVecNative(xs: Column, w: Array[Long], tab: Array[Long],
       step: Int): Column = {
     require(w.length >= 2, "lr_sigmoid_vec: need bias + at least one weight")
-    requireTable(tab, step)
+    require(tab.length % 2 == 1 && step >= 1, "lr_sigmoid: need an odd-length table, step >= 1")
     Kernel.column(Kernel.call(this, "lrSigmoidVecCompute", LongType,
       Seq(expr(xs), Kernel.const(w), Kernel.const(tab), Literal(step))))
   }

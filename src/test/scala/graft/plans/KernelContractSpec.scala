@@ -111,10 +111,12 @@ class KernelContractSpec extends AnyFunSuite {
     ("mergePairCompute", frame(words), Seq(BpeTrainer.applyMerges(f,
       Seq(BpeTrainer.Merge(0, "a", "b", 2), BpeTrainer.Merge(1, "ab", "c", 2),
         BpeTrainer.Merge(2, "café", "李记", 2))))),
-    ("lrSigmoidCompute", frame(scalars), Seq(lrSigmoidNative(f("_1"), f("_2"), f("_3"),
-      Array(-2000000L, 3L, -1L, 2L), sigTab, 4000000))),
     ("lrSigmoidVecCompute", frame(longs), Seq(lrSigmoidVecNative(f("_1"),
       Array(100L, 2000000L, -3000000L, 1L), sigTab, 4000000))),
+    // the 4-feature model's 3-slot vector (TextOps.lrPm)
+    ("lrSigmoidVecCompute (3 slots)", frame(scalars), Seq(lrSigmoidVecNative(
+      when(f.isNotNull, array(f("_1"), f("_2"), f("_3"))),
+      Array(-2000000L, 3L, -1L, 2L), sigTab, 4000000))),
     ("dotCompute", frame(floats), Seq(dotNative(f("_1"), f("_2")))),
     ("dotCompute (double)", frame(doubles), Seq(dotNative(f("_1"), f("_2")))),
     ("l2NormCompute", frame(floats), Seq(normNative(f("_1")))),

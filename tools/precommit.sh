@@ -22,7 +22,9 @@
 # rest on the nearest-anchor decision (NearestAnchorSpec, AnnIvfSpec,
 # AnnIvfCompactedSpec, AnnIvfPqSpec, AnnIvfHierPqSpec, AnnPqSpec,
 # AnnSq8Spec, SemDedupSpec, PrototypesSpec, KmeansSpec,
-# IvfRebalanceSpec, KnnClassifySpec, IvfAssignStreamSpec). Use
+# IvfRebalanceSpec, KnnClassifySpec, IvfAssignStreamSpec), and the
+# specs of the loops on the one loop driver (CheckpointModeSpec,
+# TextrankSpec, BpeSpec, QualityLrSpec, QualityLrNgramSpec). Use
 # before END-OF-ROUND snapshots and after touching query plumbing.
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -33,15 +35,16 @@ sbt -batch Test/compile >/tmp/precommit.log 2>&1 || {
 }
 echo "PRECOMMIT OK: Test/compile green."
 
-# Materialize-once gate: every eager pin in graft.operators goes through
-# the one helper in operators/package.scala (`materialize`), so no other
-# operator file may call .localCheckpoint(true) or .checkpoint().
-if grep -rnF --include='*.scala' -e '.localCheckpoint(true)' -e '.checkpoint()' \
+# Lineage-cut gate: every pin and loop cut in graft.operators goes
+# through operators/package.scala (`materialize`, the `iterate` loop
+# driver and its `Loop.cut`), which also owns every cache a loop holds,
+# so no other operator file may checkpoint, persist or unpersist.
+if grep -rnF --include='*.scala' -e 'localCheckpoint(' -e 'checkpoint(' -e '.persist(' -e 'unpersist(' \
     src/main/scala/graft/operators/ | grep -v '^src/main/scala/graft/operators/package\.scala:' >&2; then
-  echo "PRECOMMIT FAIL: pin above bypasses operators.materialize — route it through the helper." >&2
+  echo "PRECOMMIT FAIL: cut or cache above bypasses operators/package.scala — pin with materialize, or run the loop on operators.iterate." >&2
   exit 1
 fi
-echo "PRECOMMIT OK: every operator pin goes through operators.materialize."
+echo "PRECOMMIT OK: every operator pin, loop cut and loop cache goes through operators/package.scala."
 
 # Latest-wins gate: the "newest change per key" window lives only in
 # operators.newestPerKey (operators/package.scala), so no other main
@@ -132,11 +135,11 @@ echo "PRECOMMIT OK: every registered query has a bench entry."
 #      that only min-of-2 absorbed). If any per-query p2/p1 ratio
 #      exceeds 3x, run a third pass for the record.
 if [[ "${PRECOMMIT_SMOKE:-0}" == "1" ]]; then
-  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec graft.LocalFsSpec graft.UpsertSinkSpec graft.operators.LatestWinsTieBreakSpec graft.operators.IvmSpec graft.GraftSessionMemoSpec graft.operators.HierAssignSpec graft.ConfParitySpec graft.multimodal.RleSpec graft.multimodal.McSpec graft.multimodal.GopSpec graft.multimodal.XfSpec graft.multimodal.DemuxSpec graft.multimodal.CodecPropertiesSpec graft.multimodal.VideoCodecContractSpec graft.TxnSnapshotStreamSpec graft.CdcStreamSpec graft.StreamingConnectorE2ESpec graft.IvmConnectorE2ESpec graft.plans.KernelContractSpec graft.plans.TextExpressionsSpec graft.GraftFunctionsSpec graft.GraftExtensionsSpec graft.operators.WinnowSpec graft.operators.PiiScrubSpec graft.AuditBaselineSpec graft.PlanGuardsSpec graft.operators.NearestAnchorSpec graft.operators.AnnIvfSpec graft.operators.AnnIvfCompactedSpec graft.operators.AnnIvfPqSpec graft.operators.AnnIvfHierPqSpec graft.operators.AnnPqSpec graft.operators.AnnSq8Spec graft.operators.SemDedupSpec graft.operators.PrototypesSpec graft.operators.KmeansSpec graft.operators.IvfRebalanceSpec graft.operators.KnnClassifySpec graft.IvfAssignStreamSpec" \
+  sbt -batch "testOnly graft.QueriesSpec graft.operators.CrossOperatorConsistencySpec graft.operators.ScaleGuardsSpec graft.operators.ContainmentSpec graft.LocalFsSpec graft.UpsertSinkSpec graft.operators.LatestWinsTieBreakSpec graft.operators.IvmSpec graft.GraftSessionMemoSpec graft.operators.HierAssignSpec graft.ConfParitySpec graft.multimodal.RleSpec graft.multimodal.McSpec graft.multimodal.GopSpec graft.multimodal.XfSpec graft.multimodal.DemuxSpec graft.multimodal.CodecPropertiesSpec graft.multimodal.VideoCodecContractSpec graft.TxnSnapshotStreamSpec graft.CdcStreamSpec graft.StreamingConnectorE2ESpec graft.IvmConnectorE2ESpec graft.plans.KernelContractSpec graft.plans.TextExpressionsSpec graft.GraftFunctionsSpec graft.GraftExtensionsSpec graft.operators.WinnowSpec graft.operators.PiiScrubSpec graft.AuditBaselineSpec graft.PlanGuardsSpec graft.operators.NearestAnchorSpec graft.operators.AnnIvfSpec graft.operators.AnnIvfCompactedSpec graft.operators.AnnIvfPqSpec graft.operators.AnnIvfHierPqSpec graft.operators.AnnPqSpec graft.operators.AnnSq8Spec graft.operators.SemDedupSpec graft.operators.PrototypesSpec graft.operators.KmeansSpec graft.operators.IvfRebalanceSpec graft.operators.KnnClassifySpec graft.IvfAssignStreamSpec graft.operators.CheckpointModeSpec graft.operators.TextrankSpec graft.operators.BpeSpec graft.operators.QualityLrSpec graft.operators.QualityLrNgramSpec" \
       >/tmp/precommit_smoke.log 2>&1 || {
     echo "PRECOMMIT FAIL: smoke specs broken — do not commit." >&2
     tail -n 40 /tmp/precommit_smoke.log >&2
     exit 1
   }
-  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine, local file system, upsert sink, latest-wins, session memo, video codec, streaming sink, native-kernel and vector-family specs green."
+  echo "PRECOMMIT OK: all registered queries run at sf0.001; co-count engine, local file system, upsert sink, latest-wins, session memo, video codec, streaming sink, native-kernel, vector-family and loop-driver specs green."
 fi
